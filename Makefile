@@ -14,7 +14,7 @@ KAFKA_PKG = org.apache.spark:spark-sql-kafka-0-10_2.13:4.0.0
 
 PG_DATA  = /tmp/pg_live/data
 
-.PHONY: test oracle bench scaling-probe fuzz fuzz-combo integration \
+.PHONY: test oracle bench sinkbench scaling-probe fuzz fuzz-combo integration \
         integration-up integration-down integration-pg integration-pg-up \
         integration-pg-down
 
@@ -70,6 +70,22 @@ fuzz-combo:
 
 bench:
 	python bench.py
+
+# Sink benchmark (sinkbench/README.md): each BENCHMARK.json workload
+# untraced (end-to-end metrics), then traced (per-layer metrics), on
+# one seed, for BENCHMARK.json's run_seconds: `make sinkbench SEED=11`.
+SEED ?= 1
+sinkbench:
+	@python3 -c 'import json; b = json.load(open("BENCHMARK.json")); \
+	  print(b["run_seconds"], *(w["name"] for w in b["workloads"]))' | { \
+	  read secs workloads; \
+	  for w in $$workloads; do \
+	    for trace in 0 1; do \
+	      echo "== sinkbench: $$w seed $(SEED) trace $$trace"; \
+	      python3 sinkbench/run.py --workload $$w --seed $(SEED) \
+	        --seconds $$secs --trace $$trace || exit 1; \
+	    done; \
+	  done; }
 
 # measured growth-exponent probe (SCALE.md §Round-12 scaling-curve
 # probe): bench at sf0.01 and sf0.1 back-to-back on an otherwise-idle

@@ -192,7 +192,12 @@ def _verify_jaccard(
         .agg(
             F.expr("min_by(shh, s)").alias("shh_a"),
             F.expr("max_by(shh, s)").alias("shh_b"),
+            F.min("s").alias("s_lo"),
+            F.max("s").alias("s_hi"),
         )
+        # both sides must have joined: a pair whose doc is missing from
+        # ``docs`` would otherwise compare one array with itself (1.0)
+        .filter((F.col("s_lo") == 0) & (F.col("s_hi") == 1))
         .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )

@@ -2827,8 +2827,8 @@ def nn_descent_converge(
             prev = nxt
             g = nxt
             continue
-        # one job returns ALL rule inputs — |g_{r-1}|, |g_r| and the
-        # adopted count |g_r \ g_{r-1}| — via a full-outer tag join
+        # one job returns ALL rule inputs — |g_{r-1}| and the adopted
+        # count |g_r \ g_{r-1}| — via a full-outer tag join
         # (the identical integer rule decision as the old
         # count-then-left-join pair, one action earlier)
         row = (
@@ -2842,9 +2842,6 @@ def nn_descent_converge(
             .agg(
                 F.sum(F.when(F.col("_old").isNotNull(), 1).otherwise(0)).alias(
                     "edges_prev"
-                ),
-                F.sum(F.when(F.col("_new").isNotNull(), 1).otherwise(0)).alias(
-                    "edges"
                 ),
                 F.sum(
                     F.when(F.col("_old").isNull() & F.col("_new").isNotNull(), 1)

@@ -27,6 +27,7 @@ import json
 from collections.abc import Iterator
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
+from functools import cached_property
 from typing import Any
 
 import pandas as pd
@@ -128,10 +129,21 @@ class Mapping:
         """
         raise NotImplementedError
 
+    @cached_property
+    def _column_names(self) -> frozenset[str]:
+        return frozenset(c.name for c in self.columns)
+
+    @cached_property
+    def _field_types(self) -> dict[str, T.DataType]:
+        """Output column → Spark type, built once per instance rather
+        than once per message (``columns`` constructs new specs on
+        every access)."""
+        return {f.name: f.dataType for f in self.spark_schema.fields}
+
     def match_columns(self, values: dict) -> dict:
         """Schema-enforcing projection: drop keys that aren't declared
         columns (reference dbsink/maps.py:65-78)."""
-        names = {c.name for c in self.columns}
+        names = self._column_names
         return {k: v for k, v in values.items() if k in names}
 
     def apply_date_filter(self, ts: datetime) -> None:
@@ -174,8 +186,8 @@ class Mapping:
         return out
 
     def _convert_row(self, key, raw) -> dict:
-        fields = {f.name: f.dataType for f in self.spark_schema.fields}
-        base = {name: None for name in fields}
+        fields = self._field_types
+        base = dict.fromkeys(fields)
         try:
             value = json.loads(raw) if isinstance(raw, (str, bytes)) else raw
             self.check_key(key)

@@ -13,16 +13,22 @@ Key semantics preserved:
 * ``--no-do-inserts`` dry-run (K7) — transform runs, write is skipped.
 
 Execution modes (``mode='auto'`` picks per dialect):
-* ``driver`` — batch rows surface to the driver via Arrow and write
-  over a single DBAPI connection. Default for DuckDB, whose database
-  IS driver-local; a remote-DB micro-batch that outgrows driver memory
-  should never take this path.
+* ``driver`` — the batch surfaces to the driver (``toArrow`` on
+  DuckDB, ``collect`` on Postgres) and writes over a single DBAPI
+  connection. Default for DuckDB, whose database IS driver-local; a
+  remote-DB micro-batch that outgrows driver memory should never take
+  this path.
 * ``partition`` — ``df.foreachPartition`` opens a connection per
   executor partition and writes concurrently (default for Postgres;
   requires a picklable connection factory, e.g. psycopg2). Rows never
   surface to the driver.
-Both modes write one round trip per ~1000-row page, not per row
-(``psycopg2.extras.execute_values`` multi-VALUES on Postgres).
+Neither mode pays a round trip per row:
+* DuckDB: the batch (or partition) is registered as an Arrow table
+  and lands in ONE ``INSERT … SELECT … ON CONFLICT`` statement. That
+  relies on keys being unique after ``prepare_batch``: DuckDB refuses
+  to ``DO UPDATE`` the same row twice in one statement.
+* Postgres: one round trip per ~1000-row page
+  (``psycopg2.extras.execute_values`` multi-VALUES).
 
 At 100 TB the knobs that matter: micro-batch admission
 (``maxOffsetsPerTrigger``), partition count before the write
@@ -35,9 +41,13 @@ from __future__ import annotations
 import json
 from collections.abc import Callable
 from dataclasses import dataclass
+from datetime import timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.window import Window
 
 from . import L
@@ -57,6 +67,35 @@ def _hstore_text(d: dict | None) -> str | None:
             val = '"' + str(v).replace("\\", "\\\\").replace('"', '\\"') + '"'
             parts.append(f"{key}=>{val}")
     return ", ".join(parts)
+
+
+def _hstore_json(col: pa.ChunkedArray) -> pa.Array:
+    """Arrow map column → the JSON text DuckDB stores for an hstore
+    column (sorted keys, ``json.dumps`` spacing)."""
+    return pa.array(
+        [None if m is None else json.dumps(dict(m), sort_keys=True) for m in col.to_pylist()],
+        pa.string(),
+    )
+
+
+def _rows_to_arrow(rows, schema: T.StructType) -> pa.Table:
+    """Spark rows → the Arrow table ``df.toArrow()`` would give: UTC
+    timestamps. A row's ``TimestampType`` cell is a naive local-time
+    datetime whose ``fold`` tells the two wall clocks of a DST
+    fall-back hour apart; ``astimezone`` keeps them distinct instants."""
+    ts = {f.name for f in schema.fields if isinstance(f.dataType, T.TimestampType)}
+    cells = [
+        {
+            k: v.astimezone(timezone.utc) if k in ts and v is not None else v
+            for k, v in r.asDict().items()
+        }
+        for r in rows
+    ]
+    return pa.Table.from_pylist(cells, schema=to_arrow_schema(schema))
+
+
+# name the batch is registered under for the length of one statement
+_BATCH_VIEW = "__dbsink_batch"
 
 
 @dataclass
@@ -279,17 +318,10 @@ class SinkWriter:
         return sql
 
     def _row_params(self, row, cols: list[ColumnSpec]):
-        out = []
-        for c in cols:
-            v = row[c.name]
-            if c.bind == "hstore":
-                if self.dialect == "postgres":
-                    out.append(_hstore_text(v))
-                else:
-                    out.append(None if v is None else json.dumps(v, sort_keys=True))
-            else:
-                out.append(v)
-        return out
+        return [
+            _hstore_text(row[c.name]) if c.bind == "hstore" else row[c.name]
+            for c in cols
+        ]
 
     def _execute_rows(self, conn, params: list) -> None:
         """One round trip per BATCH, not per row. Postgres uses
@@ -297,12 +329,9 @@ class SinkWriter:
         statements (page_size rows per statement — the reference's
         per-row round trips at listen.py:159-171 are the anti-baseline,
         SURVEY §4.2); the per-row casts ride along via ``template``.
-        DuckDB's ``executemany`` is already a native bulk path; unknown
-        DBAPI dialects fall back to cursor.executemany."""
+        DuckDB takes ``_upsert_arrow`` instead; unknown DBAPI dialects
+        fall back to cursor.executemany."""
         sql = self.upsert_sql()
-        if self.dialect == "duckdb":
-            conn.executemany(sql, params)
-            return
         cur = conn.cursor()
         try:
             if self.dialect == "postgres":
@@ -324,6 +353,40 @@ class SinkWriter:
             except Exception:
                 pass
 
+    def _upsert_arrow(self, conn, batch: pa.Table) -> None:
+        """DuckDB bulk upsert: ``upsert_sql()`` with ``SELECT … FROM``
+        the registered batch in place of ``VALUES``, run once. Keys are
+        unique after ``prepare_batch``, which this one statement needs:
+        DuckDB refuses to ``DO UPDATE`` the same row twice in one
+        statement."""
+        cols = [c for c in self.mapping.columns if c.bind != "serial"]
+        for c in cols:
+            if c.bind == "hstore":
+                i = batch.schema.get_field_index(c.name)
+                batch = batch.set_column(i, c.name, _hstore_json(batch.column(i)))
+        names = ", ".join(quoted(c.name) for c in cols)
+        sql = self.upsert_sql().replace(
+            f"VALUES {self.row_template()}", f"SELECT {names} FROM {_BATCH_VIEW}", 1
+        )
+        conn.register(_BATCH_VIEW, batch)
+        try:
+            conn.execute(sql)
+        finally:
+            conn.unregister(_BATCH_VIEW)
+
+    def _write(self, batch) -> None:
+        """One connection, one bulk write, one commit. ``batch`` is an
+        Arrow table on DuckDB and a list of row params on Postgres."""
+        conn = self.connect()
+        try:
+            if self.dialect == "duckdb":
+                self._upsert_arrow(conn, batch)
+            else:
+                self._execute_rows(conn, batch)
+            self._commit(conn)
+        finally:
+            conn.close()
+
     def write_batch(self, df: DataFrame, batch_id: int | None = None) -> int:
         """foreachBatch body: dedup, then batched upsert. Returns rows
         written (0 in dry-run mode)."""
@@ -336,36 +399,29 @@ class SinkWriter:
             return 0
         if self.effective_mode == "partition":
             return self._write_partitions(df, out_cols)
-        rows = df.collect()
-        if not rows:
-            return 0
-        params = [self._row_params(r, out_cols) for r in rows]
-        conn = self.connect()
-        try:
-            self._execute_rows(conn, params)
-            self._commit(conn)
-        finally:
-            conn.close()
-        return len(params)
+        if self.dialect == "duckdb":
+            batch = df.toArrow()
+        else:
+            batch = [self._row_params(r, out_cols) for r in df.collect()]
+        if len(batch):
+            self._write(batch)
+        return len(batch)
 
     def _write_partitions(self, df: DataFrame, out_cols: list[ColumnSpec]) -> int:
         """Per-partition concurrent writes (production Postgres path).
         Nothing surfaces to the driver; each executor partition opens
-        one connection and writes its slice with the same batched
-        multi-VALUES path as driver mode."""
-        mapping_cols = out_cols
+        one connection and writes its slice with the same bulk write as
+        driver mode."""
         writer = self
+        schema = df.schema
 
         def write_part(rows):
-            batch = [writer._row_params(r, mapping_cols) for r in rows]
-            if not batch:
-                return
-            conn = writer.connect()
-            try:
-                writer._execute_rows(conn, batch)
-                writer._commit(conn)
-            finally:
-                conn.close()
+            if writer.dialect == "duckdb":
+                batch = _rows_to_arrow(rows, schema)
+            else:
+                batch = [writer._row_params(r, out_cols) for r in rows]
+            if len(batch):
+                writer._write(batch)
 
         df.foreachPartition(write_part)
         return -1  # count not tracked in distributed mode

@@ -211,6 +211,23 @@ def test_dup_clusters_both_paths_identical(spark, monkeypatch):
     assert sorted(map(key, fast)) == sorted(map(key, slow))
 
 
+def test_verify_jaccard_drops_pair_with_missing_doc(spark):
+    """A candidate whose doc_b is absent from ``docs`` has no pair to
+    score; it must not come back as a self-compared 1.0."""
+    from dbsink_spark.analytics import dedup
+
+    docs = spark.createDataFrame(
+        [(1, [10, 20, 30]), (2, [10, 20, 30]), (3, [10, 20, 40])],
+        "doc_id long, shh array<long>",
+    )
+    cand = spark.createDataFrame([(1, 2), (1, 3), (2, 99)], "doc_a long, doc_b long")
+    got = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in dedup._verify_jaccard(cand, docs).collect()
+    }
+    assert got == {(1, 2): 1.0, (1, 3): 0.5}
+
+
 def test_cc_propagate_reports_iterations(spark):
     """_cc_propagate's stats out-param records propagation rounds; the
     fixpoint for near-dup clusters must land within the diameter bound

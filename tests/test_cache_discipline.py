@@ -29,15 +29,23 @@ def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-@pytest.fixture()
-def clean_cache(spark):
-    spark.catalog.clearCache()
+def _release_all(spark) -> None:
+    """Drop every cached frame and RDD-level persist in the JVM,
+    including ``localCheckpoint`` blocks left by earlier tests in the
+    session, so residency counts start from zero in any suite order."""
     from dbsink_spark.analytics import bcache
 
-    bcache._SLOTS.clear()
-    yield
     spark.catalog.clearCache()
     bcache._SLOTS.clear()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(True)
+
+
+@pytest.fixture()
+def clean_cache(spark):
+    _release_all(spark)
+    yield
+    _release_all(spark)
 
 
 def test_untracked_d03_cache_bounded(spark, clean_cache):

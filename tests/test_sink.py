@@ -1,17 +1,28 @@
 """Sink tests against DuckDB: DDL, upsert idempotency (the reference's
 integration sequence tests/test_dbsink.py:978-1031), in-batch
-last-writer-wins dedup, dry-run mode, hstore text building."""
+last-writer-wins dedup, dry-run mode, hstore text building, and parity
+of the Arrow bulk upsert with a per-row ``executemany`` oracle."""
 
 import json
+import os
+import time
+from datetime import datetime, timedelta, timezone
 
 import duckdb
 import pytest
+from pyspark.sql import Row
+from pyspark.sql import types as T
 
 from conftest import fixture_path
 
 from dbsink_spark.ddl import create_statements
-from dbsink_spark.mappings import resolve
-from dbsink_spark.sink import SinkWriter, _hstore_text, duckdb_connect_factory
+from dbsink_spark.mappings import BUILTIN, resolve
+from dbsink_spark.sink import (
+    SinkWriter,
+    _hstore_text,
+    _rows_to_arrow,
+    duckdb_connect_factory,
+)
 from dbsink_spark.sources import replay_source
 
 
@@ -351,3 +362,203 @@ def test_every_mapping_upserts_end_to_end(spark, tmp_path, lookup, fixture, topi
         assert rows2 == rows1 + n_null
     else:
         assert rows2 == 2 * rows1  # keyless mappings are append-only
+
+
+# ---------------------------------------------------------------------------
+# Arrow bulk upsert parity: write_batch's one INSERT … SELECT … ON
+# CONFLICT per batch must land exactly what one executemany upsert per
+# prepared row lands, for every registry mapping and both update modes.
+# Hermetic: the batches are built from each mapping's declared schema.
+# ---------------------------------------------------------------------------
+
+
+def _cell(col, k: int, v: int):
+    """Value for ``col``: key columns vary with the key id ``k``, the
+    rest with the version ``v``."""
+    i = k if k is not None else v
+    t = col.spark_type
+    if isinstance(t, T.MapType):
+        return {"z": f'v{i} "q"', "a": "é", "n": None}
+    if isinstance(t, T.TimestampType):
+        return datetime(2020, 1, 1, 0, 0, 0, 123456) + timedelta(hours=i)
+    if isinstance(t, T.DoubleType):
+        return i + 0.25
+    if col.bind == "jsonb":
+        return json.dumps({"n": i, "s": "a b"})
+    if col.bind.startswith("geometry"):
+        return f"POINT ({i} {i + 1})"
+    return f"{col.name}-{i}"
+
+
+def _parity_batches(mapping):
+    """Two batches as rows of ``mapping.spark_schema``: in-batch
+    duplicate keys, a NULL key column, a NULL hstore map, then a
+    re-sent key with new values and NULL non-key fields."""
+    cols = [c for c in mapping.columns if c.bind != "serial"]
+    keys = set(mapping.upsert_keys or [])
+
+    def row(k, v, null=()):
+        return tuple(
+            None if c.name in null else _cell(c, k if c.name in keys else None, v)
+            for c in cols
+        )
+
+    hstore = [c.name for c in cols if c.bind == "hstore"]
+    non_key = [c.name for c in cols if c.name not in keys]
+    last_key = (mapping.upsert_keys or [cols[0].name])[-1]
+    first = [row(0, 0), row(1, 1), row(1, 2), row(2, 3, {last_key}), row(3, 4, hstore)]
+    second = [row(0, 5, non_key[::2]), row(4, 6), row(2, 7, {last_key})]
+    return first, second
+
+
+def _except_all(con, table: str, a: str, b: str, names: str) -> list:
+    return con.execute(
+        f'SELECT {names} FROM {a}."{table}" EXCEPT ALL SELECT {names} FROM {b}."{table}"'
+    ).fetchall()
+
+
+def _assert_same_table(db, other_db, mapping):
+    cols = [c for c in mapping.columns if c.bind != "serial"]
+    names = ", ".join(f'"{c.name}"' for c in cols)
+    con = duckdb.connect(db)
+    try:
+        con.execute(f"ATTACH '{other_db}' AS other (READ_ONLY)")
+        n = con.execute(f'SELECT count(*) FROM "{mapping.table}"').fetchone()[0]
+        assert n > 0
+        assert _except_all(con, mapping.table, "main", "other", names) == []
+        assert _except_all(con, mapping.table, "other", "main", names) == []
+    finally:
+        con.close()
+
+
+@pytest.mark.parametrize("lookup", sorted(BUILTIN))
+@pytest.mark.parametrize("update_mode", ["overwrite", "preserve"])
+def test_arrow_upsert_matches_executemany(spark, tmp_path, lookup, update_mode):
+    mapping = resolve(lookup, "parity.topic")
+    db, oracle_db = str(tmp_path / "arrow.duckdb"), str(tmp_path / "oracle.duckdb")
+    writer = SinkWriter(
+        mapping, duckdb_connect_factory(db), dialect="duckdb", update_mode=update_mode
+    )
+    oracle = SinkWriter(
+        mapping, duckdb_connect_factory(oracle_db), dialect="duckdb", update_mode=update_mode
+    )
+    writer.ensure_table(drop=True)
+    oracle.ensure_table(drop=True)
+    out_cols = [c for c in mapping.columns if c.bind != "serial"]
+    for batch in _parity_batches(mapping):
+        df = spark.createDataFrame(batch, mapping.spark_schema)
+        writer.write_batch(df)
+        prepared = writer.prepare_batch(df).select(*[c.name for c in out_cols]).collect()
+        params = [
+            [
+                json.dumps(r[c.name], sort_keys=True)
+                if c.bind == "hstore" and r[c.name] is not None
+                else r[c.name]
+                for c in out_cols
+            ]
+            for r in prepared
+        ]
+        con = duckdb.connect(oracle_db)
+        try:
+            con.executemany(writer.upsert_sql(), params)
+        finally:
+            con.close()
+    _assert_same_table(db, oracle_db, mapping)
+    hstore = [c.name for c in out_cols if c.bind == "hstore"]
+    if hstore:
+        con = duckdb.connect(db)
+        try:
+            texts = {
+                r[0]
+                for r in con.execute(f'SELECT "{hstore[0]}" FROM "{mapping.table}"').fetchall()
+            }
+        finally:
+            con.close()
+        # json.dumps spacing and key order, not DuckDB's or Spark's to_json
+        assert '{"a": "\\u00e9", "n": null, "z": "v2 \\"q\\""}' in texts
+
+
+def test_arrow_upsert_empty_batch_and_view_cleanup(spark, tmp_path):
+    """An empty batch writes nothing; a written batch leaves no
+    registered view on the connection."""
+    mapping = resolve("GenericFloat", "parity.topic")
+    con = duckdb.connect(str(tmp_path / "keep.duckdb"))
+
+    class KeepOpen:
+        def __getattr__(self, name):
+            return getattr(con, name)
+
+        def close(self):
+            pass
+
+    writer = SinkWriter(mapping, KeepOpen, dialect="duckdb")
+    writer.ensure_table(drop=True)
+    temp_views = "SELECT count(*) FROM duckdb_views() WHERE temporary AND NOT internal"
+    empty = spark.createDataFrame([], mapping.spark_schema)
+    assert writer.write_batch(empty) == 0
+    assert con.execute(temp_views).fetchone()[0] == 0
+    first, _ = _parity_batches(mapping)
+    assert writer.write_batch(spark.createDataFrame(first, mapping.spark_schema)) == 4
+    assert con.execute(temp_views).fetchone()[0] == 0
+    assert con.execute(f'SELECT count(*) FROM "{mapping.table}"').fetchone()[0] == 4
+    con.close()
+
+
+def test_partition_mode_lands_same_rows_as_driver_mode(spark, tmp_path):
+    mapping = resolve("GenericFloat", "parity.topic")
+    dbs = {}
+    for mode in ("driver", "partition"):
+        dbs[mode] = str(tmp_path / f"{mode}.duckdb")
+        writer = SinkWriter(
+            mapping, duckdb_connect_factory(dbs[mode]), dialect="duckdb", mode=mode
+        )
+        writer.ensure_table(drop=True)
+        for batch in _parity_batches(mapping):
+            # one partition: DuckDB admits a single writer process
+            writer.write_batch(
+                spark.createDataFrame(batch, mapping.spark_schema).coalesce(1)
+            )
+    _assert_same_table(dbs["driver"], dbs["partition"], mapping)
+
+
+def test_partition_batch_keeps_dst_fallback_instants_apart(tmp_path):
+    """Partition mode builds its Arrow batch from Spark rows, whose
+    timestamps are naive local time. Under a non-UTC TZ the two
+    instants of a DST fall-back hour share a wall clock; they must
+    still land as two rows, at the instants driver mode would bind."""
+    mapping = resolve("GenericFloat", "dst.topic")
+    db = str(tmp_path / "dst.duckdb")
+
+    def connect():
+        con = duckdb.connect(db)
+        con.execute("SET TimeZone = 'America/New_York'")
+        return con
+
+    writer = SinkWriter(mapping, connect, dialect="duckdb")
+    writer.ensure_table(drop=True)
+    # 01:30 EDT, then 01:30 EST an hour later (2020-11-01)
+    instants = [datetime(2020, 11, 1, h, 30, tzinfo=timezone.utc) for h in (5, 6)]
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        ts = T.TimestampType()
+        local = [ts.fromInternal(ts.toInternal(t)) for t in instants]
+        assert local[0].replace(fold=0) == local[1].replace(fold=0)
+        cells = {c.name: _cell(c, 0, 0) for c in mapping.columns if c.bind != "serial"}
+        rows = [Row(**{**cells, "time": t}) for t in local]
+        writer._write(_rows_to_arrow(rows, mapping.spark_schema))
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    con = duckdb.connect(db)
+    try:
+        got = con.execute(
+            f'SELECT epoch_us("time") FROM "{mapping.table}" ORDER BY 1'
+        ).fetchall()
+    finally:
+        con.close()
+    assert [g[0] for g in got] == [int(t.timestamp() * 1_000_000) for t in instants]
