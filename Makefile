@@ -18,8 +18,10 @@ PG_DATA  = /tmp/pg_live/data
         integration-up integration-down integration-pg integration-pg-up \
         integration-pg-down
 
+# the Tier-1 command from ROADMAP.md, with its env and timeout
 test:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 oracle:
 	python tools/check_oracle.py

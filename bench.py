@@ -146,51 +146,6 @@ def main() -> None:
     }
     spark.catalog.clearCache()
 
-    # vendor-mapping throughput: exact Python path (mapInPandas) vs the
-    # all-JVM fixed-schema twin on the same replicated wire messages
-    # (reference 516-row health_and_status fixture x200 ≈ 103k msgs).
-    # Measured conclusion (round 6, also at x600 ≈ 310k): the paths are
-    # at execution PARITY on this message shape (ratio 0.93-1.26 by
-    # boot, min-of-5) — the fast path's case is structural (no Python
-    # worker pool, no Arrow hop, fuses into the scan/stream stage),
-    # not throughput; the ratio here guards against regressing either.
-    from pyspark.sql import functions as SF
-
-    from dbsink_spark.mappings import resolve
-    from dbsink_spark.sources import replay_source
-
-    wire = (
-        replay_source(spark, "/root/reference/tests/health_and_status.json")
-        .withColumn("_r", SF.explode(SF.array([SF.lit(i) for i in range(200)])))
-        .drop("_r")
-        .repartition(32)
-        .persist()
-    )
-    wire.count()
-    # Plan construction is timed SEPARATELY from execution: a
-    # production pipeline analyzes the transform once per
-    # query/stream and executes it per micro-batch, so folding the
-    # fast path's ~1.4 s Catalyst analysis of its wide expression
-    # tree into every timed run (as this bench did through round 5)
-    # misstates the per-row throughput both paths deliver at scale.
-    # Both numbers are recorded; speedup compares execution.
-    nwic = {}
-    for label, lookup in (("exact", "NwicFloatReports"), ("fast", "NwicFloatReportsFast")):
-        mapping = resolve(lookup, "bench")
-        t0 = time.time()
-        transformed = mapping.transform(wire)
-        transformed.schema  # force analysis
-        nwic[f"{label}_plan_sec"] = round(time.time() - t0, 3)
-        runs = []
-        for _ in range(5):  # min-of-5: the paths are within noise of
-            # each other, so a small sample decides the ratio by luck
-            t0 = time.time()
-            transformed.write.format("noop").mode("overwrite").save()
-            runs.append(time.time() - t0)
-        nwic[label] = round(min(runs), 3)
-    nwic["speedup"] = round(nwic["exact"] / max(nwic["fast"], 1e-9), 2)
-    spark.catalog.clearCache()
-
     # composed curation pipeline, end-to-end (VERDICT_r09 #6): the
     # registry bench times operators in isolation; this times the
     # COMPOSED scrub → quality → exact-dedup → near-dedup → split →
@@ -278,7 +233,6 @@ def main() -> None:
         "calibration": calibration,
         "extras": {
             "d09_propagate": d09_propagate,
-            "nwic_transform_100k": nwic,
             "curate_corpus_e2e": curate,
             # warm-run (3rd) job count per query — BENCH_LOCAL only
             "job_counts": job_counts,

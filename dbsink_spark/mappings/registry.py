@@ -9,8 +9,6 @@ still register via the ``dbsink_spark.maps`` entry-point group.
 from __future__ import annotations
 
 from .base import Mapping
-from .fast_float import GenericFloatFast
-from .nwic_fast import NwicFloatReportsFast
 from .generic import (
     GenericFieldStatistic,
     GenericFloat,
@@ -39,8 +37,6 @@ BUILTIN: dict[str, type[Mapping]] = {
         NwicFloatReports,
         NwicFloatReportsSofar,
         GenericFieldStatistic,
-        GenericFloatFast,
-        NwicFloatReportsFast,
     )
 }
 

@@ -15,18 +15,19 @@ Key semantics preserved:
 Execution modes (``mode='auto'`` picks per dialect):
 * ``driver`` — the batch surfaces to the driver (``toArrow`` on
   DuckDB, ``collect`` on Postgres) and writes over a single DBAPI
-  connection. Default for DuckDB, whose database IS driver-local; a
-  remote-DB micro-batch that outgrows driver memory should never take
-  this path.
-* ``partition`` — ``df.foreachPartition`` opens a connection per
-  executor partition and writes concurrently (default for Postgres;
-  requires a picklable connection factory, e.g. psycopg2). Rows never
-  surface to the driver.
+  connection. DuckDB always runs this way: a database file admits one
+  writer process, so concurrent executor writers would conflict on its
+  lock. A remote-DB micro-batch that outgrows driver memory should
+  never take this path.
+* ``partition`` — Postgres only. ``df.foreachPartition`` opens a
+  connection per executor partition and writes concurrently (the
+  Postgres default; requires a picklable connection factory, e.g.
+  psycopg2). Rows never surface to the driver.
 Neither mode pays a round trip per row:
-* DuckDB: the batch (or partition) is registered as an Arrow table
-  and lands in ONE ``INSERT … SELECT … ON CONFLICT`` statement. That
-  relies on keys being unique after ``prepare_batch``: DuckDB refuses
-  to ``DO UPDATE`` the same row twice in one statement.
+* DuckDB: the batch is registered as an Arrow table and lands in ONE
+  ``INSERT … SELECT … ON CONFLICT`` statement. That relies on keys
+  being unique after ``prepare_batch``: DuckDB refuses to ``DO
+  UPDATE`` the same row twice in one statement.
 * Postgres: one round trip per ~1000-row page
   (``psycopg2.extras.execute_values`` multi-VALUES).
 
@@ -41,13 +42,10 @@ from __future__ import annotations
 import json
 from collections.abc import Callable
 from dataclasses import dataclass
-from datetime import timezone
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.window import Window
 
 from . import L
@@ -78,22 +76,6 @@ def _hstore_json(col: pa.ChunkedArray) -> pa.Array:
     )
 
 
-def _rows_to_arrow(rows, schema: T.StructType) -> pa.Table:
-    """Spark rows → the Arrow table ``df.toArrow()`` would give: UTC
-    timestamps. A row's ``TimestampType`` cell is a naive local-time
-    datetime whose ``fold`` tells the two wall clocks of a DST
-    fall-back hour apart; ``astimezone`` keeps them distinct instants."""
-    ts = {f.name for f in schema.fields if isinstance(f.dataType, T.TimestampType)}
-    cells = [
-        {
-            k: v.astimezone(timezone.utc) if k in ts and v is not None else v
-            for k, v in r.asDict().items()
-        }
-        for r in rows
-    ]
-    return pa.Table.from_pylist(cells, schema=to_arrow_schema(schema))
-
-
 # name the batch is registered under for the length of one statement
 _BATCH_VIEW = "__dbsink_batch"
 
@@ -107,7 +89,8 @@ class SinkWriter:
     do_inserts: bool = True
     # 'auto' resolves per dialect: postgres → 'partition' (executors
     # write concurrently; a big micro-batch never surfaces to the
-    # driver), duckdb → 'driver' (the DB is driver-local by nature).
+    # driver), duckdb → 'driver'. 'partition' is Postgres only: a
+    # DuckDB file admits one writer process.
     mode: str = "auto"  # auto | driver | partition
     # Conflict-update semantics (documented divergence, reference
     # listen.py:160-166 `set_=newvalues` updates only the keys PRESENT
@@ -132,6 +115,14 @@ class SinkWriter:
     # explicit, documented divergence for PostGIS-less servers, and
     # binds are only degraded AFTER the probe confirms absence.
     postgis: bool | None = None
+
+    def __post_init__(self) -> None:
+        if self.dialect == "duckdb" and self.mode == "partition":
+            raise ValueError(
+                "mode='partition' is Postgres only: DuckDB admits a single "
+                "writer process per database file, so concurrent partition "
+                "writers conflict on its lock; use mode='driver' or 'auto'"
+            )
 
     @property
     def effective_mode(self) -> str:
@@ -408,19 +399,14 @@ class SinkWriter:
         return len(batch)
 
     def _write_partitions(self, df: DataFrame, out_cols: list[ColumnSpec]) -> int:
-        """Per-partition concurrent writes (production Postgres path).
-        Nothing surfaces to the driver; each executor partition opens
-        one connection and writes its slice with the same bulk write as
-        driver mode."""
+        """Per-partition concurrent writes (Postgres). Nothing surfaces
+        to the driver; each executor partition opens one connection and
+        writes its slice with the same bulk write as driver mode."""
         writer = self
-        schema = df.schema
 
         def write_part(rows):
-            if writer.dialect == "duckdb":
-                batch = _rows_to_arrow(rows, schema)
-            else:
-                batch = [writer._row_params(r, out_cols) for r in rows]
-            if len(batch):
+            batch = [writer._row_params(r, out_cols) for r in rows]
+            if batch:
                 writer._write(batch)
 
         df.foreachPartition(write_part)

@@ -29,15 +29,7 @@ def run_stream(
     the sink. ``trigger`` passes through to ``DataStreamWriter.trigger``
     (e.g. ``{"availableNow": True}`` for drain-and-stop,
     ``{"processingTime": "10 seconds"}`` for steady state)."""
-    transformed = mapping.transform(source)
-    stream = (
-        transformed.writeStream.outputMode("append")
-        .foreachBatch(writer.foreach_batch())
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger:
-        stream = stream.trigger(**trigger)
-    return stream.start()
+    return listen_transform(source, mapping, writer.foreach_batch(), checkpoint, trigger)
 
 
 def listen_transform(

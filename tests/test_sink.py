@@ -4,13 +4,10 @@ last-writer-wins dedup, dry-run mode, hstore text building, and parity
 of the Arrow bulk upsert with a per-row ``executemany`` oracle."""
 
 import json
-import os
-import time
-from datetime import datetime, timedelta, timezone
+from datetime import datetime, timedelta
 
 import duckdb
 import pytest
-from pyspark.sql import Row
 from pyspark.sql import types as T
 
 from conftest import fixture_path
@@ -20,7 +17,6 @@ from dbsink_spark.mappings import BUILTIN, resolve
 from dbsink_spark.sink import (
     SinkWriter,
     _hstore_text,
-    _rows_to_arrow,
     duckdb_connect_factory,
 )
 from dbsink_spark.sources import replay_source
@@ -221,25 +217,12 @@ def test_effective_mode_auto_resolution():
     assert pg.effective_mode == "driver"
 
 
-def test_partition_mode_writes_duckdb(spark, duck_writer):
-    """foreachPartition path end-to-end (single partition — DuckDB
-    allows one writer process; concurrency is Postgres's job)."""
-    writer, db, mapping = duck_writer()
-    writer.mode = "partition"
-    writer.ensure_table(drop=True)
-    msgs = [
-        {"uid": f"u{i}", "gid": "g", "time": "2020-01-01T00:00:00Z",
-         "lat": 1.0, "lon": 2.0, "z": 1.5, "values": {"v": str(i)}}
-        for i in range(7)
-    ]
-    df = spark.createDataFrame(
-        [("k", json.dumps(m)) for m in msgs], ["key", "value"]
-    )
-    out = mapping.transform(df).coalesce(1)
-    writer.write_batch(out)
-    writer.write_batch(out)  # replay must converge via ON CONFLICT
-    rows = table_rows(db, mapping.table)
-    assert len(rows) == 7
+def test_duckdb_partition_mode_rejected():
+    """DuckDB admits one writer process per database file, so
+    concurrent per-partition writers would conflict on its lock."""
+    mapping = resolve("GenericFloat", "some.topic")
+    with pytest.raises(ValueError, match="single writer process"):
+        SinkWriter(mapping, lambda: None, dialect="duckdb", mode="partition")
 
 
 def test_execute_values_fast_path(monkeypatch):
@@ -315,7 +298,6 @@ def test_executemany_fallback_without_psycopg2():
 
 MAPPING_E2E = [
     ("GenericFloat", "replayer.json", "axds-netcdf-replayer-data"),
-    ("GenericFloatFast", "replayer.json", "axds-netcdf-replayer-data"),
     ("GenericFieldStatistic", "statistics.json", "topic"),
     ("GenericGeography", "scuttle-watch-regions.json", "topic"),
     ("JsonMap", "mission_sensors.json", "topic"),
@@ -324,7 +306,6 @@ MAPPING_E2E = [
     ("NumurusData", "numurus.data.json", "topic"),
     ("NumurusStatus", "numurus.status.json", "topic"),
     ("NwicFloatReports", "mission_sensors.json", "oot.reports.mission_sensors"),
-    ("NwicFloatReportsFast", "mission_sensors.json", "oot.reports.mission_sensors"),
     ("NwicFloatReportsSofar", "sofar.json", "sofar.data"),
 ]
 
@@ -502,63 +483,3 @@ def test_arrow_upsert_empty_batch_and_view_cleanup(spark, tmp_path):
     assert con.execute(temp_views).fetchone()[0] == 0
     assert con.execute(f'SELECT count(*) FROM "{mapping.table}"').fetchone()[0] == 4
     con.close()
-
-
-def test_partition_mode_lands_same_rows_as_driver_mode(spark, tmp_path):
-    mapping = resolve("GenericFloat", "parity.topic")
-    dbs = {}
-    for mode in ("driver", "partition"):
-        dbs[mode] = str(tmp_path / f"{mode}.duckdb")
-        writer = SinkWriter(
-            mapping, duckdb_connect_factory(dbs[mode]), dialect="duckdb", mode=mode
-        )
-        writer.ensure_table(drop=True)
-        for batch in _parity_batches(mapping):
-            # one partition: DuckDB admits a single writer process
-            writer.write_batch(
-                spark.createDataFrame(batch, mapping.spark_schema).coalesce(1)
-            )
-    _assert_same_table(dbs["driver"], dbs["partition"], mapping)
-
-
-def test_partition_batch_keeps_dst_fallback_instants_apart(tmp_path):
-    """Partition mode builds its Arrow batch from Spark rows, whose
-    timestamps are naive local time. Under a non-UTC TZ the two
-    instants of a DST fall-back hour share a wall clock; they must
-    still land as two rows, at the instants driver mode would bind."""
-    mapping = resolve("GenericFloat", "dst.topic")
-    db = str(tmp_path / "dst.duckdb")
-
-    def connect():
-        con = duckdb.connect(db)
-        con.execute("SET TimeZone = 'America/New_York'")
-        return con
-
-    writer = SinkWriter(mapping, connect, dialect="duckdb")
-    writer.ensure_table(drop=True)
-    # 01:30 EDT, then 01:30 EST an hour later (2020-11-01)
-    instants = [datetime(2020, 11, 1, h, 30, tzinfo=timezone.utc) for h in (5, 6)]
-    old_tz = os.environ.get("TZ")
-    os.environ["TZ"] = "America/New_York"
-    time.tzset()
-    try:
-        ts = T.TimestampType()
-        local = [ts.fromInternal(ts.toInternal(t)) for t in instants]
-        assert local[0].replace(fold=0) == local[1].replace(fold=0)
-        cells = {c.name: _cell(c, 0, 0) for c in mapping.columns if c.bind != "serial"}
-        rows = [Row(**{**cells, "time": t}) for t in local]
-        writer._write(_rows_to_arrow(rows, mapping.spark_schema))
-    finally:
-        if old_tz is None:
-            os.environ.pop("TZ", None)
-        else:
-            os.environ["TZ"] = old_tz
-        time.tzset()
-    con = duckdb.connect(db)
-    try:
-        got = con.execute(
-            f'SELECT epoch_us("time") FROM "{mapping.table}" ORDER BY 1'
-        ).fetchall()
-    finally:
-        con.close()
-    assert [g[0] for g in got] == [int(t.timestamp() * 1_000_000) for t in instants]

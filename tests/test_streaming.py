@@ -14,7 +14,12 @@ from pyspark.sql import functions as F
 from dbsink_spark.mappings import resolve
 from dbsink_spark.sink import SinkWriter, duckdb_connect_factory
 from dbsink_spark.sources import file_stream
-from dbsink_spark.streaming import run_stream, streaming_dedup, tumbling_aggregate
+from dbsink_spark.streaming import (
+    listen_transform,
+    run_stream,
+    streaming_dedup,
+    tumbling_aggregate,
+)
 
 
 def test_stream_end_to_end(spark, tmp_path):
@@ -59,6 +64,36 @@ def test_stream_end_to_end(spark, tmp_path):
     n2 = con.execute(f'SELECT count(*) FROM "{mapping.table}"').fetchone()[0]
     con.close()
     assert n2 == 4
+
+
+def test_listen_transform_library_api(spark, tmp_path):
+    """The no-database library surface: user callback per micro-batch."""
+    indir = tmp_path / "in"
+    indir.mkdir()
+    messages = [
+        {"uid": 1, "gid": "g", "time": f"2020-01-01T0{i}:00:00Z",
+         "lat": 10.0 + i, "lon": -70.0 - i, "z": 0.5, "values": {"temp": 4.0 + i}}
+        for i in range(4)
+    ]
+    with open(indir / "b0.json", "w") as f:
+        for msg in messages:
+            f.write(json.dumps({"key": "k", "value": json.dumps(msg)}) + "\n")
+
+    got = []
+
+    def on_batch(bdf, bid):
+        got.extend(bdf.collect())
+
+    q = listen_transform(
+        file_stream(spark, str(indir)),
+        resolve("GenericFloat", "t"),
+        on_batch,
+        checkpoint=str(tmp_path / "ckpt"),
+        trigger={"availableNow": True},
+    )
+    q.awaitTermination(120)
+    assert len(got) == 4
+    assert {r["uid"] for r in got} == {"1"}
 
 
 def test_streaming_dedup_semantics(spark):
