@@ -120,8 +120,8 @@ integration: integration-up
 # Postgres 15 server (no dockerd, no psycopg2 wheel) — init a local
 # trust-auth cluster on :5433 as the non-root postgres user and run
 # the pg half of the live tests through the pure-python wire client
-# (dbsink_spark/wire/pg_lite.py). First green run recorded in
-# BENCH_NOTES round 8: 3 passed, PostGIS/Kafka skips.
+# (dbsink_spark/wire/pg_lite.py), plus the Postgres cells of the
+# sink/maintainer dialect matrix and the maintainers' serving SQL.
 integration-pg-up:
 	mkdir -p $(dir $(PG_DATA)) && chown -R postgres $(dir $(PG_DATA))
 	test -d $(PG_DATA) || su postgres -s /bin/bash -c \
@@ -140,4 +140,6 @@ integration-pg-down:
 	su postgres -s /bin/bash -c "pg_ctl -D $(PG_DATA) stop" || true
 
 integration-pg: integration-pg-up
-	DBSINK_PG_DSN=$(PG_DSN) python -m pytest tests/test_integration_live.py -v
+	DBSINK_PG_DSN=$(PG_DSN) python -m pytest tests/test_integration_live.py \
+		tests/test_dialect_matrix.py \
+		tests/test_streaming.py::test_maintainer_serving_sql_runs_on_live_postgres -v

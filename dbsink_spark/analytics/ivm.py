@@ -33,6 +33,8 @@ statistics — no base-table access.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -63,8 +65,6 @@ class AggView:
             # empty store: just the directory — a partitioned write of
             # zero rows emits no readable footer, so reads go through
             # _read_state()'s empty fallback until the first maintain()
-            import os
-
             os.makedirs(self.path, exist_ok=True)
             return
         state = (
@@ -181,20 +181,14 @@ class AggView:
     LEDGER_KEEP: int | None = None
 
     def _ledger_dir(self) -> str:
-        import os
-
         d = os.path.join(self.path, "_applied_batches")
         os.makedirs(d, exist_ok=True)
         return d
 
     def _batch_applied(self, batch_id: int) -> bool:
-        import os
-
         return os.path.exists(os.path.join(self._ledger_dir(), str(batch_id)))
 
     def _mark_applied(self, batch_id: int) -> None:
-        import os
-
         d = self._ledger_dir()
         with open(os.path.join(d, str(batch_id)), "w") as f:
             f.write("applied\n")
@@ -220,18 +214,13 @@ class AggView:
         via the applied-batches ledger. Effectively-once up to the
         ledger's documented commit window."""
 
-        def fn(batch_df: DataFrame, batch_id: int) -> None:
-            self.maintain(batch_df, group_col, value_col, op_col,
-                          batch_id=batch_id)
+        from ..streaming.pipeline import start_foreach_batch
 
-        stream = (
-            source.writeStream.outputMode("append")
-            .foreachBatch(fn)
-            .option("checkpointLocation", checkpoint)
+        return start_foreach_batch(
+            source,
+            lambda df, bid: self.maintain(df, group_col, value_col, op_col, batch_id=bid),
+            checkpoint, trigger,
         )
-        if trigger:
-            stream = stream.trigger(**trigger)
-        return stream.start()
 
     # -- serving -----------------------------------------------------------
 

@@ -17,7 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from .sink import last_writer_wins
 
 
 def with_partition_cols(df: DataFrame, ts_col: str = "time") -> DataFrame:
@@ -183,9 +184,10 @@ def merge_lake(
 
     Mechanics: the update batch is first reduced to ONE row per key —
     last-writer-wins by ``order_col`` (e.g. a CDC offset/ts column; when
-    absent, by arrival order within the batch) — the same reduction
-    SinkWriter.prepare_batch applies, so a CDC batch carrying several
-    versions of a key upserts exactly the newest. The affected-partition
+    absent, by arrival order within the batch) through
+    ``sink.last_writer_wins``, the reduction SinkWriter.prepare_batch
+    applies, so a CDC batch carrying several versions of a key upserts
+    exactly the newest. The affected-partition
     list comes from the updates (tiny distinct agg, broadcast into a
     partition-pruned read); the rewrite is (existing ∖ updated-keys) ∪
     updates for just those partitions.
@@ -209,14 +211,7 @@ def merge_lake(
 
     # last-writer-wins: one row per key before anything else (an update
     # batch with 2 rows for a key must not write both)
-    ord_expr = F.col(order_col) if order_col else F.monotonically_increasing_id()
-    updates = updates.withColumn("__ord", ord_expr)
-    w = Window.partitionBy(*key_cols).orderBy(F.col("__ord").desc())
-    updates = (
-        updates.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(*cols)
-    )
+    updates = last_writer_wins(updates, key_cols, order_col).select(*cols)
 
     upd_keys = updates.select(*key_cols).distinct()
     touched = updates.select(*partition_cols).distinct()

@@ -229,16 +229,7 @@ class SinkWriter:
 
         keys = self.mapping.upsert_keys
         if keys:
-            order_col = "offset" if "offset" in df.columns else None
-            if order_col is None:
-                df = df.withColumn("__ord", F.monotonically_increasing_id())
-                order_col = "__ord"
-            w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
-            df = (
-                df.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn", "__ord" if "__ord" in df.columns else "__rn")
-            )
+            df = last_writer_wins(df, keys, "offset" if "offset" in df.columns else None)
         return df
 
     def _bind_exprs(self, cols: list[ColumnSpec]) -> list[str]:
@@ -434,6 +425,21 @@ class SinkWriter:
             conn.rollback()
         except Exception:
             pass
+
+
+def last_writer_wins(df: DataFrame, keys, order_col: str | None = None) -> DataFrame:
+    """Reduce ``df`` to one row per ``keys``: the row with the highest
+    ``order_col`` (e.g. a Kafka or CDC offset), or, when ``order_col``
+    is None, the last row to arrive within the batch."""
+    if order_col is None:
+        df = df.withColumn("__ord", F.monotonically_increasing_id())
+        order_col = "__ord"
+    w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn", "__ord" if "__ord" in df.columns else "__rn")
+    )
 
 
 def duckdb_connect_factory(path: str) -> Callable[[], object]:

@@ -18,6 +18,28 @@ from ..mappings.base import Mapping
 from ..sink import SinkWriter
 
 
+def start_foreach_batch(
+    df: DataFrame,
+    on_batch,
+    checkpoint: str,
+    trigger: dict | None = None,
+) -> StreamingQuery:
+    """Start ``df`` as an append stream whose micro-batches go to
+    ``on_batch(batch_df, batch_id)``, with offsets checkpointed under
+    ``checkpoint``. Every stream in the package starts here.
+    ``trigger`` passes through to ``DataStreamWriter.trigger`` (e.g.
+    ``{"availableNow": True}`` for drain-and-stop,
+    ``{"processingTime": "10 seconds"}`` for steady state)."""
+    stream = (
+        df.writeStream.outputMode("append")
+        .foreachBatch(on_batch)
+        .option("checkpointLocation", checkpoint)
+    )
+    if trigger:
+        stream = stream.trigger(**trigger)
+    return stream.start()
+
+
 def run_stream(
     source: DataFrame,
     mapping: Mapping,
@@ -26,9 +48,7 @@ def run_stream(
     trigger: dict | None = None,
 ) -> StreamingQuery:
     """Wire a (key, value) streaming source through the mapping into
-    the sink. ``trigger`` passes through to ``DataStreamWriter.trigger``
-    (e.g. ``{"availableNow": True}`` for drain-and-stop,
-    ``{"processingTime": "10 seconds"}`` for steady state)."""
+    the sink."""
     return listen_transform(source, mapping, writer.foreach_batch(), checkpoint, trigger)
 
 
@@ -44,12 +64,4 @@ def listen_transform(
     micro-batch (the reference's ``utils.listen_unpack``,
     dbsink/utils.py:54-95, where a user callback gets each unpacked +
     mapped message)."""
-    transformed = mapping.transform(source)
-    stream = (
-        transformed.writeStream.outputMode("append")
-        .foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger:
-        stream = stream.trigger(**trigger)
-    return stream.start()
+    return start_foreach_batch(mapping.transform(source), on_batch, checkpoint, trigger)

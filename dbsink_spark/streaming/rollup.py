@@ -8,7 +8,7 @@ table with an additive ``ON CONFLICT DO UPDATE SET n = n + excluded.n``
 streamed so far. Additive merge is at-least-once sensitive (a replayed
 micro-batch would double-count), so merge_batch dedups replays through
 the transactional batch ledger shared with the sketch maintainers
-(``sketches.apply_batch_once``): the marker commits in the same
+(``sketches.MergeMaintainer``): the marker commits in the same
 transaction as the merge, exactly the idempotent-writer pattern
 Spark's own ``foreachBatch`` docs prescribe.
 
@@ -25,12 +25,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..ddl import quoted
+from .pipeline import start_foreach_batch
+from .sketches import MergeMaintainer
 
 
-class RollupMaintainer:
+class RollupMaintainer(MergeMaintainer):
     """Maintains an additive (bucket, key) rollup table in a DBAPI
     target from a streaming source of (ts_col, key, value) rows."""
+
+    COLUMNS = (
+        ("bucket", "TIMESTAMP"), ("key", "VARCHAR"),
+        ("n", "BIGINT"), ("sv", "DOUBLE PRECISION"),
+    )
+    KEYS = ("bucket", "key")
+    MERGE_SET = "n = {t}.n + excluded.n, sv = {t}.sv + excluded.sv"
 
     def __init__(
         self,
@@ -40,47 +48,30 @@ class RollupMaintainer:
         dialect: str = "duckdb",
         max_partial_rows: int = 1_000_000,
     ):
-        self.connect = connect
-        self.table = table
+        super().__init__(connect, table, dialect)
         self.bucket = bucket
-        self.dialect = dialect
         # merge_batch surfaces partials to the driver — bounded by
         # bucket×key cardinality, NOT batch size, which is what makes
         # the collect safe. The guard turns a silent driver OOM (e.g. a
         # high-cardinality key column chosen by mistake) into an error.
         self.max_partial_rows = max_partial_rows
 
-    def ensure_table(self) -> None:
-        from .sketches import _exec_ddl
-
-        # DOUBLE PRECISION + dialect-aware DDL execution + qualified
-        # upsert below: the same postgres-dialect fixes the sketch
-        # maintainers needed (live-test findings — conn.execute is
-        # duckdb-only, bare DOUBLE is not a postgres type, and
-        # unqualified columns in DO UPDATE SET are ambiguous)
-        _exec_ddl(
-            self.connect,
-            self.dialect,
-            f"CREATE TABLE IF NOT EXISTS {quoted(self.table)} ("
-            "bucket TIMESTAMP, key VARCHAR, n BIGINT, sv DOUBLE PRECISION, "
-            "PRIMARY KEY (bucket, key))",
-        )
-
     def partials(self, df: DataFrame, ts_col: str, key: str, value: str) -> DataFrame:
+        """(bucket, key, n, sv) partials for one batch. A NULL bucket or
+        key is dropped: it would violate the table's primary key (the
+        sketches' batch_grid rule)."""
         return (
             df.groupBy(
                 F.date_trunc(self.bucket.split()[1], F.col(ts_col)).alias("bucket"),
                 F.col(key).alias("key"),
             )
             .agg(F.count(F.lit(1)).alias("n"), F.sum(value).alias("sv"))
+            .filter(F.col("bucket").isNotNull() & F.col("key").isNotNull())
         )
 
-    def merge_batch(self, partials_df: DataFrame, batch_id: int | None = None) -> None:
+    def _collect(self, df: DataFrame) -> list:
         cap = self.max_partial_rows
-        rows = [
-            (r["bucket"], r["key"], r["n"], r["sv"])
-            for r in partials_df.limit(cap + 1).collect()
-        ]
+        rows = df.limit(cap + 1).collect()
         if len(rows) > cap:
             raise ValueError(
                 f"rollup partials exceed max_partial_rows={cap}: the "
@@ -88,22 +79,7 @@ class RollupMaintainer:
                 "rollup — coarsen the bucket, reduce key cardinality, or "
                 "raise the cap"
             )
-        if not rows and batch_id is None:
-            return
-        sql = (
-            f"INSERT INTO {quoted(self.table)} (bucket, key, n, sv) "
-            "VALUES (?, ?, ?, ?) "
-            f"ON CONFLICT (bucket, key) DO UPDATE SET "
-            f"n = {quoted(self.table)}.n + excluded.n, "
-            f"sv = {quoted(self.table)}.sv + excluded.sv"
-        )
-        if self.dialect == "postgres":
-            sql = sql.replace("?", "%s")
-        # additive merge is replay-sensitive: the shared transactional
-        # batch ledger makes an at-least-once foreachBatch replay a no-op
-        from .sketches import apply_batch_once
-
-        apply_batch_once(self.connect, self.dialect, self.table, sql, rows, batch_id)
+        return rows
 
     def run(
         self,
@@ -115,15 +91,8 @@ class RollupMaintainer:
         trigger: dict | None = None,
     ) -> StreamingQuery:
         self.ensure_table()
-
-        def fn(batch_df: DataFrame, batch_id: int) -> None:
-            self.merge_batch(self.partials(batch_df, ts_col, key, value), batch_id)
-
-        stream = (
-            source.writeStream.outputMode("append")
-            .foreachBatch(fn)
-            .option("checkpointLocation", checkpoint)
+        return start_foreach_batch(
+            source,
+            lambda df, bid: self.merge_batch(self.partials(df, ts_col, key, value), bid),
+            checkpoint, trigger,
         )
-        if trigger:
-            stream = stream.trigger(**trigger)
-        return stream.start()

@@ -22,7 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..ddl import quoted
-from ..functions.hashing import MINHASH_COEFFS, affine, h64
+from ..functions.hashing import AFFINE_MOD, MINHASH_COEFFS, REDUCE_MOD, affine, h64
+from .pipeline import start_foreach_batch
 
 CM_D = 4
 CM_W = 1024
@@ -32,16 +33,16 @@ LEDGER_TABLE = "_applied_batches"
 
 def apply_batch_once(connect, dialect: str, table: str, sql: str, rows,
                      batch_id: int | None) -> bool:
-    """Execute an ADDITIVE upsert with replay protection: when
-    ``batch_id`` is given, a ledger marker row commits in the SAME
-    transaction as the merge, so foreachBatch's at-least-once replay
-    of an already-committed batch is a clean no-op — there is no
-    applied-but-unmarked window (unlike a file-marker scheme).
+    """Execute one upsert batch (``sql`` over ``rows``) as ONE
+    transaction. When ``batch_id`` is given, a ledger marker row
+    commits in that same transaction, so foreachBatch's at-least-once
+    replay of an already-committed batch is a clean no-op — there is
+    no applied-but-unmarked window (unlike a file-marker scheme).
     Returns False when the batch was already applied.
 
-    Idempotent maintainers (bitmap OR, HLL max) don't need this —
-    their replay is naturally absorbing; the ADDITIVE family
-    (count-min, histogram, rollup) doubles on replay without it.
+    The ADDITIVE maintainers (count-min, histogram, rollup) double on
+    replay without the ledger; the absorbing ones (bitmap OR, HLL max)
+    replay idempotently and pass ``batch_id=None``.
     """
     led = quoted(LEDGER_TABLE)
     ddl = (
@@ -49,72 +50,102 @@ def apply_batch_once(connect, dialect: str, table: str, sql: str, rows,
         "sink_table VARCHAR, batch_id BIGINT, "
         "PRIMARY KEY (sink_table, batch_id))"
     )
+    pg = dialect == "postgres"
+    ph = "%s" if pg else "?"
     conn = connect()
     try:
-        if dialect == "postgres":
-            with conn.cursor() as cur:
-                if batch_id is not None:
-                    cur.execute(ddl)
-                    cur.execute(
-                        f"SELECT 1 FROM {led} WHERE sink_table = %s"
-                        " AND batch_id = %s",
-                        (table, batch_id),
-                    )
-                    if cur.fetchone():
-                        conn.rollback()
-                        return False
-                    cur.execute(
-                        f"INSERT INTO {led} VALUES (%s, %s)", (table, batch_id)
-                    )
-                if rows:
-                    cur.executemany(sql, rows)
-            conn.commit()
-            return True
-        # duckdb (driver-local DBAPI)
-        conn.execute("BEGIN TRANSACTION")
-        try:
-            if batch_id is not None:
-                conn.execute(ddl)
-                hit = conn.execute(
-                    f"SELECT 1 FROM {led} WHERE sink_table = ?"
-                    " AND batch_id = ?",
-                    [table, batch_id],
-                ).fetchone()
-                if hit:
-                    conn.execute("ROLLBACK")
-                    return False
-                conn.execute(
-                    f"INSERT INTO {led} VALUES (?, ?)", [table, batch_id]
-                )
-            if rows:
-                conn.executemany(sql, rows)
-            conn.execute("COMMIT")
-            return True
-        except Exception:
-            try:
-                conn.execute("ROLLBACK")
-            except Exception:
-                pass
-            raise
+        # postgres (psycopg2/pg_lite) opens the transaction implicitly
+        # on a cursor; a duckdb connection executes directly and needs
+        # an explicit BEGIN
+        cur = conn.cursor() if pg else conn
+        if not pg:
+            conn.begin()
+        if batch_id is not None:
+            cur.execute(ddl)
+            cur.execute(
+                f"SELECT 1 FROM {led} WHERE sink_table = {ph} AND batch_id = {ph}",
+                (table, batch_id),
+            )
+            if cur.fetchone():
+                conn.rollback()
+                return False
+            cur.execute(f"INSERT INTO {led} VALUES ({ph}, {ph})", (table, batch_id))
+        if rows:
+            cur.executemany(sql, rows)
+        conn.commit()
+        return True
     finally:
+        # on an exception nothing was committed: close() discards the
+        # open transaction on both DBAPI shapes
         conn.close()
 
 
 def _exec_ddl(connect, dialect: str, sql: str) -> None:
     """Run one DDL statement on either DBAPI shape: duckdb connections
     execute directly; postgres (psycopg2/pg_lite) goes through a
-    cursor + commit. ensure_table previously called conn.execute
-    unconditionally, which raised AttributeError on the very postgres
-    dialect the maintainers support (live-test finding)."""
+    cursor + commit."""
     conn = connect()
     try:
-        if dialect == "postgres":
-            conn.cursor().execute(sql)
-            conn.commit()
-        else:
-            conn.execute(sql)
+        (conn.cursor() if dialect == "postgres" else conn).execute(sql)
+        conn.commit()
     finally:
         conn.close()
+
+
+class MergeMaintainer:
+    """A summary table in a DBAPI target, maintained by merging each
+    micro-batch's partial rows with one ``INSERT … ON CONFLICT (KEYS)
+    DO UPDATE SET MERGE_SET``.
+
+    A subclass declares four things: ``COLUMNS`` as (name, SQL type)
+    pairs, ``KEYS`` (the primary key), ``MERGE_SET`` (the update
+    assignments; ``{t}`` is the quoted table) and ``ADDITIVE``. An
+    additive merge (+) doubles under foreachBatch's at-least-once
+    replay, so its batches go through the transactional batch ledger;
+    an absorbing merge (OR, max) is replay-idempotent and skips it.
+    Either way one batch commits in one transaction. Key columns are
+    never NULL: each function that builds partials (``batch_*``,
+    ``RollupMaintainer.partials``) drops NULL-key rows, because a NULL
+    key violates the primary key and the same batch would then fail on
+    every replay."""
+
+    COLUMNS: tuple[tuple[str, str], ...] = ()
+    KEYS: tuple[str, ...] = ()
+    MERGE_SET: str = ""
+    ADDITIVE: bool = True
+
+    def __init__(self, connect, table: str, dialect: str = "duckdb"):
+        self.connect = connect
+        self.table = table
+        self.dialect = dialect
+
+    def ensure_table(self) -> None:
+        cols = ", ".join(f"{name} {typ}" for name, typ in self.COLUMNS)
+        _exec_ddl(
+            self.connect,
+            self.dialect,
+            f"CREATE TABLE IF NOT EXISTS {quoted(self.table)} ("
+            f"{cols}, PRIMARY KEY ({', '.join(self.KEYS)}))",
+        )
+
+    def _collect(self, df: DataFrame) -> list:
+        return df.collect()
+
+    def merge_batch(self, df: DataFrame, batch_id: int | None = None) -> None:
+        names = [name for name, _ in self.COLUMNS]
+        rows = [tuple(r[c] for c in names) for r in self._collect(df)]
+        batch_id = batch_id if self.ADDITIVE else None
+        if not rows and batch_id is None:
+            return
+        t = quoted(self.table)
+        ph = "%s" if self.dialect == "postgres" else "?"
+        sql = (
+            f"INSERT INTO {t} ({', '.join(names)}) "
+            f"VALUES ({', '.join([ph] * len(names))}) "
+            f"ON CONFLICT ({', '.join(self.KEYS)}) "
+            f"DO UPDATE SET {self.MERGE_SET.format(t=t)}"
+        )
+        apply_batch_once(self.connect, self.dialect, self.table, sql, rows, batch_id)
 
 
 def batch_grid(df: DataFrame, item_col: str) -> DataFrame:
@@ -123,8 +154,8 @@ def batch_grid(df: DataFrame, item_col: str) -> DataFrame:
     NULL items are dropped, not counted: h64(NULL) is NULL, so a NULL
     row would land a NULL-bucket partial that violates the sink's
     (d, bucket) primary key — and under at-least-once replay the same
-    poisoned batch fails forever (review finding). Count-min counts
-    items; a NULL is the absence of one."""
+    poisoned batch fails forever. Count-min counts items; a NULL is
+    the absence of one."""
     wh = df.select(h64(F.col(item_col)).alias("h")).filter(F.col("h").isNotNull())
     buckets = F.array(
         *[
@@ -142,34 +173,16 @@ def batch_grid(df: DataFrame, item_col: str) -> DataFrame:
     )
 
 
-class CountMinMaintainer:
+class CountMinMaintainer(MergeMaintainer):
     """Maintains an additive count-min grid in a DBAPI target from a
     streaming source of items."""
 
+    COLUMNS = (("d", "INTEGER"), ("bucket", "INTEGER"), ("cnt", "BIGINT"))
+    KEYS = ("d", "bucket")
+    MERGE_SET = "cnt = {t}.cnt + excluded.cnt"
+
     def __init__(self, connect, table: str = "countmin", dialect: str = "duckdb"):
-        self.connect = connect
-        self.table = table
-        self.dialect = dialect
-
-    def ensure_table(self) -> None:
-        _exec_ddl(
-            self.connect,
-            self.dialect,
-            f"CREATE TABLE IF NOT EXISTS {quoted(self.table)} ("
-            "d INTEGER, bucket INTEGER, cnt BIGINT, PRIMARY KEY (d, bucket))",
-        )
-
-    def merge_batch(self, grid_df: DataFrame, batch_id: int | None = None) -> None:
-        rows = [(r["d"], r["bucket"], r["cnt"]) for r in grid_df.collect()]
-        if not rows and batch_id is None:
-            return
-        sql = (
-            f"INSERT INTO {quoted(self.table)} (d, bucket, cnt) VALUES (?, ?, ?) "
-            f"ON CONFLICT (d, bucket) DO UPDATE SET cnt = {quoted(self.table)}.cnt + excluded.cnt"
-        )
-        if self.dialect == "postgres":
-            sql = sql.replace("?", "%s")
-        apply_batch_once(self.connect, self.dialect, self.table, sql, rows, batch_id)
+        super().__init__(connect, table, dialect)
 
     def estimate_sql(self, item_hash: int) -> str:
         """SQL that serves the point estimate for one item (by its h64
@@ -178,11 +191,9 @@ class CountMinMaintainer:
         `min(cnt) WHERE (d,bucket) IN (...)` sees only rows that exist,
         so an item whose d=0 bucket collides with a hot item while its
         other cells are empty would serve the hot count, and a
-        never-streamed item with no collisions at all would serve NULL
-        (review finding). One COALESCEd scalar subquery per cell keeps
-        the missing-row-is-zero semantics in both dialects."""
-        from ..functions.hashing import AFFINE_MOD, REDUCE_MOD
-
+        never-streamed item with no collisions at all would serve NULL.
+        One COALESCEd scalar subquery per cell keeps the
+        missing-row-is-zero semantics in both dialects."""
         cells = ", ".join(
             "COALESCE((SELECT cnt FROM "
             f"{quoted(self.table)} WHERE d = {i} AND "
@@ -199,18 +210,11 @@ class CountMinMaintainer:
         trigger: dict | None = None,
     ) -> StreamingQuery:
         self.ensure_table()
-
-        def fn(batch_df: DataFrame, batch_id: int) -> None:
-            self.merge_batch(batch_grid(batch_df, item_col), batch_id)
-
-        stream = (
-            source.writeStream.outputMode("append")
-            .foreachBatch(fn)
-            .option("checkpointLocation", checkpoint)
+        return start_foreach_batch(
+            source,
+            lambda df, bid: self.merge_batch(batch_grid(df, item_col), bid),
+            checkpoint, trigger,
         )
-        if trigger:
-            stream = stream.trigger(**trigger)
-        return stream.start()
 
 
 # ---------------------------------------------------------------------------
@@ -243,14 +247,14 @@ def batch_bitmap(df: DataFrame, group_col: str, id_col: str) -> DataFrame:
             )
         )
     return (
-        # NULL ids are dropped (not an id; a NULL word_idx would both
-        # dodge the negative-id tripwire — NULL >= 0 is NULL — and
-        # poison the sink PK under replay, the batch_grid rule).
+        # NULL ids and NULL groups are dropped (the batch_grid rule: a
+        # NULL grp or word_idx violates the sink PK; a NULL id would
+        # also dodge the negative-id tripwire — NULL >= 0 is NULL).
         # The id is re-aliased to a FIXED internal name before the
         # F.expr shift (shiftleft's amount must be a literal in the
         # column API), so an id column whose name needs quoting can't
-        # break or mis-resolve inside the interpolated SQL (review).
-        df.filter(F.col(id_col).isNotNull())
+        # break or mis-resolve inside the interpolated SQL.
+        df.filter(F.col(id_col).isNotNull() & F.col(group_col).isNotNull())
         .select(F.col(group_col).alias("grp"), F.col(id_col).alias("_id"))
         .select(
             "grp",
@@ -264,7 +268,7 @@ def batch_bitmap(df: DataFrame, group_col: str, id_col: str) -> DataFrame:
     )
 
 
-class BitmapMaintainer:
+class BitmapMaintainer(MergeMaintainer):
     """Maintains exact distinct-count bitmaps in a DBAPI target from a
     streaming source — the streaming twin of q56's batch bitmap
     aggregate.
@@ -273,7 +277,7 @@ class BitmapMaintainer:
     IDEMPOTENT: re-merging a replayed micro-batch leaves the store
     unchanged, so the maintained state is correct under at-least-once
     delivery without any batch-id bookkeeping (asserted in tests; the
-    additive maintainers need the checkpoint for exactly-once). State
+    additive maintainers need the batch ledger for exactly-once). State
     size is |groups| x |id_space|/64 words regardless of stream volume,
     and the served count is EXACT, not an estimate.
 
@@ -281,47 +285,18 @@ class BitmapMaintainer:
     ``batch_bitmap`` — a negative id fails the micro-batch loudly
     instead of silently colliding bits and undercounting)."""
 
+    COLUMNS = (("grp", "VARCHAR"), ("word_idx", "BIGINT"), ("bits", "BIGINT"))
+    KEYS = ("grp", "word_idx")
+    MERGE_SET = "bits = {t}.bits | excluded.bits"
+    ADDITIVE = False
+
     def __init__(self, connect, table: str = "bitmaps", dialect: str = "duckdb"):
-        self.connect = connect
-        self.table = table
-        self.dialect = dialect
-
-    def ensure_table(self) -> None:
-        _exec_ddl(
-            self.connect,
-            self.dialect,
-            f"CREATE TABLE IF NOT EXISTS {quoted(self.table)} ("
-            "grp VARCHAR, word_idx BIGINT, bits BIGINT, "
-            "PRIMARY KEY (grp, word_idx))",
-        )
-
-    def merge_batch(self, bitmap_df: DataFrame, batch_id: int | None = None) -> None:
-        rows = [(r["grp"], r["word_idx"], r["bits"]) for r in bitmap_df.collect()]
-        if not rows:
-            return
-        sql = (
-            f"INSERT INTO {quoted(self.table)} (grp, word_idx, bits) VALUES (?, ?, ?) "
-            f"ON CONFLICT (grp, word_idx) DO UPDATE SET bits = {quoted(self.table)}.bits | excluded.bits"
-        )
-        if self.dialect == "postgres":
-            sql = sql.replace("?", "%s")
-        conn = self.connect()
-        try:
-            if self.dialect == "duckdb":
-                conn.executemany(sql, rows)
-            else:
-                with conn.cursor() as cur:
-                    cur.executemany(sql, rows)
-                conn.commit()
-        finally:
-            conn.close()
+        super().__init__(connect, table, dialect)
 
     def distinct_sql(self) -> str:
         """SQL serving the exact per-group distinct count from the
         maintained bitmaps. Dialect-aware popcount: PostgreSQL defines
-        bit_count only for bit/bytea (PG14+), not bigint — the plain
-        form raised 'function bit_count(bigint) does not exist' on the
-        very dialect merge_batch explicitly supports (review)."""
+        bit_count only for bit/bytea (PG14+), not bigint."""
         pop = (
             "bit_count(bits::bit(64))"
             if self.dialect == "postgres"
@@ -341,18 +316,11 @@ class BitmapMaintainer:
         trigger: dict | None = None,
     ) -> StreamingQuery:
         self.ensure_table()
-
-        def fn(batch_df: DataFrame, batch_id: int) -> None:
-            self.merge_batch(batch_bitmap(batch_df, group_col, id_col), batch_id)
-
-        stream = (
-            source.writeStream.outputMode("append")
-            .foreachBatch(fn)
-            .option("checkpointLocation", checkpoint)
+        return start_foreach_batch(
+            source,
+            lambda df, bid: self.merge_batch(batch_bitmap(df, group_col, id_col), bid),
+            checkpoint, trigger,
         )
-        if trigger:
-            stream = stream.trigger(**trigger)
-        return stream.start()
 
 
 # ---------------------------------------------------------------------------
@@ -369,9 +337,7 @@ def batch_hll(df: DataFrame, item_col: str) -> DataFrame:
     absence of an item): h64(NULL) is NULL, so a NULL row would land
     a NULL-bucket register that violates the sink's PRIMARY KEY
     (bucket), and under at-least-once replay the same poisoned batch
-    fails forever. Found by the degenerate dialect-matrix axis: every
-    OTHER maintainer's batch builder already filtered NULLs; HLL was
-    the one that crashed live on both dialects."""
+    fails forever."""
     from ..analytics.advanced import Q62_M, Q62_SHIFT
 
     d = df.select(h64(F.col(item_col)).alias("h")).filter(
@@ -388,7 +354,7 @@ def batch_hll(df: DataFrame, item_col: str) -> DataFrame:
     return d.groupBy("bucket").agg(F.max(rho).alias("m_j"))
 
 
-class HLLMaintainer:
+class HLLMaintainer(MergeMaintainer):
     """Maintains HyperLogLog registers in a DBAPI target from a
     streaming source of items — the streaming twin of q62.
 
@@ -402,39 +368,13 @@ class HLLMaintainer:
     tests). Daily register tables union+max into monthly ones without
     rescanning — the sketch-rollup property exact distinct lacks."""
 
+    COLUMNS = (("bucket", "BIGINT"), ("m_j", "BIGINT"))
+    KEYS = ("bucket",)
+    MERGE_SET = "m_j = greatest({t}.m_j, excluded.m_j)"
+    ADDITIVE = False
+
     def __init__(self, connect, table: str = "hll_registers", dialect: str = "duckdb"):
-        self.connect = connect
-        self.table = table
-        self.dialect = dialect
-
-    def ensure_table(self) -> None:
-        _exec_ddl(
-            self.connect,
-            self.dialect,
-            f"CREATE TABLE IF NOT EXISTS {quoted(self.table)} ("
-            "bucket BIGINT, m_j BIGINT, PRIMARY KEY (bucket))",
-        )
-
-    def merge_batch(self, regs_df: DataFrame, batch_id: int | None = None) -> None:
-        rows = [(r["bucket"], r["m_j"]) for r in regs_df.collect()]
-        if not rows:
-            return
-        sql = (
-            f"INSERT INTO {quoted(self.table)} (bucket, m_j) VALUES (?, ?) "
-            f"ON CONFLICT (bucket) DO UPDATE SET m_j = greatest({quoted(self.table)}.m_j, excluded.m_j)"
-        )
-        if self.dialect == "postgres":
-            sql = sql.replace("?", "%s")
-        conn = self.connect()
-        try:
-            if self.dialect == "duckdb":
-                conn.executemany(sql, rows)
-            else:
-                with conn.cursor() as cur:
-                    cur.executemany(sql, rows)
-                conn.commit()
-        finally:
-            conn.close()
+        super().__init__(connect, table, dialect)
 
     def estimate_sql(self) -> str:
         """SQL serving the HLL distinct estimate straight from the
@@ -443,8 +383,7 @@ class HLLMaintainer:
         from ..analytics.advanced import Q62_NUM, Q62_SHIFT
 
         # ::INT on the shift amount: Postgres defines bigint << integer
-        # but NOT bigint << bigint (live-matrix finding, round 10);
-        # DuckDB accepts both forms identically
+        # but NOT bigint << bigint; DuckDB accepts both forms
         return (
             f"SELECT {Q62_NUM} / sum(1::BIGINT << ({Q62_SHIFT} - m_j)::INT) AS est_distinct "
             f"FROM {quoted(self.table)}"
@@ -458,18 +397,11 @@ class HLLMaintainer:
         trigger: dict | None = None,
     ) -> StreamingQuery:
         self.ensure_table()
-
-        def fn(batch_df: DataFrame, batch_id: int) -> None:
-            self.merge_batch(batch_hll(batch_df, item_col), batch_id)
-
-        stream = (
-            source.writeStream.outputMode("append")
-            .foreachBatch(fn)
-            .option("checkpointLocation", checkpoint)
+        return start_foreach_batch(
+            source,
+            lambda df, bid: self.merge_batch(batch_hll(df, item_col), bid),
+            checkpoint, trigger,
         )
-        if trigger:
-            stream = stream.trigger(**trigger)
-        return stream.start()
 
 
 # ---------------------------------------------------------------------------
@@ -495,7 +427,7 @@ def batch_histogram(df: DataFrame, value_col: str,
     )
 
 
-class HistogramMaintainer:
+class HistogramMaintainer(MergeMaintainer):
     """Maintains an additive fixed-bin histogram in a DBAPI target —
     q27's streaming twin, and the distribution-statistics member of
     the maintainer family (Rollup=sums, CountMin=frequency,
@@ -510,32 +442,14 @@ class HistogramMaintainer:
     one bin width, the classic NDV-free equi-width scheme; tighten by
     shrinking bin width, whose only cost is state rows."""
 
+    COLUMNS = (("bin", "BIGINT"), ("cnt", "BIGINT"))
+    KEYS = ("bin",)
+    MERGE_SET = "cnt = {t}.cnt + excluded.cnt"
+
     def __init__(self, connect, table: str = "histogram",
                  dialect: str = "duckdb", bin_width: float = HIST_BIN_WIDTH):
-        self.connect = connect
-        self.table = table
-        self.dialect = dialect
+        super().__init__(connect, table, dialect)
         self.bin_width = bin_width
-
-    def ensure_table(self) -> None:
-        _exec_ddl(
-            self.connect,
-            self.dialect,
-            f"CREATE TABLE IF NOT EXISTS {quoted(self.table)} ("
-            "bin BIGINT, cnt BIGINT, PRIMARY KEY (bin))",
-        )
-
-    def merge_batch(self, hist_df: DataFrame, batch_id: int | None = None) -> None:
-        rows = [(r["bin"], r["cnt"]) for r in hist_df.collect()]
-        if not rows and batch_id is None:
-            return
-        sql = (
-            f"INSERT INTO {quoted(self.table)} (bin, cnt) VALUES (?, ?) "
-            f"ON CONFLICT (bin) DO UPDATE SET cnt = {quoted(self.table)}.cnt + excluded.cnt"
-        )
-        if self.dialect == "postgres":
-            sql = sql.replace("?", "%s")
-        apply_batch_once(self.connect, self.dialect, self.table, sql, rows, batch_id)
 
     def quantile_sql(self, q: float) -> str:
         """SQL serving the approximate q-quantile from the maintained
@@ -543,8 +457,8 @@ class HistogramMaintainer:
         reaches q · total (error ≤ one bin width)."""
         t = quoted(self.table)
         return (
-            # DOUBLE PRECISION, not DOUBLE: Postgres has no bare DOUBLE type
-            # (live-test finding); DuckDB accepts both spellings
+            # DOUBLE PRECISION, not DOUBLE: Postgres has no bare DOUBLE
+            # type; DuckDB accepts both spellings
             f"SELECT CAST(min(bin) * {self.bin_width} AS DOUBLE PRECISION) AS q_approx FROM ("
             f"  SELECT bin, sum(cnt) OVER (ORDER BY bin) AS cum,"
             f"         (SELECT sum(cnt) FROM {t}) AS total"
@@ -559,17 +473,9 @@ class HistogramMaintainer:
         trigger: dict | None = None,
     ) -> StreamingQuery:
         self.ensure_table()
-
-        def fn(batch_df: DataFrame, batch_id: int) -> None:
-            self.merge_batch(
-                batch_histogram(batch_df, value_col, self.bin_width), batch_id
-            )
-
-        stream = (
-            source.writeStream.outputMode("append")
-            .foreachBatch(fn)
-            .option("checkpointLocation", checkpoint)
+        return start_foreach_batch(
+            source,
+            lambda df, bid: self.merge_batch(
+                batch_histogram(df, value_col, self.bin_width), bid),
+            checkpoint, trigger,
         )
-        if trigger:
-            stream = stream.trigger(**trigger)
-        return stream.start()

@@ -10,7 +10,9 @@ local trust-auth cluster (``make integration-pg``) through the
 pure-python wire client and skips ONLY when no server listens — the
 same env marker as the other live-Postgres tests.
 
-Surfaces (the complete list of classes that emit dialect-branched SQL;
+Surfaces (the complete list of classes that emit dialect-branched SQL:
+``SinkWriter`` plus every subclass of ``sketches.MergeMaintainer``,
+which owns the maintainers' DDL and merge SQL;
 ``tests/test_dialect_matrix.py::test_matrix_is_complete`` pins it so a
 new maintainer cannot ship without joining the matrix):
 
@@ -18,7 +20,6 @@ new maintainer cannot ship without joining the matrix):
 * ``CountMinMaintainer``  — additive merge + point-estimate serve
 * ``BitmapMaintainer``    — idempotent OR merge + exact-distinct serve
 * ``HLLMaintainer``       — idempotent max merge + estimate serve
-                            (the one pair round 9's live test missed)
 * ``HistogramMaintainer`` — additive merge + quantile serve
 * ``RollupMaintainer``    — additive partials upsert + sum serve
 """
@@ -33,7 +34,15 @@ import pytest
 
 from dbsink_spark.sink import SinkWriter, duckdb_connect_factory, postgres_connect_factory
 
-SURFACES = ("sink", "countmin", "bitmap", "hll", "histogram", "rollup")
+SURFACE_CLASSES = {
+    "sink": "SinkWriter",
+    "countmin": "CountMinMaintainer",
+    "bitmap": "BitmapMaintainer",
+    "hll": "HLLMaintainer",
+    "histogram": "HistogramMaintainer",
+    "rollup": "RollupMaintainer",
+}
+SURFACES = tuple(SURFACE_CLASSES)
 DIALECTS = ("duckdb", "postgres")
 
 PG_DSN = os.environ.get(
@@ -179,31 +188,31 @@ _EXERCISE = {
 
 
 def test_matrix_is_complete():
-    """Every class in the package that branches on ``dialect`` must be
+    """``SinkWriter`` and every subclass of ``MergeMaintainer`` must be
     in SURFACES — a new maintainer cannot ship without a live-matrix
-    row (grep-level pin; the exercise map must cover SURFACES too)."""
+    row. Any other class that branches on ``self.dialect`` must be one
+    of them or the base itself (grep-level pin; the exercise map must
+    cover SURFACES too)."""
     import inspect
 
     from dbsink_spark import sink as sink_mod
     from dbsink_spark.streaming import rollup as rollup_mod
     from dbsink_spark.streaming import sketches as sketches_mod
 
-    classes = set()
+    def subclasses(cls):
+        for sub in cls.__subclasses__():
+            yield sub
+            yield from subclasses(sub)
+
+    base = sketches_mod.MergeMaintainer
+    surfaced = {"SinkWriter"} | {c.__name__ for c in subclasses(base)}
+    assert surfaced == set(SURFACE_CLASSES.values()), surfaced
+    assert set(_EXERCISE) == set(SURFACES)
+
     for mod in (sink_mod, sketches_mod, rollup_mod):
         for name, cls in inspect.getmembers(mod, inspect.isclass):
-            if cls.__module__ == mod.__name__:
-                src = inspect.getsource(cls)
-                if "self.dialect" in src:
-                    classes.add(name)
-    assert classes == {
-        "SinkWriter",
-        "CountMinMaintainer",
-        "BitmapMaintainer",
-        "HLLMaintainer",
-        "HistogramMaintainer",
-        "RollupMaintainer",
-    }, classes
-    assert set(_EXERCISE) == set(SURFACES)
+            if cls.__module__ == mod.__name__ and "self.dialect" in inspect.getsource(cls):
+                assert name in surfaced | {base.__name__}, name
 
 
 @pytest.mark.parametrize("dialect", DIALECTS)
@@ -288,13 +297,20 @@ def _degenerate_bitmap(spark, factory, dialect, table, shape):
     bm.ensure_table()
     if shape == "empty":
         ids = spark.createDataFrame([], "event_type string, user_id long")
+    elif shape == "null_group":  # a NULL group is not a group: dropped
+        ids = spark.createDataFrame(
+            [(None, 1), (None, 2), ("click", 3)], "event_type string, user_id long"
+        )
     else:
         ids = spark.createDataFrame(
             [("click", None)] * 3, "event_type string, user_id long"
         )
     bm.merge_batch(batch_bitmap(ids, "event_type", "user_id"))
     got = _fetch(factory, dialect, bm.distinct_sql())
-    assert got in ([], [("click", 0)])
+    if shape == "null_group":
+        assert got == [("click", 1)]
+    else:
+        assert got in ([], [("click", 0)])
 
 
 def _degenerate_hll(spark, factory, dialect, table, shape):
@@ -332,17 +348,24 @@ def _degenerate_rollup(spark, factory, dialect, table, shape):
 
     rm = RollupMaintainer(factory, table=table, dialect=dialect)
     rm.ensure_table()
+    ts = dt.datetime(2026, 1, 1, 10, 30)
     if shape == "empty":
         ev = spark.createDataFrame([], "ts timestamp, k string, v double")
+    elif shape == "null_key":  # a NULL key or timestamp is dropped
+        ev = spark.createDataFrame(
+            [(ts, None, 1.0), (None, "a", 2.0), (ts, "a", 4.0)],
+            "ts timestamp, k string, v double",
+        )
     else:  # keys valid, value column all NULL
         ev = spark.createDataFrame(
-            [(dt.datetime(2026, 1, 1, 10, 30), "a", None)] * 3,
-            "ts timestamp, k string, v double",
+            [(ts, "a", None)] * 3, "ts timestamp, k string, v double"
         )
     rm.merge_batch(rm.partials(ev, "ts", "k", "v"))
     n, sv = _fetch(factory, dialect, f'SELECT sum(n), sum(sv) FROM "{table}"')[0]
     if shape == "empty":
         assert n is None  # no rows landed
+    elif shape == "null_key":
+        assert (n, float(sv)) == (1, 4.0)
     else:
         # NULL values contribute rows but no sum mass, same per dialect
         assert (n is None and sv is None) or (sv is None or float(sv) == 0.0)
@@ -358,13 +381,25 @@ _DEGENERATE = {
 }
 
 
+# Shapes beyond empty/all_null for the surfaces whose primary key is not
+# the item itself: a NULL key column must be dropped, not abort the batch.
+_KEY_SHAPES = {"bitmap": ("null_group",), "rollup": ("null_key",)}
+
+
 def test_degenerate_map_covers_surfaces():
     assert set(_DEGENERATE) == set(SURFACES)
+    assert set(_KEY_SHAPES) <= set(SURFACES)
 
 
-@pytest.mark.parametrize("shape", ("empty", "all_null"))
-@pytest.mark.parametrize("dialect", DIALECTS)
-@pytest.mark.parametrize("surface", SURFACES)
+@pytest.mark.parametrize(
+    "surface,dialect,shape",
+    [
+        pytest.param(surface, dialect, shape, id=f"{surface}-{dialect}-{shape}")
+        for surface in SURFACES
+        for dialect in DIALECTS
+        for shape in ("empty", "all_null", *_KEY_SHAPES.get(surface, ()))
+    ],
+)
 def test_surface_survives_degenerate_batch(spark, tmp_path, surface, dialect, shape):
     factory = _factory(dialect, tmp_path)
     table = f"mxd_{surface}_{uuid.uuid4().hex[:8]}"

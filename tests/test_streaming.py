@@ -897,6 +897,28 @@ def test_additive_maintainers_dedupe_replayed_batch(spark, tmp_path):
     con.close()
 
 
+def test_absorbing_merge_is_atomic(spark, tmp_path):
+    """An absorbing maintainer (bitmap OR) skips the batch ledger, but
+    its merge still lands as ONE transaction: when a partial row fails
+    the primary key, the rows before it do not land either."""
+    import pytest
+
+    from dbsink_spark.streaming.sketches import BitmapMaintainer
+
+    db = str(tmp_path / "atomic.duckdb")
+    bm = BitmapMaintainer(duckdb_connect_factory(db), table="bm")
+    bm.ensure_table()
+    partial = spark.createDataFrame(
+        [("click", 0, 1), ("view", 0, 2), (None, 0, 4)],
+        "grp string, word_idx long, bits long",
+    )
+    with pytest.raises(duckdb.ConstraintException):
+        bm.merge_batch(partial)
+    con = duckdb.connect(db)
+    assert con.execute("SELECT count(*) FROM bm").fetchone()[0] == 0
+    con.close()
+
+
 def test_cusum_tracker_across_batches_equals_batch_recurrence(spark, tmp_path):
     """Streaming CUSUM (applyInPandasWithState) must carry S across
     micro-batches and agree exactly with the single-pass integer
