@@ -1,6 +1,6 @@
-"""Advanced relational operators: as-of join, pivot, SQL-text
-interface, correlated-style subqueries, exact percentiles, histograms,
-and the streaming operators' batch twins.
+"""Advanced relational operators: as-of join, pivot, correlated-style
+subqueries, exact percentiles, histograms, and the batch twins of the
+streaming operators.
 
 Scale notes (100 TB):
 * The as-of join is the classic timeseries primitive Spark lacks as a
@@ -20,7 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .tables import Tables, load
+from ..functions.sketch import Q62_M, Q62_NUM, Q62_SHIFT, hll_cells, with_zvalue
+from .tables import Tables
 from .litdf import local_df
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -80,24 +81,6 @@ def q23_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q24_sql_interface(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SQL-text surface: register temp views, run plain ANSI SQL
-    (GROUPING SETS) through spark.sql — plans identically to the
-    DataFrame API, proving the engine's SQL front door."""
-    for name in ("lineitem",):
-        load(spark, sf_dir, name).createOrReplaceTempView(name)
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus,
-               round(sum(l_extendedprice), 2) AS revenue,
-               count(*) AS n_rows
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), (l_returnflag, l_linestatus))
-        ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST
-        """
-    )
-
-
 def q25_above_segment_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated-subquery pattern: customers whose total spend exceeds
     their market segment's average (decorrelated as agg + join)."""
@@ -139,21 +122,6 @@ def q27_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("bucket")
     )
-
-
-def q28_stream_tumbling_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming tumbling-window operator run in batch mode — the
-    same ``F.window`` expression both modes share (epoch-aligned 1h
-    windows ≡ date_trunc('hour'))."""
-    from ..streaming.stateful import tumbling_aggregate
-
-    e = Tables(spark, sf_dir).events
-    out = tumbling_aggregate(e, "ts", "1 hour", ["event_type"])
-    return out.select(
-        F.date_format("window_start", "yyyy-MM-dd HH:00").alias("hour"),
-        "event_type",
-        "n_events",
-    ).orderBy("hour", "event_type")
 
 
 def q29_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -235,14 +203,6 @@ ORACLE: dict[str, str] = {
         GROUP BY user_id
         ORDER BY user_id
     """,
-    "q24_sql_interface": """
-        SELECT l_returnflag, l_linestatus,
-               round(sum(l_extendedprice), 2) AS revenue,
-               count(*) AS n_rows
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), (l_returnflag, l_linestatus))
-        ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST
-    """,
     "q25_above_segment_avg": """
         WITH spend AS (
             SELECT o_custkey AS c_custkey, c_mktsegment, sum(o_totalprice) AS spend
@@ -271,14 +231,6 @@ ORACLE: dict[str, str] = {
         GROUP BY 1
         ORDER BY 1
     """,
-    "q28_stream_tumbling_batch": """
-        SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00') AS hour,
-               event_type,
-               count(*) AS n_events
-        FROM events
-        GROUP BY 1, 2
-        ORDER BY 1, 2
-    """,
     "q29_approx_sketches": """
         SELECT o_orderpriority,
                count(DISTINCT o_custkey) AS n_customers,
@@ -294,11 +246,9 @@ ORACLE: dict[str, str] = {
 QUERIES = {
     "q22_asof_join": q22_asof_join,
     "q23_pivot": q23_pivot,
-    "q24_sql_interface": q24_sql_interface,
     "q25_above_segment_avg": q25_above_segment_avg,
     "q26_percentiles": q26_percentiles,
     "q27_histogram": q27_histogram,
-    "q28_stream_tumbling_batch": q28_stream_tumbling_batch,
     "q29_approx_sketches": q29_approx_sketches,
 }
 
@@ -998,17 +948,6 @@ ZORDER_BITS = 8  # bits per dimension after range normalization
 ZORDER_BUCKET_SHIFT = 10  # keep top 6 of the 16 Z bits -> 64 buckets
 
 
-def _zorder_expr() -> str:
-    """Morton/Z-value of the normalized (user, time) buckets: bit-
-    interleave in a fold — user on odd bits, time on even."""
-    return (
-        f"aggregate(sequence(0, {ZORDER_BITS - 1}), cast(0 as long), "
-        "(acc, i) -> acc"
-        " + shiftleft(shiftright(ux, i) & 1, 2*i + 1)"
-        " + shiftleft(shiftright(tx, i) & 1, 2*i))"
-    )
-
-
 def q49_zorder_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton curve) layout index — the multi-dimensional
     data-skipping story (Delta OPTIMIZE ZORDER BY / Iceberg sort
@@ -1032,21 +971,16 @@ def q49_zorder_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     the range partitioner the write needs anyway.
     """
     e = Tables(spark, sf_dir).events
-    n_b = 1 << ZORDER_BITS
     bounds = e.agg(
         F.min("user_id").alias("min_u"),
         F.max("user_id").alias("max_u"),
         F.min(F.unix_timestamp("ts").cast("long")).alias("min_s"),
         F.max(F.unix_timestamp("ts").cast("long")).alias("max_s"),
     )
-    z = (
+    z = with_zvalue(
         e.select("user_id", "ts", F.unix_timestamp("ts").cast("long").alias("s"))
-        .join(F.broadcast(bounds))
-        .withColumn(
-            "ux", F.expr(f"({n_b} * (user_id - min_u)) div (max_u - min_u + 1)")
-        )
-        .withColumn("tx", F.expr(f"({n_b} * (s - min_s)) div (max_s - min_s + 1)"))
-        .withColumn("z", F.expr(_zorder_expr()))
+        .join(F.broadcast(bounds)),
+        "user_id", "s", ("min_u", "max_u", "min_s", "max_s"), ZORDER_BITS, "z",
     )
     return (
         z.groupBy(F.shiftright("z", ZORDER_BUCKET_SHIFT).alias("z_bucket"))
@@ -1175,7 +1109,7 @@ def q53_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hopping-window aggregate: 1-hour windows sliding every 15
     minutes per event type — the overlapping-window shape dashboards
     and rate-limiters use (Spark ``F.window(ts, width, slide)``; the
-    streaming twin is the same expression under a watermark, q28-style).
+    streaming twin is the same expression under a watermark).
 
     Width/slide = 4, so the window explode is a fixed 4× row fanout
     BEFORE the aggregate — Spark's built-in window() generates the
@@ -1790,15 +1724,6 @@ QUERIES["q61_pagerank"] = q61_pagerank
 # q62: hand-rolled HyperLogLog — mergeable distinct-count registers
 # ---------------------------------------------------------------------------
 
-Q62_M = 64                     # registers (b = 6 bucket bits)
-Q62_W_BITS = 54                # 60-bit h64 minus 6 bucket bits
-Q62_SHIFT = Q62_W_BITS + 1     # rho ∈ [1, 55]
-Q62_ALPHA = 0.709              # alpha_m for m = 64 (Flajolet et al. 2007)
-# exact double literal, inlined into BOTH engines so the one float
-# division is performed on identical operands
-Q62_NUM = repr(Q62_ALPHA * Q62_M * Q62_M * float(2 ** Q62_SHIFT))
-
-
 def q62_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog distinct-count built from first principles on the
     portable ``h64`` hash: bucket = low 6 bits, rho = leading-zero
@@ -1825,15 +1750,8 @@ def q62_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = Tables(spark, sf_dir).orders.select("o_custkey")
     from ..functions.hashing import h64
 
-    d = o.select(h64(F.col("o_custkey")).alias("h")).select(
-        (F.col("h") % Q62_M).alias("bucket"),
-        F.expr(f"h DIV {Q62_M}").alias("w"),
-    )
-    rho = (
-        F.when(F.col("w") == 0, F.lit(Q62_SHIFT))
-        .otherwise(F.lit(Q62_SHIFT) - F.length(F.bin(F.col("w"))))
-        .cast("long")
-    )
+    bucket, w, rho = hll_cells(F.col("h"))
+    d = o.select(h64(F.col("o_custkey")).alias("h")).select(bucket, w)
     regs = d.groupBy("bucket").agg(F.max(rho).alias("m_j"))
     summary = regs.agg(
         F.count(F.lit(1)).alias("nonzero_registers"),
@@ -4388,21 +4306,13 @@ def q88_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH engines agree it is).
     """
     e = Tables(spark, sf_dir).events
-    h = _q62_h64_user()
-    # w via integer DIV (q62's pattern): `h / 64` would detour through
-    # double (53-bit mantissa) and can truncate to a different long
-    # than DuckDB's exact `//` near 2^60 — a flaky hash-gate bomb
+    bucket, w, rho = hll_cells(_q62_h64_user())
     d = e.select(
         F.date_trunc("month", "ts").cast("date").alias("month"),
         F.date_trunc("day", "ts").cast("date").alias("day"),
-        (h % Q62_M).alias("bucket"),
-        h.alias("h"),
+        bucket,
         "user_id",
-    ).withColumn("w", F.expr(f"h DIV {Q62_M}")).drop("h")
-    rho = (
-        F.when(F.col("w") == 0, F.lit(Q62_SHIFT))
-        .otherwise(F.lit(Q62_SHIFT) - F.length(F.bin(F.col("w"))))
-        .cast("long")
+        w,
     )
     daily = d.groupBy("month", "day", "bucket").agg(F.max(rho).alias("m_j"))
     merged = daily.groupBy("month", "bucket").agg(F.max("m_j").alias("m_j"))
@@ -5040,21 +4950,9 @@ def q94_sliding_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact trailing distinct, signed error in basis points.
     """
     e = Tables(spark, sf_dir).events
-    h = _q62_h64_user()
-    d = (
-        e.select(
-            F.date_trunc("day", "ts").cast("date").alias("day"),
-            (h % Q62_M).alias("bucket"),
-            h.alias("h"),
-            "user_id",
-        )
-        .withColumn("w", F.expr(f"h DIV {Q62_M}"))
-        .drop("h")
-    )
-    rho = (
-        F.when(F.col("w") == 0, F.lit(Q62_SHIFT))
-        .otherwise(F.lit(Q62_SHIFT) - F.length(F.bin(F.col("w"))))
-        .cast("long")
+    bucket, w, rho = hll_cells(_q62_h64_user())
+    d = e.select(
+        F.date_trunc("day", "ts").cast("date").alias("day"), bucket, "user_id", w
     )
     daily = (
         d.groupBy("day", "bucket")
@@ -5509,7 +5407,7 @@ def q97_zone_map_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     zones x 3 predicates. Output: 9 rows of (layout, predicate,
     files_total, files_read, rows_read, skip_bp).
     """
-    nb, zb = Q97_FILES, 1 << ZORDER_BITS
+    nb = Q97_FILES
     o = Tables(spark, sf_dir).orders
     base = o.select(
         F.col("o_orderkey").alias("k"),
@@ -5528,20 +5426,12 @@ def q97_zone_map_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("d").alias("min_d"),
         F.max("d").alias("max_d"),
     )
-    z_expr = (
-        f"aggregate(sequence(0, {ZORDER_BITS - 1}), cast(0 as long), "
-        "(acc, i) -> acc"
-        " + shiftleft(shiftright(cx, i) & 1, 2*i + 1)"
-        " + shiftleft(shiftright(dx, i) & 1, 2*i))"
-    )
-    rows = (
+    rows = with_zvalue(
         base.join(F.broadcast(bounds))
         .withColumn("f_ingest", F.expr(f"({nb} * (k - min_k)) div (max_k - min_k + 1)"))
-        .withColumn("f_sorted", F.expr(f"({nb} * (c - min_c)) div (max_c - min_c + 1)"))
-        .withColumn("cx", F.expr(f"({zb} * (c - min_c)) div (max_c - min_c + 1)"))
-        .withColumn("dx", F.expr(f"({zb} * (d - min_d)) div (max_d - min_d + 1)"))
-        .withColumn("f_zorder", F.expr(f"({z_expr}) div {1 << ZORDER_BUCKET_SHIFT}"))
-    )
+        .withColumn("f_sorted", F.expr(f"({nb} * (c - min_c)) div (max_c - min_c + 1)")),
+        "c", "d", ("min_c", "max_c", "min_d", "max_d"), ZORDER_BITS, "z",
+    ).withColumn("f_zorder", F.expr(f"z div {1 << ZORDER_BUCKET_SHIFT}"))
     stacked = rows.select(
         "c",
         "d",

@@ -93,21 +93,6 @@ def d01_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def d02_dedup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-rate report per source (distinct text hashes vs rows)."""
-    d = Tables(spark, sf_dir).documents
-    return (
-        d.select("source", h64(F.col("text")).alias("h"))
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.countDistinct("h").alias("n_unique"),
-            F.round(1 - F.countDistinct("h") / F.count(F.lit(1)), 4).alias("dup_rate"),
-        )
-        .orderBy("source")
-    )
-
-
 def _one_minhash_sql(shingle_hashes: str, a: int, b: int) -> str:
     return (
         f"array_min(transform({shingle_hashes},"
@@ -615,15 +600,6 @@ ORACLE: dict[str, str] = {
                (h.doc_id <> c.keeper_id)::INT AS is_dup
         FROM hashed h JOIN clusters c USING (content_hash)
     """,
-    "d02_dedup_rate": f"""
-        SELECT source,
-               count(*)                                   AS n_docs,
-               count(DISTINCT {h64_sql('text')})          AS n_unique,
-               round(1 - count(DISTINCT {h64_sql('text')})::DOUBLE / count(*), 4) AS dup_rate
-        FROM documents
-        GROUP BY source
-        ORDER BY source
-    """,
     "d03_minhash_lsh": d03_pairs_sql(),
     "d04_simhash": f"""
         WITH hashes AS (
@@ -703,7 +679,6 @@ ORACLE: dict[str, str] = {
 
 QUERIES = {
     "d01_dedup_exact": d01_dedup_exact,
-    "d02_dedup_rate": d02_dedup_rate,
     "d03_minhash_lsh": d03_minhash_lsh,
     "d04_simhash": d04_simhash,
     "d05_ngram_jaccard": d05_ngram_jaccard,

@@ -171,14 +171,9 @@ class AggView:
     # would need the same fs client as the state — or, better, the
     # table format's atomic commit (Delta/Iceberg txn id) which also
     # closes the commit-window caveat in maintain(). Markers are
-    # NOT pruned by default: maintain()'s dedup promise holds for ANY
-    # batch_id (backfill re-runs, checkpoint restored from an old
-    # backup), and a marker is a ~10-byte file. Set LEDGER_KEEP to a
-    # count to bound the directory when the caller can guarantee
-    # replays only come through a forward-moving streaming checkpoint
-    # — ids older than the horizon then lose dedup protection.
-
-    LEDGER_KEEP: int | None = None
+    # never pruned: maintain()'s dedup promise holds for ANY batch_id
+    # (backfill re-runs, checkpoint restored from an old backup), and
+    # a marker is a ~10-byte file.
 
     def _ledger_dir(self) -> str:
         d = os.path.join(self.path, "_applied_batches")
@@ -192,13 +187,6 @@ class AggView:
         d = self._ledger_dir()
         with open(os.path.join(d, str(batch_id)), "w") as f:
             f.write("applied\n")
-        if self.LEDGER_KEEP is not None:
-            marks = sorted((int(x) for x in os.listdir(d) if x.isdigit()))
-            for old in marks[: -self.LEDGER_KEEP]:
-                try:
-                    os.remove(os.path.join(d, str(old)))
-                except OSError:
-                    pass
 
     # -- streaming ---------------------------------------------------------
 

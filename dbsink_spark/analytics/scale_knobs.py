@@ -183,8 +183,8 @@ KNOBS: tuple[Knob, ...] = (
         attr="KNN_K",
         value=3,
         derivation=(
-            "Neighbor-list width shared by s04/s07/s19: bounds s19 "
-            "NN-descent's edge list at O(n*k) rows and its candidate "
+            "Neighbor-list width shared by s04/s07/s22: bounds each "
+            "NN-descent round's edge list at O(n*k) rows and its candidate "
             "fanout at <= 2k + 2k + 4k^2 per node per round — the "
             "constant that keeps graph refinement linear in corpus "
             "size. Semantic k AND a fanout bound, so registered as "

@@ -646,8 +646,8 @@ def s07_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _knn_block_apply(b: DataFrame, keys: tuple[str, ...] = ("bucket",)) -> DataFrame:
     """Per-block tiled-numpy top-KNN_K over a (vec_id, v, *keys)
-    relation — s07's scoring kernel, shared with s19's multi-view base
-    (which blocks on a composite (view, bucket) key in ONE pass).
+    relation — s07's scoring kernel, shared with the NN-descent base
+    graph (which blocks on a composite (view, bucket) key in ONE pass).
     Rank-only output (see s07 docstring)."""
     import numpy as np
     import pandas as pd
@@ -719,7 +719,7 @@ def _knn_view_cte(name: str, lo: int, hi: int) -> str:
     """One LSH-view kNN graph as CTEs ``b_<name>``/``scored_<name>``/
     ``<name>`` (vec_id, neighbor_id, rank <= KNN_K) over the shared
     ``v`` CTE, built from hyperplanes [lo, hi). The s07 oracle and both
-    of s19's base views instantiate THIS builder, so the graphs they
+    of s22's base views instantiate THIS builder, so the graphs they
     verify against cannot drift apart."""
     planes = hyperplane_weights()[lo:hi]
     bucket_terms = " + ".join(
@@ -2302,17 +2302,18 @@ QUERIES["s18_filtered_search"] = s18_filtered_search
 
 
 # ---------------------------------------------------------------------------
-# s19: one NN-descent refinement round over the s07 kNN graph
+# LSH views for the NN-descent base graph
 # ---------------------------------------------------------------------------
 
 
 def _view_bucket(planes: list[list[int]]) -> str:
     """LSH bucket id over column ``v`` from an explicit plane slice
-    (the s07 bucketing generalized so s19 can build several independent
-    views) — as ONE SQL string (r12, guide §7.3): per plane the ±1
-    weight array alone was 64 py4j ``lit`` round trips, ~0.5 s of
-    driver time per 8-plane bucket built as Column objects; the string
-    parses JVM-side into the identical expression tree."""
+    (the s07 bucketing generalized so the NN-descent base graph can
+    build several independent views) — as ONE SQL string (r12, guide
+    §7.3): per plane the ±1 weight array alone was 64 py4j ``lit``
+    round trips, ~0.5 s of driver time per 8-plane bucket built as
+    Column objects; the string parses JVM-side into the identical
+    expression tree."""
     terms = []
     for p, wts in enumerate(planes):
         arr = "array(" + ", ".join(f"{float(x)}D" for x in wts) + ")"
@@ -2325,121 +2326,6 @@ def _view_bucket(planes: list[list[int]]) -> str:
             f" ELSE CAST(0 AS BIGINT) END, {p})"
         )
     return " + ".join(terms)
-
-
-def s19_nn_descent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One NN-descent refinement round (Dong et al., WWW'11) over a
-    TWO-VIEW LSH base graph: a vector's improved neighbor candidates
-    are its current neighbors, its REVERSE neighbors, and its
-    neighbors' neighbors — "a neighbor of my neighbor is probably my
-    neighbor". Candidates are re-ranked by EXACT cosine and the top
-    KNN_K kept; ``new_edge`` marks neighbors absent from BOTH base
-    views — recall the descent step recovers across bucket boundaries.
-
-    The base MUST be multi-view: a single LSH bucketing partitions the
-    corpus, so knn(u) ⊆ bucket(u) makes every neighbor-of-neighbor
-    land back in bucket(u) and the round provably a no-op (caught by
-    the first-cut property test). With two independent plane sets
-    (planes 0-3 and 4-7), u's view-A neighbor contributes its view-B
-    neighborhood — candidates u's own buckets never contained, which
-    is exactly how NN-descent converges from partial views.
-
-    NN-descent is the standard distributed kNN-graph algorithm
-    precisely because each round is three bounded equi-joins on the
-    O(n*k) edge list — candidate fanout per node is <= 2k + 2k + 4k^2
-    regardless of corpus size, and no round touches the full n x n
-    space. At 100 TB you iterate this operator to convergence; one
-    registered round keeps the gate deterministic. Re-rank cosines use
-    the sequential-fold kernel (module header), so values hash-match
-    the oracle exactly; ranks tie-break on neighbor_id.
-
-    The base graph is persisted: three candidate branches consume it,
-    and the applyInPandas scoring of the views must not replan per
-    branch.
-    """
-    # base graph factored into _nn_base_graph (shared verbatim with the
-    # s22 convergence loop); persisted because three candidate branches
-    # consume it and the applyInPandas scoring must not replan per branch
-    g = bounded_persist(_nn_base_graph(spark, sf_dir), "similarity.s19.base")
-    direct = g.select(
-        F.col("vec_id").alias("u"), F.col("neighbor_id").alias("c")
-    ).withColumn("d", F.lit(1))
-    reverse = g.select(
-        F.col("neighbor_id").alias("u"), F.col("vec_id").alias("c")
-    ).withColumn("d", F.lit(0))
-    g1, g2 = g.alias("g1"), g.alias("g2")
-    hop2 = (
-        g1.join(g2, F.col("g1.neighbor_id") == F.col("g2.vec_id"))
-        .filter(F.col("g2.neighbor_id") != F.col("g1.vec_id"))
-        .select(
-            F.col("g1.vec_id").alias("u"),
-            F.col("g2.neighbor_id").alias("c"),
-            F.lit(0).alias("d"),
-        )
-    )
-    cand = (
-        direct.unionByName(reverse)
-        .unionByName(hop2)
-        .groupBy("u", "c")
-        .agg(F.max("d").alias("d"))
-    )
-    v = _vectors(spark, sf_dir)
-    vu = v.select(F.col("vec_id").alias("u"), F.col("v").alias("uv"), _norm(F.col("v")).alias("un"))
-    vc = v.select(F.col("vec_id").alias("c"), F.col("v").alias("cv"), _norm(F.col("v")).alias("cn"))
-    cos = _dot(F.col("uv"), F.col("cv")) / (F.col("un") * F.col("cn"))
-    scored = cand.join(vu, "u").join(vc, "c").select("u", "c", "d", cos.alias("cosine"))
-    w = Window.partitionBy("u").orderBy(F.col("cosine").desc(), F.col("c"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= KNN_K)
-        .select(
-            F.col("u").alias("vec_id"),
-            F.col("c").alias("neighbor_id"),
-            "rank",
-            F.round("cosine", 4).alias("cosine"),
-            (1 - F.col("d")).alias("new_edge"),
-        )
-        .orderBy("vec_id", "rank")
-    )
-
-
-ORACLE["s19_nn_descent"] = f"""
-    WITH {_VECTORS_CTE}, {_knn_view_cte("knn_a", 0, N_GRAPH_PLANES)},
-    {_knn_view_cte("knn_b", N_GRAPH_PLANES, 2 * N_GRAPH_PLANES)},
-    knn AS (
-        SELECT DISTINCT vec_id, neighbor_id FROM (
-            SELECT vec_id, neighbor_id FROM knn_a
-            UNION ALL
-            SELECT vec_id, neighbor_id FROM knn_b
-        )
-    ),
-    cand AS (
-        SELECT vec_id AS u, neighbor_id AS c, 1 AS d FROM knn
-        UNION ALL
-        SELECT neighbor_id AS u, vec_id AS c, 0 AS d FROM knn
-        UNION ALL
-        SELECT a.vec_id AS u, e.neighbor_id AS c, 0 AS d
-        FROM knn a JOIN knn e ON a.neighbor_id = e.vec_id
-        WHERE e.neighbor_id != a.vec_id
-    ), cd AS (
-        SELECT u, c, max(d) AS d FROM cand GROUP BY u, c
-    ), rescored AS (
-        SELECT cd.u, cd.c, cd.d,
-               list_sum([a.v[i] * z.v[i] for i in generate_series(1, {DIM})])
-                   / (a.vn * z.vn) AS cosine
-        FROM cd JOIN v a ON a.vec_id = cd.u JOIN v z ON z.vec_id = cd.c
-    ), r2 AS (
-        SELECT u, c, d, cosine,
-               row_number() OVER (PARTITION BY u
-                                  ORDER BY cosine DESC, c) AS rank
-        FROM rescored
-    )
-    SELECT u AS vec_id, c AS neighbor_id, rank::INT AS rank,
-           round(cosine, 4) AS cosine, (1 - d)::INT AS new_edge
-    FROM r2 WHERE rank <= {KNN_K}
-    ORDER BY vec_id, rank
-"""
-QUERIES["s19_nn_descent"] = s19_nn_descent
 
 
 # ---------------------------------------------------------------------------
@@ -2699,9 +2585,9 @@ QUERIES["s21_kcenter_select"] = s21_kcenter_select
 
 
 # ---------------------------------------------------------------------------
-# s22: NN-descent iterated to convergence (VERDICT_r08 #3 — s19's round
-# run as the full loop with a fixpoint stopping rule and a fail-loud
-# round bound, the d17/q92 discipline)
+# s22: NN-descent iterated to convergence (_nn_descent_round run as
+# the full loop with a fixpoint stopping rule and a fail-loud round
+# bound, the d17/q92 discipline)
 # ---------------------------------------------------------------------------
 
 S22_MAX_ROUNDS = 8  # fail-loud bound; sf0.001-0.1 stop by round 4-5
@@ -2716,9 +2602,15 @@ S22_RECALL_SAMPLE_MOD = 4  # h64(vec_id) % MOD == 0 -> deterministic probe nodes
 
 
 def _nn_base_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """s19's two-view LSH base graph (distinct union of per-view,
-    per-bucket exact kNN) — factored so the one-round operator (s19)
-    and the convergence loop (s22) start from the identical seed.
+    """Two-view LSH base graph (distinct union of per-view,
+    per-bucket exact kNN): the seed every NN-descent round starts from.
+
+    The base MUST be multi-view: a single LSH bucketing partitions the
+    corpus, so knn(u) ⊆ bucket(u) makes every neighbor-of-neighbor
+    land back in bucket(u) and a descent round provably a no-op. With
+    two independent plane sets (planes 0-3 and 4-7), u's view-A
+    neighbor contributes its view-B neighborhood — candidates u's own
+    buckets never contained.
 
     BOTH views ride one exploded (view, bucket) key — one exchange +
     one applyInPandas stage instead of a per-view pair (the kernel

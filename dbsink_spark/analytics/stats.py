@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.casts import guarded_double_sql, try_double_guarded
+from ..functions.sketch import CM_D, CM_W, countmin_cells
 from .tables import Tables
 
 
@@ -380,10 +381,6 @@ QUERIES["q43_regression_stats"] = q43_regression_stats
 # q51: count-min sketch (mergeable frequency summary)
 # ---------------------------------------------------------------------------
 
-CM_D = 4  # hash rows
-CM_W = 1024  # buckets per row
-
-
 def q51_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch (Cormode & Muthukrishnan 2005) built
     distributed, then queried for the corpus's top-20 words: estimate =
@@ -400,20 +397,12 @@ def q51_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     by addition, and querying is a broadcast join of the 20 probe rows
     against the 4096-cell grid.
     """
-    from ..functions.hashing import MINHASH_COEFFS, affine, h64
+    from ..functions.hashing import h64
 
     d = Tables(spark, sf_dir).documents
     words = d.select(F.explode(F.split("text", " ")).alias("word"))
     wh = words.withColumn("h", h64(F.col("word")))
-    buckets = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("d"),
-                (affine(F.col("h"), a, b) % CM_W).alias("bucket"),
-            )
-            for i, (a, b) in enumerate(MINHASH_COEFFS[:CM_D])
-        ]
-    )
+    buckets = countmin_cells(F.col("h"))
     cells = wh.select(F.explode(buckets).alias("c")).select("c.d", "c.bucket")
     sketch = cells.groupBy("d", "bucket").agg(F.count(F.lit(1)).alias("cnt"))
 

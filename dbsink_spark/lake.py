@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .functions.sketch import with_zvalue
 from .sink import last_writer_wins
 
 
@@ -138,26 +139,15 @@ def zorder_lake(
     is the range partitioner the clustered write needs anyway.
     """
     a, b = dims
-    n_b = 1 << bits
     bounds = df.agg(
         F.min(a).alias("_min_a"),
         F.max(a).alias("_max_a"),
         F.min(b).alias("_min_b"),
         F.max(b).alias("_max_b"),
     )
-    interleave = (
-        f"aggregate(sequence(0, {bits - 1}), cast(0 as long), "
-        "(acc, i) -> acc"
-        " + shiftleft(shiftright(_ux, i) & 1, 2*i + 1)"
-        " + shiftleft(shiftright(_tx, i) & 1, 2*i))"
-    )
-    z = (
-        df.join(F.broadcast(bounds))
-        .withColumn("_ux", F.expr(f"({n_b} * ({a} - _min_a)) div (_max_a - _min_a + 1)"))
-        .withColumn("_tx", F.expr(f"({n_b} * ({b} - _min_b)) div (_max_b - _min_b + 1)"))
-        .withColumn("_z", F.expr(interleave))
-        .drop("_min_a", "_max_a", "_min_b", "_max_b", "_ux", "_tx")
-    )
+    z = with_zvalue(
+        df.join(F.broadcast(bounds)), a, b, ("_min_a", "_max_a", "_min_b", "_max_b"), bits, "_z"
+    ).drop("_min_a", "_max_a", "_min_b", "_max_b")
     (
         z.repartitionByRange(n_files, "_z")
         .sortWithinPartitions("_z")

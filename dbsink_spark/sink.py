@@ -197,7 +197,7 @@ class SinkWriter:
                         self._rollback(conn)
                     else:
                         raise
-            self._commit(conn)
+            conn.commit()
         finally:
             conn.close()
 
@@ -358,14 +358,16 @@ class SinkWriter:
 
     def _write(self, batch) -> None:
         """One connection, one bulk write, one commit. ``batch`` is an
-        Arrow table on DuckDB and a list of row params on Postgres."""
+        Arrow table on DuckDB and a list of row params on Postgres. A
+        failed commit raises: foreachBatch must fail, so Spark does not
+        checkpoint the offsets of rows that never landed."""
         conn = self.connect()
         try:
             if self.dialect == "duckdb":
                 self._upsert_arrow(conn, batch)
             else:
                 self._execute_rows(conn, batch)
-            self._commit(conn)
+            conn.commit()
         finally:
             conn.close()
 

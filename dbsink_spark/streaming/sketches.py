@@ -22,11 +22,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..ddl import quoted
-from ..functions.hashing import AFFINE_MOD, MINHASH_COEFFS, REDUCE_MOD, affine, h64
+from ..functions.hashing import AFFINE_MOD, MINHASH_COEFFS, REDUCE_MOD, h64
+from ..functions.sketch import CM_D, CM_W, Q62_NUM, Q62_SHIFT, countmin_cells, hll_cells
 from .pipeline import start_foreach_batch
-
-CM_D = 4
-CM_W = 1024
 
 LEDGER_TABLE = "_applied_batches"
 
@@ -157,17 +155,8 @@ def batch_grid(df: DataFrame, item_col: str) -> DataFrame:
     poisoned batch fails forever. Count-min counts items; a NULL is
     the absence of one."""
     wh = df.select(h64(F.col(item_col)).alias("h")).filter(F.col("h").isNotNull())
-    buckets = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("d"),
-                (affine(F.col("h"), a, b) % CM_W).alias("bucket"),
-            )
-            for i, (a, b) in enumerate(MINHASH_COEFFS[:CM_D])
-        ]
-    )
     return (
-        wh.select(F.explode(buckets).alias("c"))
+        wh.select(F.explode(countmin_cells(F.col("h"))).alias("c"))
         .groupBy(F.col("c.d").alias("d"), F.col("c.bucket").alias("bucket"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -338,19 +327,10 @@ def batch_hll(df: DataFrame, item_col: str) -> DataFrame:
     a NULL-bucket register that violates the sink's PRIMARY KEY
     (bucket), and under at-least-once replay the same poisoned batch
     fails forever."""
-    from ..analytics.advanced import Q62_M, Q62_SHIFT
-
+    bucket, w, rho = hll_cells(F.col("h"))
     d = df.select(h64(F.col(item_col)).alias("h")).filter(
         F.col("h").isNotNull()
-    ).select(
-        (F.col("h") % Q62_M).alias("bucket"),
-        F.expr(f"h DIV {Q62_M}").alias("w"),
-    )
-    rho = (
-        F.when(F.col("w") == 0, F.lit(Q62_SHIFT))
-        .otherwise(F.lit(Q62_SHIFT) - F.length(F.bin(F.col("w"))))
-        .cast("long")
-    )
+    ).select(bucket, w)
     return d.groupBy("bucket").agg(F.max(rho).alias("m_j"))
 
 
@@ -380,8 +360,6 @@ class HLLMaintainer(MergeMaintainer):
         """SQL serving the HLL distinct estimate straight from the
         maintained registers — identical formula to q62 (raw estimate;
         same inlined numerator literal)."""
-        from ..analytics.advanced import Q62_NUM, Q62_SHIFT
-
         # ::INT on the shift amount: Postgres defines bigint << integer
         # but NOT bigint << bigint; DuckDB accepts both forms
         return (

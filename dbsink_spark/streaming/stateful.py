@@ -604,32 +604,19 @@ def sliding_hll_tracker(
     removed: state is bounded by (active slots ≤ window + lateness
     horizon) × Q62_M longs per... nothing grows with the stream.
 
-    The register/bucket/rho arithmetic imports q94's own helpers, so
-    the finalized rows are provably the batch operator's numbers —
-    pinned by the stream ≡ batch equivalence test.
+    The bucket/rho arithmetic is q94's own kernel
+    (``functions.sketch.hll_cells``), so the finalized rows are the
+    batch operator's numbers — pinned by the stream ≡ batch
+    equivalence test.
     """
-    from ..analytics.advanced import Q62_M, Q62_NUM, Q62_SHIFT
     from ..functions.hashing import h64
+    from ..functions.sketch import Q62_M, Q62_NUM, Q62_SHIFT, hll_cells
 
-    # same hash as q94's _q62_h64_user, parameterized on user_col
-    # (round-8 review: the helper hardcodes user_id, silently ignoring
-    # the caller's column)
-    h = h64(F.col(user_col).cast("string"))
+    # q94's hash, on user_col rather than the hardcoded user_id
+    bucket, w, rho = hll_cells(h64(F.col(user_col).cast("string")))
     day = F.date_trunc("day", F.col(ts_col)).cast("date")
-    base = (
-        df.withWatermark(ts_col, delay)
-        .select(
-            F.col(ts_col),
-            day.alias("day"),
-            (h % Q62_M).cast("long").alias("bucket"),
-            h.alias("h"),
-        )
-        .withColumn("w", F.expr(f"h DIV {Q62_M}"))
-    )
-    rho = (
-        F.when(F.col("w") == 0, F.lit(Q62_SHIFT))
-        .otherwise(F.lit(Q62_SHIFT) - F.length(F.bin(F.col("w"))))
-        .cast("long")
+    base = df.withWatermark(ts_col, delay).select(
+        F.col(ts_col), day.alias("day"), bucket, w
     )
     fanned = base.select(
         F.col(ts_col),

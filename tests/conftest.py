@@ -38,3 +38,23 @@ def spark():
 
 def fixture_path(name: str) -> str:
     return f"{FIXTURES}/{name}"
+
+
+def float_messages(n: int = 4) -> list[dict]:
+    """``n`` GenericFloat messages with distinct upsert keys. ``gid`` is
+    omitted, so the mapping's declared default ('') applies."""
+    return [
+        {"uid": f"u{i}", "time": f"2020-01-01T0{i}:00:00Z", "lat": 10.0 + i,
+         "lon": -70.0 - i, "z": 0.5, "values": {"temp": 4.0 + i}}
+        for i in range(n)
+    ]
+
+
+def write_datafile(path, messages: list[dict]) -> str:
+    """Write ``messages`` as a JSON-array datafile (the ``--datafile``
+    and ``replay_source`` input format); returns the path."""
+    import json
+
+    with open(path, "w") as f:
+        json.dump(messages, f)
+    return str(path)

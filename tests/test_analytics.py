@@ -2739,27 +2739,40 @@ def test_t34_dataset_card_bruteforce(spark):
 
 
 def test_s19_nn_descent_improves_recall(spark):
-    """One descent round must (a) produce a neighbor list whose exact
-    brute-force recall@K is >= each single-view base graph's, and (b)
-    actually recover cross-bucket neighbors (new_edge > 0) — the
-    first-cut single-view formulation failed (b) by construction."""
+    """One descent round (``_nn_descent_round`` over the two-view base
+    graph) must (a) produce a neighbor list whose exact brute-force
+    recall@K is >= each single-view base graph's, and (b) actually
+    recover cross-bucket neighbors (edges absent from the base graph)
+    — a single-view base fails (b) by construction."""
     import numpy as np
+    from pyspark.sql import functions as F
 
     from dbsink_spark.analytics.similarity import (
         KNN_K,
         N_GRAPH_PLANES,
         _knn_block_apply,
+        _nn_base_graph,
+        _nn_descent_round,
+        _norm,
         _vectors,
         _view_bucket,
         hyperplane_weights,
-        s19_nn_descent,
     )
 
-    out = s19_nn_descent(spark, SF_DIR).collect()
+    v = _vectors(spark, SF_DIR)
+    vu = v.select(
+        F.col("vec_id").alias("u"), F.col("v").alias("uv"), _norm(F.col("v")).alias("un")
+    )
+    vc = v.select(
+        F.col("vec_id").alias("c"), F.col("v").alias("cv"), _norm(F.col("v")).alias("cn")
+    )
+    g = _nn_base_graph(spark, SF_DIR)
+    base_edges = {(r["vec_id"], r["neighbor_id"]) for r in g.collect()}
+    out = _nn_descent_round(g, vu, vc).collect()
     got = {}
     for r in out:
         got.setdefault(r["vec_id"], set()).add(r["neighbor_id"])
-    new_edges = sum(r["new_edge"] for r in out)
+    new_edges = sum((r["vec_id"], r["neighbor_id"]) not in base_edges for r in out)
     assert new_edges > 0
 
     vecs = _vectors(spark, SF_DIR).collect()

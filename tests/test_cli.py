@@ -4,7 +4,7 @@
 import duckdb
 from click.testing import CliRunner
 
-from conftest import fixture_path
+from conftest import fixture_path, float_messages, write_datafile
 
 from dbsink_spark.cli import setup
 
@@ -16,6 +16,11 @@ def test_cli_help():
 
 
 def test_cli_datafile_replay(tmp_path):
+    # four keys, two of them re-sent with new values: the replay lands
+    # one row per distinct upsert key
+    msgs = float_messages()
+    msgs += [dict(m, values={"temp": 99.0}) for m in msgs[:2]]
+    keys = {(m["uid"], m["time"], m["lat"], m["lon"], m["z"]) for m in msgs}
     db = tmp_path / "cli.duckdb"
     result = CliRunner().invoke(
         setup,
@@ -23,7 +28,7 @@ def test_cli_datafile_replay(tmp_path):
             "--topic", "axds-netcdf-replayer-data",
             "--lookup", "GenericFloat",
             "--db", f"duckdb:///{db}",
-            "--datafile", fixture_path("replayer.json"),
+            "--datafile", write_datafile(tmp_path / "floats.json", msgs),
             "--drop",
         ],
         catch_exceptions=False,
@@ -32,7 +37,7 @@ def test_cli_datafile_replay(tmp_path):
     con = duckdb.connect(str(db))
     n = con.execute('SELECT count(*) FROM "axds-netcdf-replayer-data"').fetchone()[0]
     con.close()
-    assert n == 4
+    assert n == len(keys) == 4
 
 
 def test_cli_dry_run(tmp_path):
@@ -43,7 +48,7 @@ def test_cli_dry_run(tmp_path):
             "--topic", "t",
             "--lookup", "GenericFloat",
             "--db", f"duckdb:///{db}",
-            "--datafile", fixture_path("replayer.json"),
+            "--datafile", write_datafile(tmp_path / "floats.json", float_messages()),
             "--no-do-inserts",
         ],
         catch_exceptions=False,

@@ -10,7 +10,7 @@ import duckdb
 import pytest
 from pyspark.sql import types as T
 
-from conftest import fixture_path
+from conftest import fixture_path, float_messages, write_datafile
 
 from dbsink_spark.ddl import create_statements
 from dbsink_spark.mappings import BUILTIN, resolve
@@ -105,7 +105,7 @@ def test_dry_run_no_inserts(spark, duck_writer, tmp_path):
     writer, db, mapping = duck_writer()
     writer.do_inserts = False
     writer.ensure_table()
-    df = replay_source(spark, fixture_path("replayer.json"))
+    df = replay_source(spark, write_datafile(tmp_path / "floats.json", float_messages()))
     n = writer.write_batch(mapping.transform(df))
     assert n == 0
     con = duckdb.connect(db)
@@ -114,19 +114,22 @@ def test_dry_run_no_inserts(spark, duck_writer, tmp_path):
     assert mapping.table not in tables  # DDL skipped too
 
 
-def test_defaults_applied(spark, duck_writer):
+def test_defaults_applied(spark, duck_writer, tmp_path):
     # gid omitted (None) → default '' lands in the table (F6 semantics)
     writer, db, mapping = duck_writer()
     writer.ensure_table(drop=True)
-    df = replay_source(spark, fixture_path("replayer.json"))
+    msgs = float_messages()
+    assert all("gid" not in m for m in msgs)
+    df = replay_source(spark, write_datafile(tmp_path / "floats.json", msgs))
     writer.write_batch(mapping.transform(df))
     con = duckdb.connect(db)
     gids = [r[0] for r in con.execute(f'SELECT gid FROM "{mapping.table}"').fetchall()]
     con.close()
+    assert len(gids) == len(msgs)
     assert all(g == "" for g in gids)
 
 
-def test_preserve_update_mode_partial_message(spark, duck_writer):
+def test_preserve_update_mode_partial_message(spark, duck_writer, tmp_path):
     """update_mode='preserve': a NULL (absent) field in a replayed
     message keeps the stored value instead of overwriting it
     (reference partial-update parity — listen.py:160-166 set_ only
@@ -134,7 +137,8 @@ def test_preserve_update_mode_partial_message(spark, duck_writer):
     writer, db, mapping = duck_writer()
     writer.update_mode = "preserve"
     writer.ensure_table(drop=True)
-    df = replay_source(spark, fixture_path("replayer.json"))
+    msgs = float_messages()
+    df = replay_source(spark, write_datafile(tmp_path / "floats.json", msgs))
     writer.write_batch(mapping.transform(df))
     before = {
         r[0]: r[1]
@@ -145,19 +149,10 @@ def test_preserve_update_mode_partial_message(spark, duck_writer):
     assert before and all(v is not None for v in before.values())
 
     # replay the same messages with lat nulled out → lat must survive
-    import json as _json
-
-    with open(fixture_path("replayer.json")) as f:
-        msgs = _json.load(f)
     for m in msgs:
         m["lat"] = None
         m["lon"] = None
-    import tempfile
-
-    with tempfile.NamedTemporaryFile("w", suffix=".json", delete=False) as tf:
-        _json.dump(msgs, tf)
-        path = tf.name
-    df2 = replay_source(spark, path)
+    df2 = replay_source(spark, write_datafile(tmp_path / "nulled.json", msgs))
     writer.write_batch(mapping.transform(df2))
     after = {
         r[0]: r[1]
@@ -166,6 +161,31 @@ def test_preserve_update_mode_partial_message(spark, duck_writer):
         .fetchall()
     }
     assert after == before  # stored coordinates preserved
+
+
+def test_failed_commit_raises(spark, duck_writer):
+    """A batch whose COMMIT fails must raise out of write_batch, so
+    foreachBatch fails and Spark does not checkpoint its offsets."""
+    writer, db, mapping = duck_writer()
+    writer.ensure_table(drop=True)
+    real_connect = writer.connect
+
+    class CommitFails:
+        def __init__(self, conn):
+            self._conn = conn
+
+        def __getattr__(self, name):
+            return getattr(self._conn, name)
+
+        def commit(self):
+            raise RuntimeError("commit failed")
+
+    writer.connect = lambda: CommitFails(real_connect())
+    df = spark.createDataFrame(
+        [("k", json.dumps(m)) for m in float_messages(1)], ["key", "value"]
+    )
+    with pytest.raises(RuntimeError, match="commit failed"):
+        writer.write_batch(mapping.transform(df))
 
 
 def test_hstore_text():
