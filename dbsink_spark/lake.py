@@ -17,9 +17,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .functions.sketch import with_zvalue
 from .sink import last_writer_wins
+from .sources import arrow_frame
 
 
 def with_partition_cols(df: DataFrame, ts_col: str = "time") -> DataFrame:
@@ -100,9 +102,12 @@ def compact_lake(
     }
     if not plan:
         return {}
-    budget = spark.createDataFrame(
+    budget = arrow_frame(
+        spark,
         [(*k, v) for k, v in plan.items()],
-        list(partition_cols) + ["__n_files"],
+        T.StructType(
+            [df.schema[c] for c in partition_cols] + [T.StructField("__n_files", T.LongType())]
+        ),
     )
     data_cols = [c for c in df.columns if c not in partition_cols]
     row_hash = F.abs(F.xxhash64(*[F.col(c).cast("string") for c in data_cols]))

@@ -7,6 +7,14 @@ JSON-array replay (listen.py:173-177). Here both produce the same
 ``kafka_stream`` a streaming one — and both feed the identical
 ``Mapping.transform``; batch/stream symmetry is structural, not
 duplicated code.
+
+Frames built on the driver from Python values (the replay sources, the
+split bounds of ``dbapi_table_source``, the file budget of
+``lake.compact_lake``) go to Spark through ``arrow_frame`` as one Arrow
+table, which plans as a ``LocalTableScan``. A list of tuples would plan
+as a scan over a pickled Python RDD instead, and every task reading it
+would start a Python worker only to unpickle rows, in front of the
+mapping's own ``mapInPandas`` worker.
 """
 
 from __future__ import annotations
@@ -27,6 +35,39 @@ KV_SCHEMA = T.StructType(
 )
 
 
+# dbapi_table_source's split bounds; is_last leaves the range open above
+_SPLIT_SCHEMA = T.StructType(
+    [
+        T.StructField("s_lo", T.LongType()),
+        T.StructField("s_hi", T.LongType()),
+        T.StructField("is_last", T.BooleanType()),
+        T.StructField("is_first", T.BooleanType()),
+    ]
+)
+
+
+def arrow_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """DataFrame of driver-side ``rows`` (tuples in ``schema`` order),
+    handed to Spark as one Arrow table: a ``LocalTableScan`` read in the
+    JVM, with no Python worker and no pickled RDD behind it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [[] for _ in arrow_schema]
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(columns, arrow_schema)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def _kv_frame(spark: SparkSession, messages) -> DataFrame:
+    """(NULL key, canonical JSON value) frame of decoded messages, in order."""
+    return arrow_frame(
+        spark, [(None, json.dumps(m, default=_wire_default)) for m in messages], KV_SCHEMA
+    )
+
+
 def replay_source(
     spark: SparkSession, datafile: str, packing: str = "json", **codec_kwargs
 ) -> DataFrame:
@@ -38,17 +79,16 @@ def replay_source(
     listen.py:173-177, utils.py:42-49) — then carried as a canonical
     JSON string ``value`` column for the mapping transform. Binary
     packings (msgpack, avro) are therefore exercised losslessly rather
-    than mangled into a unicode column. Small files load driver-side;
-    at scale point ``spark.read.json`` at a directory of JSONL instead.
+    than mangled into a unicode column. Small files load driver-side
+    and reach Spark as one Arrow table (``arrow_frame``), so the
+    mapping's ``mapInPandas`` worker is the only Python process per
+    task; at scale point ``jsonl_source`` at a directory of JSONL
+    instead.
     """
     codec = get_codec(packing, **codec_kwargs)
     with open(datafile) as f:
         messages = json.load(f)
-    rows = []
-    for m in messages:
-        unpacked = codec.unpack(codec.pack(m))
-        rows.append((None, json.dumps(unpacked, default=_wire_default)))
-    return spark.createDataFrame(rows, KV_SCHEMA)
+    return _kv_frame(spark, (codec.unpack(codec.pack(m)) for m in messages))
 
 
 def _wire_default(o):
@@ -68,15 +108,15 @@ def avro_file_source(spark: SparkSession, path: str) -> DataFrame:
     Records decode through the same ``avro_lite`` walker as the wire
     codec and land as canonical JSON ``value`` strings, so every
     mapping transform downstream is packing-agnostic. Small files load
-    driver-side (the replay contract); a directory of container files
-    at scale would distribute the per-file parse over
-    ``binaryFile`` + mapInPandas with the identical block parser.
+    driver-side (the replay contract) and reach Spark as one Arrow table
+    (``arrow_frame``); a directory of container files at scale would
+    distribute the per-file parse over ``binaryFile`` + mapInPandas
+    with the identical block parser.
     """
     from .wire.avro_container import read_container
 
     _, records = read_container(path)
-    rows = [(None, json.dumps(r, default=_wire_default)) for r in records]
-    return spark.createDataFrame(rows, KV_SCHEMA)
+    return _kv_frame(spark, records)
 
 
 def jsonl_source(spark: SparkSession, path: str) -> DataFrame:
@@ -144,10 +184,12 @@ def dbapi_table_source(
     database the sink writes (round-trip: what this engine sinks it
     can also scan back distributed).
 
-    Split planning is driver-side and tiny (one min/max query); each
-    Spark task then opens its OWN read-only connection and pulls ONLY
-    its ``split_col`` range via Arrow — so extraction parallelism is
-    ``n_splits`` and no single process ever materializes the table.
+    Split planning is driver-side and tiny (one min/max query; the
+    bounds reach Spark through ``arrow_frame``, so reading them starts
+    no Python worker); each Spark task then opens its OWN read-only
+    connection and pulls ONLY its ``split_col`` range via Arrow — so
+    extraction parallelism is ``n_splits`` and no single process ever
+    materializes the table.
     ``columns`` prunes projection and ``predicate`` pushes a WHERE
     clause INTO the database per split: filter + projection run where
     the data lives, the classic federation pushdown.
@@ -187,7 +229,7 @@ def dbapi_table_source(
         f"{f.name} {_duck_to_spark_type(f.type)}" for f in arrow_schema
     )
     if n_rows == 0:
-        return spark.createDataFrame([], spark_schema)
+        return arrow_frame(spark, [], T.StructType.fromDDL(spark_schema))
     if lo is None:
         # all matching rows have NULL split keys: one first+last split
         # whose range predicate (key >= 0) matches nothing by
@@ -248,9 +290,7 @@ def dbapi_table_source(
                 finally:
                     c.close()
 
-    splits = spark.createDataFrame(
-        bounds, "s_lo long, s_hi long, is_last boolean, is_first boolean"
-    ).repartition(max(1, len(bounds)))
+    splits = arrow_frame(spark, bounds, _SPLIT_SCHEMA).repartition(len(bounds))
     return splits.mapInPandas(read_split, spark_schema)
 
 

@@ -1,10 +1,12 @@
 """CLI tests via Click's runner — the reference's own CLI test pattern
 (tests/test_dbsink.py:15-21, integration tier :442-826)."""
 
+import json
+
 import duckdb
 from click.testing import CliRunner
 
-from conftest import fixture_path, float_messages, write_datafile
+from conftest import float_messages, write_datafile
 
 from dbsink_spark.cli import setup
 
@@ -57,27 +59,31 @@ def test_cli_dry_run(tmp_path):
 
 
 def test_cli_date_filter(tmp_path):
+    # messages at 00:00..03:00; the window holds u1 and u2, and u1 is
+    # re-sent in-window with a new value under identical upsert keys
+    msgs = float_messages()
+    msgs.append(dict(msgs[1], values={"temp": 99.0}))
     db = tmp_path / "filt.duckdb"
     result = CliRunner().invoke(
         setup,
         [
-            "--topic", "numurus",
-            "--lookup", "NumurusData",
+            "--topic", "floats",
+            "--lookup", "GenericFloat",
             "--db", f"duckdb:///{db}",
-            "--datafile", fixture_path("numurus.data.json"),
+            "--datafile", write_datafile(tmp_path / "floats.json", msgs),
             "--drop",
-            "--start_date", "2019-07-18 15:00:00",
-            "--end_date", "2019-07-18 16:00:00",
+            "--start_date", "2020-01-01 00:30:00",
+            "--end_date", "2020-01-01 02:00:00",
         ],
         catch_exceptions=False,
     )
     assert result.exit_code == 0
     con = duckdb.connect(str(db))
-    n = con.execute('SELECT count(*) FROM "numurus"').fetchone()[0]
+    rows = con.execute('SELECT uid, "values" FROM "floats" ORDER BY uid').fetchall()
     con.close()
-    # the 2 in-window messages share identical upsert keys → the
-    # last-writer-wins dedup collapses them to one upserted row
-    assert n == 1
+    # only the in-window messages land, and the in-window duplicate key
+    # collapses to one row holding the last writer's value
+    assert [(uid, json.loads(v)["temp"]) for uid, v in rows] == [("u1", "99.0"), ("u2", "6.0")]
 
 
 def test_dbapi_table_source_round_trip(spark, tmp_path):

@@ -17,7 +17,7 @@ from dbsink_spark.codecs import avro_codec_from_schema, get_codec
 from dbsink_spark.sources import replay_source
 from dbsink_spark.wire import avro_lite, msgpack_lite
 
-from conftest import fixture_path
+from conftest import float_messages, write_datafile
 
 MSG = {
     "uid": "unit_abc123",
@@ -76,13 +76,38 @@ def test_msgpack_codec_contract():
 
 # ---------------------------------------------------------------- avro
 
-def _schema():
-    with open("/root/reference/schema.avsc") as f:
-        return json.load(f)
+# the canonical GenericFloat wire schema: meta travels as a JSON string,
+# ``values`` as a map over every scalar the producers send
+FLOAT_SCHEMA = {
+    "type": "record",
+    "name": "GenericFloat",
+    "fields": [
+        {"name": "uid", "type": "string"},
+        {"name": "gid", "type": ["null", "string"], "default": None},
+        {"name": "time", "type": "string"},
+        {"name": "lat", "type": "double"},
+        {"name": "lon", "type": "double"},
+        {"name": "z", "type": ["null", "double"], "default": None},
+        {
+            "name": "values",
+            "type": [
+                "null",
+                {
+                    "type": "map",
+                    "values": [
+                        "null", "boolean", "int", "long", "float", "double", "bytes", "string",
+                    ],
+                },
+            ],
+            "default": None,
+        },
+        {"name": "meta", "type": ["null", "string"], "default": None},
+    ],
+}
 
 
 def test_avro_roundtrip_reference_schema():
-    schema = _schema()
+    schema = FLOAT_SCHEMA
     body = avro_lite.dumps(schema, MSG)
     out = avro_lite.loads(schema, body)
     assert out["uid"] == MSG["uid"]
@@ -96,7 +121,7 @@ def test_avro_roundtrip_reference_schema():
 
 
 def test_avro_confluent_framing():
-    schema = _schema()
+    schema = FLOAT_SCHEMA
     codec = avro_codec_from_schema(schema, schema_id=42)
     wire = codec.pack(MSG)
     assert wire[0] == 0 and int.from_bytes(wire[1:5], "big") == 42
@@ -171,16 +196,17 @@ def test_spark_from_avro_wiring(spark):
 
 # ------------------------------------------------------ replay threading
 
-def test_replay_source_msgpack_equals_json(spark):
-    a = replay_source(spark, fixture_path("replayer.json"), packing="json").collect()
-    b = replay_source(spark, fixture_path("replayer.json"), packing="msgpack").collect()
+def test_replay_source_msgpack_equals_json(spark, tmp_path):
+    path = write_datafile(tmp_path / "floats.json", float_messages())
+    a = replay_source(spark, path, packing="json").collect()
+    b = replay_source(spark, path, packing="msgpack").collect()
     assert len(a) == len(b)
     for ra, rb in zip(a, b):
         assert json.loads(ra.value) == json.loads(rb.value)
 
 
-# replayer.json's meta is a json object (schema.avsc carries meta as a
-# string), so the replay test binds a schema matching the fixture shape
+# replayer-shaped messages carry meta as a json object (FLOAT_SCHEMA
+# carries it as a string), so the replay tests bind a matching schema
 REPLAYER_SCHEMA = {
     "type": "record",
     "name": "replayer",
@@ -206,14 +232,87 @@ REPLAYER_SCHEMA = {
 }
 
 
-def test_replay_source_avro_schema_bound(spark):
+def test_replay_source_avro_schema_bound(spark, tmp_path):
     rows = replay_source(
         spark,
-        fixture_path("replayer.json"),
+        write_datafile(tmp_path / "floats.json", float_messages()),
         packing="avro",
         avro_schema=REPLAYER_SCHEMA,
     ).collect()
     assert rows and all(json.loads(r.value)["uid"] for r in rows)
+
+
+def _codec_oracle(codec, messages) -> list[str]:
+    """The replay contract, one message at a time: wire round-trip, then
+    canonical JSON with bytes carried as latin-1 text."""
+    return [
+        json.dumps(codec.unpack(codec.pack(m)), default=lambda o: o.decode("latin-1"))
+        for m in messages
+    ]
+
+
+# non-ASCII text and explicit nulls, placed mid-file so row order shows
+PARITY_MESSAGES = [
+    *float_messages(3),
+    {"uid": "bøje-7", "gid": None, "time": "2024-01-02T03:04:05Z", "lat": 33.9,
+     "lon": -118.4, "z": None, "values": {"note": "Ström ☃ 東京", "gap": None, "n": 7},
+     "meta": {"site": "Ærø"}},
+    *float_messages(6)[3:],
+]
+
+
+@pytest.mark.parametrize("packing", ["json", "msgpack", "avro"])
+def test_replay_source_matches_per_message_codec_oracle(spark, tmp_path, packing):
+    kwargs = {"avro_schema": REPLAYER_SCHEMA} if packing == "avro" else {}
+    codec = get_codec(packing, **kwargs)
+    for name, messages in (("messages", PARITY_MESSAGES), ("empty", [])):
+        path = write_datafile(tmp_path / f"{name}.json", messages)
+        rows = replay_source(spark, path, packing=packing, **kwargs).collect()
+        assert [r.value for r in rows] == _codec_oracle(codec, messages), name
+        assert all(r.key is None for r in rows)
+
+
+def test_avro_file_source_matches_codec_oracle(spark, tmp_path):
+    """Only a container file can carry Avro ``bytes``: they land as
+    latin-1 text, next to non-ASCII strings and nulls, in file order."""
+    from dbsink_spark.sources import avro_file_source
+    from dbsink_spark.wire import avro_container as ac
+
+    codec = avro_codec_from_schema(FLOAT_SCHEMA)
+    messages = [
+        dict(MSG, uid="u0"),
+        dict(MSG, uid="ü1", values={"raw": b"\x00\xffraw", "note": "Ström ☃", "gap": None}),
+        dict(MSG, uid="u2", z=None, values=None),
+    ]
+    for name, records in (("messages", messages), ("empty", [])):
+        p = str(tmp_path / f"{name}.avro")
+        ac.write_container(p, FLOAT_SCHEMA, records)
+        rows = avro_file_source(spark, p).collect()
+        assert [r.value for r in rows] == _codec_oracle(codec, records), name
+        assert all(r.key is None for r in rows)
+
+
+def test_replay_sources_plan_without_python_rdd_scan(spark, tmp_path):
+    """Driver-built replay frames reach Spark as an Arrow table, planned
+    as a LocalTableScan; a scan over a pickled Python RDD (ExistingRDD)
+    would cost every task a Python worker in front of the mapping's."""
+    from dbsink_spark.sources import avro_file_source
+    from dbsink_spark.wire import avro_container as ac
+
+    messages = float_messages()
+    path = write_datafile(tmp_path / "floats.json", messages)
+    container = str(tmp_path / "floats.avro")
+    ac.write_container(container, REPLAYER_SCHEMA, messages)
+    frames = {
+        "json": replay_source(spark, path),
+        "msgpack": replay_source(spark, path, packing="msgpack"),
+        "avro": replay_source(spark, path, packing="avro", avro_schema=REPLAYER_SCHEMA),
+        "avro_file": avro_file_source(spark, container),
+    }
+    for name, df in frames.items():
+        assert len(df.collect()) == len(messages), name
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan and "LocalTableScan" in plan, (name, plan)
 
 
 def test_avro_lite_truncated_input_raises():
@@ -240,11 +339,11 @@ def test_avro_lite_truncated_input_raises():
 
 def test_avro_container_round_trip_both_codecs(tmp_path):
     """Object Container File writer/reader round-trip on the
-    REFERENCE schema, null and deflate codecs (the two the spec
+    GenericFloat wire schema, null and deflate codecs (the two the spec
     requires every implementation to read)."""
     from dbsink_spark.wire import avro_container as ac
 
-    schema = _schema()
+    schema = FLOAT_SCHEMA
     records = [dict(MSG, uid=f"u{i}") for i in range(40)]
     for codec in ("null", "deflate"):
         p = str(tmp_path / f"m_{codec}.avro")
@@ -267,7 +366,7 @@ def test_avro_container_append_blocks(tmp_path):
     the concatenated record stream. Both codecs."""
     from dbsink_spark.wire import avro_container as ac
 
-    schema = _schema()
+    schema = FLOAT_SCHEMA
     for codec in ("null", "deflate"):
         p = str(tmp_path / f"a_{codec}.avro")
         ac.write_container(p, schema, [dict(MSG, uid=f"u{i}") for i in range(5)],
@@ -291,7 +390,7 @@ def test_avro_container_header_validation(tmp_path, monkeypatch):
 
     from dbsink_spark.wire import avro_container as ac
 
-    schema = _schema()
+    schema = FLOAT_SCHEMA
     p = str(tmp_path / "t.avro")
     ac.write_container(p, schema, [dict(MSG, uid="u0")])
     raw = open(p, "rb").read()
@@ -324,7 +423,7 @@ def test_avro_container_driver_size_guard(tmp_path):
 
     from dbsink_spark.wire import avro_container as ac
 
-    schema = _schema()
+    schema = FLOAT_SCHEMA
     p = str(tmp_path / "big.avro")
     ac.write_container(p, schema, [dict(MSG, uid=f"u{i}") for i in range(20)])
     with pytest.raises(ValueError, match="binaryFile"):
@@ -354,8 +453,8 @@ def test_avro_file_source_feeds_mapping(spark, tmp_path):
     from dbsink_spark.sources import avro_file_source, replay_source
     from dbsink_spark.wire import avro_container as ac
 
-    with open("/root/reference/tests/replayer.json") as f:
-        messages = json.load(f)
+    messages = float_messages()
+    datafile = write_datafile(tmp_path / "replayer.json", messages)
     p = str(tmp_path / "replayer.avro")
     ac.write_container(p, REPLAYER_SCHEMA, messages, codec="deflate")
 
@@ -364,7 +463,7 @@ def test_avro_file_source_feeds_mapping(spark, tmp_path):
     via_json = mapping.transform(
         replay_source(
             spark,
-            "/root/reference/tests/replayer.json",
+            datafile,
             packing="avro",
             avro_schema=REPLAYER_SCHEMA,
         )
@@ -382,10 +481,8 @@ def test_cli_replays_avro_container_file(tmp_path):
     from dbsink_spark.cli import setup
     from dbsink_spark.wire import avro_container as ac
 
-    with open("/root/reference/tests/replayer.json") as f:
-        messages = json.load(f)
     p = str(tmp_path / "replayer.avro")
-    ac.write_container(p, REPLAYER_SCHEMA, messages)
+    ac.write_container(p, REPLAYER_SCHEMA, float_messages())
     db = str(tmp_path / "sink.duckdb")
     result = CliRunner().invoke(
         setup,
