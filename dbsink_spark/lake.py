@@ -18,10 +18,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 from .functions.sketch import with_zvalue
-from .sink import last_writer_wins
 from .sources import arrow_frame
+
+
+def last_writer_wins(df: DataFrame, keys, order_col: str | None = None) -> DataFrame:
+    """Reduce ``df`` to one row per ``keys``: the row with the highest
+    ``order_col`` (e.g. a Kafka or CDC offset), or, when ``order_col``
+    is None, the last row to arrive within the batch."""
+    if order_col is None:
+        df = df.withColumn("__ord", F.monotonically_increasing_id())
+        order_col = "__ord"
+    w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn", "__ord" if "__ord" in df.columns else "__rn")
+    )
 
 
 def with_partition_cols(df: DataFrame, ts_col: str = "time") -> DataFrame:
@@ -180,9 +195,9 @@ def merge_lake(
     Mechanics: the update batch is first reduced to ONE row per key —
     last-writer-wins by ``order_col`` (e.g. a CDC offset/ts column; when
     absent, by arrival order within the batch) through
-    ``sink.last_writer_wins``, the reduction SinkWriter.prepare_batch
-    applies, so a CDC batch carrying several versions of a key upserts
-    exactly the newest. The affected-partition
+    ``last_writer_wins``, the same rule the database sink's merge
+    statement applies by ``__seq``, so a CDC batch carrying several
+    versions of a key upserts exactly the newest. The affected-partition
     list comes from the updates (tiny distinct agg, broadcast into a
     partition-pruned read); the rewrite is (existing ∖ updated-keys) ∪
     updates for just those partitions.

@@ -4,13 +4,24 @@ dbsink/listen.py:137-171).
 
 Key semantics preserved:
 * last-writer-wins upsert on the mapping's unique key (K6,
-  listen.py:160-166) — a micro-batch containing duplicate keys is
-  reduced to the LAST occurrence (by Kafka offset when present) before
-  ``INSERT … ON CONFLICT DO UPDATE``, because batch upserts would
-  otherwise be order-ambiguous;
+  listen.py:160-166) — a batch holding a key more than once lands its
+  LAST occurrence (highest Kafka ``offset`` when present, else arrival
+  order). The database does this reduction, inside the statement that
+  upserts the batch (``upsert_sql``);
 * None-omission → column defaults (F6, reference tables.py:304 etc.)
   — applied as ``coalesce`` with the declared default at write time;
 * ``--no-do-inserts`` dry-run (K7) — transform runs, write is skipped.
+
+Spark's only per-batch work is the transform, the defaults (a
+projection) and a ``__seq`` column; it runs no window and no shuffle
+for the sink. The batch is then staged under one name,
+``__dbsink_batch``, and one ``INSERT … SELECT`` reduces it to the
+highest ``__seq`` per key and upserts it:
+* DuckDB: the staged batch is the Arrow table registered on the
+  connection.
+* Postgres: a temp table shaped like the target, dropped at commit,
+  filled by ``psycopg2.extras.execute_values`` (one round trip per
+  ~1000-row page) or, without psycopg2, ``cursor.executemany``.
 
 Execution modes (``mode='auto'`` picks per dialect):
 * ``driver`` — the batch surfaces to the driver (``toArrow`` on
@@ -19,17 +30,11 @@ Execution modes (``mode='auto'`` picks per dialect):
   writer process, so concurrent executor writers would conflict on its
   lock. A remote-DB micro-batch that outgrows driver memory should
   never take this path.
-* ``partition`` — Postgres only. ``df.foreachPartition`` opens a
-  connection per executor partition and writes concurrently (the
-  Postgres default; requires a picklable connection factory, e.g.
-  psycopg2). Rows never surface to the driver.
-Neither mode pays a round trip per row:
-* DuckDB: the batch is registered as an Arrow table and lands in ONE
-  ``INSERT … SELECT … ON CONFLICT`` statement. That relies on keys
-  being unique after ``prepare_batch``: DuckDB refuses to ``DO
-  UPDATE`` the same row twice in one statement.
-* Postgres: one round trip per ~1000-row page
-  (``psycopg2.extras.execute_values`` multi-VALUES).
+* ``partition`` — Postgres only. ``df.repartition(*keys)`` co-locates
+  each key in one partition (a hash exchange, no sort), then
+  ``df.foreachPartition`` opens a connection per partition that stages
+  and merges only its own keys (the Postgres default; requires a
+  picklable connection factory). Rows never surface to the driver.
 
 At 100 TB the knobs that matter: micro-batch admission
 (``maxOffsetsPerTrigger``), partition count before the write
@@ -46,7 +51,6 @@ from dataclasses import dataclass
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from . import L
 from .ddl import create_statements, quoted
@@ -76,8 +80,8 @@ def _hstore_json(col: pa.ChunkedArray) -> pa.Array:
     )
 
 
-# name the batch is registered under for the length of one statement
-_BATCH_VIEW = "__dbsink_batch"
+# name the batch is staged under for the merge statement, on both dialects
+_STAGE = "__dbsink_batch"
 
 
 @dataclass
@@ -203,8 +207,10 @@ class SinkWriter:
 
     # -- write phase ---------------------------------------------------
     def prepare_batch(self, df: DataFrame) -> DataFrame:
-        """Apply declared defaults (None-omission semantics) and reduce
-        duplicate upsert keys to the last occurrence."""
+        """Apply declared defaults (None-omission semantics) and add
+        ``__seq``, the last-writer-wins order: the Kafka ``offset`` when
+        present, else arrival order. Keys may still repeat; the merge
+        statement keeps the highest ``__seq`` per key."""
         keyset = set(self.mapping.upsert_keys or [])
         for c in self.mapping.columns:
             if c.bind == "serial" or c.default is None or c.name not in df.columns:
@@ -226,157 +232,145 @@ class SinkWriter:
                     )
             else:
                 df = df.withColumn(c.name, F.coalesce(F.col(c.name), F.lit(c.default)))
+        seq = F.col("offset") if "offset" in df.columns else F.monotonically_increasing_id()
+        return df.withColumn("__seq", seq)
 
-        keys = self.mapping.upsert_keys
-        if keys:
-            df = last_writer_wins(df, keys, "offset" if "offset" in df.columns else None)
-        return df
+    def _columns(self) -> list[ColumnSpec]:
+        return [c for c in self.mapping.columns if c.bind != "serial"]
+
+    def _table(self) -> str:
+        table = quoted(self.mapping.table)
+        return f"{quoted(self.schema)}.{table}" if self.schema else table
 
     def _bind_exprs(self, cols: list[ColumnSpec]) -> list[str]:
-        ph = "%s" if self.dialect == "postgres" else "?"
+        """Postgres bind per column, applied as rows enter the stage."""
         binds = []
         for c in cols:
-            if self.dialect == "postgres":
-                if c.bind in ("geometry", "geometry_union") and self.postgis is False:
-                    # degraded mode (see the postgis field): WKT text
-                    binds.append(ph)
-                elif c.bind == "jsonb":
-                    binds.append(f"{ph}::jsonb")
-                elif c.bind == "hstore":
-                    binds.append(f"{ph}::hstore")
-                elif c.bind == "geometry":
-                    binds.append(f"ST_GeomFromText({ph}, 4326)")
-                elif c.bind == "geometry_union":
-                    # DB-side noding/dissolve: PostGIS ST_UnaryUnion runs
-                    # the same GEOS unary_union the reference calls via
-                    # shapely (tables.py:266-269), so crossing/overlapping
-                    # members of a collection built by the no-shapely
-                    # fallback are noded at insert — exact parity, and a
-                    # no-op for already-dissolved input
-                    binds.append(f"ST_UnaryUnion(ST_GeomFromText({ph}, 4326))")
-                else:
-                    binds.append(ph)
+            if c.bind in ("geometry", "geometry_union") and self.postgis is False:
+                # degraded mode (see the postgis field): WKT text
+                binds.append("%s")
+            elif c.bind == "jsonb":
+                binds.append("%s::jsonb")
+            elif c.bind == "hstore":
+                binds.append("%s::hstore")
+            elif c.bind == "geometry":
+                binds.append("ST_GeomFromText(%s, 4326)")
+            elif c.bind == "geometry_union":
+                # DB-side noding/dissolve: PostGIS ST_UnaryUnion runs
+                # the same GEOS unary_union the reference calls via
+                # shapely (tables.py:266-269), so crossing/overlapping
+                # members of a collection built by the no-shapely
+                # fallback are noded at insert — exact parity, and a
+                # no-op for already-dissolved input
+                binds.append("ST_UnaryUnion(ST_GeomFromText(%s, 4326))")
             else:
-                binds.append(ph)
+                binds.append("%s")
         return binds
 
-    def row_template(self) -> str:
-        """Per-row VALUES template for ``execute_values`` — carries the
-        same ::jsonb/::hstore/ST_GeomFromText casts as the one-row
-        form, so the multi-row fast path binds identically."""
-        cols = [c for c in self.mapping.columns if c.bind != "serial"]
-        return "(" + ", ".join(self._bind_exprs(cols)) + ")"
-
-    def upsert_sql(self, n_cols_placeholder: str = "auto") -> str:
-        cols = [c for c in self.mapping.columns if c.bind != "serial"]
-        table = quoted(self.mapping.table)
-        if self.schema:
-            table = f"{quoted(self.schema)}.{table}"
+    def stage_sql(self) -> tuple[str, str, str]:
+        """Postgres staging: the temp table (the target's columns plus
+        ``__seq``, no rows, dropped at commit), the head of the insert
+        that fills it, and the per-row template with the
+        ::jsonb/::hstore/ST_GeomFromText binds. ``execute_values`` pages
+        rows into ``head + "%s"``; ``executemany`` runs
+        ``head + template`` per row."""
+        cols = self._columns()
         names = ", ".join(quoted(c.name) for c in cols)
-        binds = self._bind_exprs(cols)
-        sql = f"INSERT INTO {table} ({names}) VALUES ({', '.join(binds)})"
+        create = (
+            f"CREATE TEMP TABLE {_STAGE} ON COMMIT DROP AS SELECT {names}, "
+            f"0::bigint AS __seq FROM {self._table()} WITH NO DATA"
+        )
+        head = f"INSERT INTO {_STAGE} ({names}, __seq) VALUES "
+        return create, head, "(" + ", ".join(self._bind_exprs(cols) + ["%s"]) + ")"
+
+    def upsert_sql(self) -> str:
+        """The one statement that writes the staged batch, on both
+        dialects: keep the row with the highest ``__seq`` per upsert key
+        (NULL key values group together, as in a Spark window), then
+        insert it or update the stored row. Keyless mappings append the
+        whole batch."""
+        cols = self._columns()
+        names = ", ".join(quoted(c.name) for c in cols)
+        sql = f"INSERT INTO {self._table()} AS __t ({names}) SELECT {names} FROM "
         keys = self.mapping.upsert_keys
-        if keys:
-            key_cols = ", ".join(quoted(k) for k in keys)
-            if self.update_mode == "preserve":
-                # alias the target: a schema-qualified name can't be
-                # referenced inside DO UPDATE SET on Postgres
-                sql = sql.replace(
-                    f"INSERT INTO {table} (", f"INSERT INTO {table} AS __t (", 1
-                )
-                sets = ", ".join(
-                    f"{quoted(c.name)} = COALESCE(excluded.{quoted(c.name)}, "
-                    f"__t.{quoted(c.name)})"
-                    for c in cols
-                    if c.name not in keys
-                )
-            else:
-                sets = ", ".join(
-                    f"{quoted(c.name)} = excluded.{quoted(c.name)}"
-                    for c in cols
-                    if c.name not in keys
-                )
-            sql += f" ON CONFLICT ({key_cols}) DO UPDATE SET {sets}"
-        return sql
+        if not keys:
+            return sql + _STAGE
+        key_cols = ", ".join(quoted(k) for k in keys)
+        non_key = [quoted(c.name) for c in cols if c.name not in keys]
+        if self.update_mode == "preserve":
+            sets = ", ".join(f"{n} = COALESCE(excluded.{n}, __t.{n})" for n in non_key)
+        else:
+            sets = ", ".join(f"{n} = excluded.{n}" for n in non_key)
+        return (
+            f"{sql}(SELECT *, row_number() OVER (PARTITION BY {key_cols} "
+            f"ORDER BY __seq DESC) AS __rn FROM {_STAGE}) __b WHERE __rn = 1 "
+            f"ON CONFLICT ({key_cols}) DO UPDATE SET {sets}"
+        )
 
     def _row_params(self, row, cols: list[ColumnSpec]):
         return [
             _hstore_text(row[c.name]) if c.bind == "hstore" else row[c.name]
             for c in cols
-        ]
+        ] + [row["__seq"]]
 
-    def _execute_rows(self, conn, params: list) -> None:
-        """One round trip per BATCH, not per row. Postgres uses
-        psycopg2 ``execute_values`` to fold all rows into multi-VALUES
-        statements (page_size rows per statement — the reference's
-        per-row round trips at listen.py:159-171 are the anti-baseline,
-        SURVEY §4.2); the per-row casts ride along via ``template``.
-        DuckDB takes ``_upsert_arrow`` instead; unknown DBAPI dialects
-        fall back to cursor.executemany."""
-        sql = self.upsert_sql()
+    def _merge_rows(self, conn, params: list) -> int:
+        """Postgres: stage the rows, then merge. psycopg2
+        ``execute_values`` folds them into multi-VALUES statements, one
+        round trip per 1000-row page (the reference's per-row round
+        trips at listen.py:159-171 are the anti-baseline, SURVEY §4.2);
+        a DBAPI without psycopg2 takes ``cursor.executemany``."""
+        create, head, template = self.stage_sql()
         cur = conn.cursor()
         try:
-            if self.dialect == "postgres":
-                try:
-                    from psycopg2.extras import execute_values
-                except Exception:  # non-psycopg2 DBAPI stand-in
-                    execute_values = None
-                if execute_values is not None:
-                    template = self.row_template()
-                    vsql = sql.replace(f"VALUES {template}", "VALUES %s", 1)
-                    execute_values(
-                        cur, vsql, params, template=template, page_size=1000
-                    )
-                    return
-            cur.executemany(sql, params)
+            cur.execute(create)
+            try:
+                from psycopg2.extras import execute_values
+            except ImportError:  # non-psycopg2 DBAPI stand-in
+                cur.executemany(head + template, params)
+            else:
+                execute_values(cur, head + "%s", params, template=template, page_size=1000)
+            cur.execute(self.upsert_sql())
+            return cur.rowcount
         finally:
             try:
                 cur.close()
             except Exception:
                 pass
 
-    def _upsert_arrow(self, conn, batch: pa.Table) -> None:
-        """DuckDB bulk upsert: ``upsert_sql()`` with ``SELECT … FROM``
-        the registered batch in place of ``VALUES``, run once. Keys are
-        unique after ``prepare_batch``, which this one statement needs:
-        DuckDB refuses to ``DO UPDATE`` the same row twice in one
-        statement."""
-        cols = [c for c in self.mapping.columns if c.bind != "serial"]
-        for c in cols:
+    def _merge_arrow(self, conn, batch: pa.Table) -> int:
+        """DuckDB: the Arrow batch, hstore maps as JSON text, is the
+        staged batch for the length of the merge statement."""
+        for c in self._columns():
             if c.bind == "hstore":
                 i = batch.schema.get_field_index(c.name)
                 batch = batch.set_column(i, c.name, _hstore_json(batch.column(i)))
-        names = ", ".join(quoted(c.name) for c in cols)
-        sql = self.upsert_sql().replace(
-            f"VALUES {self.row_template()}", f"SELECT {names} FROM {_BATCH_VIEW}", 1
-        )
-        conn.register(_BATCH_VIEW, batch)
+        conn.register(_STAGE, batch)
         try:
-            conn.execute(sql)
+            return conn.execute(self.upsert_sql()).fetchone()[0]
         finally:
-            conn.unregister(_BATCH_VIEW)
+            conn.unregister(_STAGE)
 
-    def _write(self, batch) -> None:
-        """One connection, one bulk write, one commit. ``batch`` is an
-        Arrow table on DuckDB and a list of row params on Postgres. A
-        failed commit raises: foreachBatch must fail, so Spark does not
-        checkpoint the offsets of rows that never landed."""
+    def _write(self, batch) -> int:
+        """One connection, one staged batch, one merge, one commit.
+        ``batch`` is an Arrow table on DuckDB and a list of row params
+        on Postgres; returns the merge's row count. A failed commit
+        raises: foreachBatch must fail, so Spark does not checkpoint the
+        offsets of rows that never landed."""
         conn = self.connect()
         try:
-            if self.dialect == "duckdb":
-                self._upsert_arrow(conn, batch)
-            else:
-                self._execute_rows(conn, batch)
+            merge = self._merge_arrow if self.dialect == "duckdb" else self._merge_rows
+            n = merge(conn, batch)
             conn.commit()
         finally:
             conn.close()
+        return n
 
     def write_batch(self, df: DataFrame, batch_id: int | None = None) -> int:
-        """foreachBatch body: dedup, then batched upsert. Returns rows
-        written (0 in dry-run mode)."""
-        df = self.prepare_batch(df)
-        out_cols = [c for c in self.mapping.columns if c.bind != "serial"]
-        df = df.select(*[c.name for c in out_cols])
+        """foreachBatch body: defaults and ``__seq`` in Spark, then one
+        merge per connection. Returns the rows the merge statement
+        wrote (0 in dry-run mode, -1 in partition mode)."""
+        out_cols = self._columns()
+        df = self.prepare_batch(df).select(*[c.name for c in out_cols], "__seq")
         if not self.do_inserts:
             n = df.count()
             L.info(f"dry-run: {n} rows transformed, inserts skipped")
@@ -387,15 +381,16 @@ class SinkWriter:
             batch = df.toArrow()
         else:
             batch = [self._row_params(r, out_cols) for r in df.collect()]
-        if len(batch):
-            self._write(batch)
-        return len(batch)
+        return self._write(batch) if len(batch) else 0
 
     def _write_partitions(self, df: DataFrame, out_cols: list[ColumnSpec]) -> int:
-        """Per-partition concurrent writes (Postgres). Nothing surfaces
-        to the driver; each executor partition opens one connection and
-        writes its slice with the same bulk write as driver mode."""
+        """Per-partition concurrent writes (Postgres). Hash-partitioning
+        on the upsert keys puts every copy of a key in one partition, so
+        each partition's merge reduces its own keys and no two
+        partitions touch the same row. Nothing surfaces to the driver."""
         writer = self
+        if self.mapping.upsert_keys:
+            df = df.repartition(*self.mapping.upsert_keys)
 
         def write_part(rows):
             batch = [writer._row_params(r, out_cols) for r in rows]
@@ -429,21 +424,6 @@ class SinkWriter:
             pass
 
 
-def last_writer_wins(df: DataFrame, keys, order_col: str | None = None) -> DataFrame:
-    """Reduce ``df`` to one row per ``keys``: the row with the highest
-    ``order_col`` (e.g. a Kafka or CDC offset), or, when ``order_col``
-    is None, the last row to arrive within the batch."""
-    if order_col is None:
-        df = df.withColumn("__ord", F.monotonically_increasing_id())
-        order_col = "__ord"
-    w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__ord" if "__ord" in df.columns else "__rn")
-    )
-
-
 def duckdb_connect_factory(path: str) -> Callable[[], object]:
     def connect():
         import duckdb
@@ -457,8 +437,10 @@ def postgres_connect_factory(dsn: str) -> Callable[[], object]:
     """psycopg2 when available; otherwise the pure-python wire client
     (``wire.pg_lite``, simple-query protocol + client-side literals) —
     environments with a Postgres server but no driver wheel still get
-    the live sink path. Both return DBAPI-shaped connections the
-    writer's non-psycopg2 fallback (`cursor.executemany`) handles."""
+    the live sink path. Both stage a batch and run the merge statement
+    on one connection: psycopg2 through ``execute_values``, the wire
+    client through ``cursor.executemany``, which it sends as one Query
+    message."""
 
     def connect():
         try:

@@ -16,7 +16,8 @@ which owns the maintainers' DDL and merge SQL;
 ``tests/test_dialect_matrix.py::test_matrix_is_complete`` pins it so a
 new maintainer cannot ship without joining the matrix):
 
-* ``SinkWriter``          — DDL + upsert + idempotent replay
+* ``SinkWriter``          — DDL + upsert of a batch with a re-sent key
+  (the later copy lands) + idempotent replay; Postgres in both modes
 * ``CountMinMaintainer``  — additive merge + point-estimate serve
 * ``BitmapMaintainer``    — idempotent OR merge + exact-distinct serve
 * ``HLLMaintainer``       — idempotent max merge + estimate serve
@@ -86,26 +87,37 @@ def _drop(factory, dialect, table):
         pass
 
 
-def _exercise_sink(spark, factory, dialect, table):
+def _exercise_sink(spark, factory, dialect, table, mode="auto"):
+    from pyspark.sql import functions as F
+
     from dbsink_spark.mappings import resolve
 
     mapping = resolve("GenericFloat", "matrix-topic")
     mapping.table = table
-    writer = SinkWriter(mapping, factory, dialect=dialect)
+    writer = SinkWriter(mapping, factory, dialect=dialect, mode=mode)
     writer.ensure_table(drop=True)
     msgs = [
         {"uid": f"u{i}", "gid": "g", "time": "2020-01-01T00:00:00Z",
          "lat": 10.0 + i, "lon": 20.0 + i, "z": 1.5, "values": {"n": i}}
         for i in range(4)
     ]
+    msgs.append(dict(msgs[0], values={"n": 99}))  # u0 re-sent, later value
     df = spark.createDataFrame([("k", json.dumps(m)) for m in msgs], ["key", "value"])
     out = mapping.transform(df)
-    # postgres auto-mode writes executor-side and returns the -1
+    parts = out.select("uid", F.spark_partition_id().alias("p")).collect()
+    assert len({r.p for r in parts if r.uid == "u0"}) == 2  # copies apart
+    # postgres partition mode writes executor-side and returns the -1
     # "count not tracked" sentinel; the table count is the real assert
     n1 = writer.write_batch(out)
     n2 = writer.write_batch(out)  # replay: upsert converges
-    assert n1 == n2 and n1 in (4, -1)
+    assert n1 == n2 == (-1 if writer.effective_mode == "partition" else 4)
     assert _fetch(factory, dialect, f'SELECT count(*) FROM "{table}"')[0][0] == 4
+    value_n = {
+        "postgres": "\"values\" -> 'n'",
+        "duckdb": "json_extract_string(\"values\", '$.n')",
+    }[dialect]
+    got = _fetch(factory, dialect, f"SELECT {value_n} FROM \"{table}\" WHERE uid = 'u0'")
+    assert got == [("99",)]  # the later copy won
 
 
 def _exercise_countmin(spark, factory, dialect, table):
@@ -224,6 +236,17 @@ def test_surface_runs_live(spark, tmp_path, surface, dialect):
         _EXERCISE[surface](spark, factory, dialect, table)
     finally:
         _drop(factory, dialect, table)
+
+
+def test_sink_driver_mode_runs_live_on_postgres(spark, tmp_path):
+    """The Postgres sink cell above runs in partition mode (auto); this
+    one stages and merges the same batch from the driver."""
+    factory = _factory("postgres", tmp_path)
+    table = f"mx_sink_driver_{uuid.uuid4().hex[:8]}"
+    try:
+        _exercise_sink(spark, factory, "postgres", table, mode="driver")
+    finally:
+        _drop(factory, "postgres", table)
 
 
 # ---------------------------------------------------------------------------

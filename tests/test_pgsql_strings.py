@@ -1,12 +1,14 @@
 """Postgres-dialect SQL validation without a server (r02 VERDICT #7).
 
-The generated postgres DDL/upsert strings were only ever string-built;
-nothing postgres-shaped parsed them (the env has no psycopg2/sqlglot).
-Two layers of defense:
+The generated postgres DDL, stage and merge strings were only ever
+string-built; nothing postgres-shaped parsed them (the env has no
+psycopg2/sqlglot). Two layers of defense:
 
 1. STRUCTURAL invariants over every registry mapping × both dialects —
-   balanced parens/quotes, placeholder count == bind column count, ON
-   CONFLICT keys ⊆ declared unique-index keys, multi-VALUES form.
+   balanced parens/quotes, placeholder count == bind column count + 1
+   (``__seq``) on the staging insert and none in the merge, ON
+   CONFLICT and PARTITION BY keys == declared unique-index keys,
+   multi-VALUES form, one merge text for both dialects.
 2. LIVE EXECUTION of the postgres statements on DuckDB after a
    documented, minimal pg→duck transform (each stripped construct
    listed below — drift inside those constructs is caught by the
@@ -79,31 +81,40 @@ def test_generated_sql_structure(lookup, dialect):
     mapping = resolve(lookup, "some.topic")
     w = SinkWriter(mapping, lambda: None, dialect=dialect)
     stmts = create_statements(mapping, dialect, schema="s", drop=True)
-    for s in stmts + [w.upsert_sql()]:
-        assert _balanced(s), s
+    create, head, tmpl = w.stage_sql()
     sql = w.upsert_sql()
+    for s in stmts + [create, head + tmpl, sql]:
+        assert _balanced(s), s
     n_cols = len([c for c in mapping.columns if c.bind != "serial"])
-    ph = "%s" if dialect == "postgres" else "?"
-    assert sql.count(ph) == n_cols, sql
+    # the merge binds nothing: it reads the staged batch
+    assert "%s" not in sql and "?" not in sql and "FROM __dbsink_batch" in sql
+    # one builder, one merge text for both dialects
+    assert sql == SinkWriter(mapping, lambda: None, dialect="postgres").upsert_sql()
     if mapping.upsert_keys:
-        m = re.search(r"ON CONFLICT \(([^)]*)\)", sql)
-        conflict_cols = {c.strip().strip('"') for c in m.group(1).split(",")}
-        assert conflict_cols == set(mapping.upsert_keys)
+        conflict = re.search(r"ON CONFLICT \(([^)]*)\)", sql).group(1)
+        window = re.search(r"PARTITION BY (.*?) ORDER BY", sql).group(1)
+        for key_list in (conflict, window):
+            assert {c.strip().strip('"') for c in key_list.split(",")} == set(mapping.upsert_keys)
+        assert "ORDER BY __seq DESC) AS __rn" in sql and sql.count("WHERE __rn = 1") == 1
         # excluded.-references only non-key columns
         for ref in re.findall(r'excluded\."([^"]+)"', sql):
             assert ref not in mapping.upsert_keys
-    # multi-VALUES template form is consistent with the one-row form
-    tmpl = w.row_template()
-    assert f"VALUES {tmpl}" in sql
-    assert tmpl.count(ph) == n_cols
+    else:
+        assert "OVER" not in sql and "ON CONFLICT" not in sql
+    # multi-VALUES staging: the head takes execute_values' one %s, the
+    # template carries one placeholder per column plus __seq
+    assert head.endswith("VALUES ") and "%s" not in head
+    assert tmpl.startswith("(") and tmpl.count("%s") == n_cols + 1
+    assert create.count("%s") == 0 and create.endswith("WITH NO DATA")
 
 
 @pytest.mark.parametrize("lookup", ALL_LOOKUPS)
 @pytest.mark.parametrize("update_mode", ["overwrite", "preserve"])
 def test_postgres_sql_executes_after_transform(lookup, update_mode):
-    """The postgres statement stream (schema→DDL→extend→index→upsert→
-    truncate→drop) EXECUTES end-to-end on DuckDB after the documented
-    pg-only strips — a syntax-drift tripwire for everything else."""
+    """The postgres statement stream (schema→DDL→extend→index→stage→
+    merge→truncate→drop) EXECUTES end-to-end on DuckDB after the
+    documented pg-only strips — a syntax-drift tripwire for everything
+    else."""
     mapping = resolve(lookup, "pg.check.topic")
     w = SinkWriter(mapping, lambda: None, dialect="postgres", schema="s")
     w.update_mode = update_mode
@@ -131,13 +142,17 @@ def test_postgres_sql_executes_after_transform(lookup, update_mode):
             row.append(1)
         else:
             row.append("x")
-    up = _pg_to_duck(w.upsert_sql())
-    con.execute(up, row)
-    con.execute(up, row)  # ON CONFLICT path must parse + fire
+    create, head, tmpl = w.stage_sql()
+    con.execute(_pg_to_duck(create))
+    # the same key staged twice: the merge's window keeps one copy
+    con.executemany(_pg_to_duck(head + tmpl), [row + [1], row + [2]])
+    merge = _pg_to_duck(w.upsert_sql())
+    keyed = bool(mapping.upsert_keys)
+    assert con.execute(merge).fetchone()[0] == (1 if keyed else 2)
+    con.execute(merge)  # ON CONFLICT path must parse + fire
     tbl = f'"s"."{mapping.table}"'
-    # keyless mappings are append-only: replay legitimately adds a row
-    expected = 1 if mapping.upsert_keys else 2
-    assert con.execute(f"SELECT count(*) FROM {tbl}").fetchone()[0] == expected
+    # keyless mappings are append-only: replay legitimately adds rows
+    assert con.execute(f"SELECT count(*) FROM {tbl}").fetchone()[0] == (1 if keyed else 4)
     for stmt in create_statements(mapping, "postgres", schema="s", truncate=True):
         d = _pg_to_duck(stmt)
         if d is not None:
@@ -162,12 +177,22 @@ def test_postgres_golden_snapshot():
     assert "NULLS NOT DISTINCT" in joined
     assert "geometry(POINT,4326)" in joined
     w = SinkWriter(mapping, lambda: None, dialect="postgres")
-    sql = w.upsert_sql()
-    assert "ST_GeomFromText(%s, 4326)" in sql
-    assert "%s::hstore" in sql and "%s::jsonb" in sql
-    assert sql.endswith(
-        '"payload" = excluded."payload"'
-    ) or "DO UPDATE SET" in sql
+    names = '"uid", "gid", "time", "reftime", "lat", "lon", "z", "geom", "values", "payload"'
+    keys = '"uid", "gid", "time", "lat", "lon", "z"'
+    assert w.stage_sql() == (
+        f"CREATE TEMP TABLE __dbsink_batch ON COMMIT DROP AS SELECT {names}, "
+        '0::bigint AS __seq FROM "axds-netcdf-replayer-data" WITH NO DATA',
+        f"INSERT INTO __dbsink_batch ({names}, __seq) VALUES ",
+        "(%s, %s, %s, %s, %s, %s, %s, ST_GeomFromText(%s, 4326), %s::hstore, %s::jsonb, %s)",
+    )
+    assert w.upsert_sql() == (
+        f'INSERT INTO "axds-netcdf-replayer-data" AS __t ({names}) SELECT {names} '
+        f"FROM (SELECT *, row_number() OVER (PARTITION BY {keys} ORDER BY __seq DESC) "
+        "AS __rn FROM __dbsink_batch) __b WHERE __rn = 1 "
+        f"ON CONFLICT ({keys}) DO UPDATE SET "
+        '"reftime" = excluded."reftime", "geom" = excluded."geom", '
+        '"values" = excluded."values", "payload" = excluded."payload"'
+    )
 
 
 def test_geometry_union_bind_nodes_crossing_inputs():
@@ -194,8 +219,7 @@ def test_geometry_union_bind_nodes_crossing_inputs():
 
     mapping = resolve("GenericGeography", "geo.topic")
     w = SinkWriter(mapping, lambda: None, dialect="postgres")
-    sql = w.upsert_sql()
-    assert "ST_UnaryUnion(ST_GeomFromText(%s, 4326))" in sql
-    # duckdb dialect binds plain text — no PostGIS call
+    assert "ST_UnaryUnion(ST_GeomFromText(%s, 4326))" in w.stage_sql()[2]
+    # duckdb dialect stages plain text — no PostGIS call
     wd = SinkWriter(mapping, lambda: None, dialect="duckdb")
     assert "ST_UnaryUnion" not in wd.upsert_sql()

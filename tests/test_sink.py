@@ -1,13 +1,15 @@
 """Sink tests against DuckDB: DDL, upsert idempotency (the reference's
 integration sequence tests/test_dbsink.py:978-1031), in-batch
-last-writer-wins dedup, dry-run mode, hstore text building, and parity
-of the Arrow bulk upsert with a per-row ``executemany`` oracle."""
+last-writer-wins dedup in the merge statement, dry-run mode, hstore
+text building, and parity of the one-statement merge with a per-row
+upsert oracle."""
 
 import json
 from datetime import datetime, timedelta
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from conftest import fixture_path, float_messages, write_datafile
@@ -196,11 +198,18 @@ def test_hstore_text():
 
 
 def test_upsert_sql_postgres_binds():
+    """The Postgres binds ride on the staging insert; the merge reads
+    the stage and carries no placeholder."""
     mapping = resolve("GenericFloat", "t")
     w = SinkWriter(mapping, lambda: None, dialect="postgres")
+    create, head, template = w.stage_sql()
+    assert create.startswith("CREATE TEMP TABLE __dbsink_batch ON COMMIT DROP AS SELECT")
+    assert create.endswith('0::bigint AS __seq FROM "t" WITH NO DATA')
+    assert head.startswith("INSERT INTO __dbsink_batch (") and head.endswith("VALUES ")
+    assert "ST_GeomFromText(%s, 4326)" in template
+    assert "%s::jsonb" in template and "%s::hstore" in template
     sql = w.upsert_sql()
-    assert "ST_GeomFromText(%s, 4326)" in sql
-    assert "%s::jsonb" in sql and "%s::hstore" in sql
+    assert "%s" not in sql and "FROM __dbsink_batch" in sql
     assert "ON CONFLICT" in sql and "excluded." in sql
 
 
@@ -245,10 +254,35 @@ def test_duckdb_partition_mode_rejected():
         SinkWriter(mapping, lambda: None, dialect="duckdb", mode="partition")
 
 
+class _RecordingConn:
+    """DBAPI stand-in that records each cursor call."""
+
+    def __init__(self):
+        self.calls = []
+
+    def cursor(self):
+        conn = self
+
+        class Cursor:
+            rowcount = 7
+
+            def close(self):
+                pass
+
+            def execute(self, sql):
+                conn.calls.append(("execute", sql))
+
+            def executemany(self, sql, params):
+                conn.calls.append(("executemany", sql, params))
+
+        return Cursor()
+
+
 def test_execute_values_fast_path(monkeypatch):
-    """Postgres write folds rows into multi-VALUES statements via
+    """Postgres staging folds rows into multi-VALUES statements via
     psycopg2.extras.execute_values, with the per-row casts carried in
-    the template (not one round trip per row)."""
+    the template (not one round trip per row); the merge follows on
+    the same cursor and its rowcount is the batch's count."""
     import sys
     import types
 
@@ -264,47 +298,38 @@ def test_execute_values_fast_path(monkeypatch):
     monkeypatch.setitem(sys.modules, "psycopg2", pkg)
     monkeypatch.setitem(sys.modules, "psycopg2.extras", extras)
 
-    class FakeCursor:
-        def close(self):
-            pass
-
-        def executemany(self, *a):
-            raise AssertionError("slow path taken despite execute_values available")
-
-    class FakeConn:
-        def cursor(self):
-            return FakeCursor()
-
     mapping = resolve("GenericFloat", "some.topic")
     w = SinkWriter(mapping, lambda: None, dialect="postgres")
-    params = [["a"] * len([c for c in mapping.columns if c.bind != "serial"])]
-    w._execute_rows(FakeConn(), params)
-    assert "VALUES %s" in calls["sql"]
+    create, head, template = w.stage_sql()
+    params = [["a"] * (len([c for c in mapping.columns if c.bind != "serial"]) + 1)]
+    conn = _RecordingConn()
+    assert w._merge_rows(conn, params) == 7
+    assert calls["sql"] == head + "%s" and "VALUES %s" in calls["sql"]
     assert calls["sql"].count("%s") == 1  # row shape lives in template only
-    assert calls["template"].startswith("(") and "::hstore" in calls["template"]
+    assert calls["template"] == template and "::hstore" in template
+    assert template.count("%s") == len(params[0])
     assert calls["params"] is params and calls["page_size"] == 1000
+    assert conn.calls == [("execute", create), ("execute", w.upsert_sql())]
 
 
-def test_executemany_fallback_without_psycopg2():
+def test_executemany_fallback_without_psycopg2(monkeypatch):
     """A postgres-dialect DBAPI stand-in without psycopg2 importable
-    still writes via cursor.executemany."""
-    ran = {}
+    still stages via cursor.executemany, one templated row per param."""
+    import sys
 
-    class FakeCursor:
-        def close(self):
-            pass
-
-        def executemany(self, sql, params):
-            ran.update(sql=sql, params=params)
-
-    class FakeConn:
-        def cursor(self):
-            return FakeCursor()
-
+    monkeypatch.setitem(sys.modules, "psycopg2", None)  # import raises
     mapping = resolve("GenericFloat", "some.topic")
     w = SinkWriter(mapping, lambda: None, dialect="postgres")
-    w._execute_rows(FakeConn(), [[1, 2]])
-    assert "INSERT INTO" in ran["sql"] and "VALUES %s" not in ran["sql"]
+    create, head, template = w.stage_sql()
+    conn = _RecordingConn()
+    params = [[1, 2]]
+    assert w._merge_rows(conn, params) == 7
+    assert conn.calls == [
+        ("execute", create),
+        ("executemany", head + template, params),
+        ("execute", w.upsert_sql()),
+    ]
+    assert "INSERT INTO __dbsink_batch" in head and "VALUES %s" not in head + template
 
 
 # ---------------------------------------------------------------------------
@@ -432,6 +457,50 @@ def _assert_same_table(db, other_db, mapping):
         con.close()
 
 
+def _oracle_upsert(con, mapping, update_mode: str, batch: list) -> None:
+    """Per-row oracle, independent of the writer's SQL: apply the
+    declared defaults, keep the last row per key (NULL key values
+    group together), then one VALUES upsert per row."""
+    cols = [c for c in mapping.columns if c.bind != "serial"]
+    keys = mapping.upsert_keys or []
+    pos = {c.name: i for i, c in enumerate(cols)}
+    rows = []
+    for r in batch:
+        r = list(r)
+        for c in cols:
+            i = pos[c.name]
+            if r[i] is None and c.default is not None and (
+                update_mode == "overwrite" or c.name in keys
+            ):
+                if isinstance(c.default, (dict, list)):
+                    r[i] = {} if c.bind == "hstore" else json.dumps(c.default)
+                else:
+                    r[i] = c.default
+            if c.bind == "hstore" and r[i] is not None:
+                r[i] = json.dumps(r[i], sort_keys=True)
+        rows.append(r)
+    if keys:
+        last = {}
+        for r in rows:
+            last[tuple(r[pos[k]] for k in keys)] = r
+        rows = list(last.values())
+    names = ", ".join(f'"{c.name}"' for c in cols)
+    marks = ", ".join("?" for _ in cols)
+    sql = f'INSERT INTO "{mapping.table}" AS __t ({names}) VALUES ({marks})'
+    if keys:
+        sets = ", ".join(
+            f'"{c.name}" = COALESCE(excluded."{c.name}", __t."{c.name}")'
+            if update_mode == "preserve"
+            else f'"{c.name}" = excluded."{c.name}"'
+            for c in cols
+            if c.name not in keys
+        )
+        key_cols = ", ".join(f'"{k}"' for k in keys)
+        sql += f" ON CONFLICT ({key_cols}) DO UPDATE SET {sets}"
+    for r in rows:
+        con.execute(sql, r)
+
+
 @pytest.mark.parametrize("lookup", sorted(BUILTIN))
 @pytest.mark.parametrize("update_mode", ["overwrite", "preserve"])
 def test_arrow_upsert_matches_executemany(spark, tmp_path, lookup, update_mode):
@@ -447,21 +516,10 @@ def test_arrow_upsert_matches_executemany(spark, tmp_path, lookup, update_mode):
     oracle.ensure_table(drop=True)
     out_cols = [c for c in mapping.columns if c.bind != "serial"]
     for batch in _parity_batches(mapping):
-        df = spark.createDataFrame(batch, mapping.spark_schema)
-        writer.write_batch(df)
-        prepared = writer.prepare_batch(df).select(*[c.name for c in out_cols]).collect()
-        params = [
-            [
-                json.dumps(r[c.name], sort_keys=True)
-                if c.bind == "hstore" and r[c.name] is not None
-                else r[c.name]
-                for c in out_cols
-            ]
-            for r in prepared
-        ]
+        writer.write_batch(spark.createDataFrame(batch, mapping.spark_schema))
         con = duckdb.connect(oracle_db)
         try:
-            con.executemany(writer.upsert_sql(), params)
+            _oracle_upsert(con, mapping, update_mode, batch)
         finally:
             con.close()
     _assert_same_table(db, oracle_db, mapping)
@@ -503,3 +561,58 @@ def test_arrow_upsert_empty_batch_and_view_cleanup(spark, tmp_path):
     assert con.execute(temp_views).fetchone()[0] == 0
     assert con.execute(f'SELECT count(*) FROM "{mapping.table}"').fetchone()[0] == 4
     con.close()
+
+
+def _dup_key_batch(spark, mapping):
+    """``_parity_batches``' first batch (key 1 sent twice) as a frame,
+    with the two copies of key 1 in different Spark partitions."""
+    first, _ = _parity_batches(mapping)
+    df = spark.createDataFrame(first, mapping.spark_schema)
+    uid_parts = df.select(F.spark_partition_id().alias("p"), "uid").collect()
+    assert len({r.p for r in uid_parts if r.uid == "uid-1"}) == 2
+    return df
+
+
+def test_duckdb_write_plan_has_no_window_or_exchange(spark, tmp_path, monkeypatch):
+    """Spark maps, the database reduces: the frame a DuckDB
+    driver-mode write materialises holds no Window and no Exchange,
+    even with a key sent twice."""
+    mapping = resolve("GenericFloat", "plan.topic")
+    writer = SinkWriter(
+        mapping, duckdb_connect_factory(str(tmp_path / "plan.duckdb")), dialect="duckdb"
+    )
+    writer.ensure_table(drop=True)
+    df = _dup_key_batch(spark, mapping)
+    plans, to_arrow = [], type(df).toArrow
+
+    def spy(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return to_arrow(self)
+
+    monkeypatch.setattr(type(df), "toArrow", spy)
+    assert writer.write_batch(df) == 4
+    assert len(plans) == 1
+    assert "Window" not in plans[0] and "Exchange" not in plans[0], plans[0]
+
+
+@pytest.mark.parametrize("update_mode", ["overwrite", "preserve"])
+def test_prepared_batch_writes_like_raw_batch(spark, tmp_path, update_mode):
+    """A traced step writes ``write_batch(prepare_batch(df).cache())``:
+    it must land the same table, and return the same count, as
+    ``write_batch(df)``, with in-batch duplicates across partitions."""
+    mapping = resolve("GenericFloat", "traced.topic")
+    dbs = [str(tmp_path / "raw.duckdb"), str(tmp_path / "prepared.duckdb")]
+    raw, prepared = (
+        SinkWriter(mapping, duckdb_connect_factory(db), dialect="duckdb", update_mode=update_mode)
+        for db in dbs
+    )
+    raw.ensure_table(drop=True)
+    prepared.ensure_table(drop=True)
+    df = _dup_key_batch(spark, mapping)
+    _, second = _parity_batches(mapping)
+    for batch in (df, spark.createDataFrame(second, mapping.spark_schema)):
+        cached = prepared.prepare_batch(batch).cache()
+        cached.count()
+        assert raw.write_batch(batch) == prepared.write_batch(cached)
+        cached.unpersist()
+    _assert_same_table(*dbs, mapping)

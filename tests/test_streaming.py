@@ -7,7 +7,7 @@ import time
 
 import duckdb
 
-from conftest import fixture_path
+from conftest import float_messages
 
 from pyspark.sql import functions as F
 
@@ -23,13 +23,11 @@ from dbsink_spark.streaming import (
 
 
 def test_stream_end_to_end(spark, tmp_path):
-    # stage the fixture as JSONL (key, value) stream input
+    # stage the messages as JSONL (key, value) stream input
     indir = tmp_path / "in"
     indir.mkdir()
-    with open(fixture_path("replayer.json")) as f:
-        messages = json.load(f)
     with open(indir / "batch0.json", "w") as f:
-        for m in messages:
+        for m in float_messages():
             f.write(json.dumps({"key": "k", "value": json.dumps(m)}) + "\n")
 
     mapping = resolve("GenericFloat", "stream-topic")
@@ -175,8 +173,7 @@ def test_lake_sink_partitioned(spark, tmp_path):
 
     indir = tmp_path / "in2"
     indir.mkdir()
-    with open(fixture_path("replayer.json")) as f:
-        messages = json.load(f)
+    messages = float_messages()
     with open(indir / "b0.json", "w") as f:
         for m in messages:
             f.write(json.dumps({"key": "k", "value": json.dumps(m)}) + "\n")
@@ -194,12 +191,13 @@ def test_lake_sink_partitioned(spark, tmp_path):
     )
     q.awaitTermination(120)
 
+    (day,) = {m["time"][:10] for m in messages}  # every message is UTC 2020-01-01
     parts = [p for p in os.listdir(lake) if p.startswith("ingest_date=")]
-    assert parts == ["ingest_date=2019-05-07"]
+    assert parts == [f"ingest_date={day}"]
     back = spark.read.parquet(lake)
     assert back.count() == 4
     # partition pruning: date filter reads only the matching folder
-    pruned = back.filter(back.ingest_date == "2019-05-07")
+    pruned = back.filter(back.ingest_date == day)
     assert pruned.count() == 4
 
 
