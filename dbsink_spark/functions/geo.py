@@ -147,9 +147,9 @@ def union_features_wkt(features: list[dict]) -> str | None:
        (convex or not) are DISSOLVED in-engine (noded boundary-walk
        union, pairwise-merged to fixpoint); remaining same-type
        features assemble into the MULTI* geometry — identical to
-       ``unary_union`` for disjoint inputs (the reference's
-       multi-feature fixtures: 10 disjoint drift trajectories →
-       MULTILINESTRING).
+       ``unary_union`` for disjoint inputs. So disjoint LineStrings
+       assemble into one MULTILINESTRING, one piece per line, while
+       LineStrings that cross or touch come out noded.
     3. residual cases the pure-python path declines (input polygons
        with interior rings, non-simple rings, unions that enclose a
        hole): the assembled MULTI* is dissolved at the database

@@ -3,12 +3,19 @@
 Golden values mirror the reference test suite
 (tests/test_dbsink.py:828-911 flatten/expansion, :64-76 NaN scrub,
 location-quality cases from :136-138,205-208).
+
+The NaN/Infinity scrub reads ``null_infinity.json`` through
+``conftest.fixture_datafile`` (its in-repo stand-in when the reference
+file is absent). The flatten golden and the two reference dissolve
+tests check values and geometries only the reference files hold, so
+they skip without them (``conftest.needs_reference``); the analytic
+``test_union_*`` cases below cover the dissolve everywhere.
 """
 
 import json
 import math
 
-from conftest import fixture_path
+from conftest import fixture_datafile, fixture_path, needs_reference
 
 from dbsink_spark.functions import (
     degmin_to_decimal,
@@ -23,6 +30,7 @@ from dbsink_spark.functions import (
 )
 
 
+@needs_reference("test_expanded_objects.json")
 def test_flatten_golden_fixture():
     with open(fixture_path("test_expanded_objects.json")) as f:
         messages = json.load(f)
@@ -75,8 +83,8 @@ def test_make_valid_string():
     assert make_valid_string('a"b\\c\x01d') == "abcd"
 
 
-def test_nan_infinity_scrub():
-    with open(fixture_path("null_infinity.json")) as f:
+def test_nan_infinity_scrub(tmp_path):
+    with open(fixture_datafile(tmp_path, "null_infinity.json")) as f:
         messages = json.load(f)
     parsed = [payload_parse(m) for m in messages]
     assert len(parsed) == 2
@@ -166,6 +174,11 @@ def test_geometry_dissolve_dedup_and_multiline():
     assert mixed.startswith("GEOMETRYCOLLECTION (")
 
 
+@needs_reference(
+    "driftworker-traj-multi.json",
+    "whether its trajectories cross is unsettled, and the piece-count assertion "
+    "holds only if they do",
+)
 def test_geometry_dissolve_reference_traj_multi():
     """Reference multi-feature fixture: 10 drift trajectories that
     share a launch point and cross dissolve to ONE MULTILINESTRING
@@ -190,6 +203,7 @@ def test_geometry_dissolve_reference_traj_multi():
         assert f"{x} {y}" in wkt
 
 
+@needs_reference("driftworker-envelopes.json")
 def test_geometry_dissolve_reference_envelopes():
     import json
 

@@ -1,6 +1,13 @@
 """Mapping golden tests: reference fixtures through the Spark
 transform (mapInPandas), asserted against the reference's golden
 values (tests/test_dbsink.py:24-397,876-975).
+
+The property tests (row counts, reftime default, NaN scrub, base64
+passthrough, geography shapes) read their input through
+``conftest.fixture_datafile``: the reference file where it is present,
+else the in-repo stand-in for its FIXTURES.md section. The goldens that
+assert values only a reference file holds skip without that file
+(``conftest.needs_reference``).
 """
 
 import json
@@ -8,15 +15,18 @@ from datetime import datetime, timezone
 
 import pytest
 
-from conftest import fixture_path
+from conftest import fixture_datafile, fixture_path, needs_reference
 
 from dbsink_spark.mappings import resolve
 from dbsink_spark.sources import replay_source
 
 
-def run_mapping(spark, lookup, fixture, topic="topic", **kwargs):
+def run_mapping(spark, lookup, fixture, topic="topic", tmp_path=None, **kwargs):
+    """Map the reference fixture ``fixture`` through ``lookup``; with
+    ``tmp_path``, its stand-in when the reference file is absent."""
     mapping = resolve(lookup, topic, **kwargs)
-    df = replay_source(spark, fixture_path(fixture))
+    path = fixture_path(fixture) if tmp_path is None else fixture_datafile(tmp_path, fixture)
+    df = replay_source(spark, path)
     rows = mapping.transform(df).collect()
     return mapping, rows
 
@@ -27,30 +37,39 @@ def by_id(rows):
     return rows
 
 
-def test_ncreplayer(spark):
-    _, rows = run_mapping(spark, "GenericFloat", "replayer.json", "axds-netcdf-replayer-data")
+def test_ncreplayer(spark, tmp_path):
+    _, rows = run_mapping(
+        spark, "GenericFloat", "replayer.json", "axds-netcdf-replayer-data", tmp_path=tmp_path
+    )
     assert len(rows) == 4
     for r in rows:
         assert r["time"] == r["reftime"]  # reftime defaults to time
 
 
-def test_mission_sensors(spark):
-    _, rows = run_mapping(spark, "NwicFloatReports", "mission_sensors.json", "oot.reports.mission_sensors")
+def test_mission_sensors(spark, tmp_path):
+    _, rows = run_mapping(
+        spark, "NwicFloatReports", "mission_sensors.json", "oot.reports.mission_sensors",
+        tmp_path=tmp_path,
+    )
     assert len(rows) == 10
 
 
-def test_environmental(spark):
-    _, rows = run_mapping(spark, "NwicFloatReports", "environmental.json", "oot.reports.environmental")
+def test_environmental(spark, tmp_path):
+    _, rows = run_mapping(
+        spark, "NwicFloatReports", "environmental.json", "oot.reports.environmental",
+        tmp_path=tmp_path,
+    )
     assert len(rows) == 10
 
 
-def test_null_infinity_jsonmap(spark):
-    _, rows = run_mapping(spark, "JsonMap", "null_infinity.json", "whatever")
+def test_null_infinity_jsonmap(spark, tmp_path):
+    _, rows = run_mapping(spark, "JsonMap", "null_infinity.json", "whatever", tmp_path=tmp_path)
     assert len(rows) == 2
     for r in rows:
         assert json.loads(r["payload"])["bus_voltage"] is None
 
 
+@needs_reference("health_and_status.json")
 def test_health_and_status_goldens(spark):
     _, rows = run_mapping(spark, "NwicFloatReports", "health_and_status.json", "foo")
     assert len(rows) == 516
@@ -83,6 +102,7 @@ def test_health_and_status_goldens(spark):
     assert m2["values"]["mfr"] == "usna"
 
 
+@needs_reference("numurus.status.json")
 def test_numurus_status(spark):
     _, rows = run_mapping(spark, "NumurusStatus", "numurus.status.json")
     assert len(rows) == 87
@@ -91,6 +111,7 @@ def test_numurus_status(spark):
     assert bad and all(r["values"]["location_quality"] == "4" for r in bad)
 
 
+@needs_reference("numurus.data.json")
 def test_numurus_data_goldens(spark):
     _, rows = run_mapping(spark, "NumurusData", "numurus.data.json")
     assert len(rows) == 8
@@ -100,6 +121,7 @@ def test_numurus_data_goldens(spark):
     assert m["values"]["data_segment_data"] == "[33, 1, 1, 1, 0, 0, 0, 0, 0]"
 
 
+@needs_reference("numurus.data.json")
 def test_numurus_data_filter_dates(spark):
     _, rows = run_mapping(
         spark,
@@ -113,6 +135,7 @@ def test_numurus_data_filter_dates(spark):
     assert len(rows) == 2
 
 
+@needs_reference("arete_data.json")
 def test_arete_data_goldens(spark):
     _, rows = run_mapping(spark, "AreteData", "arete_data.json")
     assert len(rows) == 137
@@ -127,6 +150,7 @@ def test_arete_data_goldens(spark):
     assert good["values"]["mfr"] == "arete"
 
 
+@needs_reference("arete_data.json")
 def test_arete_data_filter_dates(spark):
     _, rows = run_mapping(
         spark,
@@ -137,6 +161,7 @@ def test_arete_data_filter_dates(spark):
     assert len(rows) == 14
 
 
+@needs_reference("mission_sensors.json")
 def test_just_json_payload_golden(spark):
     _, rows = run_mapping(spark, "JsonMap", "mission_sensors.json")
     assert len(rows) == 10
@@ -165,17 +190,18 @@ def test_just_json_payload_golden(spark):
     assert golden in payloads
 
 
-def test_geography_fixtures(spark):
+def test_geography_fixtures(spark, tmp_path):
     for fixture, expected in (
         ("driftworker-traj-ind.json", 10),
         ("driftworker-traj-multi.json", 1),
         ("driftworker-envelopes.json", 4),
         ("scuttle-watch-regions.json", 6),
     ):
-        _, rows = run_mapping(spark, "GenericGeography", fixture)
+        _, rows = run_mapping(spark, "GenericGeography", fixture, tmp_path=tmp_path)
         assert len(rows) == expected, fixture
 
 
+@needs_reference("scuttle-watch-regions.json")
 def test_geography_scuttle_goldens(spark):
     _, rows = run_mapping(spark, "GenericGeography", "scuttle-watch-regions.json")
     uids = {r["uid"] for r in rows}
@@ -189,6 +215,7 @@ def test_geography_scuttle_goldens(spark):
     assert med["values"] == {}
 
 
+@needs_reference("sofar.json")
 def test_sofar_goldens(spark):
     _, rows = run_mapping(spark, "NwicFloatReportsSofar", "sofar.json", "sofar.data")
     assert len(rows) == 146
@@ -221,6 +248,7 @@ def test_sofar_goldens(spark):
     }
 
 
+@needs_reference("h_a_s_with_gps_points.json")
 def test_string_json_expansion_goldens(spark):
     _, rows = run_mapping(spark, "NwicFloatReports", "h_a_s_with_gps_points.json", "foo")
     assert len(rows) == 50
@@ -242,6 +270,7 @@ def test_string_json_expansion_goldens(spark):
     assert r16["values"]["values_misc_points_8_2"] == str(-90.6609)
 
 
+@needs_reference("statistics.json")
 def test_statistics_goldens(spark):
     _, rows = run_mapping(spark, "GenericFieldStatistic", "statistics.json")
     assert len(rows) == 4
@@ -264,11 +293,24 @@ def test_statistics_goldens(spark):
     assert instant["starting"] == instant["ending"] == datetime(2020, 1, 1)
 
 
-def test_base64_images_passthrough(spark):
-    _, rows = run_mapping(spark, "JsonMap", "base64_images.json")
+def test_base64_images_passthrough(spark, tmp_path):
+    _, rows = run_mapping(spark, "JsonMap", "base64_images.json", tmp_path=tmp_path)
     assert len(rows) >= 1
     for r in rows:
         assert json.loads(r["payload"])  # decodes cleanly
+
+
+def test_fixture_datafile_prefers_reference(tmp_path, monkeypatch):
+    import conftest
+
+    ref = tmp_path / "reference"
+    ref.mkdir()
+    (ref / "replayer.json").write_text("[]")
+    monkeypatch.setattr(conftest, "FIXTURES", str(ref))
+    assert conftest.fixture_datafile(tmp_path, "replayer.json") == str(ref / "replayer.json")
+    assert conftest.fixture_datafile(tmp_path, "sofar.json") == str(tmp_path / "sofar.json")
+    with pytest.raises(FileNotFoundError):
+        conftest.fixture_datafile(tmp_path, "no-stand-in.json")
 
 
 def test_error_rows_dead_letter(spark):
