@@ -126,7 +126,10 @@ def setup(
                 **({"registry_url": registry, "subject": topic} if packing == "avro" else {}),
             )
         n = writer.write_batch(mapping.transform(df))
-        L.info(f"replayed {datafile}: {n} rows written to {mapping.table}")
+        if n < 0:  # partition mode writes on the executors and counts nothing
+            L.info(f"replayed {datafile} to {mapping.table} (partition mode: rows not counted)")
+        else:
+            L.info(f"replayed {datafile}: {n} rows written to {mapping.table}")
 
     if listen:
         from .sources import kafka_stream

@@ -19,6 +19,17 @@ They run inside Arrow-batched ``mapInPandas`` workers (see
 mappings/base.py), so per-row Python cost is paid once per message at
 executor side — the same unit of work the reference does per message,
 minus its per-message SQL round-trip.
+
+Two invariants keep that per-message cost in C:
+
+* A *bare word* — a string fully matching ``[A-Za-z_][A-Za-z0-9_.:/-]*``
+  that is not one of ``true false null NaN Infinity True False None`` —
+  decodes neither as JSON nor as a Python literal, so ``flatten`` and
+  ``expand_stringified`` pass it through without trying either parse.
+  Every other string still takes both parses.
+* ``payload_parse`` maps NaN/±Infinity to null inside the C JSON
+  encoder/decoder round-trip (``parse_constant``); its result equals
+  ``json.loads(json.dumps(scrub_special_floats(payload)))``.
 """
 
 from __future__ import annotations
@@ -36,14 +47,28 @@ import re
 _CTRL_CHARS = re.compile(r'[\x00-\x1f\\"]')
 _UNICODE_JUNK = re.compile(r"[\\u[0-9A-Fa-f]]")
 
+# Bare words: no JSON text or Python literal matches this pattern except
+# the eight literals below (see the module docstring).
+_BARE_WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_.:/-]*").fullmatch
+_BARE_LITERALS = frozenset(
+    ("true", "false", "null", "NaN", "Infinity", "True", "False", "None")
+)
+
+
+def _is_bare_word(text: str) -> bool:
+    return _BARE_WORD(text) is not None and text not in _BARE_LITERALS
+
 
 def expand_stringified(text: str):
     """Decode a string holding JSON or a Python literal ("{'a': False}").
 
     Mirrors reference expand_json_objects (dbsink/tables.py:65-79):
     JSON first, then ``ast.literal_eval`` normalized through a JSON
-    round-trip; raises ValueError when neither decodes.
+    round-trip; raises ValueError when neither decodes. Bare words raise
+    without trying either parse.
     """
+    if _is_bare_word(text):
+        raise ValueError("not a decodable JSON/Python-literal string")
     try:
         return json.loads(text)
     except Exception:
@@ -65,7 +90,8 @@ def flatten(obj, prefix: str = "", sep: str = "_") -> dict:
     * a list is kept whole under its key AND each element is flattened
       under ``key_i``: ``{"k": [7]}`` → ``{"k": [7], "k_0": 7}``
     * strings that decode as JSON / Python literals are expanded and
-      flattened in place; undecodable strings pass through
+      flattened in place; undecodable strings (bare words without a
+      parse) pass through
     * scalars pass through
     """
     out: dict = {}
@@ -78,7 +104,7 @@ def flatten(obj, prefix: str = "", sep: str = "_") -> dict:
             out[key] = node
             for i, item in enumerate(node):
                 walk(item, f"{key}{sep}{i}" if key else i)
-        elif isinstance(node, str):
+        elif isinstance(node, str) and not _is_bare_word(node):
             try:
                 decoded = expand_stringified(node)
             except ValueError:
@@ -117,11 +143,15 @@ def scrub_special_floats(obj):
     return obj
 
 
+# Decodes the NaN/Infinity/-Infinity tokens ``json.dumps`` emits as null.
+_NULL_CONSTANTS = json.JSONDecoder(parse_constant=lambda _: None)
+
+
 def payload_parse(payload):
     """Validate a message is JSON-representable, scrubbing NaN/Infinity
     to null (reference dbsink/maps.py:13-19; golden
     tests/test_dbsink.py:64-76)."""
     try:
-        return json.loads(json.dumps(scrub_special_floats(payload)))
+        return _NULL_CONSTANTS.decode(json.dumps(payload))
     except Exception as e:
         raise ValueError(f"message is not valid JSON: {e!r}")

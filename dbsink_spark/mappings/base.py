@@ -16,9 +16,9 @@ declarative DataFrame work.
 
 Error policy: ``convert`` raising ``MessageFiltered`` drops the row
 (expected, e.g. date filters — reference dbsink/tables.py:121-125);
-any other exception routes the raw message to the ``_error`` column so
-callers can dead-letter it (reference logs-and-skips,
-dbsink/listen.py:151-153).
+any other exception nulls the row's columns and writes
+``"<ExceptionType>: <text>"`` to its ``_error`` column so callers can
+dead-letter it (reference logs-and-skips, dbsink/listen.py:151-153).
 """
 
 from __future__ import annotations
@@ -161,7 +161,8 @@ class Mapping:
         """(key string, value string·json) DataFrame → typed DataFrame.
 
         errors='drop' filters failed rows; errors='keep' retains them
-        with the raw message in ``_error`` for dead-letter routing.
+        with ``"<ExceptionType>: <text>"`` in ``_error`` for dead-letter
+        routing.
         """
         fields = self.spark_schema_with_error.fields
         out_schema = self.spark_schema_with_error

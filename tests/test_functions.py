@@ -12,8 +12,14 @@ they skip without them (``conftest.needs_reference``); the analytic
 ``test_union_*`` cases below cover the dissolve everywhere.
 """
 
+import ast
 import json
 import math
+import random
+import string
+from datetime import datetime
+
+import numpy as np
 
 from conftest import fixture_datafile, fixture_path, needs_reference
 
@@ -97,6 +103,121 @@ def test_scrub_special_floats():
         {"a": float("nan"), "b": [float("inf"), 1.5], "c": "x"}
     ) == {"a": None, "b": [None, 1.5], "c": "x"}
     assert not math.isnan(1.0)
+
+
+# -- fast paths ≡ the plain two-parse and recursive-scrub code -----------
+# The oracles below try both parses on every string and scrub NaN in a
+# Python walk; flatten, expand_stringified and payload_parse must equal
+# them on every input.
+
+
+def _oracle_expand(text):
+    try:
+        return json.loads(text)
+    except Exception:
+        pass
+    try:
+        return json.loads(json.dumps(ast.literal_eval(text)))
+    except Exception:
+        pass
+    raise ValueError("not a decodable JSON/Python-literal string")
+
+
+def _oracle_flatten(obj, prefix="", sep="_"):
+    out = {}
+
+    def walk(node, key):
+        if isinstance(node, dict):
+            for k, v in node.items():
+                walk(v, f"{key}{sep}{k}" if key else k)
+        elif isinstance(node, list):
+            out[key] = node
+            for i, item in enumerate(node):
+                walk(item, f"{key}{sep}{i}" if key else i)
+        elif isinstance(node, str):
+            try:
+                decoded = _oracle_expand(node)
+            except ValueError:
+                out[key] = node
+            else:
+                walk(decoded, key)
+        else:
+            out[key] = node
+
+    walk(obj, prefix)
+    return out
+
+
+def _oracle_payload_parse(payload):
+    try:
+        return json.loads(json.dumps(scrub_special_floats(payload)))
+    except Exception as e:
+        raise ValueError(f"message is not valid JSON: {e!r}")
+
+
+def _outcome(fn, *args):
+    # repr, so NaN results compare equal to themselves
+    try:
+        return "ok", repr(fn(*args))
+    except Exception as e:
+        return "raise", type(e).__name__
+
+
+BARE_LITERALS = ("true", "false", "null", "NaN", "Infinity", "True", "False", "None")
+NEIGHBOURS = (
+    "True, False", "None # x", "True-1", "True-1j", "r'x'", "b'x'", "-Infinity",
+    "nan", "inf", "1e5", " 1", "1 ", "{'a': 1}", '{"a": [1, 2]}', "[None]", "(1, 2)",
+    "None.x", "Truex", "_True", "null_", "NaN1", "Infinity-1", "lambda:1", "not-1",
+    "a:b", "a/b", "x.y.z", "Ellipsis", "__debug__", "-1", "+1", "0x1F", "1_000",
+    "", " ", "True\n", "None\t", "Ünïcödé", "日本語", "é1", "ßeta", "naïve",
+)
+
+
+def _bare_word_corpus(n=2000):
+    rng = random.Random(20191)
+    head = string.ascii_letters + "_"
+    tail = string.ascii_letters + string.digits + "_.:/-"
+    words = [rng.choice(head) + "".join(rng.choice(tail) for _ in range(rng.randrange(12)))
+             for _ in range(n)]
+    # bare words that start or end with a literal
+    words += [w + t for w in BARE_LITERALS for t in ("", "_", "1", ".0", "-1", ":x", "/y")]
+    words += [h + w for w in BARE_LITERALS for h in ("_", "x", "not-")]
+    return words + list(NEIGHBOURS)
+
+
+def test_expand_and_flatten_match_two_parse_oracle():
+    for text in _bare_word_corpus():
+        assert _outcome(expand_stringified, text) == _outcome(_oracle_expand, text), text
+        msg = {"k": text, "n": {"m": [text, {"s": text}]}}
+        assert _outcome(flatten, msg) == _outcome(_oracle_flatten, msg), text
+
+
+def test_payload_parse_matches_scrub_oracle():
+    nan, inf = float("nan"), float("inf")
+    payloads = [
+        {"a": nan, "b": [inf, -inf, {"c": (nan, 1.5)}], "d": ("x", [nan, [-inf]])},
+        [nan, (inf, {"e": -inf}), "NaN", "Infinity"],
+        (nan, 1),
+        {"v": np.float64("nan"), "w": np.float64(2.5), "x": [np.float64("-inf")]},
+        {2: "int", True: "bool", 1.5: "float", nan: "nan key", inf: "inf key", None: "none"},
+        nan,
+        "plain",
+        {"big": 2**70, "neg": -0.0, "u": "\u00e9\x00"},
+    ]
+    for p in payloads:
+        got = payload_parse(p)
+        assert repr(got) == repr(_oracle_payload_parse(p)), p
+        json.dumps(got, allow_nan=False)  # no NaN/Infinity left anywhere
+
+
+def test_payload_parse_rejects_non_json_values():
+    for bad in (b"raw", {"s": {1, 2}}, {"t": datetime(2020, 1, 1)}, [b"x"]):
+        for fn in (payload_parse, _oracle_payload_parse):
+            try:
+                fn(bad)
+                raise AssertionError(f"{fn.__name__} accepted {bad!r}")
+            except ValueError:
+                pass
 
 
 def test_location_quality_rules():

@@ -15,8 +15,15 @@ from datetime import datetime, timezone
 
 import pytest
 
-from conftest import fixture_datafile, fixture_path, needs_reference
+from conftest import (
+    fixture_datafile,
+    fixture_path,
+    needs_reference,
+    sofar_messages,
+    write_datafile,
+)
 
+from dbsink_spark.functions import make_valid_string, payload_parse
 from dbsink_spark.mappings import resolve
 from dbsink_spark.sources import replay_source
 
@@ -246,6 +253,54 @@ def test_sofar_goldens(spark):
         "longitude": -149.43383,
         "spotterId": "SPOT-0199",
     }
+
+
+WAVE_STATISTICS = (
+    "significantWaveHeight", "peakPeriod", "meanPeriod", "peakDirection",
+    "peakDirectionalSpread", "meanDirection", "meanDirectionalSpread",
+)
+
+
+def test_sofar_properties(spark, tmp_path):
+    # the goldens' rules on the in-repo stand-in, plus one message
+    # without coordinates that must come out as a dead letter
+    msgs = sofar_messages()
+    no_coords = {k: v for k, v in msgs[0].items() if k not in ("latitude", "longitude")}
+    no_coords["timestamp"] = "2019-04-02T00:00:00.000Z"
+    path = write_datafile(tmp_path / "sofar.json", msgs + [no_coords])
+    rows = resolve("NwicFloatReportsSofar", "sofar.data").transform(
+        replay_source(spark, path), errors="keep"
+    ).collect()
+
+    dead = [r for r in rows if r["_error"] is not None]
+    assert [r["_error"] for r in dead] == ["ValueError: missing coordinates"]
+    good = {r["time"]: r for r in rows if r["_error"] is None}
+    assert len(good) == len(msgs)
+    for m in msgs:
+        r = good[datetime.strptime(m["timestamp"], "%Y-%m-%dT%H:%M:%S.%fZ")]
+        assert r["uid"] == m["spotterId"][len("SPOT-"):]
+        assert (r["lat"], r["lon"]) == (m["latitude"], m["longitude"])
+        assert json.loads(r["payload"]) == {k: v for k, v in m.items() if k != "message"}
+        for k in WAVE_STATISTICS:
+            assert r["values"][k] == make_valid_string(m[k]), k
+
+
+def test_jsonmap_payload_is_payload_parse(spark, tmp_path):
+    # every payload equals payload_parse(message); NaN/Infinity land as null
+    with open(fixture_datafile(tmp_path, "mission_sensors.json")) as f:
+        msgs = json.load(f)
+    special = [
+        {**msgs[0], "values": {"bus_voltage": float("nan"), "temps": [float("inf"), 1.5]}},
+        {**msgs[1], "values": {"bus_voltage": float("-inf"), "misc": {"a": float("nan")}}},
+    ]
+    path = write_datafile(tmp_path / "mission_sensors_special.json", msgs + special)
+    rows = resolve("JsonMap", "topic").transform(replay_source(spark, path)).collect()
+    got = sorted(json.dumps(json.loads(r["payload"]), sort_keys=True) for r in rows)
+    want = sorted(json.dumps(payload_parse(m), sort_keys=True) for m in msgs + special)
+    assert got == want
+    payloads = [json.loads(r["payload"]) for r in rows]
+    assert {"bus_voltage": None, "temps": [None, 1.5]} in [p["values"] for p in payloads]
+    assert {"bus_voltage": None, "misc": {"a": None}} in [p["values"] for p in payloads]
 
 
 @needs_reference("h_a_s_with_gps_points.json")
