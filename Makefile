@@ -142,4 +142,5 @@ integration-pg-down:
 integration-pg: integration-pg-up
 	DBSINK_PG_DSN=$(PG_DSN) python -m pytest tests/test_integration_live.py \
 		tests/test_dialect_matrix.py \
-		tests/test_streaming.py::test_maintainer_serving_sql_runs_on_live_postgres -v
+		tests/test_streaming.py::test_maintainer_serving_sql_runs_on_live_postgres -v; \
+	status=$$?; $(MAKE) integration-pg-down; exit $$status

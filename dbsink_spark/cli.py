@@ -126,10 +126,7 @@ def setup(
                 **({"registry_url": registry, "subject": topic} if packing == "avro" else {}),
             )
         n = writer.write_batch(mapping.transform(df))
-        if n < 0:  # partition mode writes on the executors and counts nothing
-            L.info(f"replayed {datafile} to {mapping.table} (partition mode: rows not counted)")
-        else:
-            L.info(f"replayed {datafile}: {n} rows written to {mapping.table}")
+        L.info(f"replayed {datafile}: {n} rows written to {mapping.table}")
 
     if listen:
         from .sources import kafka_stream

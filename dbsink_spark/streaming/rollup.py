@@ -7,10 +7,11 @@ table with an additive ``ON CONFLICT DO UPDATE SET n = n + excluded.n``
 — so the table always holds the exact aggregate over everything
 streamed so far. Additive merge is at-least-once sensitive (a replayed
 micro-batch would double-count), so merge_batch dedups replays through
-the transactional batch ledger shared with the sketch maintainers
-(``sketches.MergeMaintainer``): the marker commits in the same
-transaction as the merge, exactly the idempotent-writer pattern
-Spark's own ``foreachBatch`` docs prescribe.
+the batch ledger of ``sink.write_once``, the one write primitive the
+sink and every ``sketches.MergeMaintainer`` share: the marker, keyed
+by (table, query id, batch id), commits in the same transaction as
+the staged merge, exactly the idempotent-writer pattern Spark's own
+``foreachBatch`` docs prescribe.
 
 At 100 TB this is the materialized-view maintenance pattern: the
 micro-batch partial agg is map-side combined (tiny shuffle keyed by
@@ -50,9 +51,9 @@ class RollupMaintainer(MergeMaintainer):
     ):
         super().__init__(connect, table, dialect)
         self.bucket = bucket
-        # merge_batch surfaces partials to the driver — bounded by
+        # merge_batch fetches partials to the driver — bounded by
         # bucket×key cardinality, NOT batch size, which is what makes
-        # the collect safe. The guard turns a silent driver OOM (e.g. a
+        # the fetch safe. The guard turns a silent driver OOM (e.g. a
         # high-cardinality key column chosen by mistake) into an error.
         self.max_partial_rows = max_partial_rows
 
@@ -69,17 +70,17 @@ class RollupMaintainer(MergeMaintainer):
             .filter(F.col("bucket").isNotNull() & F.col("key").isNotNull())
         )
 
-    def _collect(self, df: DataFrame) -> list:
+    def _batch(self, df: DataFrame):
         cap = self.max_partial_rows
-        rows = df.limit(cap + 1).collect()
-        if len(rows) > cap:
+        batch = super()._batch(df.limit(cap + 1))
+        if len(batch) > cap:
             raise ValueError(
                 f"rollup partials exceed max_partial_rows={cap}: the "
                 "bucket×key cardinality is too high for a driver-merged "
                 "rollup — coarsen the bucket, reduce key cardinality, or "
                 "raise the cap"
             )
-        return rows
+        return batch
 
     def run(
         self,

@@ -10,6 +10,13 @@ the batch, exactly the RollupMaintainer pattern. The maintained grid
 is at all times the exact grid a batch build over everything streamed
 so far would produce (asserted cell-for-cell in tests).
 
+Every maintainer here writes through ``MergeMaintainer.merge_batch``:
+the batch's partials are staged and merged in one statement and one
+transaction by ``sink.write_once``, the same primitive the sink
+writes with. The additive ones (count-min, histogram, rollup) take a
+replay marker keyed by (table, query id, batch id) in that
+transaction; the absorbing ones (bitmap OR, HLL max) need none.
+
 At 100 TB/day the grid stays D×W cells regardless of stream volume —
 the whole point of a sketch — and estimates are served from the
 target store without touching the stream.
@@ -24,88 +31,28 @@ from pyspark.sql.streaming import StreamingQuery
 from ..ddl import quoted
 from ..functions.hashing import AFFINE_MOD, MINHASH_COEFFS, REDUCE_MOD, h64
 from ..functions.sketch import CM_D, CM_W, Q62_NUM, Q62_SHIFT, countmin_cells, hll_cells
+from ..sink import STAGE, batch_marker, exec_ddl, stage_sql, write_once
 from .pipeline import start_foreach_batch
-
-LEDGER_TABLE = "_applied_batches"
-
-
-def apply_batch_once(connect, dialect: str, table: str, sql: str, rows,
-                     batch_id: int | None) -> bool:
-    """Execute one upsert batch (``sql`` over ``rows``) as ONE
-    transaction. When ``batch_id`` is given, a ledger marker row
-    commits in that same transaction, so foreachBatch's at-least-once
-    replay of an already-committed batch is a clean no-op — there is
-    no applied-but-unmarked window (unlike a file-marker scheme).
-    Returns False when the batch was already applied.
-
-    The ADDITIVE maintainers (count-min, histogram, rollup) double on
-    replay without the ledger; the absorbing ones (bitmap OR, HLL max)
-    replay idempotently and pass ``batch_id=None``.
-    """
-    led = quoted(LEDGER_TABLE)
-    ddl = (
-        f"CREATE TABLE IF NOT EXISTS {led} ("
-        "sink_table VARCHAR, batch_id BIGINT, "
-        "PRIMARY KEY (sink_table, batch_id))"
-    )
-    pg = dialect == "postgres"
-    ph = "%s" if pg else "?"
-    conn = connect()
-    try:
-        # postgres (psycopg2/pg_lite) opens the transaction implicitly
-        # on a cursor; a duckdb connection executes directly and needs
-        # an explicit BEGIN
-        cur = conn.cursor() if pg else conn
-        if not pg:
-            conn.begin()
-        if batch_id is not None:
-            cur.execute(ddl)
-            cur.execute(
-                f"SELECT 1 FROM {led} WHERE sink_table = {ph} AND batch_id = {ph}",
-                (table, batch_id),
-            )
-            if cur.fetchone():
-                conn.rollback()
-                return False
-            cur.execute(f"INSERT INTO {led} VALUES ({ph}, {ph})", (table, batch_id))
-        if rows:
-            cur.executemany(sql, rows)
-        conn.commit()
-        return True
-    finally:
-        # on an exception nothing was committed: close() discards the
-        # open transaction on both DBAPI shapes
-        conn.close()
-
-
-def _exec_ddl(connect, dialect: str, sql: str) -> None:
-    """Run one DDL statement on either DBAPI shape: duckdb connections
-    execute directly; postgres (psycopg2/pg_lite) goes through a
-    cursor + commit."""
-    conn = connect()
-    try:
-        (conn.cursor() if dialect == "postgres" else conn).execute(sql)
-        conn.commit()
-    finally:
-        conn.close()
 
 
 class MergeMaintainer:
     """A summary table in a DBAPI target, maintained by merging each
-    micro-batch's partial rows with one ``INSERT … ON CONFLICT (KEYS)
-    DO UPDATE SET MERGE_SET``.
+    micro-batch's partial rows, staged, with one ``INSERT … SELECT … ON
+    CONFLICT (KEYS) DO UPDATE SET MERGE_SET`` (``sink.write_once``, the
+    sink's own write primitive).
 
     A subclass declares four things: ``COLUMNS`` as (name, SQL type)
     pairs, ``KEYS`` (the primary key), ``MERGE_SET`` (the update
     assignments; ``{t}`` is the quoted table) and ``ADDITIVE``. An
     additive merge (+) doubles under foreachBatch's at-least-once
-    replay, so its batches go through the transactional batch ledger;
-    an absorbing merge (OR, max) is replay-idempotent and skips it.
-    Either way one batch commits in one transaction. Key columns are
-    never NULL: each function that builds partials (``batch_*``,
-    ``RollupMaintainer.partials``) drops NULL-key rows, because a NULL
-    key violates the primary key and the same batch would then fail on
-    every replay."""
+    replay, so a batch with a ``batch_id`` takes a ledger marker in the
+    merge's transaction; an absorbing merge (OR, max) is
+    replay-idempotent and takes none. Either way one batch commits in
+    one transaction. Partials are grouped by key, so no key repeats in
+    the staged batch. Key columns are never NULL: each function that
+    builds partials (``batch_*``, ``RollupMaintainer.partials``) drops
+    NULL-key rows, because a NULL key violates the primary key and the
+    same batch would then fail on every replay."""
 
     COLUMNS: tuple[tuple[str, str], ...] = ()
     KEYS: tuple[str, ...] = ()
@@ -119,31 +66,32 @@ class MergeMaintainer:
 
     def ensure_table(self) -> None:
         cols = ", ".join(f"{name} {typ}" for name, typ in self.COLUMNS)
-        _exec_ddl(
+        exec_ddl(
             self.connect,
             self.dialect,
             f"CREATE TABLE IF NOT EXISTS {quoted(self.table)} ("
             f"{cols}, PRIMARY KEY ({', '.join(self.KEYS)}))",
         )
 
-    def _collect(self, df: DataFrame) -> list:
-        return df.collect()
+    def _batch(self, df: DataFrame):
+        """The partials as ``write_once`` stages them."""
+        return df.toArrow() if self.dialect == "duckdb" else df.collect()
 
-    def merge_batch(self, df: DataFrame, batch_id: int | None = None) -> None:
+    def merge_batch(self, df: DataFrame, batch_id: int | None = None) -> int:
+        """Merge one batch's partials; returns the rows merged (0 for a
+        replayed additive batch)."""
         names = [name for name, _ in self.COLUMNS]
-        rows = [tuple(r[c] for c in names) for r in self._collect(df)]
-        batch_id = batch_id if self.ADDITIVE else None
-        if not rows and batch_id is None:
-            return
-        t = quoted(self.table)
-        ph = "%s" if self.dialect == "postgres" else "?"
-        sql = (
-            f"INSERT INTO {t} ({', '.join(names)}) "
-            f"VALUES ({', '.join([ph] * len(names))}) "
+        t, cols = quoted(self.table), ", ".join(names)
+        merge = (
+            f"INSERT INTO {t} ({cols}) SELECT {cols} FROM {STAGE} "
             f"ON CONFLICT ({', '.join(self.KEYS)}) "
             f"DO UPDATE SET {self.MERGE_SET.format(t=t)}"
         )
-        apply_batch_once(self.connect, self.dialect, self.table, sql, rows, batch_id)
+        marker = batch_marker(df, self.table, batch_id) if self.ADDITIVE else None
+        return write_once(
+            self.connect, self.dialect, self._batch(df.select(*names)), merge,
+            stage_sql(t, names, ["%s"] * len(names)), marker,
+        )
 
 
 def batch_grid(df: DataFrame, item_col: str) -> DataFrame:
@@ -413,7 +361,7 @@ class HistogramMaintainer(MergeMaintainer):
 
     Bin counts merge by addition — NOT replay-idempotent, so
     merge_batch dedups via the transactional batch ledger
-    (``apply_batch_once``), like CountMin and unlike the absorbing
+    (``sink.write_once``), like CountMin and unlike the absorbing
     OR/max maintainers. State is |occupied bins| rows
     regardless of volume. ``quantile_sql`` serves an approximate
     quantile by walking the cumulative histogram — error bounded by

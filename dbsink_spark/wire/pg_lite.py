@@ -23,8 +23,8 @@ real psycopg2 remains the intended driver (``sink.postgres_connect_
 factory`` prefers it and falls back here only when the import fails).
 
 Transaction semantics MATCH psycopg2 (review: the exactly-once batch
-ledger in ``streaming.sketches.apply_batch_once`` depends on the
-marker INSERT and the data merge committing ATOMICALLY): the first
+ledger in ``sink.write_once`` depends on the marker INSERT, the
+staging and the data merge committing ATOMICALLY): the first
 statement after connect/commit/rollback opens an explicit
 transaction (a ``BEGIN;`` prefix on the same Query message), and
 ``commit()``/``rollback()`` end it. A server error leaves the

@@ -3,6 +3,7 @@ import json
 import os
 import random
 import sys
+from datetime import datetime, timedelta
 from pathlib import Path
 
 import pytest
@@ -174,11 +175,14 @@ def numurus_status_messages(n: int = 6) -> list[dict]:
 
 def sofar_messages(n: int = 6) -> list[dict]:
     """Sofar Spotter wave reports (FIXTURES.md §6): flat observations, a
-    ``SPOT-NNNN`` spotter id and the raw ``message`` the payload drops."""
+    ``SPOT-NNNN`` spotter id and the raw ``message`` the payload drops.
+    Message ``i`` is stamped ``i`` hours after 2019-04-01T00:33:31Z."""
+    start = datetime(2019, 4, 1, 0, 33, 31)
     return [
         {"significantWaveHeight": 2.0 + i / 10, "peakPeriod": 9.3, "meanPeriod": 7.76,
          "peakDirection": 85.2, "peakDirectionalSpread": 38.29, "meanDirection": 72.57,
-         "meanDirectionalSpread": 58.01, "timestamp": f"2019-04-01T0{i}:33:31.000Z",
+         "meanDirectionalSpread": 58.01,
+         "timestamp": f"{start + timedelta(hours=i):%Y-%m-%dT%H:%M:%S}.000Z",
          "latitude": 2.6 + i / 100, "longitude": -149.4 - i / 100,
          "spotterId": f"SPOT-{199 + i % 2:04d}",
          "message": {"messageId": 1000 + i, "rawMessageBytes": "8f3a" * 8}}

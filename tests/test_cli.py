@@ -2,7 +2,6 @@
 (tests/test_dbsink.py:15-21, integration tier :442-826)."""
 
 import json
-import logging
 
 import duckdb
 from click.testing import CliRunner
@@ -57,30 +56,6 @@ def test_cli_dry_run(tmp_path):
         catch_exceptions=False,
     )
     assert result.exit_code == 0
-
-
-def test_cli_partition_mode_logs_no_row_count(tmp_path, monkeypatch, caplog):
-    # partition mode's write_batch returns -1: the log says the rows were
-    # not counted instead of "-1 rows written"
-    from dbsink_spark.sink import SinkWriter
-
-    monkeypatch.setattr(SinkWriter, "write_batch", lambda self, df, batch_id=None: -1)
-    caplog.set_level(logging.INFO, logger="dbsink_spark")
-    result = CliRunner().invoke(
-        setup,
-        [
-            "--topic", "t",
-            "--lookup", "GenericFloat",
-            "--db", f"duckdb:///{tmp_path / 'part.duckdb'}",
-            "--datafile", write_datafile(tmp_path / "floats.json", float_messages()),
-        ],
-        catch_exceptions=False,
-    )
-    assert result.exit_code == 0
-    replayed = [r.getMessage() for r in caplog.records if "replayed" in r.getMessage()]
-    assert len(replayed) == 1
-    assert "partition mode: rows not counted" in replayed[0]
-    assert "-1" not in replayed[0]
 
 
 def test_cli_date_filter(tmp_path):

@@ -17,7 +17,8 @@ which owns the maintainers' DDL and merge SQL;
 new maintainer cannot ship without joining the matrix):
 
 * ``SinkWriter``          — DDL + upsert of a batch with a re-sent key
-  (the later copy lands) + idempotent replay; Postgres in both modes
+  (the later copy lands) + idempotent replay; Postgres in both modes;
+  an append-only mapping replaying one batch id lands once
 * ``CountMinMaintainer``  — additive merge + point-estimate serve
 * ``BitmapMaintainer``    — idempotent OR merge + exact-distinct serve
 * ``HLLMaintainer``       — idempotent max merge + estimate serve
@@ -106,11 +107,10 @@ def _exercise_sink(spark, factory, dialect, table, mode="auto"):
     out = mapping.transform(df)
     parts = out.select("uid", F.spark_partition_id().alias("p")).collect()
     assert len({r.p for r in parts if r.uid == "u0"}) == 2  # copies apart
-    # postgres partition mode writes executor-side and returns the -1
-    # "count not tracked" sentinel; the table count is the real assert
+    # postgres partition mode sums its partitions' merge counts
     n1 = writer.write_batch(out)
     n2 = writer.write_batch(out)  # replay: upsert converges
-    assert n1 == n2 == (-1 if writer.effective_mode == "partition" else 4)
+    assert n1 == n2 == 4
     assert _fetch(factory, dialect, f'SELECT count(*) FROM "{table}"')[0][0] == 4
     value_n = {
         "postgres": "\"values\" -> 'n'",
@@ -247,6 +247,38 @@ def test_sink_driver_mode_runs_live_on_postgres(spark, tmp_path):
         _exercise_sink(spark, factory, "postgres", table, mode="driver")
     finally:
         _drop(factory, "postgres", table)
+
+
+@pytest.mark.parametrize("dialect", DIALECTS)
+def test_append_sink_replay_lands_once_live(spark, tmp_path, dialect):
+    """An append-only mapping (JsonMap: no upsert keys) replaying one
+    batch id lands each row once. Postgres writes in partition mode,
+    where each non-empty partition takes its own ledger marker."""
+    from dbsink_spark.mappings import resolve
+    from dbsink_spark.sink import LEDGER
+
+    factory = _factory(dialect, tmp_path)
+    table = f"mx_append_{uuid.uuid4().hex[:8]}"
+    mapping = resolve("JsonMap", "matrix-topic")
+    mapping.table = table
+    writer = SinkWriter(mapping, factory, dialect=dialect)
+    writer.ensure_table(drop=True)
+    df = spark.createDataFrame(
+        [("k", json.dumps({"n": i})) for i in range(8)], ["key", "value"]
+    )
+    out = mapping.transform(df)
+    filled = sum(1 for n in out.rdd.glom().map(len).collect() if n)
+    assert filled > 1
+    try:
+        assert writer.write_batch(out, 3) == 8
+        assert writer.write_batch(out, 3) == 0  # replay
+        assert _fetch(factory, dialect, f'SELECT count(*) FROM "{table}"')[0][0] == 8
+        markers = _fetch(
+            factory, dialect, f"SELECT count(*) FROM {LEDGER} WHERE sink_table = '{table}'"
+        )[0][0]
+        assert markers == (filled if writer.effective_mode == "partition" else 1)
+    finally:
+        _drop(factory, dialect, table)
 
 
 # ---------------------------------------------------------------------------

@@ -20,6 +20,7 @@ from conftest import (
     fixture_path,
     needs_reference,
     sofar_messages,
+    statistics_messages,
     write_datafile,
 )
 
@@ -283,6 +284,31 @@ def test_sofar_properties(spark, tmp_path):
         assert json.loads(r["payload"]) == {k: v for k, v in m.items() if k != "message"}
         for k in WAVE_STATISTICS:
             assert r["values"][k] == make_valid_string(m[k]), k
+
+
+def test_sofar_stand_in_lands_every_message(spark, tmp_path):
+    msgs = sofar_messages(40)
+    path = write_datafile(tmp_path / "sofar40.json", msgs)
+    rows = resolve("NwicFloatReportsSofar", "sofar.data").transform(
+        replay_source(spark, path), errors="keep"
+    ).collect()
+    assert ([r["_error"] for r in rows], len(rows)) == ([None] * len(msgs), len(msgs))
+
+
+def test_statistics_properties(spark, tmp_path):
+    # the statistics golden's rules on the in-repo stand-in
+    msgs = statistics_messages()
+    path = write_datafile(tmp_path / "statistics.json", msgs)
+    rows = resolve("GenericFieldStatistic", "topic").transform(replay_source(spark, path)).collect()
+    assert len(rows) == len(msgs)
+    by_period = {r["period"]: r for r in rows}
+    for m in msgs:
+        r = by_period[m["period"]]
+        assert r["source"] == m["source"]
+        for k in ("starting", "ending"):
+            assert r[k] == datetime.strptime(m[k], "%Y-%m-%dT%H:%M:%SZ"), k
+        assert json.loads(r["values"]) == m["values"]
+    assert by_period["instant"]["starting"] == by_period["instant"]["ending"]
 
 
 def test_jsonmap_payload_is_payload_parse(spark, tmp_path):

@@ -19,6 +19,7 @@ from dbsink_spark.mappings import BUILTIN, resolve
 from dbsink_spark.sink import (
     SinkWriter,
     _hstore_text,
+    _merge_staged,
     duckdb_connect_factory,
 )
 from dbsink_spark.sources import replay_source
@@ -303,7 +304,7 @@ def test_execute_values_fast_path(monkeypatch):
     create, head, template = w.stage_sql()
     params = [["a"] * (len([c for c in mapping.columns if c.bind != "serial"]) + 1)]
     conn = _RecordingConn()
-    assert w._merge_rows(conn, params) == 7
+    assert _merge_staged(conn.cursor(), True, params, w.upsert_sql(), w.stage_sql()) == 7
     assert calls["sql"] == head + "%s" and "VALUES %s" in calls["sql"]
     assert calls["sql"].count("%s") == 1  # row shape lives in template only
     assert calls["template"] == template and "::hstore" in template
@@ -323,7 +324,7 @@ def test_executemany_fallback_without_psycopg2(monkeypatch):
     create, head, template = w.stage_sql()
     conn = _RecordingConn()
     params = [[1, 2]]
-    assert w._merge_rows(conn, params) == 7
+    assert _merge_staged(conn.cursor(), True, params, w.upsert_sql(), w.stage_sql()) == 7
     assert conn.calls == [
         ("execute", create),
         ("executemany", head + template, params),

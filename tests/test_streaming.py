@@ -846,7 +846,7 @@ def test_additive_maintainers_dedupe_replayed_batch(spark, tmp_path):
     """foreachBatch is at-least-once: replaying the same batch_id into
     an ADDITIVE maintainer (count-min / histogram / rollup) must be a
     no-op — the ledger marker commits in the same transaction as the
-    merge (sketches.apply_batch_once)."""
+    merge (sink.write_once)."""
     import duckdb
 
     from dbsink_spark.streaming.rollup import RollupMaintainer
@@ -893,6 +893,108 @@ def test_additive_maintainers_dedupe_replayed_batch(spark, tmp_path):
     rm.merge_batch(partials, batch_id=6)
     assert con.execute('SELECT sum(n) FROM "roll"').fetchone()[0] == 2
     con.close()
+
+
+def _jsonl(path, messages):
+    with open(path, "w") as f:
+        for m in messages:
+            f.write(json.dumps({"key": "k", "value": json.dumps(m)}) + "\n")
+
+
+def _count(db, table):
+    con = duckdb.connect(db)
+    try:
+        return con.execute(f'SELECT count(*) FROM "{table}"').fetchone()[0]
+    finally:
+        con.close()
+
+
+def test_append_sink_replayed_batch_lands_once(spark, tmp_path):
+    """An append-only mapping (JsonMap: no upsert keys) takes a ledger
+    marker per batch id: writing batch 7 again lands nothing."""
+    mapping = resolve("JsonMap", "append-topic")
+    db = str(tmp_path / "append.duckdb")
+    writer = SinkWriter(mapping, duckdb_connect_factory(db), dialect="duckdb")
+    writer.ensure_table(drop=True)
+    df = spark.createDataFrame(
+        [("k", json.dumps({"n": i})) for i in range(5)], ["key", "value"]
+    )
+    out = mapping.transform(df)
+    assert writer.write_batch(out, 7) == 5
+    assert writer.write_batch(out, 7) == 0  # replay
+    assert _count(db, mapping.table) == 5
+    assert writer.write_batch(out, 8) == 5  # a new batch id lands
+    assert _count(db, mapping.table) == 10
+
+
+def test_stream_replay_after_lost_commit_lands_once(spark, tmp_path):
+    """A true replay, no broker: the batch committed to the database,
+    but its entry in the checkpoint's commit log is gone, so the
+    restarted stream (same checkpoint, same query id) runs batch 0
+    again. The append-only sink lands it once."""
+    indir = tmp_path / "in"
+    indir.mkdir()
+    _jsonl(indir / "b0.json", [{"n": i} for i in range(5)])
+    mapping = resolve("JsonMap", "replay-topic")
+    db = str(tmp_path / "replay.duckdb")
+    writer = SinkWriter(mapping, duckdb_connect_factory(db), dialect="duckdb")
+    writer.ensure_table(drop=True)
+    ckpt = tmp_path / "ckpt"
+
+    def drain():
+        q = run_stream(file_stream(spark, str(indir)), mapping, writer,
+                       checkpoint=str(ckpt), trigger={"availableNow": True})
+        q.awaitTermination(120)
+        return q.lastProgress
+
+    drain()
+    assert _count(db, mapping.table) == 5
+    for name in ("0", ".0.crc"):  # the commit-log entry and its checksum
+        (ckpt / "commits" / name).unlink(missing_ok=True)
+    assert drain()["batchId"] == 0  # batch 0 ran again
+    assert _count(db, mapping.table) == 5
+
+
+def test_fresh_checkpoint_is_not_a_replay(spark, tmp_path):
+    """A stream on a fresh checkpoint has a new query id, so its batch 0
+    lands even where another stream's batch 0 already did — for an
+    additive maintainer and for an append-only sink. A ledger table
+    left by the two-column (sink_table, batch_id) scheme is ignored."""
+    from dbsink_spark.streaming.sketches import HistogramMaintainer
+
+    db = str(tmp_path / "fresh.duckdb")
+    con = duckdb.connect(db)
+    con.execute(
+        "CREATE TABLE _applied_batches (sink_table VARCHAR, batch_id BIGINT, "
+        "PRIMARY KEY (sink_table, batch_id))"
+    )
+    con.execute("INSERT INTO _applied_batches VALUES ('hist', 0)")
+    con.close()
+
+    hm = HistogramMaintainer(duckdb_connect_factory(db), table="hist")
+    for name, vals in (("a", [1.0, 2.0, 70.0]), ("b", [3.0, 90.0])):
+        indir = tmp_path / f"hist_{name}"
+        indir.mkdir()
+        with open(indir / "v.json", "w") as f:
+            f.writelines(json.dumps({"v": v}) + "\n" for v in vals)
+        src = spark.readStream.schema("v double").json(str(indir))
+        hm.run(src, "v", str(tmp_path / f"ckpt_hist_{name}"),
+               trigger={"availableNow": True}).awaitTermination(120)
+    con = duckdb.connect(db)
+    assert con.execute("SELECT sum(cnt) FROM hist").fetchone()[0] == 5
+    con.close()
+
+    indir = tmp_path / "in"
+    indir.mkdir()
+    _jsonl(indir / "b0.json", [{"n": i} for i in range(5)])
+    mapping = resolve("JsonMap", "fresh-topic")
+    writer = SinkWriter(mapping, duckdb_connect_factory(db), dialect="duckdb")
+    writer.ensure_table(drop=True)
+    for name in ("a", "b"):
+        run_stream(file_stream(spark, str(indir)), mapping, writer,
+                   checkpoint=str(tmp_path / f"ckpt_sink_{name}"),
+                   trigger={"availableNow": True}).awaitTermination(120)
+    assert _count(db, mapping.table) == 10
 
 
 def test_absorbing_merge_is_atomic(spark, tmp_path):
