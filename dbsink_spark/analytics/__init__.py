@@ -43,19 +43,16 @@ UNGATED = frozenset(
         "q25_above_segment_avg",  # join-agg ≈ q05/q13
         "q30_argmax",  # the min_by shape inside gated s02
         "q06_revenue_forecast",  # filter-agg ≈ q01/q02
-        "q08_anti_join",  # anti-join mechanics ≈ q07 semi join
+        "q08_anti_join",  # anti-join mechanics ≈ d08 semi join
         "q10_agg_distinct",  # exact distinct ≈ q29
         "q14_window_lag",  # lag rides inside q19
         "q16_topk_global",  # global top-k ⊂ q13's window top-k family
         "t20_inverted_index",  # never gated; GATE_DEBT r14; fuzz-hardened in all modes
-        "q11_rollup",  # grouping sets = q12 cube machinery
         "s03_hyperplane_lsh",  # LSH bucketing powers s07's candidates
         "d05_ngram_jaccard",  # verified Jaccard ⊂ d03 + d10
         "q18_events_hourly",  # bottom tier of q36's hierarchical rollup
         "q02_filter_project",  # pushed-filter scan inside every gated plan
         "q03_broadcast_join",  # broadcast mechanics ride q05 and d08
-        "q07_semi_join",  # join-family mechanics ⊂ q05 + d08 semi join
-        "q09_part_brand_volume",  # join-agg shape = q05 + q01
         "q17_set_ops",  # distinct-agg machinery of q29/q56 over a union
         "q19_events_sessionize",  # lag/gap/cumsum ⊂ q40 funnel + q41 retention
         "q23_pivot",  # groupBy + conditional agg ⊂ q12 cube
@@ -81,7 +78,6 @@ UNGATED = frozenset(
         "t16_bpe_merge_step",  # pair-count machinery ⊂ t19 apply
         "t17_importance_weights",  # hashed-ngram tf/df ratios ⊂ t21 + t13
         "t18_top_terms",  # per-group term ranking ⊂ t26 + t21
-        "m03_frame_sample",  # binary mapInPandas plumbing = m01
         "q108_acf",  # never gated; GATE_DEBT r13 tranche
         "q109_benford",  # never gated; GATE_DEBT r13 tranche
         "q110_interval_union",  # never gated; GATE_DEBT r13 tranche
@@ -128,7 +124,6 @@ UNGATED = frozenset(
         "d15_lsh_audit",  # audited MinHash machinery is d03
         "d16_cluster_keeper",  # representative pick ⊂ d17 + s21 k-center
         "s09_ann_recall",  # IVF recall audit ⊂ s12/s13
-        "s11_maxsim_topk",  # MaxSim re-rank ⊂ s12 IVF→MaxSim
         "q22_asof_join",  # one-axis subset of q89 bitemporal as-of
         "q38_range_join",  # banded candidate join = q102/q104 blocking
         "q51_countmin",  # point frequency ⊂ q93 heavy hitters + q88
@@ -141,7 +136,7 @@ UNGATED = frozenset(
         "q87_chi_square",  # sorted fold = t27; contingency agg ⊂ q12
         "d09_dup_clusters",  # propagation CC superseded by d17
         "s02_centroid_assign",  # first stage of s12 and s09
-        "s04_numpy_topk",  # Arrow+numpy kernel rides s11 + s12
+        "s04_numpy_topk",  # Arrow+numpy kernel rides s12
         "t07_winnowing",  # fingerprinting family ⊂ d03 + d15
         "t26_rake_keyphrases",  # term scoring ⊂ t21 BM25 + t02
         "c01_curation_manifest",  # never gated; GATE_DEBT r14; composed curation chain

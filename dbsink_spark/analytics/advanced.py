@@ -20,7 +20,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.sketch import Q62_M, Q62_NUM, Q62_SHIFT, hll_cells, with_zvalue
+from ..functions.sketch import (
+    Q62_M,
+    Q62_NUM,
+    Q62_SHIFT,
+    cusum_fold,
+    hll_cells,
+    mg_truncate,
+    with_zvalue,
+)
 from .tables import Tables
 from .litdf import local_df
 
@@ -4571,20 +4579,20 @@ def q90_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     t = Tables(spark, sf_dir)
-    # localCheckpoint (ADVICE round-6): the ~84-row series is consumed
-    # twice (parameter pass + sweep); a persist() here leaked a cache
-    # entry per invocation since the caller owns the returned frame and
-    # nothing could unpersist it after materialization. The checkpoint
-    # hides the agg from the shuffle-budget harness; its shape is
-    # pinned via _q90_monthly in test_plans.py.
+    # localCheckpoint, not persist(): the ~84-row series is consumed
+    # twice (parameter pass + sweep), and a persist() would leave a
+    # cache entry per invocation that nothing can unpersist once the
+    # caller owns the returned frame. The checkpoint hides the agg from
+    # the shuffle-budget harness; its shape is pinned via _q90_monthly
+    # in test_plans.py.
     monthly = _q90_monthly(t).localCheckpoint(eager=False)
     g = monthly.agg(
         F.count(F.lit(1)).alias("n"), F.sum("x").alias("tot")
     ).collect()[0]
     if not g["n"]:
         # degenerate: no months at all — zero rows, same as the
-        # oracle's empty recursive sweep (degenerate-mode fuzz catch,
-        # round 10: int(None) crashed the driver)
+        # oracle's empty recursive sweep (int(None) would crash the
+        # driver)
         return local_df(
             spark,
             [],
@@ -4597,21 +4605,11 @@ def q90_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     hh = mean // Q90_H_DIV
 
     def run(batches):
-        s = 0
-        mx = 0
-        alarms = 0
+        s = mx = alarms = 0
         seen = False
         for pdf in batches:
-            for x in pdf["x"].to_numpy():
-                seen = True
-                s = s + (int(x) - mean - k)
-                if s < 0:
-                    s = 0
-                if s > mx:
-                    mx = s
-                if s > hh:
-                    alarms += 1
-                    s = 0
+            seen = seen or len(pdf) > 0
+            s, mx, alarms = cusum_fold(pdf["x"].to_numpy(), s, mx, alarms, mean, k, hh)
         if not seen:  # guard: an empty partition must not emit a row
             return
         yield pd.DataFrame(
@@ -4864,16 +4862,11 @@ def q93_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             vc = toks.value_counts()
             counts = vc if counts is None else counts.add(vc, fill_value=0)
-            if len(counts) > Q93_K:
-                # batch Misra-Gries: subtract the (K+1)-th largest
-                # count, keep strictly-positive survivors (≤ K).
-                # Truncating after EVERY Arrow-batch merge (not once at
-                # partition end) bounds executor state at K counters
-                # regardless of partition vocabulary — the mergeable-MG
-                # error bound sums to ≤ n_partition/(K+1) either way.
-                counts = counts.sort_values(ascending=False)
-                counts = counts - counts.iloc[Q93_K]
-                counts = counts[counts > 0]
+            # truncating after EVERY Arrow-batch merge (not once at
+            # partition end) bounds executor state at K counters
+            # regardless of partition vocabulary — the mergeable-MG
+            # error bound sums to ≤ n_partition/(K+1) either way
+            counts, _ = mg_truncate(counts, Q93_K)
         if counts is None:
             return
         yield pd.DataFrame({"w": counts.index.astype(str)})

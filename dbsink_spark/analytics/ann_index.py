@@ -231,7 +231,7 @@ def maxsim_query(
     partitions of the vector lake (directory-level pruning, appends
     included); stage 2 re-ranks the candidates with the
     late-interaction MaxSim fold (identical arithmetic to
-    s11/s12, so the in-query and lake-resident plans are
+    s12, so the in-query and lake-resident plans are
     row-identical over the same store — pinned by
     tests/test_ann_index.py).
 

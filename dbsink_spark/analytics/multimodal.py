@@ -186,40 +186,6 @@ def _frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         rows = {k: [] for k in rows}
 
 
-def m03_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-sampling over binary media: every 2nd fixed-size frame per
-    payload, with per-frame hash — the video-sampling plumbing (decode
-    stubbed; chunking/batching/schema real and oracle-verified)."""
-    media = media_table(spark, sf_dir)
-    return media.select("doc_id", "blob").mapInPandas(_frame_batches, FRAMES_SCHEMA)
-
-
-# frames are BYTE slices of the payload (the spark kernel chunks the
-# raw blob), so the oracle slices the hex encoding at 2x offsets and
-# unhexes back to a BLOB for hashing — character substring diverged on
-# multi-byte text (text-mode fuzz catch, round 9; m05's hex treatment)
-ORACLE["m03_frame_sample"] = f"""
-    WITH hx AS (
-        SELECT doc_id, hex(encode(text)) AS h,
-               octet_length(encode(text)) AS n
-        FROM documents
-    ), frames AS (
-        SELECT doc_id, i.i AS frame_idx,
-               substring(h, i.i * {FRAME_BYTES} * 2 + 1, {FRAME_BYTES} * 2) AS chunkhex
-        FROM hx
-        CROSS JOIN (SELECT unnest(generate_series(0, 4000)) AS i) i
-        WHERE i.i * {FRAME_BYTES} < n
-          AND i.i % {FRAME_SAMPLE_EVERY} = 0
-    )
-    SELECT doc_id, frame_idx,
-           (length(chunkhex) // 2)::BIGINT AS frame_len,
-           {h64_sql('chunkhex')} AS frame_hash
-    FROM frames
-"""
-
-QUERIES["m03_frame_sample"] = m03_frame_sample
-
-
 # ---------------------------------------------------------------------------
 # m04: binary near-dup via piecewise chunk-signature (perceptual-hash shape)
 # ---------------------------------------------------------------------------

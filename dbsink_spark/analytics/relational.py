@@ -146,20 +146,6 @@ def q05_multi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q07_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customers having at least one high-value order (left-semi join).
-
-    Semi join never materializes the probe side's payload — at scale
-    this is a shuffle on custkey with early exit per key.
-    """
-    t = Tables(spark, sf_dir)
-    big = t.orders.filter(F.col("o_totalprice") > 150000).select("o_custkey")
-    return (
-        t.customer.join(big, t.customer.c_custkey == big.o_custkey, "left_semi")
-        .select("c_custkey", "c_name", "c_mktsegment")
-    )
-
-
 def q08_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers with no high-value order (left-anti join)."""
     t = Tables(spark, sf_dir)
@@ -167,21 +153,6 @@ def q08_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         t.customer.join(big, t.customer.c_custkey == F.col("o_custkey"), "left_anti")
         .select("c_custkey", "c_name", "c_acctbal")
-    )
-
-
-def q09_part_brand_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lineitem ⋈ part: shipped quantity + revenue per brand."""
-    t = Tables(spark, sf_dir)
-    part = t.part.select("p_partkey", "p_brand")
-    return (
-        t.lineitem.join(part, F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy("p_brand")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
-        )
-        .orderBy("p_brand")
     )
 
 
@@ -200,19 +171,6 @@ def q10_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.round(F.sum("o_totalprice"), 2) / F.count(F.lit(1)), 4).alias("avg_price"),
         )
         .orderBy("o_orderpriority")
-    )
-
-
-def q11_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP over (returnflag, linestatus) — grouping-set aggregate."""
-    li = Tables(spark, sf_dir).lineitem
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .orderBy(F.col("l_returnflag").asc_nulls_first(), F.col("l_linestatus").asc_nulls_first())
     )
 
 
@@ -466,23 +424,10 @@ ORACLE: dict[str, str] = {
         GROUP BY r_name, n_name
         ORDER BY r_name, n_name
     """,
-    "q07_semi_join": """
-        SELECT c_custkey, c_name, c_mktsegment
-        FROM customer
-        WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 150000)
-    """,
     "q08_anti_join": """
         SELECT c_custkey, c_name, c_acctbal
         FROM customer
         WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_totalprice > 250000)
-    """,
-    "q09_part_brand_volume": """
-        SELECT p_brand,
-               round(sum(l_quantity), 2)                          AS sum_qty,
-               round(sum(l_extendedprice * (1 - l_discount)), 2)  AS revenue
-        FROM lineitem JOIN part ON l_partkey = p_partkey
-        GROUP BY p_brand
-        ORDER BY p_brand
     """,
     "q10_agg_distinct": """
         SELECT o_orderpriority,
@@ -493,24 +438,12 @@ ORACLE: dict[str, str] = {
         GROUP BY o_orderpriority
         ORDER BY o_orderpriority
     """,
-    "q11_rollup": """
+    "q12_cube": """
         -- HAVING count(*) > 0: over an EMPTY input, standard SQL
         -- grouping sets still emit the () grand-total row (count 0)
         -- where Spark's rollup/cube emit nothing; on any non-empty
         -- input every grouping-set row has count >= 1, so the guard
-        -- only equalizes the empty case (degenerate-mode fuzz catch,
-        -- round 10)
-        SELECT l_returnflag, l_linestatus,
-               round(sum(l_quantity), 2) AS sum_qty,
-               count(*)                  AS n_rows
-        FROM lineitem
-        GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        HAVING count(*) > 0
-        ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
-    """,
-    "q12_cube": """
-        -- HAVING count(*) > 0: see q11_rollup's note (empty-input
-        -- grand-total row equalizer)
+        -- only equalizes the empty case
         SELECT o_orderstatus, o_orderpriority,
                round(sum(o_totalprice), 2) AS revenue,
                count(*)                    AS n_orders
@@ -640,11 +573,8 @@ QUERIES = {
     "q03_broadcast_join": q03_broadcast_join,
     "q05_multi_join": q05_multi_join,
     "q06_revenue_forecast": q06_revenue_forecast,
-    "q07_semi_join": q07_semi_join,
     "q08_anti_join": q08_anti_join,
-    "q09_part_brand_volume": q09_part_brand_volume,
     "q10_agg_distinct": q10_agg_distinct,
-    "q11_rollup": q11_rollup,
     "q12_cube": q12_cube,
     "q13_window_topk_per_group": q13_window_topk_per_group,
     "q14_window_lag": q14_window_lag,

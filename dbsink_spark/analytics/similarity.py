@@ -1003,7 +1003,7 @@ QUERIES["s10_range_search"] = s10_range_search
 
 
 # ---------------------------------------------------------------------------
-# s11: MaxSim late-interaction scoring (ColBERT-style)
+# MaxSim late-interaction scoring (ColBERT-style): s12 and ann_index
 # ---------------------------------------------------------------------------
 
 S11_SUBS = 8                 # sub-vectors per embedding
@@ -1013,12 +1013,12 @@ S11_QUERIES = 3              # vec_id < 3 form the query set
 
 def _maxsim_parts(col_prefix: str) -> list[str]:
     """Project an embedding column ``v`` into S11_SUBS sub-vectors and
-    their norms — the once-per-row layout both MaxSim ops (s11 full
-    scan, s12 IVF-prefiltered re-rank) score from.
+    their norms — the once-per-row layout the MaxSim re-rank (s12,
+    and ``ann_index``'s lake-resident twin) scores from.
 
-    Emitted as ``selectExpr`` strings, not Column objects (r12, guide
-    §7.3): the 16-slice/norm projection built column-by-column cost a
-    py4j round trip per operator node — ~1.9 s of driver time per s11
+    Emitted as ``selectExpr`` strings, not Column objects: the
+    16-slice/norm projection built column-by-column cost a
+    py4j round trip per operator node — ~1.9 s of driver time per
     plan construction, measured — while one SQL string parses JVM-side
     in milliseconds into the IDENTICAL expression tree (verified: the
     analyzed plans and the collected results are byte-equal)."""
@@ -1051,94 +1051,6 @@ def _maxsim_score() -> str:
     return " + ".join(maxes)
 
 
-def s11_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Late-interaction retrieval (ColBERT's MaxSim): treat each
-    embedding as 8 token-like sub-vectors and score a (query, doc)
-    pair as Σ_i max_j cos(q_i, d_j) — each query part matches its
-    best-aligned doc part, the multi-vector semantics single-vector
-    cosine (s01) cannot express.
-
-    Plan shape is the production late-interaction layout: per-vector
-    sub-vectors and their norms are projected ONCE per row (8 slices +
-    8 norms), the tiny query set broadcasts, and the corpus NEVER
-    shuffles — per pair only the 64 sub-dot/max/sum arithmetic runs.
-    At 100 TB the same plan runs after an ANN prefilter (s05's IVF)
-    supplies the candidate set; MaxSim is the re-ranker.
-
-    Exactness: every sub-cosine is the same sequential fold both
-    engines compute bit-identically (module precedent: s01 gate), max
-    is order-exact, and the 8-term sum is written with identical
-    left-association in both engines.
-    """
-    v = _vectors(spark, sf_dir)
-    queries = v.filter(F.col("vec_id") < S11_QUERIES).selectExpr(
-        "vec_id AS query_id", *_maxsim_parts("q")
-    )
-    corpus = v.filter(F.col("vec_id") >= S11_QUERIES).selectExpr(
-        "vec_id AS corpus_id", *_maxsim_parts("c")
-    )
-    scored = corpus.join(F.broadcast(queries)).selectExpr(
-        "query_id", "corpus_id", _maxsim_score() + " AS maxsim"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("maxsim").desc(), F.col("corpus_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOPK)
-        .select(
-            "query_id", "corpus_id", F.round("maxsim", 4).alias("maxsim"), "rank"
-        )
-        .orderBy("query_id", "rank")
-    )
-
-
-def _s11_oracle() -> str:
-    def sub(prefix: str, i: int) -> str:
-        a, b = 1 + i * S11_DSUB, (i + 1) * S11_DSUB
-        return f"{prefix}.v[{a}:{b}]"
-
-    def dot(i: int, j: int) -> str:
-        return (
-            f"list_sum([{sub('q', i)}[k] * {sub('c', j)}[k]"
-            f" for k in generate_series(1, {S11_DSUB})])"
-        )
-
-    def norm(prefix: str, i: int) -> str:
-        return f"sqrt(list_sum([x*x for x in {sub(prefix, i)}]))"
-
-    maxes = []
-    for i in range(S11_SUBS):
-        cs = ", ".join(
-            f"({dot(i, j)} / ({norm('q', i)} * {norm('c', j)}))"
-            for j in range(S11_SUBS)
-        )
-        maxes.append(f"greatest({cs})")
-    score = " + ".join(maxes)
-    return f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-               {score} AS maxsim
-        FROM v q CROSS JOIN v c
-        WHERE q.vec_id < {S11_QUERIES} AND c.vec_id >= {S11_QUERIES}
-    ),
-    ranked AS (
-        SELECT query_id, corpus_id, maxsim,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY maxsim DESC, corpus_id) AS rank
-        FROM scored
-    )
-    SELECT query_id, corpus_id, round(maxsim, 4) AS maxsim, rank
-    FROM ranked WHERE rank <= {TOPK}
-    ORDER BY query_id, rank
-    """
-
-
-ORACLE["s11_maxsim_topk"] = _s11_oracle()
-QUERIES["s11_maxsim_topk"] = s11_maxsim_topk
-
-
 # ---------------------------------------------------------------------------
 # s12: two-stage retrieval — IVF prefilter → MaxSim re-rank
 # ---------------------------------------------------------------------------
@@ -1147,25 +1059,28 @@ S12_PROBE = 3  # probe more cells than s05's 2: re-ranking wants recall headroom
 
 
 def s12_ivf_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production two-stage retrieval pipeline s11's docstring
-    promises ("at 100 TB the same plan runs after an ANN prefilter"):
-    stage 1 probes the S12_PROBE nearest IVF cells per query (s05's
-    coarse quantizer — candidate count tracks probed-cell occupancy,
-    not corpus size), stage 2 re-ranks ONLY the candidates with the
-    late-interaction MaxSim score (s11's 8-sub-vector Σ max cos).
+    """Two-stage late-interaction retrieval (ColBERT's MaxSim): stage 1
+    probes the S12_PROBE nearest IVF cells per query (s05's coarse
+    quantizer — candidate count tracks probed-cell occupancy, not
+    corpus size), stage 2 re-ranks ONLY the candidates with the MaxSim
+    score: each embedding is 8 token-like sub-vectors, and a (query,
+    doc) pair scores Σ_i max_j cos(q_i, d_j) — each query part matches
+    its best-aligned doc part, the multi-vector semantics
+    single-vector cosine (s01) cannot express.
 
     Plan: centroid table broadcast (tiny), candidate generation is an
     equi-join on the integer cell id, and the re-rank joins candidates
-    to the once-per-row sub-vector projections — queries broadcast,
-    corpus parts join on corpus_id (at scale: colocate by bucketing
-    the projections and the cell table on vec_id). Scoring arithmetic
-    is identical to s11's, so the two operators bracket the
-    recall/cost trade: s11 is the exhaustive truth, s12 the plan you
-    run when the corpus no longer fits a broadcast NLJ scan.
+    to the once-per-row sub-vector projections (8 slices + 8 norms,
+    ``_maxsim_parts``) — queries broadcast, corpus parts join on
+    corpus_id (at scale: colocate by bucketing the projections and the
+    cell table on vec_id).
 
-    Exactness: the IVF assignment, probe ranking, and MaxSim fold are
-    each the deterministic forms the s05/s11 oracles already verify;
-    composing them stays hash-exact.
+    Exactness: the IVF assignment and probe ranking are the
+    deterministic forms the s05 oracle already verifies; every
+    sub-cosine is the same sequential fold both engines compute
+    bit-identically, max is order-exact, and the 8-term sum is written
+    with identical left-association in both engines, so the
+    composition stays hash-exact.
 
     Output: per query, the top-k candidates by MaxSim with their cell.
     """

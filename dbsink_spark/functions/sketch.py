@@ -1,15 +1,16 @@
-"""Sketch kernels shared by the batch operators and their streaming and
-lake twins.
+"""Sketch and fold kernels shared by the batch operators and their
+streaming and lake twins.
 
-Each kernel is the one definition of its cell rule: the batch row
-(``analytics``) and the incremental maintainer (``streaming``) or
-writer (``lake``) call the same function, so the streamed summary is
-the batch summary by construction. The DuckDB oracle SQL strings spell
+Each kernel is the one definition of its rule: the batch row
+(``analytics``) and the incremental maintainer or tracker
+(``streaming``) or writer (``lake``) call the same function, so the
+streamed summary is the batch summary by construction. The DuckDB oracle SQL strings spell
 the rules out independently and do not use these kernels.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -93,3 +94,32 @@ def with_zvalue(
         )
         .drop("_zx", "_zy")
     )
+
+
+def mg_truncate(counts: pd.Series, k: int) -> tuple[pd.Series, int]:
+    """Misra-Gries truncation of an item -> count Series to at most
+    ``k`` counters: subtract the (k+1)-th largest count and keep the
+    strictly positive survivors (the batch form of the MG decrement;
+    Agarwal et al., mergeable summaries). Returns the truncated counts
+    and the subtracted amount, 0 when ``counts`` already fits."""
+    if len(counts) <= k:
+        return counts, 0
+    cut = counts.nlargest(k + 1).iloc[k]
+    return counts[counts > cut] - cut, int(cut)
+
+
+def cusum_fold(
+    xs, s: int, mx: int, alarms: int, mean: int, slack: int, threshold: int
+) -> tuple[int, int, int]:
+    """One-sided CUSUM over ``xs`` in order, from state (S, max S,
+    alarms): S = max(0, S + x - mean - slack); S > threshold counts an
+    alarm and restarts S at 0. Integer arithmetic throughout, so the
+    recurrence is bit-exact against the recursive-CTE oracle. Returns
+    the new state."""
+    for x in xs:
+        s = max(0, s + (int(x) - mean - slack))
+        mx = max(mx, s)
+        if s > threshold:
+            alarms += 1
+            s = 0
+    return s, mx, alarms

@@ -36,8 +36,11 @@ merge would land a replayed batch twice, so it takes one; a keyed
 upsert and an OR/max merge give the same table when replayed, so they
 take none and run no extra statement. The marker is
 ``(sink table, query id, batch id, partition)``, inserted in the
-merge's own transaction: a replay finds it and lands nothing, and
-there is no applied-but-unmarked window. The query id is the
+merge's own transaction: a replay finds it, lands nothing and logs
+the skip, and there is no applied-but-unmarked window. The same
+transaction deletes that partition's markers older than the session's
+``spark.sql.streaming.minBatchesToRetain``: Spark cannot replay a
+batch that old, so the ledger stays bounded. The query id is the
 stream's ``sql.streaming.queryId``, which the checkpoint stores: a
 restart from the same checkpoint keeps it, and a stream on a fresh
 checkpoint gets a new one, so its batch 0 is not mistaken for a
@@ -75,6 +78,7 @@ from __future__ import annotations
 import json
 from collections.abc import Callable
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import pyarrow as pa
 from pyspark import TaskContext
@@ -146,15 +150,28 @@ def stage_sql(table: str, names: list[str], binds: list[str], seq: bool = False)
     return create, head, "(" + ", ".join(binds + (["%s"] if seq else [])) + ")"
 
 
-def batch_marker(df: DataFrame, table: str, batch_id: int | None):
+class Marker(NamedTuple):
+    """A ledger row (the first four fields) and the number of batches
+    of its (sink table, query id, partition) that the ledger keeps."""
+
+    sink_table: str
+    query_id: str
+    batch_id: int
+    part: int
+    retain: int
+
+
+def batch_marker(df: DataFrame, table: str, batch_id: int | None) -> Marker | None:
     """The ledger marker of a driver-side write of ``df`` to ``table``
     (partition ``-1``: the whole batch), or None without a
     ``batch_id``. The query id is a local property of the thread that
     runs a foreachBatch body; it is ``''`` outside a stream."""
     if batch_id is None:
         return None
-    qid = df.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId") or ""
-    return (table, qid, batch_id, -1)
+    spark = df.sparkSession
+    qid = spark.sparkContext.getLocalProperty("sql.streaming.queryId") or ""
+    retain = int(spark.conf.get("spark.sql.streaming.minBatchesToRetain"))
+    return Marker(table, qid, batch_id, -1, retain)
 
 
 def _merge_staged(cur, pg: bool, batch, merge: str, stage) -> int:
@@ -183,15 +200,19 @@ def _merge_staged(cur, pg: bool, batch, merge: str, stage) -> int:
     return cur.rowcount
 
 
-def write_once(connect, dialect: str, batch, merge: str, stage, marker) -> int:
+def write_once(
+    connect, dialect: str, batch, merge: str, stage, marker: Marker | None
+) -> int:
     """Every DBAPI write in the package: on one connection, in one
-    transaction, insert ``marker`` into the ledger (unless None), stage
-    ``batch``, run ``merge`` and commit. ``batch`` is an Arrow table on
-    DuckDB and a list of row params on Postgres, where ``stage`` is its
-    ``stage_sql``. Returns the merge's row count: 0 for an empty batch
-    and for a replay, whose marker is already there and which rolls
-    back. A failed commit raises: foreachBatch must fail, so Spark does
-    not checkpoint the offsets of rows that never landed."""
+    transaction, insert ``marker`` into the ledger and prune its
+    partition's markers older than ``marker.retain`` batches (unless
+    None), stage ``batch``, run ``merge`` and commit. ``batch`` is an
+    Arrow table on DuckDB and a list of row params on Postgres, where
+    ``stage`` is its ``stage_sql``. Returns the merge's row count: 0
+    for an empty batch and for a replay, whose marker is already there
+    and which rolls back and logs the skip. A failed commit raises:
+    foreachBatch must fail, so Spark does not checkpoint the offsets of
+    rows that never landed."""
     if not len(batch):
         return 0
     pg = dialect == "postgres"
@@ -203,12 +224,22 @@ def write_once(connect, dialect: str, batch, merge: str, stage, marker) -> int:
         if not pg:
             conn.begin()
         if marker is not None:
-            ph = ", ".join(["%s" if pg else "?"] * 4)
+            ph = "%s" if pg else "?"
             cur.execute(_LEDGER_DDL)
-            cur.execute(f"INSERT INTO {LEDGER} VALUES ({ph}) ON CONFLICT DO NOTHING", marker)
+            cur.execute(
+                f"INSERT INTO {LEDGER} VALUES ({', '.join([ph] * 4)}) ON CONFLICT DO NOTHING",
+                marker[:4],
+            )
             if (cur.rowcount if pg else cur.fetchone()[0]) == 0:
                 conn.rollback()
+                L.info(f"replay skipped: {LEDGER} already holds {marker[:4]}")
                 return 0
+            cur.execute(
+                f"DELETE FROM {LEDGER} WHERE sink_table = {ph} AND query_id = {ph} "
+                f"AND part = {ph} AND batch_id <= {ph}",
+                (marker.sink_table, marker.query_id, marker.part,
+                 marker.batch_id - marker.retain),
+            )
         n = _merge_staged(cur, pg, batch, merge, stage)
         conn.commit()
         return n
@@ -493,7 +524,7 @@ class SinkWriter:
             exec_ddl(self.connect, self.dialect, _LEDGER_DDL)
 
         def write_part(rows):
-            part = None if marker is None else (*marker[:3], TaskContext.get().partitionId())
+            part = marker and marker._replace(part=TaskContext.get().partitionId())
             written.add(writer._write([writer._row_params(r, out_cols) for r in rows], part))
 
         df.foreachPartition(write_part)

@@ -1,18 +1,8 @@
 from .pipeline import listen_transform, run_stream
 from .rollup import RollupMaintainer
-from .stateful import (
-    enrich_stream,
-    session_aggregate,
-    streaming_dedup,
-    tumbling_aggregate,
-)
 
 __all__ = [
-    "enrich_stream",
     "run_stream",
     "listen_transform",
-    "streaming_dedup",
-    "tumbling_aggregate",
-    "session_aggregate",
     "RollupMaintainer",
 ]

@@ -1,16 +1,8 @@
-"""Stateful streaming operators: watermarked dedup and windowed
-aggregation.
-
-The reference's only stateful behavior is upsert-as-dedup in Postgres
-(reference dbsink/listen.py:160-166). In-engine streaming equivalents:
-
-* ``streaming_dedup`` — drop duplicate keys inside the engine with a
-  watermark bounding state (at 100 TB, state size = keys per watermark
-  horizon, not keys-ever-seen);
-* ``tumbling_aggregate`` / ``session_aggregate`` — event-time windowed
-  rollups with late-data handling, the streaming twins of the batch
-  q18/q19 queries (same grouping semantics).
-"""
+"""Arbitrary-stateful streaming trackers (``applyInPandasWithState``)
+and the stream-stream interval join: operators whose output depends
+on state carried across micro-batches, which no builtin streaming
+aggregation expresses. Where a tracker has a batch twin in
+``analytics``, both call the same kernel in ``functions``."""
 
 from __future__ import annotations
 
@@ -22,56 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-def streaming_dedup(
-    df: DataFrame,
-    keys: list[str],
-    ts_col: str = "time",
-    delay: str = "10 minutes",
-) -> DataFrame:
-    """Watermarked exact dedup on the mapping's upsert keys.
-
-    Rows whose key was already seen within the watermark horizon are
-    dropped, via ``dropDuplicatesWithinWatermark`` — the operator whose
-    state IS evicted by the watermark for arbitrary key subsets.
-    (Plain ``dropDuplicates(keys)`` only reclaims state when the
-    event-time column is part of ``keys``; for a pure key subset its
-    state grows forever.) Downstream the sink's ON CONFLICT still
-    guarantees terminal idempotency — this operator exists to cut
-    redundant sink traffic at scale.
-    """
-    wm = df.withWatermark(ts_col, delay)
-    if not df.isStreaming:
-        # batch twin: no state to bound, plain exact dedup
-        return wm.dropDuplicates(keys)
-    try:
-        return wm.dropDuplicatesWithinWatermark(keys)
-    except AttributeError:  # pragma: no cover - Spark < 3.5
-        return wm.dropDuplicates([*keys, ts_col])
-
-
-def tumbling_aggregate(
-    df: DataFrame,
-    ts_col: str,
-    window: str = "1 hour",
-    keys: list[str] | None = None,
-    delay: str = "30 minutes",
-) -> DataFrame:
-    """Event-time tumbling-window counts/sums with late-data watermark."""
-    group = [F.window(F.col(ts_col), window).alias("win")] + [
-        F.col(k) for k in (keys or [])
-    ]
-    return (
-        df.withWatermark(ts_col, delay)
-        .groupBy(*group)
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            *[F.col(k) for k in (keys or [])],
-            "n_events",
-        )
-    )
+from ..functions.sketch import cusum_fold, mg_truncate
 
 
 DEVICE_SUMMARY_SCHEMA = T.StructType(
@@ -154,53 +97,6 @@ def device_state_tracker(
     )
 
 
-def session_aggregate(
-    df: DataFrame,
-    ts_col: str,
-    gap: str = "30 minutes",
-    keys: list[str] | None = None,
-    delay: str = "30 minutes",
-) -> DataFrame:
-    """Session-window aggregation (gap-based), the streaming twin of the
-    batch sessionizer (analytics.relational.q19)."""
-    group = [F.session_window(F.col(ts_col), gap).alias("win")] + [
-        F.col(k) for k in (keys or [])
-    ]
-    return (
-        df.withWatermark(ts_col, delay)
-        .groupBy(*group)
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("win.start").alias("session_start"),
-            F.col("win.end").alias("session_end"),
-            *[F.col(k) for k in (keys or [])],
-            "n_events",
-        )
-    )
-
-
-def enrich_stream(
-    stream: DataFrame,
-    dim: DataFrame,
-    keys: list[str],
-    how: str = "left",
-) -> DataFrame:
-    """Stream–static enrichment join: every micro-batch joined against a
-    (broadcast) static dimension — the lookup-table pattern (device
-    registry, user attributes, geo metadata) that upgrades raw events
-    in-flight without any stateful join machinery.
-
-    Structured Streaming re-plans the static side per micro-batch, so a
-    dimension refreshed in place is picked up on the next trigger. The
-    broadcast hint keeps the join shuffle-free: the stream side never
-    repartitions, which at 100 TB events/day is the difference between
-    a map-side hash join and re-shuffling the firehose every batch.
-    Dimensions too big to broadcast should be pre-bucketed on the key
-    instead (layout.write_bucketed) — same no-stream-shuffle property.
-    """
-    return stream.join(F.broadcast(dim), keys, how)
-
-
 def interval_join(
     left: DataFrame,
     right: DataFrame,
@@ -243,6 +139,8 @@ def interval_join(
 
 
 _CUSUM_STATE_SCHEMA = "s long, mx long, alarms long, n long"
+
+
 def _cusum_out_schema(key_col: str) -> str:
     return (
         f"{key_col} string, n_points long, cusum long, max_cusum long, "
@@ -267,9 +165,9 @@ def cusum_tracker(
     The recurrence is order-dependent, so rows sort by ``seq_col``
     WITHIN each micro-batch and the caller feeds batches in series
     order (the same contract every ledger/replay source here honors:
-    Kafka partitions by series key preserve per-key order). All
-    arithmetic integer — identical to q90's oracle-verified algebra,
-    so batch and streaming paths agree exactly on the same inputs
+    Kafka partitions by series key preserve per-key order). The step
+    is ``functions.sketch.cusum_fold``, the kernel q90 runs, so batch
+    and streaming paths agree exactly on the same inputs
     (pytest-asserted).
 
     State per series is four longs — RocksDB-backend-friendly, no
@@ -289,16 +187,10 @@ def cusum_tracker(
                 (int(q), int(x)) for q, x in zip(pdf[seq_col], pdf[value_col])
             )
         rows.sort()
-        for _, x in rows:
-            s = s + (x - mean - slack)
-            if s < 0:
-                s = 0
-            if s > mx:
-                mx = s
-            if s > threshold:
-                alarms += 1
-                s = 0
-            n += 1
+        s, mx, alarms = cusum_fold(
+            (x for _, x in rows), s, mx, alarms, mean, slack, threshold
+        )
+        n += len(rows)
         state.update((s, mx, alarms, n))
         yield pd.DataFrame(
             {
@@ -349,10 +241,9 @@ def heavy_hitters_tracker(
     (state is ≤ k (item, count) pairs + two longs per key, REGARDLESS
     of stream length — RocksDB-friendly, never grows).
 
-    Batch merge uses q93's vectorized form: add the micro-batch's
-    exact counts, then subtract the (k+1)-th largest running count and
-    drop non-positives; the subtracted value accumulates in
-    ``deficit``. Invariants maintained across any batch split (both
+    Each micro-batch adds its exact counts, then truncates with
+    ``functions.sketch.mg_truncate``, the kernel q93 runs; the
+    subtracted value accumulates in ``deficit``. Invariants maintained across any batch split (both
     pytest-asserted against a single-pass reference):
 
     * every summary count is a LOWER bound within ``deficit`` of the
@@ -368,19 +259,17 @@ def heavy_hitters_tracker(
         (series,) = key
         if state.exists:
             items, counts, n, deficit = state.get
-            summary = dict(zip(items, counts))
+            summary = pd.Series(list(counts), index=list(items), dtype="int64")
         else:
-            summary, n, deficit = {}, 0, 0
+            summary, n, deficit = pd.Series(dtype="int64"), 0, 0
         for pdf in pdfs:
             vc = pdf[item_col].dropna().value_counts()
             n += int(vc.sum())
-            for item, c in vc.items():
-                summary[item] = summary.get(item, 0) + int(c)
-            if len(summary) > k:
-                cut = sorted(summary.values(), reverse=True)[k]
-                deficit += cut
-                summary = {i: c - cut for i, c in summary.items() if c > cut}
-        ordered = sorted(summary.items(), key=lambda t: (-t[1], t[0]))
+            summary, cut = mg_truncate(summary.add(vc, fill_value=0), k)
+            deficit += cut
+        ordered = sorted(
+            ((i, int(c)) for i, c in summary.items()), key=lambda t: (-t[1], t[0])
+        )
         state.update((
             [i for i, _ in ordered],
             [c for _, c in ordered],
@@ -432,9 +321,8 @@ def session_tracker(
     """Finalized-session emitter — gap-based sessionization that EMITS
     each session exactly once, when it provably cannot grow anymore.
     The streaming twin of batch q19 (analytics.relational), and the
-    capability the builtin ``session_window`` aggregate (used by
-    ``session_aggregate``) can't express: per-session rows in APPEND
-    mode with an explicit close reason.
+    capability the builtin ``session_window`` aggregate can't express:
+    per-session rows in APPEND mode with an explicit close reason.
 
     A session closes two ways:
 
@@ -661,7 +549,7 @@ def sliding_hll_tracker(
         # UTC-explicit epoch arithmetic (calendar.timegm): naive
         # .timestamp() applies the executor OS timezone, which on a
         # non-UTC host would time the slot out hours early and emit
-        # duplicate partial rows (round-8 review)
+        # duplicate partial rows
         import calendar as _cal
         import datetime as _dt
 
@@ -680,74 +568,4 @@ def sliding_hll_tracker(
         stateStructType=_SLIDING_HLL_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# streaming exact-dedup decisions: keeper state carried across batches
-# ---------------------------------------------------------------------------
-
-_DEDUP_STATE_SCHEMA = "keeper long"
-
-
-def _dedup_out_schema(key_col: str, id_col: str) -> str:
-    return f"{key_col} long, {id_col} long, decision string, match_id long"
-
-
-def dedup_decision_tracker(
-    df: DataFrame, key_col: str = "content_hash", id_col: str = "doc_id"
-) -> DataFrame:
-    """Streaming exact-dedup decisions — the stateful twin of d20's
-    exact stage (and of batch d01): keyed by content hash, state is
-    the KEEPER id (first arrival owns the hash), and every arriving
-    row emits a decision: ``keep`` for the hash's first-ever document,
-    ``exact_dup`` + the keeper as ``match_id`` for every later one —
-    including replays and documents arriving in later micro-batches,
-    which is precisely the incremental-ingest semantics d20 computes
-    per batch against the accumulated corpus.
-
-    Rows sort by ``id_col`` WITHIN a micro-batch (deterministic keeper
-    under any executor interleaving); across batches the established
-    keeper persists, so when the caller feeds batches in id order the
-    streaming decisions equal batch d01's min-id clusters exactly
-    (pytest-asserted equivalence).
-
-    State per distinct content hash is ONE long — at scale the state
-    store IS the dedup index (the streaming analog of d20's persisted
-    corpus-hash relation), keyed by the same 8-byte h64 every batch
-    dedup operator joins on.
-    """
-
-    def update(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        (h,) = key
-        keeper = state.get[0] if state.exists else None
-        ids: list[int] = []
-        for pdf in pdfs:
-            ids.extend(int(x) for x in pdf[id_col])
-        ids.sort()
-        out = {key_col: [], id_col: [], "decision": [], "match_id": []}
-        for i in ids:
-            out[key_col].append(h)
-            out[id_col].append(i)
-            if keeper is None:
-                keeper = i
-                out["decision"].append("keep")
-                out["match_id"].append(None)
-            else:
-                # first arrival owns the hash: a smaller id arriving
-                # LATER still dups to the standing keeper (streaming
-                # semantics; equals batch min-id when fed in id order)
-                out["decision"].append("exact_dup")
-                out["match_id"].append(keeper)
-        state.update((keeper,))
-        yield pd.DataFrame(out)
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=_dedup_out_schema(key_col, id_col),
-        stateStructType=_DEDUP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -440,7 +440,7 @@ def test_incremental_near_dups_equals_batch_restriction(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from dbsink_spark.analytics import dedup
-    from dbsink_spark.analytics.incremental import (
+    from dbsink_spark.analytics.ingest import (
         append_batch,
         incremental_near_dups,
         init_store,

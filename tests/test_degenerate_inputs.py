@@ -6,7 +6,7 @@ the s20/s21 "vec_id=0 anchor" class from round 9, swept systematically.
 Its first four seeds caught 20 real bugs: ANSI divide-by-zero job
 aborts (t25 q109 q114 q118 q120 q121 q122 q126 t27 t29), driver-side
 crashes on empty collects (q84 q90 q112 d20 s04 s18), and
-empty-input result-shape divergences (q12/q11 grand-total grouping-set
+empty-input result-shape divergences (q12 grand-total grouping-set
 row, q124 all-NULL agg row, q87 0.0-vs-NULL chi2).
 
 Each (query, seed) pair here is the exact dataset that caught the bug;
@@ -49,7 +49,6 @@ CASES = [
     (63, "d20_incremental_dedup"),
     (63, "t27_zipf_fit"),
     (63, "q121_kendall_tau"),
-    (64, "q11_rollup"),
     (64, "q126_spearman_monthly"),
     (64, "t29_overlap_profile"),
     (64, "q121_kendall_tau"),  # 0-row lineitem: len(NULL) vs size([])

@@ -1,6 +1,5 @@
-"""End-to-end incremental-ingest demo (VERDICT_r08 #8a): the persisted
-dedup index composes with d20's decision semantics and with the
-streaming dedup-decision tracker."""
+"""End-to-end incremental ingest: the persisted dedup index composes
+with d20's decision semantics."""
 
 from __future__ import annotations
 
@@ -128,71 +127,3 @@ def test_ingest_append_grows_index_by_survivors(spark, tmp_path):
         F.col("doc_id").isin(list(surv))
     ).count()
     assert spark.read.parquet(path + "/shingles").count() == s0 + n_bandable
-
-
-def test_ingest_exact_stage_matches_streaming_tracker(spark, tmp_path):
-    """The REAL streaming dedup-decision tracker, fed the corpus as
-    micro-batch 0 and the arriving batch as micro-batch 1 (the exact
-    'day N+1' stream shape), agrees with the persisted-index ingest's
-    EXACT-stage outcomes: tracker 'keep' == ingest keep-or-near (near
-    decisions are the band stage's refinement, invisible to the hash
-    tracker), tracker 'exact_dup' match == ingest's exact match_id."""
-    import json as _json
-    import os as _os
-
-    from pyspark.sql import types as T
-
-    from dbsink_spark.functions.hashing import h64
-    from dbsink_spark.streaming.stateful import dedup_decision_tracker
-
-    corpus, batch = _split(spark)
-    path = str(tmp_path / "idx")
-    build_dedup_index(spark, path, corpus)
-    ing = {
-        r["doc_id"]: (r["decision"], r["match_id"])
-        for r in ingest_batch(spark, path, batch, append=False).collect()
-    }
-
-    indir = tmp_path / "stream_in"
-    indir.mkdir()
-    for bi, df in enumerate((corpus, batch)):
-        rows = sorted(
-            (r["doc_id"], r["content_hash"])
-            for r in df.select(
-                "doc_id", h64(F.col("text")).alias("content_hash")
-            ).collect()
-        )
-        p = indir / f"b{bi}.json"
-        with open(p, "w") as f:
-            for doc_id, h in rows:
-                f.write(_json.dumps({"doc_id": doc_id, "content_hash": h}) + "\n")
-        _os.utime(p, (1_700_000_000 + bi * 60,) * 2)
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("content_hash", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(str(indir))
-    )
-    q = (
-        dedup_decision_tracker(stream)
-        .writeStream.format("memory")
-        .queryName("ingest_tracker")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    assert q.awaitTermination(180), "availableNow drain did not finish"
-    stream_dec = {
-        r["doc_id"]: (r["decision"], r["match_id"])
-        for r in spark.sql("SELECT * FROM ingest_tracker").collect()
-    }
-    assert len(ing) > 0
-    for doc, (dec, mid_) in ing.items():
-        sdec, smid = stream_dec[doc]
-        if dec in ("exact_dup_corpus", "exact_dup_batch"):
-            assert sdec == "exact_dup" and smid == mid_, (doc, dec, mid_, sdec, smid)
-        else:
-            assert sdec == "keep", (doc, dec, sdec)

@@ -14,12 +14,7 @@ from pyspark.sql import functions as F
 from dbsink_spark.mappings import resolve
 from dbsink_spark.sink import SinkWriter, duckdb_connect_factory
 from dbsink_spark.sources import file_stream
-from dbsink_spark.streaming import (
-    listen_transform,
-    run_stream,
-    streaming_dedup,
-    tumbling_aggregate,
-)
+from dbsink_spark.streaming import listen_transform, run_stream
 
 
 def test_stream_end_to_end(spark, tmp_path):
@@ -92,76 +87,6 @@ def test_listen_transform_library_api(spark, tmp_path):
     q.awaitTermination(120)
     assert len(got) == 4
     assert {r["uid"] for r in got} == {"1"}
-
-
-def test_streaming_dedup_semantics(spark):
-    # batch-mode check of the dedup operator's plan semantics
-    from datetime import datetime
-
-    df = spark.createDataFrame(
-        [
-            ("u1", datetime(2024, 1, 1, 0, 0, 0), 1),
-            ("u1", datetime(2024, 1, 1, 0, 1, 0), 2),
-            ("u2", datetime(2024, 1, 1, 0, 2, 0), 3),
-        ],
-        ["uid", "time", "n"],
-    )
-    out = streaming_dedup(df, ["uid"], "time", "10 minutes").collect()
-    assert len(out) == 2
-
-
-def test_streaming_dedup_streaming_mode_bounded_state(spark, tmp_path):
-    """True streaming path: dropDuplicatesWithinWatermark (key-subset
-    dedup whose state the watermark actually evicts)."""
-    from datetime import datetime
-
-    indir = tmp_path / "in"
-    indir.mkdir()
-    rows = [
-        {"uid": "u1", "time": "2024-01-01T00:00:00", "n": 1},
-        {"uid": "u1", "time": "2024-01-01T00:01:00", "n": 2},
-        {"uid": "u2", "time": "2024-01-01T00:02:00", "n": 3},
-    ]
-    with open(indir / "b0.json", "w") as f:
-        for r in rows:
-            f.write(json.dumps(r) + "\n")
-
-    src = (
-        spark.readStream.schema("uid string, time string, n long")
-        .json(str(indir))
-        .withColumn("time", F.to_timestamp("time"))
-    )
-    deduped = streaming_dedup(src, ["uid"], "time", "10 minutes")
-    plan = deduped._jdf.queryExecution().logical().toString().lower()
-    assert "withinwatermark" in plan, plan
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_stream")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r.uid for r in spark.sql("SELECT * FROM dedup_stream").collect()}
-    assert got == {"u1", "u2"}
-    assert spark.sql("SELECT count(*) FROM dedup_stream").collect()[0][0] == 2
-
-
-def test_tumbling_aggregate_semantics(spark):
-    from datetime import datetime
-
-    df = spark.createDataFrame(
-        [
-            ("a", datetime(2024, 1, 1, 0, 10)),
-            ("a", datetime(2024, 1, 1, 0, 50)),
-            ("a", datetime(2024, 1, 1, 1, 10)),
-            ("b", datetime(2024, 1, 1, 0, 20)),
-        ],
-        ["event_type", "ts"],
-    )
-    out = tumbling_aggregate(df, "ts", "1 hour", ["event_type"]).collect()
-    got = {(r.window_start.hour, r.event_type): r.n_events for r in out}
-    assert got == {(0, "a"): 2, (1, "a"): 1, (0, "b"): 1}
 
 
 def test_lake_sink_partitioned(spark, tmp_path):
@@ -351,42 +276,6 @@ def test_compact_lake_bounds_files_and_preserves_rows(spark, tmp_path):
     out = spark.read.parquet(lake)
     assert out.count() == 900
     assert out.groupBy("id").count().filter("count != 3").count() == 0
-
-
-def test_stream_static_enrichment(spark, tmp_path):
-    """Stream-static broadcast join: events upgraded with dimension
-    attributes in-flight; the join plans shuffle-free on the stream
-    side (no hash-partitioning Exchange)."""
-    from dbsink_spark.streaming import enrich_stream
-
-    indir = tmp_path / "ev"
-    indir.mkdir()
-    with open(indir / "b0.json", "w") as f:
-        for i in range(20):
-            f.write(json.dumps({"uid": f"u{i % 4}", "val": i}) + "\n")
-
-    dim = spark.createDataFrame(
-        [(f"u{i}", f"region{i % 2}") for i in range(4)], ["uid", "region"]
-    )
-    schema = "uid STRING, val LONG"
-    stream = spark.readStream.schema(schema).json(str(indir))
-    q = (
-        enrich_stream(stream, dim, ["uid"])
-        .writeStream.format("memory")
-        .queryName("enriched")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM enriched").collect()
-    assert len(rows) == 20
-    assert all(r.region in ("region0", "region1") for r in rows)
-
-    # batch twin of the same join: zero shuffle exchanges (broadcast)
-    from dbsink_spark.analytics.layout import n_exchanges
-
-    batch = enrich_stream(spark.read.schema(schema).json(str(indir)), dim, ["uid"])
-    assert n_exchanges(batch) == 0
 
 
 def test_stream_stream_interval_join(spark, tmp_path):
@@ -909,9 +798,10 @@ def _count(db, table):
         con.close()
 
 
-def test_append_sink_replayed_batch_lands_once(spark, tmp_path):
+def test_append_sink_replayed_batch_lands_once(spark, tmp_path, caplog):
     """An append-only mapping (JsonMap: no upsert keys) takes a ledger
-    marker per batch id: writing batch 7 again lands nothing."""
+    marker per batch id: writing batch 7 again lands nothing, and the
+    log says it skipped a replay (an empty batch also returns 0)."""
     mapping = resolve("JsonMap", "append-topic")
     db = str(tmp_path / "append.duckdb")
     writer = SinkWriter(mapping, duckdb_connect_factory(db), dialect="duckdb")
@@ -921,10 +811,44 @@ def test_append_sink_replayed_batch_lands_once(spark, tmp_path):
     )
     out = mapping.transform(df)
     assert writer.write_batch(out, 7) == 5
+    assert "replay skipped" not in caplog.text
     assert writer.write_batch(out, 7) == 0  # replay
+    assert f"replay skipped: _dbsink_ledger already holds ('{mapping.table}', '', 7, -1)" in caplog.text
     assert _count(db, mapping.table) == 5
     assert writer.write_batch(out, 8) == 5  # a new batch id lands
     assert _count(db, mapping.table) == 10
+
+
+def test_ledger_keeps_only_retained_batches(spark, tmp_path):
+    """Spark can replay only the last ``minBatchesToRetain`` batches, so
+    each marked write deletes its sink's older markers: the ledger
+    stays bounded on a long-running append stream, and a replay of a
+    retained batch is still skipped."""
+    from dbsink_spark.sink import LEDGER
+
+    mapping = resolve("JsonMap", "retain-topic")
+    db = str(tmp_path / "retain.duckdb")
+    writer = SinkWriter(mapping, duckdb_connect_factory(db), dialect="duckdb")
+    writer.ensure_table(drop=True)
+    out = mapping.transform(
+        spark.createDataFrame([("k", json.dumps({"n": 1}))], ["key", "value"])
+    )
+    key = "spark.sql.streaming.minBatchesToRetain"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        for batch_id in range(4):
+            assert writer.write_batch(out, batch_id) == 1
+        assert writer.write_batch(out, 3) == 0  # replay of a retained batch
+    finally:
+        spark.conf.set(key, old)
+    con = duckdb.connect(db)
+    try:
+        kept = con.execute(f"SELECT batch_id FROM {LEDGER} ORDER BY 1").fetchall()
+    finally:
+        con.close()
+    assert kept == [(2,), (3,)]
+    assert _count(db, mapping.table) == 4
 
 
 def test_stream_replay_after_lost_commit_lands_once(spark, tmp_path):
@@ -1578,96 +1502,6 @@ def test_sliding_hll_tracker_equals_batch_reference(spark, tmp_path):
     assert len(got) > 5
 
 
-def test_dedup_decision_tracker_equals_batch_d01(spark, tmp_path):
-    """E12 streaming dedup: decisions from id-ordered micro-batches
-    must equal batch d01's min-id clusters — keeps are exactly the
-    keepers, every dup maps to its cluster's keeper — and a REPLAY of
-    the first batch over the same checkpoint-free stream must emit
-    only exact_dup rows pointing at the established keepers."""
-    import os as _os
-
-    from dbsink_spark.analytics.dedup import d01_dedup_exact
-    from dbsink_spark.analytics.tables import Tables
-    from dbsink_spark.functions.hashing import h64
-    from dbsink_spark.streaming.stateful import dedup_decision_tracker
-    from pyspark.sql import functions as F
-
-    SF = "/root/testdata/sf0.001"
-    docs = (
-        Tables(spark, SF)
-        .documents.select("doc_id", h64(F.col("text")).alias("content_hash"))
-        .collect()
-    )
-    rows = sorted((r["doc_id"], r["content_hash"]) for r in docs)
-    third = len(rows) // 3
-    # three id-ordered batches + a REPLAY of batch 0 as a fourth
-    # micro-batch of the SAME run (memory-sink queries cannot recover
-    # a checkpoint, but state persists across micro-batches in-run)
-    batches = [rows[:third], rows[third : 2 * third], rows[2 * third :], rows[:third]]
-
-    indir = tmp_path / "dedup_in"
-    indir.mkdir()
-    for bi, chunk in enumerate(batches):
-        p = indir / f"b{bi}.json"
-        with open(p, "w") as f:
-            for doc_id, h in chunk:
-                f.write(json.dumps({"doc_id": doc_id, "content_hash": h}) + "\n")
-        _os.utime(p, (1_700_000_000 + bi * 60,) * 2)
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("content_hash", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(indir))
-    )
-    out = dedup_decision_tracker(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_decisions")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt_dedup"))
-        .start()
-    )
-    assert q.awaitTermination(180), "availableNow drain did not finish"
-    from collections import defaultdict
-
-    got = defaultdict(list)
-    for r in spark.sql("SELECT * FROM dedup_decisions").collect():
-        got[r["doc_id"]].append((r["decision"], r["match_id"]))
-
-    batch = {
-        r["doc_id"]: (r["keeper_id"], r["is_dup"])
-        for r in d01_dedup_exact(spark, SF).collect()
-    }
-    assert sorted(got) == sorted(batch)
-    replay_ids = {doc_id for doc_id, _ in batches[0]}
-    n_replay_dups = 0
-    for doc_id, decisions in got.items():
-        keeper_id, is_dup = batch[doc_id]
-        # first-arrival decision must equal batch d01's min-id cluster
-        if is_dup:
-            first = ("exact_dup", keeper_id)
-        else:
-            first = ("keep", None)
-        assert first in decisions, (doc_id, decisions)
-        if doc_id in replay_ids:
-            # the replayed copy hits the ESTABLISHED keeper
-            assert len(decisions) == 2, (doc_id, decisions)
-            others = [d for d in decisions if d != first] or [first]
-            assert others[0] == ("exact_dup", keeper_id), (doc_id, decisions)
-            n_replay_dups += 1
-        else:
-            assert decisions == [first], (doc_id, decisions)
-    assert n_replay_dups == len(replay_ids)  # dup path non-vacuous
-
-
 def test_countmin_estimate_absent_cells_count_as_zero(spark, tmp_path):
     """Review regression: the served point estimate must treat an
     ABSENT grid cell as zero. A never-streamed item whose d=0 bucket
@@ -1859,3 +1693,28 @@ def test_maintainer_serving_sql_runs_on_live_postgres(spark):
                 c2.close()
             except Exception:
                 pass
+
+
+def test_streaming_and_analytics_import_independently():
+    """Layering: a streaming tracker and its batch twin share kernels
+    through ``functions``, never by importing each other. In a fresh
+    interpreter, loading every ``dbsink_spark.streaming`` module loads
+    no ``dbsink_spark.analytics`` module, and the other way round."""
+    import os
+    import subprocess
+    import sys
+
+    probe = (
+        "import importlib, pkgutil, sys\n"
+        "pkg = importlib.import_module('dbsink_spark.{0}')\n"
+        "for m in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + '.'):\n"
+        "    importlib.import_module(m.name)\n"
+        "print(sorted(n for n in sys.modules if n.startswith('dbsink_spark.{1}')))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for pkg, other in (("streaming", "analytics"), ("analytics", "streaming")):
+        out = subprocess.run(
+            [sys.executable, "-c", probe.format(pkg, other)],
+            cwd=root, capture_output=True, text=True, check=True,
+        )
+        assert out.stdout.strip() == "[]", (pkg, out.stdout)
