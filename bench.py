@@ -173,8 +173,8 @@ def main() -> None:
             df.unpersist()
         # BPE-accurate token budget of the landed lake (VERDICT_r11 #8
         # stretch): the manifest's n_tokens is the whitespace counter;
-        # this is the budget a trainer actually consumes — t19's gated
-        # segmentation core applied to the curated parquet, per split.
+        # this is the budget a trainer actually consumes — BPE
+        # segmentation applied to the curated parquet, per split.
         from dbsink_spark.analytics.curation import bpe_token_budget
 
         t0 = time.time()
@@ -242,7 +242,7 @@ def main() -> None:
     # The driver records only the LAST 2000 bytes of stdout (r03: the
     # 2425-byte compact line with full query names still overflowed it
     # and 'parsed' came back null). The stdout line therefore keys each
-    # query by its unique short prefix (q01, d03, t14, ...) — 1.2 KB,
+    # query by its unique short prefix (q01, d03, t12, ...) — 1.2 KB,
     # fits with headroom — while the pretty artifact with full names
     # goes to BENCH_LOCAL.json so per-query regressions stay diffable.
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"), "w") as f:

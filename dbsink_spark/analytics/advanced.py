@@ -122,16 +122,6 @@ def q26_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q27_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width value histogram (bucket = floor(value/50))."""
-    e = Tables(spark, sf_dir).events
-    return (
-        e.groupBy(F.floor(F.col("value") / 50).cast("long").alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("bucket")
-    )
-
-
 def q29_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate sketches (HLL distinct + approx percentile) — the
     100 TB path for q10/q26.
@@ -233,12 +223,6 @@ ORACLE: dict[str, str] = {
         GROUP BY event_type
         ORDER BY event_type
     """,
-    "q27_histogram": """
-        SELECT floor(value / 50)::BIGINT AS bucket, count(*) AS n
-        FROM events
-        GROUP BY 1
-        ORDER BY 1
-    """,
     "q29_approx_sketches": """
         SELECT o_orderpriority,
                count(DISTINCT o_custkey) AS n_customers,
@@ -256,7 +240,6 @@ QUERIES = {
     "q23_pivot": q23_pivot,
     "q25_above_segment_avg": q25_above_segment_avg,
     "q26_percentiles": q26_percentiles,
-    "q27_histogram": q27_histogram,
     "q29_approx_sketches": q29_approx_sketches,
 }
 
@@ -311,71 +294,6 @@ ORACLE["q37_time_gapfill"] = """
 """
 
 QUERIES["q37_time_gapfill"] = q37_time_gapfill
-
-
-RANGE_WINDOW_MIN = 10  # look-ahead window (minutes) for the range join
-
-
-def q38_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval range join: for every ``error`` event, count the same
-    user's events (and purchases) in the following ``(ts, ts+10min]``
-    window — the "what happened after the error" funnel query, and the
-    second classic timeseries join shape next to q22's as-of join.
-
-    Plan shape: Catalyst plans this as an EQUI-join on user_id with the
-    range predicate applied as a join filter — per-user blocks are
-    small, so the pair enumeration is bounded by per-user event counts,
-    never a cross join. At 100 TB with hot users, pre-bucket both sides
-    by (user_id, time_bucket) so a row only meets its own and the next
-    bucket (bounded-band join), or let AQE skew-split the hot keys.
-    """
-    e = Tables(spark, sf_dir).events
-    errors = e.filter(F.col("event_type") == "error").select(
-        F.col("event_id").alias("err_id"),
-        F.col("user_id").alias("uid"),
-        F.col("ts").alias("err_ts"),
-    )
-    follow = e.select(
-        F.col("user_id").alias("f_uid"),
-        F.col("ts").alias("f_ts"),
-        F.col("event_type").alias("f_type"),
-    )
-    cond = (
-        (F.col("uid") == F.col("f_uid"))
-        & (F.col("f_ts") > F.col("err_ts"))
-        & (F.col("f_ts") <= F.col("err_ts") + F.expr(f"INTERVAL {RANGE_WINDOW_MIN} MINUTES"))
-    )
-    return (
-        errors.join(follow, cond, "left")
-        .groupBy("err_id", "uid")
-        .agg(
-            F.count("f_ts").alias("n_follow"),
-            F.coalesce(
-                F.sum((F.col("f_type") == "purchase").cast("int")), F.lit(0)
-            ).cast("long").alias("n_purchase"),
-        )
-        .select(F.col("err_id").alias("event_id"), F.col("uid").alias("user_id"),
-                "n_follow", "n_purchase")
-        .orderBy("event_id")
-    )
-
-
-ORACLE["q38_range_join"] = f"""
-    SELECT e.event_id,
-           e.user_id,
-           count(f.ts)                                              AS n_follow,
-           coalesce(sum((f.event_type = 'purchase')::INT), 0)::BIGINT AS n_purchase
-    FROM events e
-    LEFT JOIN events f
-      ON f.user_id = e.user_id
-     AND f.ts > e.ts
-     AND f.ts <= e.ts + INTERVAL {RANGE_WINDOW_MIN} MINUTE
-    WHERE e.event_type = 'error'
-    GROUP BY e.event_id, e.user_id
-    ORDER BY e.event_id
-"""
-
-QUERIES["q38_range_join"] = q38_range_join
 
 
 def q39_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -602,56 +520,6 @@ ORACLE["q42_time_weighted"] = """
 QUERIES["q42_time_weighted"] = q42_time_weighted
 
 
-def q44_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RANGE-frame window: per event, the user's trailing 1-hour sum and
-    count — a time-interval frame (peers included by VALUE distance, not
-    row offset), the moving-window shape q15's ROWS frame can't express
-    over irregular event times.
-
-    Frame bounds ride whole epoch-seconds so the window semantics are
-    identical across engines; the summed value is the 2-decimal fixed
-    point long. One shuffle on user_id, then an ordered range scan per
-    partition.
-    """
-    e = Tables(spark, sf_dir).events
-    base = e.select(
-        "event_id",
-        "user_id",
-        F.unix_seconds(F.col("ts")).alias("s"),
-        F.round(F.col("value") * 100).cast("long").alias("v"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("s"))
-        .rangeBetween(-3600, Window.currentRow)
-    )
-    return base.select(
-        "event_id",
-        "user_id",
-        F.sum("v").over(w).alias("sum_1h_e2"),
-        F.count(F.lit(1)).over(w).alias("n_1h"),
-    ).orderBy("event_id")
-
-
-ORACLE["q44_range_frame"] = """
-    WITH base AS (
-        SELECT event_id, user_id,
-               epoch_us(ts) // 1000000    AS s,
-               round(value * 100)::BIGINT AS v
-        FROM events
-    )
-    SELECT event_id, user_id,
-           sum(v) OVER (PARTITION BY user_id ORDER BY s
-                        RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)::BIGINT AS sum_1h_e2,
-           count(*) OVER (PARTITION BY user_id ORDER BY s
-                          RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW) AS n_1h
-    FROM base
-    ORDER BY event_id
-"""
-
-QUERIES["q44_range_frame"] = q44_range_frame
-
-
 def q45_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-sequence transition matrix: per-user lag over the ordered
     event stream, counted by (previous, next) event-type pair — the
@@ -697,7 +565,7 @@ MAD_K = 3  # flag |x - median| > K * MAD
 def q46_mad_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust anomaly summary per event type: median / MAD (median
     absolute deviation) outlier counts — the heavy-tail-safe twin of
-    the z-score detector (q32), which a single spike can blind.
+    the z-score detector, which a single spike can blind.
 
     Exactness: values are exact 2-decimals, so everything rides scaled
     longs — ``med2`` = 2·median(value·100) and ``mad4`` = 4·MAD(value·100)
@@ -835,7 +703,7 @@ def q48_interp_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     missing bucket with the time-weighted blend of its neighbors.
 
     Exactness: bucket values are exact 2-decimal scaled longs
-    (``round(value*100)``, the q32 playbook); the interpolated value
+    (``round(value*100)``); the interpolated value
 
         (v0·(t1−t) + v1·(t−t0)) div (t1−t0)
 
@@ -1122,8 +990,8 @@ def q53_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     Width/slide = 4, so the window explode is a fixed 4× row fanout
     BEFORE the aggregate — Spark's built-in window() generates the
     assignments map-side and the only shuffle is the final combinable
-    aggregate keyed by (window, type). Sums ride scaled longs (the q32
-    playbook), counts are exact.
+    aggregate keyed by (window, type). Sums ride scaled longs, counts
+    are exact.
     """
     e = Tables(spark, sf_dir).events
     w = F.window("ts", f"{HOP_WIDTH_S} seconds", f"{HOP_SLIDE_S} seconds")
@@ -1213,161 +1081,6 @@ ORACLE["q56_bitmap_distinct"] = """
 """
 
 QUERIES["q56_bitmap_distinct"] = q56_bitmap_distinct
-
-
-# ---------------------------------------------------------------------------
-# q57: bloom-filter semi-join pruning (runtime-filter pattern)
-# ---------------------------------------------------------------------------
-
-BLOOM_M = 1 << 14  # filter bits (words = M/64)
-BLOOM_K = 3  # probes per key
-
-
-def q57_bloom_semi_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter semi-join pruning with exact false-positive
-    accounting — the runtime-filter pattern that replaces shuffling a
-    100 TB fact side for a selective semi join: the build side's keys
-    compress into an M-bit filter (BLOOM_M/8 bytes — broadcastable at
-    any scale), the fact side tests membership map-side, and only
-    bloom-passing rows continue to the exact join.
-
-    The filter is the q56 word-bitmap machinery loaded with BLOOM_K
-    affine rehashes per key (portable h64/affine, so DuckDB builds the
-    bit-identical filter and the FP accounting is value-exact). Output
-    per returnflag: rows, bloom-passed rows, true-semi-join rows, and
-    the false positives the exact join must still discard — the
-    cost/benefit number a planner needs before injecting the filter.
-
-    Plan shape — the actual runtime-filter mechanics: the built filter
-    is BLOOM_M/256 words max (a few KB), so it leaves the cluster as a
-    LITERAL map expression compiled into the fact-side scan (exactly
-    how Spark's InjectRuntimeFilter ships its bloom subquery result).
-    The bloom test is therefore pure map-side compute on the fact rows
-    — no distinct, no probe-side shuffle, no join for the test itself;
-    the only joins left are the broadcast truth join (for the FP
-    accounting this audit emits) and the final combinable aggregate.
-    """
-    from ..functions.hashing import MINHASH_COEFFS, affine, h64
-
-    t = Tables(spark, sf_dir)
-    build_keys = t.orders.filter(F.col("o_orderpriority") == "1-URGENT").select(
-        F.col("o_orderkey").alias("k")
-    )
-    coeffs = MINHASH_COEFFS[:BLOOM_K]
-
-    def probe_idx(key_col):
-        return [affine(h64(key_col), a, b) % BLOOM_M for (a, b) in coeffs]
-
-    words = (
-        build_keys.select(
-            F.explode(F.array(*probe_idx(F.col("k")))).alias("idx")
-        )
-        .select(
-            # 32-bit words: DuckDB's << raises on 1<<63 (negative
-            # BIGINT), so both engines pack bits into the low half
-            F.shiftright("idx", 5).alias("word"),
-            F.expr("shiftleft(CAST(1 AS BIGINT), CAST(idx % 32 AS INT))").alias("bit"),
-        )
-        .groupBy("word")
-        .agg(F.bit_or("bit").alias("bits"))
-    )
-    # ship the filter as a literal: a dense word array indexed by
-    # word id (k-sized driver collect, like the centroid codebooks /
-    # t19 merge table). An ARRAY literal gives O(1) element_at per
-    # probe — a map literal would linear-scan its entries per lookup.
-    wmap = {r["word"]: r["bits"] for r in words.collect()}
-    # ONE parsed array literal instead of BLOOM_M/32 = 512 py4j lit()
-    # round trips (r12, guide §7.3) — the analyzed tree is identical
-    bloom = F.expr(
-        "array(" + ", ".join(f"{wmap.get(w, 0)}L" for w in range(BLOOM_M // 32)) + ")"
-    )
-
-    def bloom_test(hash_col):
-        # probes share ONE md5 per row (the projected hash column);
-        # each probe is then two integer ops + an O(1) array index
-        cond = None
-        for a, b in coeffs:
-            idx = affine(hash_col, a, b) % BLOOM_M
-            word = F.shiftright(idx, 5)
-            # 1 << (idx % 32) with a COLUMN shift amount: pyspark's
-            # shiftleft only takes a literal, so use 2^n (exact in
-            # double for n <= 31) and cast back
-            bit = F.pow(F.lit(2.0), (idx % 32).cast("double")).cast("long")
-            hit = (
-                F.element_at(bloom, (word + 1).cast("int")).bitwiseAND(bit) != 0
-            )
-            cond = hit if cond is None else cond & hit
-        return cond
-
-    li = t.lineitem.select("l_orderkey", "l_returnflag")
-    true_keys = build_keys.select(F.col("k").alias("l_orderkey")).withColumn(
-        "true_pass", F.lit(1)
-    )
-    flagged = (
-        li.withColumn("_h", h64(F.col("l_orderkey")))
-        .withColumn("bloom_pass", bloom_test(F.col("_h")).cast("int"))
-        .join(F.broadcast(true_keys), "l_orderkey", "left")
-        .withColumn("true_pass", F.coalesce("true_pass", F.lit(0)))
-    )
-    return (
-        flagged.groupBy("l_returnflag")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum("bloom_pass").cast("long").alias("n_bloom_pass"),
-            F.sum("true_pass").cast("long").alias("n_true_pass"),
-            (F.sum("bloom_pass") - F.sum("true_pass")).cast("long").alias("n_false_pos"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
-def _q57_oracle() -> str:
-    from ..functions.hashing import MINHASH_COEFFS, affine_sql, h64_sql
-
-    coeffs = MINHASH_COEFFS[:BLOOM_K]
-
-    def probes_sql(expr: str) -> str:
-        return ", ".join(
-            f"({affine_sql(h64_sql(expr), a, b)} % {BLOOM_M})" for (a, b) in coeffs
-        )
-
-    return f"""
-    WITH build_keys AS (
-        SELECT o_orderkey AS k FROM orders WHERE o_orderpriority = '1-URGENT'
-    ), bprobe AS (
-        SELECT unnest([{probes_sql("k::VARCHAR")}]) AS idx FROM build_keys
-    ), words AS (
-        SELECT idx // 32 AS word, bit_or(1::BIGINT << (idx % 32)::INT) AS bits
-        FROM bprobe GROUP BY 1
-    ), pkeys AS (
-        SELECT DISTINCT l_orderkey AS pk FROM lineitem
-    ), pprobe AS (
-        SELECT pk, unnest([{probes_sql("pk::VARCHAR")}]) AS idx FROM pkeys
-    ), key_pass AS (
-        SELECT p.pk,
-               (sum(CASE WHEN (coalesce(w.bits, 0) & (1::BIGINT << (p.idx % 32)::INT)) <> 0
-                         THEN 1 ELSE 0 END) = {BLOOM_K})::INT AS bloom_pass
-        FROM pprobe p
-        LEFT JOIN words w ON w.word = p.idx // 32
-        GROUP BY p.pk
-    ), key_flags AS (
-        SELECT kp.pk, kp.bloom_pass,
-               CASE WHEN bk.k IS NULL THEN 0 ELSE 1 END AS true_pass
-        FROM key_pass kp LEFT JOIN build_keys bk ON bk.k = kp.pk
-    )
-    SELECT li.l_returnflag,
-           count(*)::BIGINT                                AS n_rows,
-           sum(kf.bloom_pass)::BIGINT                      AS n_bloom_pass,
-           sum(kf.true_pass)::BIGINT                       AS n_true_pass,
-           (sum(kf.bloom_pass) - sum(kf.true_pass))::BIGINT AS n_false_pos
-    FROM lineitem li JOIN key_flags kf ON kf.pk = li.l_orderkey
-    GROUP BY li.l_returnflag
-    ORDER BY li.l_returnflag
-    """
-
-
-ORACLE["q57_bloom_semi_prune"] = _q57_oracle()
-QUERIES["q57_bloom_semi_prune"] = q57_bloom_semi_prune
 
 
 # ---------------------------------------------------------------------------
@@ -1559,7 +1272,7 @@ def q60_sample_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines, retries, and partitionings — a property rand()-sampling
     loses under speculative execution. l_quantity is integer-valued,
     so the double sums are exact and engine-order-independent; the
-    error ratio is floor-scaled (q36 pattern) to stay boundary-proof.
+    error ratio is floor-scaled to stay boundary-proof.
 
     Plan: one scan computes BOTH branches (conditional aggregation on
     the hash residue) — the sample costs no second pass.
@@ -2823,99 +2536,6 @@ QUERIES["q73_clamped_running_sum"] = q73_clamped_running_sum
 
 
 # ---------------------------------------------------------------------------
-# q76: join-size profiling from per-key count profiles (planner stats)
-# ---------------------------------------------------------------------------
-
-
-def q76_join_size_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-cardinality profiling WITHOUT executing the join — the
-    planner pre-flight that completes the introspection trio: q72
-    profiles shuffle-key skew (data side), introspect.plan_stats
-    audits the compiled plan (plan side), and this computes, for each
-    candidate join, its EXACT output cardinality and per-key skew from
-    per-key count profiles alone:
-
-        |A ⋈ B on k| = Σ_k cnt_A(k) · cnt_B(k)
-
-    Cost model (the whole point): two map-side-combinable key-count
-    aggregations + one key-cardinality-sized join of the count tables —
-    O(|keys|) state instead of O(|join output|) work, so you learn a
-    join would explode (or which key dominates its output) for the
-    price of two scans. At 100 TB this is how you budget the shuffle
-    before committing to it; the max-key share tells you whether to
-    salt (q72's remedy) before the first real run.
-
-    All outputs are exact BIGINT (products and sums of counts): the
-    "estimate" is exact because count-by-key is a lossless profile —
-    swap the count tables for KMV/theta sketches (q54/q65 machinery)
-    when even the key profile is too large, trading exactness for
-    state, same query shape.
-    """
-    t = Tables(spark, sf_dir)
-
-    def profile(name: str, left: DataFrame, lk: str, right: DataFrame, rk: str) -> DataFrame:
-        la = left.groupBy(F.col(lk).alias("k")).agg(F.count(F.lit(1)).alias("ca"))
-        rb = right.groupBy(F.col(rk).alias("k")).agg(F.count(F.lit(1)).alias("cb"))
-        per_key = la.join(rb, "k").select(
-            "k", (F.col("ca") * F.col("cb")).alias("rows_k")
-        )
-        return per_key.agg(
-            F.lit(name).alias("join_name"),
-            F.coalesce(F.sum("rows_k"), F.lit(0)).alias("est_rows"),
-            F.coalesce(F.max("rows_k"), F.lit(0)).alias("max_key_rows"),
-            F.count(F.lit(1)).alias("n_match_keys"),
-            F.coalesce(
-                F.expr("max(rows_k) * 10000 div sum(rows_k)"), F.lit(0)
-            ).alias("max_key_share_bp"),
-        )
-
-    outs = [
-        profile("customer_orders", t.customer, "c_custkey", t.orders, "o_custkey"),
-        profile("orders_lineitem", t.orders, "o_orderkey", t.lineitem, "l_orderkey"),
-        profile("part_lineitem", t.part, "p_partkey", t.lineitem, "l_partkey"),
-        profile("supplier_lineitem", t.supplier, "s_suppkey", t.lineitem, "l_suppkey"),
-    ]
-    res = outs[0]
-    for d in outs[1:]:
-        res = res.unionByName(d)
-    # a join with ZERO matching keys profiles as est_rows=0 from an
-    # empty per-key frame; drop it like the oracle's GROUP BY does
-    # (the absence of the row IS the "this join produces nothing"
-    # signal)
-    return res.filter(F.col("n_match_keys") > 0).orderBy("join_name")
-
-
-ORACLE["q76_join_size_profile"] = """
-    WITH prof AS (
-        SELECT 'customer_orders' AS join_name, a.k, a.ca * b.cb AS rows_k
-        FROM (SELECT c_custkey AS k, count(*) AS ca FROM customer GROUP BY 1) a
-        JOIN (SELECT o_custkey AS k, count(*) AS cb FROM orders GROUP BY 1) b USING (k)
-        UNION ALL
-        SELECT 'orders_lineitem', a.k, a.ca * b.cb
-        FROM (SELECT o_orderkey AS k, count(*) AS ca FROM orders GROUP BY 1) a
-        JOIN (SELECT l_orderkey AS k, count(*) AS cb FROM lineitem GROUP BY 1) b USING (k)
-        UNION ALL
-        SELECT 'part_lineitem', a.k, a.ca * b.cb
-        FROM (SELECT p_partkey AS k, count(*) AS ca FROM part GROUP BY 1) a
-        JOIN (SELECT l_partkey AS k, count(*) AS cb FROM lineitem GROUP BY 1) b USING (k)
-        UNION ALL
-        SELECT 'supplier_lineitem', a.k, a.ca * b.cb
-        FROM (SELECT s_suppkey AS k, count(*) AS ca FROM supplier GROUP BY 1) a
-        JOIN (SELECT l_suppkey AS k, count(*) AS cb FROM lineitem GROUP BY 1) b USING (k)
-    )
-    SELECT join_name,
-           sum(rows_k)::BIGINT AS est_rows,
-           max(rows_k)::BIGINT AS max_key_rows,
-           count(*)::BIGINT AS n_match_keys,
-           (max(rows_k) * 10000 // sum(rows_k))::BIGINT AS max_key_share_bp
-    FROM prof
-    GROUP BY join_name
-    ORDER BY join_name
-"""
-QUERIES["q76_join_size_profile"] = q76_join_size_profile
-
-
-# ---------------------------------------------------------------------------
 # q77: bitmap-index serving (conjunctive predicate counts from bitmaps)
 # ---------------------------------------------------------------------------
 
@@ -3159,126 +2779,6 @@ ORACLE["q79_attribution"] = f"""
     ORDER BY model, touch_type
 """
 QUERIES["q79_attribution"] = q79_attribution
-
-
-# ---------------------------------------------------------------------------
-# q80: double exponential smoothing forecast (Holt's linear trend)
-# ---------------------------------------------------------------------------
-
-Q80_HORIZON = 7  # days ahead to forecast
-
-
-def q80_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Holt's linear-trend forecast per event type: daily value totals
-    smoothed by the classic recurrences (α = β = 1/2)
-
-        level_t = α·y_t + (1−α)(level_{t−1} + trend_{t−1})
-        trend_t = β(level_t − level_{t−1}) + (1−β)·trend_{t−1}
-
-    and a 7-day-ahead projection ``level + h·trend`` — the
-    second member of the forecasting family (q06 fits one global
-    linear regression; Holt adapts level AND slope recursively, which
-    is what short-horizon ops dashboards actually run).
-
-    The recurrence is order-dependent state (the sequential tier, like
-    q73): computed in ONE mapInPandas sweep over type-partitioned,
-    day-sorted daily aggregates. α = β = 1/2 are exact binary
-    fractions and the daily inputs are integer cents, so every
-    intermediate is an exact dyadic double on both engines; the DuckDB
-    oracle replays the identical recurrence as a RECURSIVE CTE —
-    bit-equal, no tolerance.
-
-    Scale: the heavy work is the per-(type, day) aggregation — one
-    map-side-combinable shuffle over the corpus; the smoothing pass
-    runs over |types|·|days| rows (dashboard-sized, thousands at
-    most). Series state is O(1); horizon extension is arithmetic.
-    """
-    import pandas as pd
-
-    e = Tables(spark, sf_dir).events
-    daily = (
-        e.groupBy(
-            "event_type", F.date_trunc("day", "ts").alias("day")
-        )
-        .agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("y_c"))
-    )
-
-    def smooth(batches):
-        cur = None
-        level = trend = 0.0
-        first = True
-        n = 0
-        out = {"event_type": [], "n_days": [], "level_c": [], "trend_c": [],
-               "forecast_c": []}
-
-        def emit():
-            out["event_type"].append(cur)
-            out["n_days"].append(n)
-            out["level_c"].append(level)
-            out["trend_c"].append(trend)
-            out["forecast_c"].append(level + Q80_HORIZON * trend)
-
-        for pdf in batches:
-            for et, y in zip(pdf["event_type"].to_numpy(), pdf["y_c"].to_numpy()):
-                if et != cur:
-                    if cur is not None:
-                        emit()
-                    cur, level, trend, first, n = et, 0.0, 0.0, True, 0
-                y = float(y)
-                if first:
-                    level, trend, first = y, 0.0, False
-                else:
-                    prev = level
-                    level = 0.5 * y + 0.5 * (level + trend)
-                    trend = 0.5 * (level - prev) + 0.5 * trend
-                n += 1
-        if cur is not None:
-            emit()
-        yield pd.DataFrame(out)
-
-    return (
-        daily.repartition("event_type")
-        .sortWithinPartitions("event_type", "day")
-        .mapInPandas(
-            smooth,
-            "event_type string, n_days long, level_c double, trend_c double,"
-            " forecast_c double",
-        )
-        .orderBy("event_type")
-    )
-
-
-ORACLE["q80_holt_forecast"] = f"""
-    WITH RECURSIVE daily AS (
-        SELECT event_type, date_trunc('day', ts) AS day,
-               sum(round(value * 100)::BIGINT) AS y_c
-        FROM events GROUP BY 1, 2
-    ),
-    seq AS (
-        SELECT event_type, y_c,
-               row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
-        FROM daily
-    ),
-    nd AS (SELECT event_type, max(rn) AS n_days FROM seq GROUP BY 1),
-    hw(event_type, rn, level_c, trend_c) AS (
-        SELECT event_type, rn, y_c::DOUBLE, 0.0::DOUBLE
-        FROM seq WHERE rn = 1
-        UNION ALL
-        SELECT s.event_type, s.rn,
-               0.5 * s.y_c + 0.5 * (h.level_c + h.trend_c),
-               0.5 * ((0.5 * s.y_c + 0.5 * (h.level_c + h.trend_c))
-                      - h.level_c) + 0.5 * h.trend_c
-        FROM hw h JOIN seq s
-          ON s.event_type = h.event_type AND s.rn = h.rn + 1
-    )
-    SELECT h.event_type,
-           n.n_days::BIGINT AS n_days,
-           h.level_c, h.trend_c,
-           h.level_c + {Q80_HORIZON} * h.trend_c AS forecast_c
-    FROM hw h JOIN nd n ON h.event_type = n.event_type AND h.rn = n.n_days
-    ORDER BY h.event_type
-"""
-QUERIES["q80_holt_forecast"] = q80_holt_forecast
 
 
 # ---------------------------------------------------------------------------
@@ -4193,7 +3693,7 @@ def q87_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     regression; this is the test a data-quality pipeline runs on
     label×source grids to catch drift).
 
-    Cross-engine float exactness uses the ordered-fold pattern (q80's
+    Cross-engine float exactness uses the ordered-fold pattern (q90's
     recurrence discipline): marginals are integer window sums over the
     cell grid, each cell's (O−E)²/E term is computed with an identical
     op sequence, and the final reduction folds the terms in (status,
@@ -4558,7 +4058,7 @@ def q90_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-sided CUSUM change-point detection over the MONTHLY order
     revenue series: S_t = max(0, S_{t-1} + (x_t − μ − k)), alarm and
     restart when S_t > H — the sequential-state member of the anomaly
-    family (q32 z-score and q69 seasonal residuals are memoryless;
+    family (q46 MAD and q69 seasonal residuals are memoryless;
     CUSUM accumulates evidence, which is what catches small sustained
     shifts).
 
@@ -4569,7 +4069,7 @@ def q90_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the corpus pass is the per-month revenue aggregation
     (map-side combinable); the sweep runs over the dashboard-sized
     monthly series (~84 points, SF-independent) with O(1) state
-    (q73/q80's execution shape — one mapInPandas pass over the
+    (q73's execution shape — one mapInPandas pass over the
     date-sorted series). Two passes by design: μ must exist before
     the sweep.
 
@@ -5830,8 +5330,7 @@ def q100_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-stratum quota sampling: keep at most K documents per
     (lang, source), selected by a deterministic portable hash order —
     the "cap every domain/language at K docs" rebalancing step that
-    precedes most large-scale training-data mixes (t13 measures the
-    mixture; this op enforces one).
+    precedes most large-scale training-data mixes.
 
     Hash-ordered selection (h64(doc_id), doc_id ascending) instead of
     rand(): the kept set is a pure function of the data, so it is
@@ -6492,8 +5991,8 @@ Q108_MAX_LAG = 6
 def q108_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample autocorrelation at lags 1..6 of each segment's monthly
     revenue series — the time-series diagnostic behind seasonality
-    detection and forecast-model order selection (q69 flags anomalies,
-    q80 forecasts; this measures the serial dependence both assume).
+    detection and forecast-model order selection (q69 flags anomalies;
+    this measures the serial dependence it assumes).
 
     Per (segment, lag) the statistic is the Pearson correlation of the
     pairs (x_t, x_{t-lag}) over the month-ordered series. One window
@@ -8155,7 +7654,7 @@ def q127_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: boundary events aggregate to the DAILY grid first (map-side
     combinable — the corpus collapses to |flags| × calendar-days net
     deltas BEFORE any window), then one running sum over the
-    calendar-bounded grid (≤ ~2.5k rows per flag — the q126/q115
+    calendar-bounded grid (≤ ~2.5k rows per flag — the q115/q116
     bounded-window class, low-cardinality rationale recorded), then
     an equi-join argmax picks the earliest peak day. Integer counts
     end to end; the peak date is a carried DATE — hash-exact on both

@@ -93,7 +93,7 @@ def ivf_query(
     """
     cent = spark.read.parquet(os.path.join(path, CENTROIDS_DIR))
     probe_w = Window.partitionBy("query_id").orderBy(F.col("d2").asc(), F.col("cent_label"))
-    # norms project ONCE per probe/index row (s01's discipline — the
+    # norms project ONCE per probe/index row (exact_cosine_topk's discipline — the
     # per-pair fold recomputed both norms per scored pair, review);
     # localCheckpoint because the probe plan feeds BOTH the driver-side
     # cell collect and the broadcast join — unmaterialized it would run

@@ -60,7 +60,7 @@ def _scrub_expr():
 
 
 def _scrubbed(d: DataFrame) -> DataFrame:
-    """Stage 1 — PII scrub (t14's redaction, applied in place)."""
+    """Stage 1 — PII scrub (email, IPv4 and phone patterns, in place)."""
     return d.withColumn("text", _scrub_expr())
 
 
@@ -149,7 +149,7 @@ def _mix_keep_expr():
 
 
 def _assign_split(d: DataFrame) -> DataFrame:
-    """Stage 5 — t12's hash split + t13's mixture keep-flag."""
+    """Stage 5 — t12's hash split + the per-source mixture keep-flag."""
     b = h64(F.col("doc_id").cast("string")) % 100
     split = (
         F.when(b < SPLIT_TRAIN_PCT, "train")
@@ -352,15 +352,14 @@ def bpe_token_budget(
     (VERDICT_r11 #8): the manifest's ``n_tokens`` is deliberately
     t04's whitespace counter (cheap, per-stage); the budget a trainer
     actually consumes is tokenizer tokens over the text that actually
-    landed. This trains t16's merge rules on the raw corpus (the same
-    table t19 is gate-verified against), applies them to the curated
-    parquet via :func:`text.bpe_token_counts` — the exact gated t19
-    segmentation core — and returns one row per split with BPE and
-    whitespace totals side by side.
+    landed. This trains t16's merge rules on the raw corpus, applies
+    them to the curated parquet via :func:`text.bpe_token_counts`, and
+    returns one row per split with BPE and whitespace totals side by
+    side.
 
     Scale: the merge table is k-sized literals; the only corpus-sized
-    work is a word count + an equi-join on the word — the same budget
-    as t19 itself, over the (smaller) curated corpus."""
+    work is a word count + an equi-join on the word, over the
+    (smaller) curated corpus."""
     from .text import BPE_N_MERGES, bpe_token_counts, t16_bpe_merge_step
 
     merges = [

@@ -19,8 +19,8 @@ Scale notes (100 TB):
 * The LSH path is the scale story: candidate generation is an
   equi-join on (band, bucket) — a shuffle keyed by bucket, never a
   cross join. Band count / rows-per-band trade recall vs join fanout.
-* The brute-force pairwise ops (d05, d06) carry blocking keys
-  (source / label) so the quadratic term is per-block; at 100 TB you
+* The brute-force pairwise ops (d06) carry blocking keys
+  (label) so the quadratic term is per-block; at 100 TB you
   would only ever run them inside LSH-generated candidate buckets.
 * Exact dedup is a single hash aggregate on a 60-bit content hash —
   group on the hash, not the full text, so the shuffle carries 8
@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.hashing import MINHASH_COEFFS, affine, affine_sql, h64, h64_sql
+from ..functions.hashing import MINHASH_COEFFS, affine_sql, h64, h64_sql
 from .tables import Tables
 from .litdf import local_df
 from .bcache import bounded_persist
@@ -42,9 +42,6 @@ from .bcache import register_bounded as _register_bounded
 MINHASH_K = 8
 BANDS = 4  # rows-per-band = MINHASH_K // BANDS = 2
 JACCARD_THRESHOLD = 0.1
-SIMHASH_BITS = 48
-SIMHASH_RADIUS = 3
-SIMHASH_BANDS = 4  # 12-bit bands; radius 3 ⇒ pigeonhole: ≥1 band matches exactly
 COSINE_DUP_THRESHOLD = 0.45
 
 
@@ -318,137 +315,6 @@ def d03_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs(Tables(spark, sf_dir).documents)
 
 
-def d04_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup: 48-bit signature over distinct word hashes,
-    all pairs within hamming radius 3 — found via pigeonhole band
-    buckets, never an O(n²) self-join.
-
-    Candidate generation (the 100 TB shape, published in Manku et al.
-    WWW'07): hamming(a,b) ≤ 3 means at most 3 of the 4 disjoint 12-bit
-    bands differ, so at least one band matches EXACTLY — candidates are
-    an equi-join on (band_id, band_value), a hash-partitioned shuffle
-    whose cost tracks band-bucket occupancy (n/2^12 per bucket under a
-    near-uniform signature distribution), not docs². Exact bit_count
-    verify runs on candidates only. Result is provably identical to the
-    brute-force oracle pair set.
-
-    The signature is a pure column expression (one groupBy with 48
-    literal-shift aggregates), the joins are equi-joins — no UDFs.
-    """
-    d = Tables(spark, sf_dir).documents
-    # explode distinct words, then build the 48 majority-vote bits as
-    # literal-shift aggregate expressions in ONE groupBy. All the wide
-    # integer trees below are emitted as SQL STRINGS, not Column
-    # objects (r12, guide §7.3): built column-by-column the 48 votes +
-    # 48-term signature + band explode cost ~1.9 s of py4j round trips
-    # per plan construction; one JVM-side parse is milliseconds, and
-    # integer arithmetic is tree-shape-exact either way.
-    exploded = d.select(
-        "doc_id", F.explode(F.array_distinct(_words())).alias("w")
-    ).withColumn("h", h64(F.col("w")))
-    bit_aggs = [
-        F.expr(
-            f"sum((CAST((shiftright(h, {j}) & 1) AS INT) * 2) - 1) AS vote{j}"
-        )
-        for j in range(SIMHASH_BITS)
-    ]
-    votes = exploded.groupBy("doc_id").agg(*bit_aggs)
-    sig_sql = " + ".join(
-        f"shiftleft(CASE WHEN vote{j} > 0 THEN CAST(1 AS BIGINT)"
-        f" ELSE CAST(0 AS BIGINT) END, {j})"
-        for j in range(SIMHASH_BITS)
-    )
-    # persist: both sides of the band self-join read the signatures;
-    # without it the explode + 48-vote aggregation runs twice
-    sigs = bounded_persist(votes.selectExpr("doc_id", f"{sig_sql} AS simhash"), "dedup.d04.sigs")
-
-    width = SIMHASH_BITS // SIMHASH_BANDS
-    mask = (1 << width) - 1
-    bands_sql = ", ".join(
-        f"struct(CAST({j} AS INT) AS band_id,"
-        f" shiftright(simhash, {j * width}) & {mask} AS band_val)"
-        for j in range(SIMHASH_BANDS)
-    )
-    banded = sigs.selectExpr(
-        "doc_id", "simhash", f"explode(array({bands_sql})) AS bb"
-    ).select("doc_id", "simhash", "bb.band_id", "bb.band_val")
-
-    a, b = banded.alias("a"), banded.alias("b")
-    joined = a.join(
-        b,
-        (F.col("a.band_id") == F.col("b.band_id"))
-        & (F.col("a.band_val") == F.col("b.band_val"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("a.simhash").alias("sig_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.col("b.simhash").alias("sig_b"),
-        F.col("a.band_id").alias("band_id"),
-    )
-    # emit each pair exactly once WITHOUT a dedup shuffle: keep the pair
-    # only on its FIRST matching band (map-side bit check on the carried
-    # signatures — cheaper than dropDuplicates over the candidate set);
-    # band j is the first match iff bands 0..j-1 all differ
-    xor_sql = "(sig_a ^ sig_b)"
-    conds = []
-    for j in range(SIMHASH_BANDS):
-        differ = [
-            f"(shiftright({xor_sql}, {i * width}) & {mask}) <> 0" for i in range(j)
-        ]
-        c = " AND ".join(["true"] + differ)
-        conds.append(f"(band_id = {j} AND ({c}))")
-    first_match = " OR ".join(conds)
-    return (
-        joined.filter(first_match)
-        .selectExpr("doc_a", "doc_b", f"bit_count({xor_sql}) AS hamming")
-        .filter(F.col("hamming") <= SIMHASH_RADIUS)
-    )
-
-
-def d05_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact pairwise 3-gram Jaccard within source blocks via an
-    inverted shingle index — NOT a pairwise array compare.
-
-    Plan shape: explode (doc, shingle_hash) → self-equi-join on the
-    hash (co-partitioned shuffle) → count shared shingles per pair →
-    jaccard = c / (n_a + n_b − c). Pairs with zero shared shingles
-    never materialize, so cost scales with shingle co-occurrence, not
-    docs². (The first cut of this operator compared shingle arrays per
-    cross-pair and took 80 s at sf0.1; this plan runs in seconds and is
-    the shape that survives 100 TB.)
-    """
-    # cache: both join sides reference the same hashed relation; without
-    # it Spark recomputes shingling+md5 per branch
-    docs = bounded_persist(_hashed_docs(spark, sf_dir), "dedup.d05.docs")
-    inv = docs.select(
-        "doc_id", "source", "n_sh", F.explode("shh").alias("h")
-    )
-    a = inv.alias("a")
-    b = inv.alias("b")
-    shared = (
-        a.join(
-            b,
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.source") == F.col("b.source"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n_sh").alias("n_a"),
-            F.col("b.n_sh").alias("n_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    jaccard = F.col("c") / (F.col("n_a") + F.col("n_b") - F.col("c"))
-    return (
-        shared.select("doc_a", "doc_b", F.round(jaccard, 4).alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .orderBy("doc_a", "doc_b")
-    )
-
-
 D06_TILE_ROWS = 1024  # gram-matrix tile height: bounds per-task memory
 
 
@@ -471,7 +337,7 @@ def d06_embedding_near_dup(
     real-valued data sit on a round-4 or threshold boundary with
     probability ~0, so the oracle comparison holds (unlike
     decimal-money averages, which DO need the round-sum-first
-    treatment — see stats.q36).
+    treatment — see q01).
     """
     import numpy as np
     import pandas as pd
@@ -601,42 +467,6 @@ ORACLE: dict[str, str] = {
         FROM hashed h JOIN clusters c USING (content_hash)
     """,
     "d03_minhash_lsh": d03_pairs_sql(),
-    "d04_simhash": f"""
-        WITH hashes AS (
-            SELECT doc_id,
-                   list_transform(list_distinct(string_split(text,' ')), w -> {h64_sql('w')}) AS hs
-            FROM documents
-        ), sigs AS (
-            SELECT doc_id,
-                   list_sum(list_transform(
-                       generate_series(0, {SIMHASH_BITS - 1}),
-                       j -> CASE WHEN list_sum(list_transform(hs,
-                                     h -> ((h >> j) & 1)::INT * 2 - 1)) > 0
-                                 THEN (1::BIGINT << j) ELSE 0 END
-                   ))::BIGINT AS simhash
-            FROM hashes
-        )
-        -- brute force: the engine's banded plan must equal this pair set
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               bit_count(xor(a.simhash, b.simhash)) AS hamming
-        FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.simhash, b.simhash)) <= {SIMHASH_RADIUS}
-        ORDER BY doc_a, doc_b
-    """,
-    "d05_ngram_jaccard": f"""
-        WITH docs AS (
-            SELECT doc_id, source, {_SHINGLES_SQL} AS sh
-            FROM documents
-            WHERE len(string_split(text,' ')) >= 3
-        )
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               round(len(list_intersect(a.sh, b.sh))::DOUBLE
-                     / len(list_distinct(a.sh || b.sh)), 4) AS jaccard
-        FROM docs a JOIN docs b ON a.source = b.source AND a.doc_id < b.doc_id
-        WHERE round(len(list_intersect(a.sh, b.sh))::DOUBLE
-                    / len(list_distinct(a.sh || b.sh)), 4) >= {JACCARD_THRESHOLD}
-        ORDER BY doc_a, doc_b
-    """,
     "d06_embedding_near_dup": f"""
         WITH v AS (
             SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
@@ -680,8 +510,6 @@ ORACLE: dict[str, str] = {
 QUERIES = {
     "d01_dedup_exact": d01_dedup_exact,
     "d03_minhash_lsh": d03_minhash_lsh,
-    "d04_simhash": d04_simhash,
-    "d05_ngram_jaccard": d05_ngram_jaccard,
     "d06_embedding_near_dup": d06_embedding_near_dup,
 }
 
@@ -1024,7 +852,7 @@ def d10_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Containment (asymmetric near-dup) detection: pairs where the
     smaller document's winnowing-fingerprint set is >= 80% contained in
     the larger's — the quote/excerpt/superset case symmetric Jaccard
-    (d05) under-scores. Fingerprints are SIGMOD'03 winnowing mins
+    (d03) under-scores. Fingerprints are SIGMOD'03 winnowing mins
     (t07's local fingerprints), so any shared run of ``K + W - 1``
     words is guaranteed to contribute.
 
@@ -1135,7 +963,7 @@ def d11_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the prune set is its distinct ``vec_b`` projection — a tiny
     relation that LEFT ANTI semi-joins back onto the corpus without
     moving embeddings. At 100 TB the decision column lands next to the
-    vectors as a pushdown-friendly filter, like t13's mixture flag.
+    vectors as a pushdown-friendly filter, like curation's mixture flag.
     """
     from .similarity import centroid_cells
 
@@ -1374,9 +1202,8 @@ def d13_editdist_near_dup(
     single_part_max_pairs: int = D13_SINGLE_PART_MAX_PAIRS,
 ) -> DataFrame:
     """Character-level near-duplicate pairs via blocked Levenshtein —
-    the edit-distance complement to token-set dedup (d03/d05 miss
-    single-character template drift; d04's bit flips don't localize
-    it). Classic record-linkage shape: a cheap deterministic blocking
+    the edit-distance complement to token-set dedup (d03 misses
+    single-character template drift). Classic record-linkage shape: a cheap deterministic blocking
     key (text prefix + length bucket) bounds the candidate set, the
     expensive exact distance runs only within blocks.
 
@@ -1439,7 +1266,7 @@ def d15_lsh_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     points — s09's ANN-recall audit pattern, applied to dedup.
 
     Ground truth is EXACT pairwise Jaccard over the sample, computed
-    through the inverted shingle index (d05's plan: explode →
+    through an inverted shingle index (explode →
     equi-join on hash → shared-count; pairs sharing zero shingles have
     Jaccard 0 < threshold and rightly never materialize) — an
     all-pairs array compare of the same sample measured ~60× slower at

@@ -111,8 +111,10 @@ class AggView:
 
         Replay safety: signed-delta application is NOT idempotent, so
         when ``batch_id`` is given (the foreachBatch contract), an
-        already-applied id is detected via a marker under
-        ``_applied_batches/`` and skipped. The marker is created after
+        already-applied (stream query id, batch id) is detected via a
+        marker under ``_applied_batches/`` and skipped; a second stream
+        on a fresh checkpoint restarts its batch ids at 0 under a new
+        query id. The marker is created after
         the state write commits; the residual window (crash between
         data commit and marker creation) is the plain-parquet
         limitation a table format's atomic commit closes — documented,
@@ -175,17 +177,20 @@ class AggView:
     # (backfill re-runs, checkpoint restored from an old backup), and
     # a marker is a ~10-byte file.
 
-    def _ledger_dir(self) -> str:
-        d = os.path.join(self.path, "_applied_batches")
+    def _marker(self, batch_id: int) -> str:
+        """Marker path of ``batch_id`` under the running stream's query
+        id, a local property of the foreachBatch thread (``''``, the
+        ledger root, outside a stream)."""
+        qid = self.spark.sparkContext.getLocalProperty("sql.streaming.queryId") or ""
+        d = os.path.join(self.path, "_applied_batches", qid)
         os.makedirs(d, exist_ok=True)
-        return d
+        return os.path.join(d, str(batch_id))
 
     def _batch_applied(self, batch_id: int) -> bool:
-        return os.path.exists(os.path.join(self._ledger_dir(), str(batch_id)))
+        return os.path.exists(self._marker(batch_id))
 
     def _mark_applied(self, batch_id: int) -> None:
-        d = self._ledger_dir()
-        with open(os.path.join(d, str(batch_id)), "w") as f:
+        with open(self._marker(batch_id), "w") as f:
             f.write("applied\n")
 
     # -- streaming ---------------------------------------------------------

@@ -239,7 +239,7 @@ def m04_binary_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate detection over BINARY media payloads: piecewise
     chunk signatures (computed executor-side in Arrow-batched
     mapInPandas — the multimodal decode seam) + the same pigeonhole
-    band candidate generation d04 uses for text simhash: hamming ≤ 3
+    band candidate generation as text simhash: hamming ≤ 3
     across 4 disjoint 15-bit bands means at least one band matches
     exactly, so candidates come from an equi-join on (band_id,
     band_value) — never an O(n²) self-join — and the exact

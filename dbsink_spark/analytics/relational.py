@@ -28,7 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.casts import spark_try_int_sql
 from .tables import Tables
 from .litdf import local_df
 
@@ -56,8 +55,9 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sum_charge"),
             F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
             # money/rate avgs: round the sum to input precision before
-            # dividing so both engines divide identical doubles (see
-            # q36 note on 2^a*5^b-count rounding-boundary flakes)
+            # dividing so both engines divide identical doubles (a
+            # summation-order ulp can straddle a rounding boundary when
+            # the count is 2^a*5^b)
             F.round(F.round(F.sum("l_extendedprice"), 2) / F.count(F.lit(1)), 4).alias("avg_price"),
             F.round(F.round(F.sum("l_discount"), 2) / F.count(F.lit(1)), 4).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
@@ -84,67 +84,9 @@ def q02_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q06_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6-style single-value aggregate over a selective filter."""
-    li = Tables(spark, sf_dir).lineitem
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1995-01-01"))
-            & (F.col("l_shipdate") < F.lit("1996-01-01"))
-            & (F.col("l_discount").between(0.03, 0.07))
-            & (F.col("l_quantity") < 25)
-        )
-        .agg(F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias("revenue"))
-    )
-
-
 # --------------------------------------------------------------------------
 # joins
 # --------------------------------------------------------------------------
-
-def q03_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue per market segment: orders ⋈ broadcast(customer dim).
-
-    customer is broadcast at harness SF; at 100 TB customer is no
-    longer broadcastable and AQE would pick sort-merge — the hint is on
-    the genuinely-small projection (custkey, mktsegment) only.
-    """
-    t = Tables(spark, sf_dir)
-    cust = t.customer.select("c_custkey", "c_mktsegment")
-    return (
-        t.orders.join(F.broadcast(cust), t.orders.o_custkey == cust.c_custkey)
-        .groupBy("c_mktsegment")
-        .agg(
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-        .orderBy("c_mktsegment")
-    )
-
-
-def q05_multi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5-style 6-way join: local-supplier volume per nation.
-
-    region/nation are broadcast (tiny, always); customer/supplier/
-    orders/lineitem join on their keys — at scale these shuffle, with
-    lineitem⋈orders as the big pair (bucket both by orderkey).
-    """
-    t = Tables(spark, sf_dir)
-    return (
-        t.lineitem.join(t.orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(t.supplier, (F.col("l_suppkey") == F.col("s_suppkey")) & (F.col("c_nationkey") == F.col("s_nationkey")))
-        .join(F.broadcast(t.nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(t.region), F.col("n_regionkey") == F.col("r_regionkey"))
-        .filter(
-            (F.col("o_orderdate") >= F.lit("1995-01-01"))
-            & (F.col("o_orderdate") < F.lit("1997-01-01"))
-        )
-        .groupBy("r_name", "n_name")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-        .orderBy("r_name", "n_name")
-    )
-
 
 def q08_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers with no high-value order (left-anti join)."""
@@ -174,22 +116,6 @@ def q10_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q12_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE over (orderstatus, orderpriority)."""
-    o = Tables(spark, sf_dir).orders
-    return (
-        o.cube("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-        .orderBy(
-            F.col("o_orderstatus").asc_nulls_first(),
-            F.col("o_orderpriority").asc_nulls_first(),
-        )
-    )
-
-
 # --------------------------------------------------------------------------
 # window functions
 # --------------------------------------------------------------------------
@@ -206,19 +132,6 @@ def q13_window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 3)
         .select("o_custkey", "o_orderkey", F.round("o_totalprice", 2).alias("price"), "rn")
-    )
-
-
-def q14_window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-customer order-to-order price delta (lag window)."""
-    o = Tables(spark, sf_dir).orders
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.round(
-            F.col("o_totalprice") - F.lag("o_totalprice").over(w), 2
-        ).alias("price_delta"),
     )
 
 
@@ -269,32 +182,6 @@ def q17_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # events (timeseries)
 # --------------------------------------------------------------------------
 
-def q18_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour windowed aggregate per event_type.
-
-    Batch twin of the streaming tumbling-window operator
-    (dbsink_spark.streaming): identical grouping expression, so stream
-    and batch share semantics. Hour is emitted as a formatted string to
-    keep the oracle comparison precision-stable; the value sum/avg ride
-    the 2-exact-decimal fixed point (sum_e2 long, 1e6-scaled div
-    average) — the float round(sum)/count form drifted a final digit
-    at sf0.1 (caught by the 10x-scale oracle sweep, see BENCH_NOTES).
-    """
-    e = Tables(spark, sf_dir).events
-    return (
-        e.groupBy(
-            F.date_format(F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH:00").alias("hour"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_e2"),
-        )
-        .withColumn("avg_e6", F.expr("(10000 * sum_e2) div n_events"))
-        .orderBy("hour", "event_type")
-    )
-
-
 def q19_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity) via lag + cumsum.
 
@@ -328,43 +215,6 @@ def q19_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q20_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured extraction: pull ``props.k`` out of a JSON string
-    column and aggregate — mirrors the reference's JSONB payload column
-    (reference: dbsink/maps.py:103)."""
-    e = Tables(spark, sf_dir).events
-    # try_cast, NEVER cast: under Spark 4's default ANSI mode a single
-    # event whose k is non-integral ('3.25', 'n/a') ABORTS the whole
-    # job — at 100 TB one malformed record must degrade to NULL, not
-    # kill the query (text-mode fuzz catch, round 9)
-    return (
-        e.withColumn("k", F.get_json_object("props", "$.k").try_cast("long"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("k").alias("sum_k"),
-            # integer-exact scaled average: avg*10000 truncated. Emitting a
-            # float avg invites last-ulp drift between engines' round()
-            # implementations (BigDecimal vs multiply/divide); div is exact.
-            F.expr("(10000 * sum(k)) div count(1)").alias("avg_k_e4"),
-        )
-        .orderBy("event_type")
-    )
-
-
-def q21_orders_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Monthly revenue per order status (date_trunc on a timestamp)."""
-    o = Tables(spark, sf_dir).orders
-    return (
-        o.groupBy(
-            F.date_trunc("month", F.col("o_orderdate")).cast("date").alias("month"),
-            "o_orderstatus",
-        )
-        .agg(F.round(F.sum("o_totalprice"), 2).alias("revenue"), F.count(F.lit(1)).alias("n_orders"))
-        .orderBy("month", "o_orderstatus")
-    )
-
-
 # --------------------------------------------------------------------------
 # oracle SQL (DuckDB) — column names/aliases match the Spark outputs
 # --------------------------------------------------------------------------
@@ -394,36 +244,6 @@ ORACLE: dict[str, str] = {
           AND l_discount >= 0.05
           AND l_quantity < 24
     """,
-    "q06_revenue_forecast": """
-        SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue
-        FROM lineitem
-        WHERE l_shipdate >= TIMESTAMP '1995-01-01'
-          AND l_shipdate <  TIMESTAMP '1996-01-01'
-          AND l_discount BETWEEN 0.03 AND 0.07
-          AND l_quantity < 25
-    """,
-    "q03_broadcast_join": """
-        SELECT c_mktsegment,
-               round(sum(o_totalprice), 2) AS revenue,
-               count(*)                    AS n_orders
-        FROM orders JOIN customer ON o_custkey = c_custkey
-        GROUP BY c_mktsegment
-        ORDER BY c_mktsegment
-    """,
-    "q05_multi_join": """
-        SELECT r_name, n_name,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        FROM lineitem
-        JOIN orders   ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        JOIN nation   ON s_nationkey = n_nationkey
-        JOIN region   ON n_regionkey = r_regionkey
-        WHERE o_orderdate >= TIMESTAMP '1995-01-01'
-          AND o_orderdate <  TIMESTAMP '1997-01-01'
-        GROUP BY r_name, n_name
-        ORDER BY r_name, n_name
-    """,
     "q08_anti_join": """
         SELECT c_custkey, c_name, c_acctbal
         FROM customer
@@ -438,20 +258,6 @@ ORACLE: dict[str, str] = {
         GROUP BY o_orderpriority
         ORDER BY o_orderpriority
     """,
-    "q12_cube": """
-        -- HAVING count(*) > 0: over an EMPTY input, standard SQL
-        -- grouping sets still emit the () grand-total row (count 0)
-        -- where Spark's rollup/cube emit nothing; on any non-empty
-        -- input every grouping-set row has count >= 1, so the guard
-        -- only equalizes the empty case
-        SELECT o_orderstatus, o_orderpriority,
-               round(sum(o_totalprice), 2) AS revenue,
-               count(*)                    AS n_orders
-        FROM orders
-        GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        HAVING count(*) > 0
-        ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST
-    """,
     "q13_window_topk_per_group": """
         SELECT o_custkey, o_orderkey, round(o_totalprice, 2) AS price, rn
         FROM (
@@ -461,12 +267,6 @@ ORACLE: dict[str, str] = {
             FROM orders
         )
         WHERE rn <= 3
-    """,
-    "q14_window_lag": """
-        SELECT o_custkey, o_orderkey,
-               round(o_totalprice - lag(o_totalprice) OVER (
-                   PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey), 2) AS price_delta
-        FROM orders
     """,
     "q15_window_running": """
         SELECT o_custkey, o_orderkey,
@@ -494,20 +294,6 @@ ORACLE: dict[str, str] = {
             SELECT c_custkey FROM customer WHERE c_acctbal < 0
         )
     """,
-    "q18_events_hourly": """
-        SELECT hour, event_type, n_events,
-               sum_e2,
-               ((10000 * sum_e2) // n_events)::BIGINT AS avg_e6
-        FROM (
-            SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00') AS hour,
-                   event_type,
-                   count(*) AS n_events,
-                   sum(round(value * 100)::BIGINT)::BIGINT AS sum_e2
-            FROM events
-            GROUP BY 1, 2
-        )
-        ORDER BY hour, event_type
-    """,
     "q19_events_sessionize": """
         WITH flagged AS (
             SELECT user_id, ts, event_id,
@@ -534,57 +320,18 @@ ORACLE: dict[str, str] = {
         GROUP BY user_id
         ORDER BY user_id
     """,
-    "q20_events_json": f"""
-        -- guarded twin of spark's get_json_object + try_cast(long):
-        -- json_valid() because json_extract_string RAISES on malformed
-        -- JSON where spark returns NULL; spark_try_int_sql because
-        -- duckdb TRY_CAST('3.25' AS BIGINT) ROUNDS to 3 where spark
-        -- try_cast yields NULL, and spark's trimAll strips every char
-        -- <= 0x20 where trim() strips only spaces (round-10 advice)
-        WITH kx AS (
-            SELECT event_type,
-                   CASE WHEN json_valid(props)
-                        THEN {spark_try_int_sql("json_extract_string(props, '$.k')", "BIGINT")}
-                   END AS k
-            FROM events
-        )
-        SELECT event_type,
-               count(*)                                  AS n_events,
-               sum(k)::BIGINT                            AS sum_k,
-               ((10000 * sum(k)) // count(*))::BIGINT    AS avg_k_e4
-        FROM kx
-        GROUP BY event_type
-        ORDER BY event_type
-    """,
-    "q21_orders_monthly": """
-        SELECT date_trunc('month', o_orderdate)::DATE AS month,
-               o_orderstatus,
-               round(sum(o_totalprice), 2) AS revenue,
-               count(*)                    AS n_orders
-        FROM orders
-        GROUP BY 1, 2
-        ORDER BY 1, 2
-    """,
 }
 
 QUERIES = {
     "q01_pricing_summary": q01_pricing_summary,
     "q02_filter_project": q02_filter_project,
-    "q03_broadcast_join": q03_broadcast_join,
-    "q05_multi_join": q05_multi_join,
-    "q06_revenue_forecast": q06_revenue_forecast,
     "q08_anti_join": q08_anti_join,
     "q10_agg_distinct": q10_agg_distinct,
-    "q12_cube": q12_cube,
     "q13_window_topk_per_group": q13_window_topk_per_group,
-    "q14_window_lag": q14_window_lag,
     "q15_window_running": q15_window_running,
     "q16_topk_global": q16_topk_global,
     "q17_set_ops": q17_set_ops,
-    "q18_events_hourly": q18_events_hourly,
     "q19_events_sessionize": q19_events_sessionize,
-    "q20_events_json": q20_events_json,
-    "q21_orders_monthly": q21_orders_monthly,
 }
 
 
@@ -765,8 +512,8 @@ def q55_ntile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ntile(4)`` over order value within each priority class, reduced
     to the per-quartile boundary report (count, min/max price) — the
     percentile-banding shape analysts use for cohort cuts. Completes
-    the window-function surface next to ranking (q13), offsets (q14),
-    running frames (q15/q44).
+    the window-function surface next to ranking (q13), offsets (q19)
+    and running frames (q15).
 
     Deterministic: the window orders by the unique (price, orderkey)
     pair, and ntile's fill rule (earlier tiles get the extra rows) is

@@ -1,7 +1,8 @@
 """Similarity search over the ``embeddings`` table (array<float> dim 64).
 
-* s01: brute-force cosine top-k — the exactness baseline. Query set ×
-  corpus as a (broadcast) cross join, rank per query.
+* ``exact_cosine_topk``: brute-force cosine top-k — the exactness
+  baseline of s04 and s09. Query set × corpus as a (broadcast) cross
+  join, rank per query.
 * s02: IVF-style centroid assignment — centroids from a per-label
   average (the coarse quantizer), every vector assigned to its nearest
   centroid; at 100 TB this cell id becomes the blocking/bucketing key
@@ -95,9 +96,10 @@ def _vectors(spark, sf_dir):
     )
 
 
-def s01_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k: queries (vec_id < N) × corpus (rest),
-    rank-per-query window, keep top 5."""
+def exact_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brute-force cosine top-k, the exactness baseline of s04 and s09:
+    queries (vec_id < N) × corpus (rest), rank-per-query window, keep
+    top 5."""
     v = _vectors(spark, sf_dir)
     # norms projected ONCE per row before the join (not per pair): the
     # float value is identical (same fold, same multiply), the plan is
@@ -197,6 +199,28 @@ def s03_hyperplane_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# DuckDB twin of exact_cosine_topk (s09's ground-truth side).
+EXACT_TOPK_SQL = f"""
+    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    scored AS (
+        SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
+               list_sum([q.v[i] * c.v[i] for i in generate_series(1, {DIM})])
+               / (sqrt(list_sum([x*x for x in q.v])) * sqrt(list_sum([x*x for x in c.v])))
+               AS cosine
+        FROM v q CROSS JOIN v c
+        WHERE q.vec_id < {N_QUERIES} AND c.vec_id >= {N_QUERIES}
+    ), ranked AS (
+        SELECT query_id, corpus_id, cosine,
+               row_number() OVER (PARTITION BY query_id
+                                  ORDER BY cosine DESC, corpus_id) AS rank
+        FROM scored
+    )
+    SELECT query_id, corpus_id, round(cosine, 4) AS cosine, rank
+    FROM ranked WHERE rank <= {TOPK}
+    ORDER BY query_id, rank
+"""
+
+
 def _weights_sql(wts: list[int]) -> str:
     return "[" + ", ".join(f"{x}.0" for x in wts) + "]"
 
@@ -209,25 +233,6 @@ def _oracle() -> dict[str, str]:
         for p, w in enumerate(planes)
     )
     return {
-        "s01_cosine_topk": f"""
-            WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-            scored AS (
-                SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-                       list_sum([q.v[i] * c.v[i] for i in generate_series(1, {DIM})])
-                       / (sqrt(list_sum([x*x for x in q.v])) * sqrt(list_sum([x*x for x in c.v])))
-                       AS cosine
-                FROM v q CROSS JOIN v c
-                WHERE q.vec_id < {N_QUERIES} AND c.vec_id >= {N_QUERIES}
-            ), ranked AS (
-                SELECT query_id, corpus_id, cosine,
-                       row_number() OVER (PARTITION BY query_id
-                                          ORDER BY cosine DESC, corpus_id) AS rank
-                FROM scored
-            )
-            SELECT query_id, corpus_id, round(cosine, 4) AS cosine, rank
-            FROM ranked WHERE rank <= {TOPK}
-            ORDER BY query_id, rank
-        """,
         "s02_centroid_assign": """
             WITH v AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
             dims AS (
@@ -265,21 +270,21 @@ def _oracle() -> dict[str, str]:
 ORACLE = _oracle()
 
 QUERIES = {
-    "s01_cosine_topk": s01_cosine_topk,
     "s02_centroid_assign": s02_centroid_assign,
     "s03_hyperplane_lsh": s03_hyperplane_lsh,
 }
 
 
 def s04_numpy_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production-scale brute-force variant of s01: the corpus streams
-    through an Arrow-batched mapInPandas worker that scores every batch
-    against the (broadcast-by-closure) query matrix with vectorized
-    numpy — the plan that replaces interpreted per-pair HOF folds when
-    the corpus is huge. The cosine VALUES legitimately differ from a
-    sequential fold in the last ulp (numpy uses pairwise summation), but
-    the RANKING doesn't (pytest cross-checks against s01) — so the
-    output is rank-only (no cosine column) and gets a real hash oracle.
+    """Production-scale brute-force variant of exact_cosine_topk: the
+    corpus streams through an Arrow-batched mapInPandas worker that
+    scores every batch against the (broadcast-by-closure) query matrix
+    with vectorized numpy — the plan that replaces interpreted per-pair
+    HOF folds when the corpus is huge. The cosine VALUES legitimately
+    differ from a sequential fold in the last ulp (numpy uses pairwise
+    summation), but the RANKING doesn't (pytest cross-checks against
+    exact_cosine_topk) — so the output is rank-only (no cosine column)
+    and gets a real hash oracle.
     """
     import numpy as np
     import pandas as pd
@@ -896,17 +901,17 @@ QUERIES["s08_pq_codes"] = s08_pq_codes
 
 def s09_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k audit of the IVF-probed search path: per query, how many
-    of the exact brute-force top-k (s01) the N_PROBE-cell approximate
-    search (s05) actually returned — the quality gate every production
-    ANN deployment runs before trusting its index.
+    of the exact brute-force top-k (exact_cosine_topk) the N_PROBE-cell
+    approximate search (s05) actually returned — the quality gate every
+    production ANN deployment runs before trusting its index.
 
-    Plan shape: both sides are the already-bucketed plans (s01
+    Plan shape: both sides are the already-bucketed plans (exact_cosine_topk
     broadcasts the query set, s05 touches only probed cells); the audit
     itself is a tiny (|queries| x k)-row left join + one aggregate.
     Integer outputs (recall_pct = hits * 100 / k is exact for k=5), so
     the hash gate is float-free.
     """
-    brute = s01_cosine_topk(spark, sf_dir).select("query_id", "corpus_id")
+    brute = exact_cosine_topk(spark, sf_dir).select("query_id", "corpus_id")
     approx = (
         s05_ivf_topk(spark, sf_dir)
         .select("query_id", "corpus_id")
@@ -927,7 +932,7 @@ def s09_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE["s09_ann_recall"] = f"""
     WITH brute AS (
-        SELECT query_id, corpus_id FROM ({ORACLE["s01_cosine_topk"]})
+        SELECT query_id, corpus_id FROM ({EXACT_TOPK_SQL})
     ), ivf AS (
         SELECT query_id, corpus_id FROM ({ORACLE["s05_ivf_topk"]})
     )
@@ -956,8 +961,8 @@ def s10_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     this similar", not a fixed k (pair generation for clustering,
     near-dup blocklists, semantic caches).
 
-    Same broadcast shape as s01 (query set broadcast, corpus never
-    shuffled, no window needed at all — a pure filter after the scored
+    Same broadcast shape as the exact top-k (query set broadcast, corpus
+    never shuffled, no window needed at all — a pure filter after the scored
     join, so the only shuffle is the output sort). The threshold
     compare runs on the sequential-fold cosine BOTH engines compute
     bit-identically (module docstring), so the predicate is exact.
@@ -1066,7 +1071,7 @@ def s12_ivf_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
     score: each embedding is 8 token-like sub-vectors, and a (query,
     doc) pair scores Σ_i max_j cos(q_i, d_j) — each query part matches
     its best-aligned doc part, the multi-vector semantics
-    single-vector cosine (s01) cannot express.
+    single-vector cosine (exact_cosine_topk) cannot express.
 
     Plan: centroid table broadcast (tiny), candidate generation is an
     equi-join on the integer cell id, and the re-rank joins candidates
@@ -1223,7 +1228,7 @@ S13_PROBE_LEVELS = (1, 2, 4)
 def s13_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k / scan-cost curve for the IVF search path: for each
     probe depth p ∈ {1, 2, 4}, what fraction of the TRUE cosine top-k
-    (s01's brute force) does s05's probe-p search recover, and what
+    (the exact brute force) does s05's probe-p search recover, and what
     fraction of the corpus did it have to score to get there. This is
     the d15 pattern (audit the approximate path against bounded exact
     ground truth) applied to the vector side — the one artifact every
@@ -1450,7 +1455,7 @@ def s14_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = F.split(F.col("text"), " ")
 
     def _tf(term):
-        # closure, not default arg (pyspark HOF arity — t03's gotcha)
+        # closure, not default arg (pyspark HOF arity)
         return F.size(F.filter(words, lambda w: w == F.lit(term)))
 
     per_doc = d.select(
@@ -1673,7 +1678,7 @@ def s15_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     summing M table lookups addressed by its 8-byte PQ code — the scan
     never touches raw corpus floats. This is the production query path
     for the codes s08 emits (s05's IVF prunes cells; ADC scores the
-    survivors; s01/s04-style exact re-rank tails it).
+    survivors; exact_cosine_topk/s04-style exact re-rank tails it).
 
     Plan shape at 100 TB: the distance table is |queries| × M ×
     |codebook| rows — broadcast; corpus codes (8 rows per vector,
@@ -1806,7 +1811,7 @@ def s16_sq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single broadcast row of two 64-element arrays (never a
     corpus-side join key); code assignment fuses into the scan
     projection; queries broadcast and the corpus never shuffles by
-    content (the s01 discipline). The persisted artifact is the
+    content (the exact top-k's discipline). The persisted artifact is the
     64-byte code column; raw vectors are only needed by a re-rank
     stage (s15's ADC story applies unchanged).
     """
@@ -1910,14 +1915,14 @@ def s17_rocchio_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-S17_PRF_K hits are relevant, move each query toward their
     centroid (q' = q + β·c̄), and re-rank with the expanded query —
     the classic zero-supervision recall booster, and the retrieval
-    family's missing feedback loop (s01 scores, s12 prefilters, s14
+    family's missing feedback loop (s04 scores, s12 prefilters, s14
     fuses arms; s17 actually REWRITES the query from results).
 
     Scale shape: two broadcast passes over the corpus — the corpus
-    never shuffles by content in either pass (the s01 discipline);
+    never shuffles by content in either pass (the exact top-k's);
     everything between the passes (pseudo-relevant sets, per-query
     centroids, expanded queries) is |Q|·k-sized and rides broadcast
-    joins. At 100 TB each pass is the same scan shape s01 ships, and
+    joins. At 100 TB each pass is the exact top-k's scan shape, and
     the first pass would be s05's IVF prefilter instead — the
     feedback algebra is unchanged.
 
@@ -2068,155 +2073,6 @@ QUERIES["s17_rocchio_prf"] = s17_rocchio_prf
 
 
 # ---------------------------------------------------------------------------
-# s18: filtered vector search (pre-filter exact + post-filter recall audit)
-# ---------------------------------------------------------------------------
-
-S18_LABEL = 3       # metadata predicate: corpus restricted to this label
-S18_POST_K = 20     # post-filter arm: global top-K candidates, then filter
-
-
-def s18_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FILTERED vector search — the metadata-constrained retrieval
-    every production vector store must answer (`WHERE label = X ORDER
-    BY cosine LIMIT k`), plus the audit of the cheap way to fake it.
-    Two arms over one scoring pass:
-
-    * PRE-filter (the correct plan): restrict the corpus to the
-      predicate FIRST — the label filter pushes into the parquet scan
-      — then exact top-k. Recall is 1 by construction.
-    * POST-filter (the tempting shortcut when an unfiltered ANN index
-      already exists): take the global top-S18_POST_K, THEN apply the
-      predicate. Every pre-filter result row carries ``in_postfilter``
-      — whether the shortcut would have surfaced it. The fraction of
-      zeros IS the post-filter recall loss this operator exists to
-      measure.
-
-    Scale: one Arrow/numpy scoring pass over the corpus (the s04
-    kernel — queries broadcast by closure, corpus never shuffles for
-    scoring); both arms are rank-filter windows on the scored pairs,
-    which InferWindowGroupLimit bounds to the pushed k. The flag join
-    broadcasts the ≤ |queries|·S18_POST_K post-filter survivor set.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.window import Window as W
-
-    v = _vectors(spark, sf_dir)
-    qrows = v.filter(F.col("vec_id") < N_QUERIES).orderBy("vec_id").collect()
-    if not qrows:
-        # degenerate corpus with no query rows: zero result rows, same
-        # as the oracle (degenerate-mode fuzz catch, round 10 — the
-        # s04 empty-q_mat driver crash, same kernel)
-        return local_df(
-            spark, [], "query_id long, corpus_id long, rank int, in_postfilter int"
-        )
-    q_ids = [r.vec_id for r in qrows]
-    q_mat = np.array([r.v for r in qrows], dtype=np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("corpus_id", T.LongType()),
-            T.StructField("label", T.IntegerType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            c = np.array(list(pdf["v"]), dtype=np.float64)
-            c /= np.linalg.norm(c, axis=1, keepdims=True)
-            sims = c @ q_mat.T
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(q_ids, n),
-                    "corpus_id": np.tile(pdf["vec_id"].values, len(q_ids)),
-                    "label": np.tile(pdf["label"].values, len(q_ids)),
-                    "cosine": sims.T.reshape(-1),
-                }
-            )
-
-    # the scored pairs feed BOTH rank arms (pre-filter and global) —
-    # checkpoint the one numpy scoring pass rather than running the
-    # corpus matmul twice (round-8 review); the materialized rows are
-    # narrow (two ids, a label, a double — no vectors)
-    scored = (
-        v.filter(F.col("vec_id") >= N_QUERIES)
-        .select("vec_id", "label", "v")
-        .mapInPandas(score, out_schema)
-        .localCheckpoint(eager=False)
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("corpus_id"))
-    pre = (
-        scored.filter(F.col("label") == S18_LABEL)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOPK)
-        .select("query_id", "corpus_id", "rank")
-    )
-    post = (
-        scored.withColumn("grank", F.row_number().over(w))
-        .filter(F.col("grank") <= S18_POST_K)
-        .filter(F.col("label") == S18_LABEL)
-        .select("query_id", F.col("corpus_id").alias("p_id"))
-    )
-    return (
-        pre.join(
-            F.broadcast(post),
-            (pre.query_id == post.query_id) & (pre.corpus_id == post.p_id),
-            "left",
-        )
-        .select(
-            pre.query_id,
-            "corpus_id",
-            "rank",
-            F.col("p_id").isNotNull().cast("int").alias("in_postfilter"),
-        )
-        .orderBy("query_id", "rank")
-    )
-
-
-ORACLE["s18_filtered_search"] = f"""
-    WITH v AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-    scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS corpus_id, c.label,
-               list_sum([q.v[i] * c.v[i] for i in generate_series(1, {DIM})])
-               / (sqrt(list_sum([x*x for x in q.v])) * sqrt(list_sum([x*x for x in c.v])))
-               AS cosine
-        FROM v q CROSS JOIN v c
-        WHERE q.vec_id < {N_QUERIES} AND c.vec_id >= {N_QUERIES}
-    ),
-    pre AS (
-        SELECT query_id, corpus_id, rank FROM (
-            SELECT query_id, corpus_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cosine DESC, corpus_id) AS rank
-            FROM scored WHERE label = {S18_LABEL}
-        ) WHERE rank <= {TOPK}
-    ),
-    post AS (
-        SELECT query_id, corpus_id FROM (
-            SELECT query_id, corpus_id, label,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cosine DESC, corpus_id) AS grank
-            FROM scored
-        ) WHERE grank <= {S18_POST_K} AND label = {S18_LABEL}
-    )
-    SELECT pre.query_id, pre.corpus_id, pre.rank,
-           (post.corpus_id IS NOT NULL)::INT AS in_postfilter
-    FROM pre
-    LEFT JOIN post ON pre.query_id = post.query_id
-                  AND pre.corpus_id = post.corpus_id
-    ORDER BY pre.query_id, pre.rank
-"""
-QUERIES["s18_filtered_search"] = s18_filtered_search
-
-
-# ---------------------------------------------------------------------------
 # LSH views for the NN-descent base graph
 # ---------------------------------------------------------------------------
 
@@ -2258,12 +2114,12 @@ def s20_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     results greedily by ``lambda*rel - (1-lambda)*max sim to already
     selected`` so the top-k covers the query's neighborhood instead of
     returning four near-copies — the standard de-redundancy step on
-    top of any ANN ranker (s01/s12). The empty-selection penalty is 0,
+    top of any ANN ranker (s04/s12). The empty-selection penalty is 0,
     so step 1 is pure relevance.
 
     Plan shape: the corpus never leaves the executors — relevance is a
-    broadcast-query scan + TakeOrdered top-``MMR_POOL`` (exactly s01's
-    scaling), and pairwise sims among the pool are a broadcast
+    broadcast-query scan + TakeOrdered top-``MMR_POOL`` (the exact
+    top-k's scaling), and pairwise sims among the pool are a broadcast
     self-join of MMR_POOL rows. Only those <= POOL + POOL^2 scored rows
     are collected; the greedy loop is O(K*POOL) driver arithmetic over
     that bounded set (the drill-bracket discipline: collect only
@@ -2866,7 +2722,7 @@ def s23_binary_hamming_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-group map-side-combinable aggregate collapsed to ONE broadcast
     stats row; packing fuses into the scan projection; the 10-row
     query set broadcasts and the corpus never shuffles by content
-    (the s01/s16 discipline). Dims pack 32 per word into bits 0..31 —
+    (the exact top-k / s16 discipline). Dims pack 32 per word into bits 0..31 —
     the sign bit is never set, so the packed words survive engines
     and file formats that disagree about BIGINT overflow.
     """

@@ -40,7 +40,7 @@ def q31_corr_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     per event type."""
     e = Tables(spark, sf_dir).events
     # try_double_guarded: ANSI-mode crash-proofing against malformed
-    # props (q20's treatment — one bad event must not abort the
+    # props (one bad event must not abort the
     # aggregate), narrowed to the finite-decimal accept-set BOTH
     # engines parse identically — a bare try_cast diverges from the
     # oracle on 'inf'/'NaN'/'1.5f'/overflow strings (casts.py)
@@ -53,49 +53,6 @@ def q31_corr_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.covar_samp("value", "k"), 4).alias("covar_vk"),
             F.round(F.stddev_samp("value"), 4).alias("std_value"),
             F.round(F.var_samp("value"), 4).alias("var_value"),
-        )
-        .orderBy("event_type")
-    )
-
-
-def q32_zscore_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anomaly counts per event type: |z| > 2.5 against the type's own
-    sample mean/std.
-
-    The predicate is evaluated in integer-exact arithmetic: event values
-    are exact 2-decimal doubles, so ``w = round(value*100)`` is an exact
-    per-row integer and |z| > 2.5 is equivalent to
-
-        4*(w*n - S)^2 * (n-1)  >  25 * n * (n*Q - S^2)
-
-    with S = sum(w), Q = sum(w^2), n = count — all BIGINT-exact, hence
-    independent of summation order / partitioning / engine. The r01
-    float formulation flipped counts between runs when a value's |z|
-    sat within summation-order drift of 2.5. Intermediate products are
-    DECIMAL(38,0) (actual magnitudes ≤ 1e27 at sf1 — no overflow).
-    Plan shape: one partial-aggregated groupBy + a broadcast join of
-    the tiny per-type stats back onto the events — scales linearly."""
-    e = Tables(spark, sf_dir).events
-    w = e.withColumn("w", F.round(F.col("value") * 100).cast("long"))
-    stats = w.groupBy("event_type").agg(
-        F.sum("w").alias("s"),
-        F.sum(F.expr("w * w")).alias("q"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    d = F.expr("cast(w as decimal(38,0)) * n - s")
-    lhs = F.expr("4 * _d * _d * cast(n - 1 as decimal(38,0))")
-    rhs = F.expr(
-        "25 * cast(n as decimal(38,0))"
-        " * (cast(n as decimal(38,0)) * q - cast(s as decimal(38,0)) * s)"
-    )
-    return (
-        w.join(F.broadcast(stats), "event_type")
-        .withColumn("_d", d)
-        .withColumn("is_anomaly", (lhs > rhs).cast("int"))
-        .groupBy("event_type")
-        .agg(
-            F.sum("is_anomaly").alias("n_anomalies"),
-            F.count(F.lit(1)).alias("n_events"),
         )
         .orderBy("event_type")
     )
@@ -176,25 +133,6 @@ ORACLE: dict[str, str] = {
         GROUP BY event_type
         ORDER BY event_type
     """,
-    "q32_zscore_anomaly": """
-        WITH w AS (
-            SELECT event_type, CAST(round(value * 100) AS BIGINT) AS w
-            FROM events
-        ), stats AS (
-            SELECT event_type,
-                   sum(w)::HUGEINT     AS s,
-                   sum(w * w)::HUGEINT AS q,
-                   count(*)::HUGEINT   AS n
-            FROM w GROUP BY event_type
-        )
-        SELECT e.event_type,
-               sum((4 * (e.w * n - s) * (e.w * n - s) * (n - 1)
-                    > 25 * n * (n * q - s * s))::INT)::BIGINT AS n_anomalies,
-               count(*) AS n_events
-        FROM w e JOIN stats USING (event_type)
-        GROUP BY e.event_type
-        ORDER BY e.event_type
-    """,
     "q33_string_funcs": """
         SELECT p_partkey,
                upper(p_brand)                        AS brand_upper,
@@ -220,7 +158,6 @@ ORACLE: dict[str, str] = {
 QUERIES = {
     "q30_argmax": q30_argmax,
     "q31_corr_stats": q31_corr_stats,
-    "q32_zscore_anomaly": q32_zscore_anomaly,
     "q33_string_funcs": q33_string_funcs,
     "q34_conditional_agg": q34_conditional_agg,
 }
@@ -258,63 +195,6 @@ ORACLE["q35_array_agg"] = """
 """
 
 QUERIES["q35_array_agg"] = q35_array_agg
-
-
-def q36_hierarchical_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Continuous-aggregate pattern (hypertable rollup): minute-level
-    partials roll up to hours, hours to days — each level aggregates
-    the PREVIOUS level's partials (sum/count compose; avg derives),
-    never rescanning the raw events. At 100 TB this is the
-    materialized-rollup hierarchy; here all three levels run in one
-    plan to prove the composition is exact."""
-    e = Tables(spark, sf_dir).events
-    minute = (
-        e.groupBy(
-            F.date_trunc("minute", "ts").alias("minute"),
-            "event_type",
-        )
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sv"))
-    )
-    hour = (
-        minute.groupBy(
-            F.date_trunc("hour", "minute").alias("hour"), "event_type"
-        )
-        .agg(F.sum("n").alias("n"), F.sum("sv").alias("sv"))
-    )
-    # avg derives from the composed partials. The sum is rounded to the
-    # input precision (2dp) BEFORE the division: otherwise engines whose
-    # summation order differs in the last ulp can straddle a rounding
-    # boundary when count is 2^a·5^b (observed: sum/64 of 2dp money ==
-    # exactly 5 decimals == a .00005 boundary at round-4). The final
-    # 4dp rounding is floor(x*1e4 + 0.5)/1e4 rather than round(x, 4):
-    # when the quotient lands exactly on a .00005 boundary Spark rounds
-    # the double's SHORTEST DECIMAL REPR (BigDecimal.valueOf → HALF_UP
-    # on "…38.37875") while DuckDB rounds the binary value (slightly
-    # below the boundary) — different answers from the same double.
-    # floor(+0.5) is pure IEEE arithmetic, bit-identical in both.
-    day = (
-        hour.groupBy(F.date_trunc("day", "hour").cast("date").alias("day"), "event_type")
-        .agg(
-            F.sum("n").alias("n_events"),
-            (
-                F.floor(F.round(F.sum("sv"), 2) * 10000 / F.sum("n") + 0.5) / 10000.0
-            ).alias("avg_value"),
-        )
-    )
-    return day.orderBy("day", "event_type")
-
-
-ORACLE["q36_hierarchical_rollup"] = """
-    SELECT date_trunc('day', ts)::DATE AS day,
-           event_type,
-           count(*) AS n_events,
-           floor(round(sum(value), 2) * 10000 / count(*) + 0.5) / 10000.0 AS avg_value
-    FROM events
-    GROUP BY 1, 2
-    ORDER BY 1, 2
-"""
-
-QUERIES["q36_hierarchical_rollup"] = q36_hierarchical_rollup
 
 
 def q43_regression_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1443,122 +1323,6 @@ QUERIES["q124_permutation_test"] = q124_permutation_test
 
 
 # ---------------------------------------------------------------------------
-# q126: Spearman rank correlation (monthly revenue vs order volume)
-# ---------------------------------------------------------------------------
-
-
-def q126_spearman_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spearman rank correlation between monthly revenue and monthly
-    order count — completing the correlation triad (q31 Pearson on
-    values, q121 Kendall on concordant pairs, Spearman on ranks):
-    monotone association robust to outliers, the standard report for
-    "do busier months earn proportionally more".
-
-    Ranks use the tie-safe AVERAGE-rank convention held in exact
-    half-units (hr = 2·|below| + |equal| + 1 — an integer even when
-    the average rank is x.5), so Σd² is exact in quarter-units and
-    ρ_milli = 1000 − (6000·Σd²_q) // (4·n·(n²−1)) is pure integer
-    floor arithmetic — no float exists, both engines hash-match
-    bit-for-bit (the q90/q124 discipline).
-
-    Scale: the ONLY corpus pass is the map-side-combinable monthly
-    aggregate; ranks, differences, and the ρ residue all run over the
-    calendar-bounded ~80-row series (SF-independent), the same
-    bounded-grid window class as q115/q116 (rationale recorded in
-    tests/test_plans.py).
-    """
-    o = Tables(spark, sf_dir).orders
-    monthly = (
-        o.groupBy(F.date_trunc("month", "o_orderdate").alias("month"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                "rev_cents"
-            ),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-    )
-
-    def half_ranks(df: DataFrame, val: str, out: str) -> DataFrame:
-        per = df.groupBy(val).agg(F.count(F.lit(1)).alias("_cnt"))
-        w = Window.orderBy(val).rowsBetween(Window.unboundedPreceding, -1)
-        hr = per.select(
-            val,
-            (
-                2 * F.coalesce(F.sum("_cnt").over(w), F.lit(0).cast("long"))
-                + F.col("_cnt")
-                + 1
-            ).alias(out),
-        )
-        return df.join(hr, val)
-
-    ranked = half_ranks(
-        half_ranks(monthly, "rev_cents", "hr_rev"), "n_orders", "hr_vol"
-    )
-    d2 = (F.col("hr_rev") - F.col("hr_vol")) * (F.col("hr_rev") - F.col("hr_vol"))
-    return (
-        ranked.agg(
-            F.count(F.lit(1)).alias("n_months"),
-            F.sum(d2).alias("sum_d2_quarter"),
-        )
-        .select(
-            "n_months",
-            "sum_d2_quarter",
-            # nullif: with <2 months rho is undefined — NULL, not an
-            # ANSI divide-by-zero abort (degenerate-mode fuzz catch,
-            # round 10); DuckDB's bare // 0 already NULLs, matching
-            F.expr(
-                "1000 - (6000 * sum_d2_quarter)"
-                " DIV nullif(4 * n_months * (n_months * n_months - 1), 0)"
-            ).alias("rho_milli"),
-        )
-    )
-
-
-ORACLE["q126_spearman_monthly"] = """
-    WITH monthly AS (
-        SELECT date_trunc('month', o_orderdate) AS month,
-               sum(round(o_totalprice * 100)::BIGINT)::BIGINT AS rev_cents,
-               count(*)::BIGINT AS n_orders
-        FROM orders GROUP BY 1
-    ),
-    rr AS (
-        SELECT rev_cents,
-               (2 * coalesce(sum(cnt) OVER (ORDER BY rev_cents
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                     0)::BIGINT + cnt + 1) AS hr_rev
-        FROM (SELECT rev_cents, count(*)::BIGINT AS cnt
-              FROM monthly GROUP BY rev_cents)
-    ),
-    rv AS (
-        SELECT n_orders,
-               (2 * coalesce(sum(cnt) OVER (ORDER BY n_orders
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                     0)::BIGINT + cnt + 1) AS hr_vol
-        FROM (SELECT n_orders, count(*)::BIGINT AS cnt
-              FROM monthly GROUP BY n_orders)
-    ),
-    ranked AS (
-        SELECT m.month, rr.hr_rev, rv.hr_vol
-        FROM monthly m
-        JOIN rr ON m.rev_cents = rr.rev_cents
-        JOIN rv ON m.n_orders = rv.n_orders
-    ),
-    s AS (
-        SELECT count(*)::BIGINT AS n_months,
-               sum((hr_rev - hr_vol) * (hr_rev - hr_vol))::BIGINT
-                   AS sum_d2_quarter
-        FROM ranked
-    )
-    SELECT n_months, sum_d2_quarter,
-           (1000 - (6000 * sum_d2_quarter)
-            // (4 * n_months * (n_months * n_months - 1)))::BIGINT
-               AS rho_milli
-    FROM s
-    """
-QUERIES["q126_spearman_monthly"] = q126_spearman_monthly
-
-
-# ---------------------------------------------------------------------------
 # q128: AMS (tug-of-war) second frequency moment — self-join size estimate
 # ---------------------------------------------------------------------------
 
@@ -1584,8 +1348,8 @@ def q128_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Sketch: K = 120 sign counters. Counter (j,k) sums sign_{j,k}(key)
     = ±1 from bit k of h64(key ':' j) — two salted 60-bit hashes per
     row, 60 bit extractions each (the paper's 4-wise independent
-    families are approximated by distinct md5 bits; documented trade,
-    same discipline as d04's simhash bits). Each X_{j,k} = s_{j,k}²
+    families are approximated by distinct md5 bits; documented
+    trade). Each X_{j,k} = s_{j,k}²
     has E[X] = F2; the estimate is the MEAN of the 120 (relative
     std ≈ sqrt(2/K) ≈ 13%). Everything is one pass of ±1 integer
     sums — the partials are plain SUMs, so the sketch is map-side
@@ -1601,8 +1365,7 @@ def q128_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy is the expensive audit path a production run drops.
     """
     # ONE md5 per row: the two 60-bit draws are disjoint 15-hex-digit
-    # halves of the same digest (md5 bit independence, the d04/simhash
-    # discipline) — a salted second md5 doubled the scan's hash cost
+    # halves of the same digest (md5 bit independence) — a salted second md5 doubled the scan's hash cost
     # for no estimator benefit (measured 2.7 -> 1.9 s warm at sf0.1)
     li = (
         Tables(spark, sf_dir)

@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.casts import spark_try_int_sql
 from ..functions.hashing import h64_sql
 from .tables import Tables
 from .bcache import bounded_persist
@@ -34,28 +33,6 @@ STOPWORDS = {
 
 def _words():
     return F.split(F.col("text"), " ")
-
-
-def _sql_stoplist(lang: str) -> str:
-    return "[" + ", ".join(f"'{w}'" for w in STOPWORDS[lang]) + "]"
-
-
-def t01_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document token statistics via array higher-order functions."""
-    d = Tables(spark, sf_dir).documents
-    words = _words()
-    return d.select(
-        "doc_id",
-        "lang",
-        F.size(words).alias("n_words"),
-        F.size(F.array_distinct(words)).alias("n_distinct_words"),
-        F.round(
-            F.aggregate(F.transform(words, lambda w: F.length(w)), F.lit(0), lambda a, x: a + x)
-            / F.size(words),
-            4,
-        ).alias("avg_word_len"),
-        F.array_max(F.transform(words, lambda w: F.length(w))).alias("max_word_len"),
-    )
 
 
 def t02_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -85,30 +62,6 @@ def t02_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def t03_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword-lexicon language ID; outputs the (actual, predicted)
-    confusion matrix. Ties break alphabetically; zero hits → 'und'."""
-    d = Tables(spark, sf_dir).documents
-    words = _words()
-    def stopword_hits(stoplist):
-        # nb: keep the lambda single-arg — pyspark derives HOF arity
-        # from the python signature, so a default arg would be treated
-        # as a second lambda parameter
-        return F.size(F.filter(words, lambda w: w.isin(*stoplist)))
-
-    hits = {lang: stopword_hits(STOPWORDS[lang]) for lang in sorted(STOPWORDS)}
-    best = F.greatest(*hits.values())
-    pred = F.when(best <= 0, F.lit("und"))
-    for lang in sorted(STOPWORDS):  # alphabetical = deterministic tiebreak
-        pred = pred.when(hits[lang] == best, F.lit(lang))
-    return (
-        d.select("lang", pred.alias("pred_lang"))
-        .groupBy("lang", "pred_lang")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("lang", "pred_lang")
-    )
-
-
 def t04_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace vs BPE-ish regex tokenization totals per source."""
     d = Tables(spark, sf_dir).documents
@@ -126,7 +79,7 @@ def t04_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("re").alias("re_tokens"),
             F.sum("nc").alias("total_chars"),
             F.count(F.lit(1)).alias("n_docs"),
-            # integer-exact scaled average (see q20_events_json): float
+            # integer-exact scaled average: float
             # round(avg) drifted a ulp between engines; div never does.
             F.expr("(10000 * sum(ws)) div count(1)").alias("avg_ws_e4"),
         )
@@ -134,36 +87,7 @@ def t04_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def t05_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprint: min portable-hash over word 3-shingles
-    (minhash with k=1 — the winnowing-style content fingerprint)."""
-    d = Tables(spark, sf_dir).documents
-    # materialize the words array first — HOF lambdas re-evaluate a
-    # captured split() per element access (see dedup._hashed_docs)
-    dw = d.withColumn("w", _words()).filter(F.size("w") >= 3)
-    w = F.col("w")
-    shingles = F.transform(
-        F.sequence(F.lit(1), F.size(w) - 2),
-        lambda i: F.concat_ws(
-            " ", F.element_at(w, i), F.element_at(w, i + 1), F.element_at(w, i + 2)
-        ),
-    )
-    from ..functions.hashing import h64
-
-    fp = F.array_min(F.transform(shingles, lambda s: h64(s)))
-    return dw.select("doc_id", "source", fp.alias("fingerprint"))
-
-
 ORACLE: dict[str, str] = {
-    "t01_doc_stats": """
-        SELECT doc_id, lang,
-               len(string_split(text, ' '))                               AS n_words,
-               len(list_distinct(string_split(text, ' ')))                AS n_distinct_words,
-               round(list_sum(list_transform(string_split(text, ' '), w -> length(w)))::DOUBLE
-                     / len(string_split(text, ' ')), 4)                   AS avg_word_len,
-               list_max(list_transform(string_split(text, ' '), w -> length(w))) AS max_word_len
-        FROM documents
-    """,
     "t02_quality_score": """
         WITH scored AS (
             SELECT source,
@@ -183,26 +107,6 @@ ORACLE: dict[str, str] = {
         GROUP BY 1, 2
         ORDER BY 1, 2
     """,
-    "t03_lang_id": f"""
-        WITH hits AS (
-            SELECT lang,
-                   len(list_filter(string_split(text,' '), w -> list_contains({_sql_stoplist('de')}, w))) AS h_de,
-                   len(list_filter(string_split(text,' '), w -> list_contains({_sql_stoplist('en')}, w))) AS h_en,
-                   len(list_filter(string_split(text,' '), w -> list_contains({_sql_stoplist('es')}, w))) AS h_es,
-                   len(list_filter(string_split(text,' '), w -> list_contains({_sql_stoplist('fr')}, w))) AS h_fr
-            FROM documents
-        ), pred AS (
-            SELECT lang,
-                   CASE WHEN greatest(h_de,h_en,h_es,h_fr) <= 0 THEN 'und'
-                        WHEN h_de = greatest(h_de,h_en,h_es,h_fr) THEN 'de'
-                        WHEN h_en = greatest(h_de,h_en,h_es,h_fr) THEN 'en'
-                        WHEN h_es = greatest(h_de,h_en,h_es,h_fr) THEN 'es'
-                        ELSE 'fr' END AS pred_lang
-            FROM hits
-        )
-        SELECT lang, pred_lang, count(*) AS n_docs
-        FROM pred GROUP BY 1, 2 ORDER BY 1, 2
-    """,
     "t04_token_count": """
         SELECT source,
                sum(len(string_split(text,' ')))::BIGINT               AS ws_tokens,
@@ -214,24 +118,11 @@ ORACLE: dict[str, str] = {
         GROUP BY source
         ORDER BY source
     """,
-    "t05_fingerprint": f"""
-        SELECT doc_id, source,
-               list_min(list_transform(
-                   [string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2]
-                    for i in generate_series(1, len(string_split(text,' ')) - 2)],
-                   s -> {h64_sql('s')}
-               )) AS fingerprint
-        FROM documents
-        WHERE len(string_split(text,' ')) >= 3
-    """,
 }
 
 QUERIES = {
-    "t01_doc_stats": t01_doc_stats,
     "t02_quality_score": t02_quality_score,
-    "t03_lang_id": t03_lang_id,
     "t04_token_count": t04_token_count,
-    "t05_fingerprint": t05_fingerprint,
 }
 
 
@@ -309,7 +200,7 @@ def t07_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence, deduplicated per doc. Guarantees any shared run of
     ``WINNOW_W + WINNOW_K - 1`` words between two docs shares a
     fingerprint — the partial-overlap detector that whole-doc
-    fingerprints (t05) can't provide.
+    fingerprints can't provide.
 
     Emits per-doc fingerprint counts + the corpus-wide most-shared
     fingerprint count per source. Column expressions only.
@@ -465,62 +356,6 @@ ORACLE["t09_vocab_df"] = """
 """
 
 QUERIES["t09_vocab_df"] = t09_vocab_df
-
-
-CHUNK_LEN = 64  # context-window chunk size (words)
-CHUNK_STRIDE = 48  # stride between chunk starts (overlap = 16)
-
-
-def t10_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Context-window chunking: split every document into fixed-size
-    overlapping token windows (the pre-tokenization step that feeds
-    training-example assembly). Emits one row per (doc, chunk) with a
-    portable content fingerprint instead of the chunk text so the
-    output stays narrow.
-
-    Scale: per-row sequence explode — no shuffle at all until the
-    optional downstream agg; chunk boundaries depend only on the row.
-    """
-    from ..functions.hashing import h64
-
-    d = Tables(spark, sf_dir).documents
-    dw = d.withColumn("w", _words())
-    w = F.col("w")
-    starts = F.sequence(
-        F.lit(0).cast("long"), F.floor((F.size(w) - 1) / F.lit(CHUNK_STRIDE))
-    )
-    ex = dw.select("doc_id", w.alias("w"), F.explode(starts).alias("i"))
-    chunk = F.slice(
-        F.col("w"), (F.col("i") * CHUNK_STRIDE + 1).cast("int"), F.lit(CHUNK_LEN)
-    )
-    return ex.select(
-        "doc_id",
-        F.col("i").alias("chunk_idx"),
-        F.size(chunk).alias("n_tokens"),
-        h64(F.concat_ws(" ", chunk)).alias("chunk_fp"),
-    ).orderBy("doc_id", "chunk_idx")
-
-
-ORACLE["t10_chunk"] = f"""
-    WITH dw AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ), ex AS (
-        SELECT doc_id, w,
-               unnest(generate_series(0, (len(w) - 1) // {CHUNK_STRIDE})) AS i
-        FROM dw
-    ), chunks AS (
-        SELECT doc_id, i AS chunk_idx,
-               w[i * {CHUNK_STRIDE} + 1 : i * {CHUNK_STRIDE} + {CHUNK_LEN}] AS chunk
-        FROM ex
-    )
-    SELECT doc_id, chunk_idx,
-           len(chunk) AS n_tokens,
-           {h64_sql("array_to_string(chunk, ' ')")} AS chunk_fp
-    FROM chunks
-    ORDER BY doc_id, chunk_idx
-"""
-
-QUERIES["t10_chunk"] = t10_chunk
 
 
 PACK_BUDGET = 2048  # context-window token budget per packed sequence
@@ -694,60 +529,8 @@ def _mixture_weight_expr():
     return F.when(num % 2 == 0, F.lit(25)).otherwise(F.lit(75))
 
 
-def t13_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-mixture sampling: deterministically downsample each source
-    to its target mixture weight via a salted hash bucket per doc —
-    the reshuffle-free way to hit a per-domain token budget (keep doc
-    iff ``h64('mix:'+doc_id) % 100 < weight(source)``). Stable under
-    corpus growth and resumable: membership never depends on other
-    rows, unlike reservoir/random sampling.
-
-    Scale: pure map + low-cardinality agg; the decision column needs no
-    shuffle at all, so at 100 TB the sampled corpus is a filter
-    pushdown away.
-    """
-    from ..functions.hashing import h64
-
-    d = Tables(spark, sf_dir).documents
-    bucket = h64(F.concat(F.lit("mix:"), F.col("doc_id").cast("string"))) % 100
-    kept = (bucket < _mixture_weight_expr()).cast("int")
-    return (
-        d.select("source", kept.alias("kept"))
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("kept").alias("n_kept"),
-        )
-        .orderBy("source")
-    )
-
-
-ORACLE["t13_mixture"] = f"""
-    -- spark_try_int_sql, not bare TRY_CAST: duckdb TRY_CAST('3.7' AS
-    -- INT) ROUNDS to 4 where spark try_cast yields NULL, so a
-    -- non-integral source tag would pick the 25% branch here and the
-    -- 75% branch on spark (q20's divergence class, round-10 advice)
-    WITH marked AS (
-        SELECT source,
-               ({h64_sql("'mix:' || doc_id::VARCHAR")} % 100 <
-                CASE WHEN {spark_try_int_sql("substr(source, 4)", "INT")} % 2 = 0
-                     THEN 25 ELSE 75 END
-               )::INT AS kept
-        FROM documents
-    )
-    SELECT source,
-           count(*)          AS n_docs,
-           sum(kept)::BIGINT AS n_kept
-    FROM marked
-    GROUP BY source
-    ORDER BY source
-"""
-
-QUERIES["t13_mixture"] = t13_mixture
-
-
 # ---------------------------------------------------------------------------
-# t14: PII detection + redaction
+# PII patterns (the curation chain's redaction stage)
 # ---------------------------------------------------------------------------
 
 # Patterns restricted to syntax valid in BOTH Java regex (Spark) and
@@ -756,87 +539,6 @@ QUERIES["t13_mixture"] = t13_mixture
 PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PII_IPV4 = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 PII_PHONE = r"\b\d{3}-\d{4}\b"
-
-
-def _pii_augmented():
-    """The synthetic corpus is PII-free (verified: no digits at all), so
-    the operator runs over a deterministically PII-injected twin of the
-    text — identical expression on the oracle side — to exercise the
-    regexes non-vacuously. On real data the augmentation is dropped and
-    the scrubber runs over ``text`` directly."""
-    return F.concat(
-        F.col("text"),
-        F.lit(" contact user"),
-        F.col("doc_id").cast("string"),
-        F.lit("@example.com from 10.0."),
-        (F.col("doc_id") % 256).cast("string"),
-        F.lit(".7 call 555-"),
-        F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-    )
-
-
-def t14_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII detection + redaction: count and mask emails, IPv4s and
-    phone-shaped numbers per document — the scrub pass a training-data
-    pipeline runs before anything else sees the text. The redacted text
-    itself stays distributed; the output carries its portable hash so
-    the full replacement result is value-verified without shipping
-    bodies.
-
-    Scale: pure per-row column expressions (JVM regex, no Python), zero
-    shuffle before the final ordering; at 100 TB this is a map-only
-    pass writing back to the lake.
-    """
-    from ..functions.hashing import h64
-
-    d = Tables(spark, sf_dir).documents
-    aug = d.withColumn("aug", _pii_augmented())
-    redacted = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.col("aug"), PII_EMAIL, "<EMAIL>"),
-            PII_IPV4,
-            "<IP>",
-        ),
-        PII_PHONE,
-        "<PHONE>",
-    )
-    return (
-        aug.select(
-            "doc_id",
-            F.regexp_count(F.col("aug"), F.lit(PII_EMAIL)).alias("n_emails"),
-            F.regexp_count(F.col("aug"), F.lit(PII_IPV4)).alias("n_ips"),
-            F.regexp_count(F.col("aug"), F.lit(PII_PHONE)).alias("n_phones"),
-            h64(redacted).alias("redacted_hash"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-_PII_AUG_SQL = (
-    "text || ' contact user' || doc_id::VARCHAR || '@example.com from 10.0.' "
-    "|| (doc_id % 256)::VARCHAR || '.7 call 555-' "
-    "|| lpad((doc_id % 10000)::VARCHAR, 4, '0')"
-)
-
-ORACLE["t14_pii_redact"] = f"""
-    WITH aug AS (
-        SELECT doc_id, {_PII_AUG_SQL} AS aug FROM documents
-    )
-    SELECT doc_id,
-           len(regexp_extract_all(aug, '{PII_EMAIL}'))::INT AS n_emails,
-           len(regexp_extract_all(aug, '{PII_IPV4}'))::INT  AS n_ips,
-           len(regexp_extract_all(aug, '{PII_PHONE}'))::INT AS n_phones,
-           {h64_sql(
-               "regexp_replace(regexp_replace(regexp_replace(aug, "
-               f"'{PII_EMAIL}', '<EMAIL>', 'g'), "
-               f"'{PII_IPV4}', '<IP>', 'g'), "
-               f"'{PII_PHONE}', '<PHONE>', 'g')"
-           )} AS redacted_hash
-    FROM aug
-    ORDER BY doc_id
-"""
-
-QUERIES["t14_pii_redact"] = t14_pii_redact
 
 
 def t15_common_token_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -977,8 +679,7 @@ def t17_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     — positive when the doc leans toward target-distribution features.
     All-integer, so partitioning/engine independent. Magnitude bound:
     cnt·N ≤ (7.5e7)² ≈ 5.6e15 at sf10, × ~200 features/doc ≈ 1e18 —
-    inside int64; beyond that, swap the sum to DECIMAL(38,0)/HUGEINT
-    (q32's pattern).
+    inside int64; beyond that, swap the sum to DECIMAL(38,0)/HUGEINT.
 
     Plan shape: one corpus pass builds the 4096-row hashed feature
     table (map-side combinable), which then BROADCASTS back onto the
@@ -1123,48 +824,18 @@ QUERIES["t18_top_terms"] = t18_top_terms
 
 
 # ---------------------------------------------------------------------------
-# t19: BPE tokenizer APPLY (segment the corpus with the trained merges)
+# BPE tokenizer apply (segment text with t16's trained merges)
 # ---------------------------------------------------------------------------
 
 BPE_N_MERGES = 8  # merge rules applied (top of t16's ranked candidates)
 
 
-def t19_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Apply the tokenizer the t16 merge step trains: segment every
-    document into BPE symbols using the top-N merge rules and emit
-    per-document token counts — the op that turns a curated corpus into
-    the token budget a training run actually consumes.
-
-    Same vocab-bounded shape as t16: merges apply over the DISTINCT-
-    word table (each word spaced into characters, then N chained
-    JVM-side ``replace`` passes — one per merge rule, rank order), and
-    documents join back to per-word token counts. The corpus-sized
-    passes are a word count and one equi-join on the word; the
-    per-symbol work never touches full documents. The merge table
-    itself is k-sized (driver-collected, like the centroid codebooks).
-
-    Merge application is greedy left-to-right non-overlapping
-    single-pass per rule (plain ``replace`` semantics, identical in
-    Spark and DuckDB) — a deterministic one-shot variant of BPE's
-    recount-between-merges loop, which is what keeps the whole thing
-    one lazy plan per rule instead of a per-word iterative UDF.
-    """
-    merges = [
-        r["pair"] for r in t16_bpe_merge_step(spark, sf_dir).collect()[:BPE_N_MERGES]
-    ]
-    return bpe_token_counts(Tables(spark, sf_dir).documents, merges).orderBy(
-        "doc_id"
-    )
-
-
 def bpe_token_counts(d: DataFrame, merges: list[str]) -> DataFrame:
-    """t19's merge-application core over ANY (doc_id, text) relation:
-    per-document BPE token counts under an already-trained merge list
-    — factored out (VERDICT_r11 #8) so the curation pipeline can
-    budget its LANDED lake output with the exact same segmentation
-    semantics the gated t19 row is verified under. Same scale shape:
-    merges apply over the DISTINCT-word table, documents join back on
-    the word; the merge table is k-sized and lives in the plan as
+    """Merge application over ANY (doc_id, text) relation: per-document
+    BPE token counts under an already-trained merge list — the
+    curation pipeline budgets its LANDED lake output with it. Merges
+    apply over the DISTINCT-word table, documents join back on the
+    word; the merge table is k-sized and lives in the plan as
     literals."""
     wf = (
         d.select(F.explode(_words()).alias("word"))
@@ -1196,57 +867,6 @@ def bpe_token_counts(d: DataFrame, merges: list[str]) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_words"),
         )
     )
-
-
-def _t19_oracle() -> str:
-    # the merge table is computed IN-QUERY (pivoted to scalar columns
-    # m.p1..m.pN) since the oracle string must be static; rank order
-    # matches t16's (count DESC, pair ASC) total order
-    pcols = ", ".join(
-        f"max(CASE WHEN rn = {i} THEN pair END) AS p{i}"
-        for i in range(1, BPE_N_MERGES + 1)
-    )
-    seg = "' ' || regexp_replace(wf.word, '(?s)(.)', '\\1 ', 'g')"
-    for i in range(1, BPE_N_MERGES + 1):
-        seg = (
-            f"replace({seg}, ' ' || substr(m.p{i}, 1, 1) || ' ' || "
-            f"substr(m.p{i}, 2, 1) || ' ', ' ' || m.p{i} || ' ')"
-        )
-    return f"""
-    WITH w AS (
-        SELECT unnest(string_split(text, ' ')) AS word FROM documents
-    ), wf AS (
-        SELECT word, count(*) AS freq FROM w WHERE word <> '' GROUP BY word
-    ), p AS (
-        SELECT freq,
-               unnest([substr(word, i, 2)
-                       for i in generate_series(1, len(word) - 1)]) AS pair
-        FROM wf WHERE len(word) >= 2
-    ), ranked AS (
-        SELECT pair, row_number() OVER (ORDER BY sum(freq) DESC, pair) AS rn
-        FROM p GROUP BY pair
-    ), m AS (
-        SELECT {pcols} FROM ranked WHERE rn <= {BPE_N_MERGES}
-    ), seg AS (
-        SELECT wf.word, {seg} AS s
-        FROM wf CROSS JOIN m
-    ), tok AS (
-        SELECT word, len(s) - len(replace(s, ' ', '')) - 1 AS n_tok FROM seg
-    ), dw AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
-    )
-    SELECT dw.doc_id,
-           sum(tok.n_tok)::BIGINT AS n_tokens,
-           count(*)::BIGINT       AS n_words
-    FROM dw JOIN tok USING (word)
-    WHERE dw.word <> ''
-    GROUP BY dw.doc_id
-    ORDER BY dw.doc_id
-    """
-
-
-ORACLE["t19_bpe_apply"] = _t19_oracle()
-QUERIES["t19_bpe_apply"] = t19_bpe_apply
 
 
 # ---------------------------------------------------------------------------
@@ -1335,7 +955,7 @@ def t21_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = _words()
     def _tf(term):
         # closure (NOT a default arg: pyspark derives HOF arity from
-        # the python signature — t03's gotcha)
+        # the python signature)
         return F.size(F.filter(words, lambda w: w == F.lit(term)))
 
     tf_cols = [_tf(t).alias(f"tf_{t}") for t in BM25_TERMS]

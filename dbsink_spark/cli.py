@@ -116,6 +116,11 @@ def setup(
             from .sources import avro_file_source
 
             df = avro_file_source(spark, datafile)
+        elif datafile.endswith(".jsonl"):
+            # one JSON message per line; the mapping transform decodes
+            from .sources import jsonl_source
+
+            df = jsonl_source(spark, datafile)
         else:
             from .sources import replay_source
 

@@ -16,7 +16,7 @@ the string accept-set (empirically pinned in
 
 One malformed record picking a different CASE branch per engine is the
 exact divergence class the round-9 text-mode fuzz campaign surfaced in
-q20/q31/t13/q109, so the twins live here once instead of being
+q31/q109 and the curation mixture flag, so the twins live here once instead of being
 re-derived per oracle.
 
 The integral twin reproduces Spark ``try_cast`` EXACTLY: strip the

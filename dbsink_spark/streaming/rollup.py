@@ -1,5 +1,5 @@
-"""Incremental rollup maintenance — the streaming twin of the batch
-continuous-aggregate hierarchy (analytics.stats.q36_hierarchical_rollup).
+"""Incremental rollup maintenance — a continuous aggregate whose
+count + sum partials compose across batches.
 
 Each micro-batch is reduced to (bucket, key) partial aggregates
 (count + sum — the composable partials), then MERGED into a target

@@ -331,7 +331,7 @@ class HLLMaintainer(MergeMaintainer):
 
 
 # ---------------------------------------------------------------------------
-# Incrementally-maintained fixed-bin histogram (q27's streaming twin)
+# Incrementally-maintained fixed-bin histogram
 # — additive like count-min, but also serves approx QUANTILES
 # ---------------------------------------------------------------------------
 
@@ -340,9 +340,8 @@ HIST_BIN_WIDTH = 50.0
 
 def batch_histogram(df: DataFrame, value_col: str,
                     bin_width: float = HIST_BIN_WIDTH) -> DataFrame:
-    """(bin, cnt) partial histogram for one batch — the same
-    floor(value/width) binning as analytics.advanced.q27_histogram,
-    map-side combinable. NULL values are dropped (a NULL bin would
+    """(bin, cnt) partial histogram for one batch — floor(value/width)
+    binning, map-side combinable. NULL values are dropped (a NULL bin would
     violate the sink's PK and brick the stream under replay — the
     batch_grid rule)."""
     return (
@@ -355,7 +354,7 @@ def batch_histogram(df: DataFrame, value_col: str,
 
 class HistogramMaintainer(MergeMaintainer):
     """Maintains an additive fixed-bin histogram in a DBAPI target —
-    q27's streaming twin, and the distribution-statistics member of
+    the distribution-statistics member of
     the maintainer family (Rollup=sums, CountMin=frequency,
     Bitmap/HLL=distinct, Histogram=quantiles).
 

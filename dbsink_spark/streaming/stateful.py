@@ -112,8 +112,7 @@ def interval_join(
     arrive within ``(left_ts + lower, left_ts + upper]`` of a
     left-stream event with the same key — the attribution join
     (impression→click, error→follow-up, order→payment) as a TRUE
-    two-stream stateful join, the streaming twin of the batch range
-    join (analytics.advanced.q38).
+    two-stream stateful join with a time-bounded join condition.
 
     Both sides carry watermarks and the join condition carries the
     time bound, which is what lets Structured Streaming EVICT buffered

@@ -17,18 +17,18 @@ TABLES = (
 
 SUBSET = [
     "q01_pricing_summary",
-    "q05_multi_join",
+    "q125_join_ivm",
     "q13_window_topk_per_group",
     "q19_events_sessionize",
     "q22_asof_join",
     "q30_argmax",
-    "t03_lang_id",
+    "t21_bm25_rank",
     "t16_bpe_merge_step",
     "d11_semdedup",
     "q48_interp_gapfill",
     "d01_dedup_exact",
     "d03_minhash_lsh",
-    "s01_cosine_topk",
+    "s09_ann_recall",
     "m01_media_features",
 ]
 
@@ -85,8 +85,10 @@ def test_registry_integrity():
 
 def test_numpy_topk_matches_exact_path(spark):
     """s04 (vectorized numpy scale path) must produce the same rankings
-    as s01 (exact sequential-fold path)."""
-    exact = analytics.ALL_QUERIES["s01_cosine_topk"](spark, SF_DIR).collect()
+    as the exact sequential-fold path s09 audits against."""
+    from dbsink_spark.analytics.similarity import exact_cosine_topk
+
+    exact = exact_cosine_topk(spark, SF_DIR).collect()
     fast = analytics.ALL_QUERIES["s04_numpy_topk"](spark, SF_DIR).collect()
     assert len(exact) == len(fast)
     e = {(r["query_id"], r["rank"]): r["corpus_id"] for r in exact}
@@ -107,26 +109,6 @@ def test_sql_front_door(spark):
     ).collect()
     assert len(out) == 5
     assert sum(r.n_nations for r in out) == 25
-
-
-def test_chunk_covers_every_token(spark):
-    """t10: with stride 48 / chunk 64, the first 48 tokens of every
-    chunk are disjoint and consecutive — so sum(min(n_tokens, 48))
-    over a doc's chunks must equal its word count (every token lands
-    in exactly one stride window)."""
-    from pyspark.sql import functions as F
-
-    from dbsink_spark.analytics import text
-
-    chunks = text.t10_chunk(spark, SF_DIR)
-    covered = chunks.groupBy("doc_id").agg(
-        F.sum(F.least(F.col("n_tokens"), F.lit(text.CHUNK_STRIDE))).alias("covered")
-    )
-    docs = text.Tables(spark, SF_DIR).documents.select(
-        "doc_id", F.size(F.split("text", " ")).alias("n_words")
-    )
-    bad = covered.join(docs, "doc_id").filter(F.col("covered") != F.col("n_words"))
-    assert bad.count() == 0
 
 
 def test_pack_bins_are_contiguous_and_sized(spark):
@@ -306,9 +288,9 @@ def test_curation_pipeline_composes(spark, tmp_path):
 
 
 def test_bpe_token_budget_matches_python_twin(spark, tmp_path):
-    """VERDICT_r11 #8: the bench's lake BPE budget must carry t19's
-    exact gated segmentation semantics over the LANDED text — pinned
-    per split against a pure-python twin (word-spaced chars, ranked
+    """The bench's lake BPE budget segments the LANDED text exactly as
+    ``text.bpe_token_counts`` specifies — pinned per split against a
+    pure-python twin (word-spaced chars, ranked
     merge rules applied left-to-right non-overlapping, token count =
     spaces − 1), trained with the same t16 merge table."""
     import collections
@@ -2573,39 +2555,6 @@ def test_d03_untracked_cache_is_bounded(spark):
     ).count()
     for df in tracked:
         df.unpersist()
-
-
-def test_q126_half_ranks_are_average_ranks(spark):
-    """q126's integer half-rank formula (2·|below| + |equal| + 1) must
-    equal 2× the statistical average rank on tied data — pinned
-    against a plain python reference with heavy ties."""
-    import random
-
-    from dbsink_spark.analytics.stats import q126_spearman_monthly  # noqa: F401
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    rng = random.Random(3)
-    vals = [rng.randint(0, 5) for _ in range(40)]
-    df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], ["i", "v"])
-
-    per = df.groupBy("v").agg(F.count(F.lit(1)).alias("_cnt"))
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    hr = per.select(
-        "v",
-        (
-            2 * F.coalesce(F.sum("_cnt").over(w), F.lit(0).cast("long"))
-            + F.col("_cnt")
-            + 1
-        ).alias("hr"),
-    )
-    got = {r["v"]: r["hr"] for r in hr.collect()}
-
-    s = sorted(vals)
-    for v in set(vals):
-        ranks = [i + 1 for i, x in enumerate(s) if x == v]
-        avg_rank = sum(ranks) / len(ranks)
-        assert got[v] == int(2 * avg_rank), (v, got[v], avg_rank)
 
 
 def test_m05_cdc_boundaries_shift_resistant(spark):

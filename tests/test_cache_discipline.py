@@ -68,8 +68,7 @@ def test_repeat_invocations_do_not_accumulate(spark, clean_cache):
     from dbsink_spark.analytics import dedup
 
     queries = [
-        dedup.d04_simhash,
-        dedup.d05_ngram_jaccard,
+        dedup.d03_minhash_lsh,
         dedup.d10_containment,
         dedup.d15_lsh_audit,
     ]
@@ -80,7 +79,7 @@ def test_repeat_invocations_do_not_accumulate(spark, clean_cache):
     # every cached frame is slot-tracked: residency == |slots|, and a
     # second invocation round added no blocks beyond the slot table
     assert _resident_cached_rdds(spark) <= len(slots)
-    assert len(slots) <= 6  # d04:1 d05:1 d10:2 d15:1 (+d03 via d15? no)
+    assert len(slots) <= 4  # d03:1 d10:2 d15:1
 
 
 def test_cc_propagate_releases_intermediate_rounds(spark, clean_cache):

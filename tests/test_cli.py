@@ -42,6 +42,32 @@ def test_cli_datafile_replay(tmp_path):
     assert n == len(keys) == 4
 
 
+def test_cli_jsonl_datafile_replay(tmp_path):
+    # one message per line; the re-sent key keeps its later value
+    msgs = float_messages() + [dict(float_messages()[0], values={"temp": 99.0})]
+    path = tmp_path / "floats.jsonl"
+    path.write_text("".join(json.dumps(m) + "\n" for m in msgs))
+    db = tmp_path / "cli.duckdb"
+    result = CliRunner().invoke(
+        setup,
+        [
+            "--topic", "floats",
+            "--lookup", "GenericFloat",
+            "--db", f"duckdb:///{db}",
+            "--datafile", str(path),
+            "--drop",
+        ],
+        catch_exceptions=False,
+    )
+    assert result.exit_code == 0
+    con = duckdb.connect(str(db))
+    n = con.execute('SELECT count(*) FROM "floats"').fetchone()[0]
+    [values] = con.execute("""SELECT "values" FROM "floats" WHERE uid = 'u0'""").fetchone()
+    con.close()
+    assert n == 4
+    assert json.loads(values)["temp"] == "99.0"
+
+
 def test_cli_dry_run(tmp_path):
     db = tmp_path / "dry.duckdb"
     result = CliRunner().invoke(

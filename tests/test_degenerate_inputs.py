@@ -9,7 +9,9 @@ crashes on empty collects (q84 q90 q112 d20 s04 s18), and
 empty-input result-shape divergences (q12 grand-total grouping-set
 row, q124 all-NULL agg row, q87 0.0-vs-NULL chi2).
 
-Each (query, seed) pair here is the exact dataset that caught the bug;
+Each (query, seed) pair here is the exact dataset that caught the bug
+(three rows since deleted as covered by other rows' plans run their
+covering row on the same seed: q12 → q52, s18 → s13, q126 → q46);
 the assertion is the full driver-style compare (columns + sorted-row
 value equality) between Spark and DuckDB on that dataset. At 100 TB a
 filter can legitimately leave an operator zero input rows — nothing
@@ -20,11 +22,12 @@ from __future__ import annotations
 
 import math
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from dbsink_spark import analytics
 from tools.check_oracle import TABLES
@@ -40,16 +43,16 @@ CASES = [
     (62, "q109_benford"),
     (62, "q112_decile_lift"),
     (62, "q124_permutation_test"),
-    (62, "q12_cube"),
+    (62, "q52_quality_audit"),
     (62, "q84_histogram_quantiles"),
     (62, "q87_chi_square"),
     (62, "q90_cusum"),
     (62, "s04_numpy_topk"),
-    (62, "s18_filtered_search"),
+    (62, "s13_ann_recall"),
     (63, "d20_incremental_dedup"),
     (63, "t27_zipf_fit"),
     (63, "q121_kendall_tau"),
-    (64, "q126_spearman_monthly"),
+    (64, "q46_mad_anomaly"),
     (64, "t29_overlap_profile"),
     (64, "q121_kendall_tau"),  # 0-row lineitem: len(NULL) vs size([])
     (67, "q74_constraint_audit"),  # all-NULL c_acctbal: sum(pred) NULL vs 0

@@ -31,13 +31,6 @@ PRODUCT_SUM_RATIONALE = {
         "DuckDB raises loudly beyond; Spark's long wraps are guarded "
         "by the oracle gate at harness SFs."
     ),
-    "q32_zscore_anomaly": (
-        "sum(w*w) accumulates in an explicit ::HUGEINT intermediate "
-        "(DuckDB 128-bit, never wraps); the BIGINT output is the "
-        "variance-test count, bounded by row count. Spark side "
-        "computes the same moments in DOUBLE with a documented "
-        "integer-exactness window."
-    ),
     "q42_time_weighted": (
         "trapezoid area2 sums (v+pv) x microsecond gaps per "
         "(user, type): bounded by 2 x max_cents x that user-type's "
@@ -45,12 +38,6 @@ PRODUCT_SUM_RATIONALE = {
         "values (spans are per-user, not corpus-wide); DuckDB raises "
         "loudly beyond, and the documented transform is a us->ms "
         "downscale (caught by the round-8 widened detector)."
-    ),
-    "q126_spearman_monthly": (
-        "Sum of squared half-rank differences over the CALENDAR-"
-        "bounded monthly series: d^2 <= (2n)^2 with n ~ 80 months, "
-        "sum <= 4n^3 ~ 2e6 — nowhere near int64 at any corpus size "
-        "(the series length is time-bounded, not data-bounded)."
     ),
     "q43_regression_stats": (
         "Sxy/Sxx sums of (centered month-index) x (cents): month "

@@ -50,16 +50,19 @@ def test_filter_and_projection_pushed_to_scan(spark):
 
 
 def test_dimension_join_broadcasts(spark):
-    plan = _plan(analytics.ALL_QUERIES["q03_broadcast_join"](spark, SF_DIR))
+    plan = _plan(analytics.ALL_QUERIES["m02_media_meta_join"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
 
 
 def test_similarity_corpus_never_shuffles_for_scoring(spark):
-    """s01: the query set broadcasts; the only hash-partitioning
-    exchange is the per-query top-k window (the final orderBy adds a
-    range partitioning), never the corpus join. The window's top-k is
-    pushed below the shuffle as a partial WindowGroupLimit."""
-    df = analytics.ALL_QUERIES["s01_cosine_topk"](spark, SF_DIR)
+    """The exact top-k (s09's ground truth): the query set broadcasts;
+    the only hash-partitioning exchange is the per-query top-k window
+    (the final orderBy adds a range partitioning), never the corpus
+    join. The window's top-k is pushed below the shuffle as a partial
+    WindowGroupLimit."""
+    from dbsink_spark.analytics.similarity import exact_cosine_topk
+
+    df = exact_cosine_topk(spark, SF_DIR)
     plan = _plan(df)
     assert "BroadcastNestedLoopJoin" in plan
     assert plan.count("Exchange hashpartitioning") == 1
@@ -217,10 +220,6 @@ UNPARTITIONED_WINDOW_RATIONALE = {
         "offset frame runs over the per-partition count table — ≤ "
         "shuffle-partition-count rows (cluster-config-bounded); the "
         "corpus-sized rank is the pid-partitioned window + offset join",
-    "q126_spearman_monthly":
-        "both half-rank frames run over the distinct-value sets of the "
-        "calendar-bounded monthly aggregate (≤ ~80 rows, SF-independent); "
-        "the corpus pass is the combinable monthly agg",
 }
 
 
@@ -433,7 +432,7 @@ def test_plan_stats_counts_known_shapes(spark):
 
     from dbsink_spark.analytics.introspect import assert_scale_safe, plan_stats
 
-    df = analytics.ALL_QUERIES["q03_broadcast_join"](spark, SF_DIR)
+    df = analytics.ALL_QUERIES["q125_join_ivm"](spark, SF_DIR)
     s = plan_stats(df)
     assert s.broadcast_hash_joins >= 1
     assert s.parquet_scans >= 2
@@ -563,8 +562,6 @@ def test_checkpointed_aggregates_keep_plan_shape(spark):
     from dbsink_spark.analytics.introspect import _lowcard_window_keys
 
     assert _lowcard_window_keys(plan) == ["l_returnflag"], _lowcard_window_keys(plan)
-    # s18's checkpointed scoring pass is scan → mapInPandas with ZERO
-    # exchanges — nothing shuffle-shaped to pin (noted for the rule)
 
 
 def test_d19_rank_assembly_reuses_one_range_exchange(spark):

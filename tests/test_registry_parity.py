@@ -61,6 +61,25 @@ def test_registry_count_matches_documented():
     assert int(m.group(1)) == len(analytics.ALL_QUERIES)
 
 
+def test_ungated_notes_cite_live_rows():
+    """Every row an UNGATED note cites (``q52``, ``t34``, ...) is a live
+    registry row, so deleting a row cannot leave a note pointing at
+    nothing. Round tags (``r13``) are not rows."""
+    import inspect
+    import re
+
+    notes = re.findall(r'^\s+"(\w+)",\s+#\s*(.*)$', inspect.getsource(analytics), re.M)
+    assert {row for row, _ in notes} == set(analytics.UNGATED)
+    live = {name.split("_")[0] for name in analytics.ALL_QUERIES}
+    stale = {
+        (row, cited)
+        for row, note in notes
+        for cited in re.findall(r"\b([a-z]\d+)(?=_|\b)", note)
+        if not re.fullmatch(r"r\d+", cited) and cited not in live
+    }
+    assert not stale, sorted(stale)
+
+
 def test_multimodal_not_registry_tail():
     # r01 lost m01-m03 to the gate's 50-row cut; they must sit well
     # inside the first 50 now.

@@ -35,7 +35,7 @@ import os
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.01")
 # Float canonicalization width. The driver's comparator is stricter than

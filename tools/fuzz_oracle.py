@@ -40,7 +40,7 @@ Usage:
     # leave an operator zero input rows; nothing may crash driver-side
     # or pick a different empty-result shape per engine.)
 
-Datasets land in ``/root/repo/.fuzzdata/{mode-}seed{N}/`` (gitignored)
+Datasets land in ``.fuzzdata/{mode-}seed{N}/`` at the repo root (gitignored)
 and are reused if present (delete the dir or pass --rebuild to
 regenerate). Exit code is the number of seeds with at least one
 failing query (check_oracle exits 0/1 per run); per-query detail is in
