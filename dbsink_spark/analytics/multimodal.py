@@ -152,40 +152,6 @@ QUERIES = {
 }
 
 
-FRAME_SAMPLE_EVERY = 2
-
-FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_idx", T.LongType()),
-        T.StructField("frame_len", T.LongType()),
-        T.StructField("frame_hash", T.LongType()),
-    ]
-)
-
-
-def _frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: chunk each blob into FRAME_BYTES frames and
-    keep every FRAME_SAMPLE_EVERY-th one (video frame-sampling shape)."""
-    rows: dict[str, list] = {"doc_id": [], "frame_idx": [], "frame_len": [], "frame_hash": []}
-    for pdf in batches:
-        for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-            for i in range(0, (len(blob) + FRAME_BYTES - 1) // FRAME_BYTES, FRAME_SAMPLE_EVERY):
-                chunk = blob[i * FRAME_BYTES : (i + 1) * FRAME_BYTES]
-                rows["doc_id"].append(doc_id)
-                rows["frame_idx"].append(i)
-                rows["frame_len"].append(len(chunk))
-                # hash the UPPERCASE-hex form of the frame bytes — the
-                # m05 convention: DuckDB has no md5(BLOB), so both
-                # engines hash the hex string (value-identical to
-                # hashing the bytes, at 2x hashed length)
-                rows["frame_hash"].append(
-                    int(hashlib.md5(chunk.hex().upper().encode()).hexdigest()[:15], 16)
-                )
-        yield pd.DataFrame(rows)
-        rows = {k: [] for k in rows}
-
-
 # ---------------------------------------------------------------------------
 # m04: binary near-dup via piecewise chunk-signature (perceptual-hash shape)
 # ---------------------------------------------------------------------------

@@ -235,25 +235,6 @@ def _node_crossing_lines(lines) -> str | None:
     )
 
 
-def _is_convex(ring) -> bool:
-    pts = list(ring)
-    if pts[0] == pts[-1]:
-        pts = pts[:-1]
-    if len(pts) < 3:
-        return False
-    sign = 0
-    for i in range(len(pts)):
-        a, b, c = pts[i], pts[(i + 1) % len(pts)], pts[(i + 2) % len(pts)]
-        cross = (b[0] - a[0]) * (c[1] - b[1]) - (b[1] - a[1]) * (c[0] - b[0])
-        if cross != 0:
-            s = 1 if cross > 0 else -1
-            if sign == 0:
-                sign = s
-            elif s != sign:
-                return False
-    return sign != 0
-
-
 def _dedup_ring(ring):
     """Ring without its closing point or consecutive duplicates (the
     shape :func:`_is_simple_ring` expects)."""
@@ -296,7 +277,3 @@ def _dissolve_polygons(polys) -> str | None:
             "((" + ", ".join(_fmt_pt(p) for p in ring) + "))" for ring in out
         ) + ")"
     return None  # unchanged: disjoint inputs, assembly already exact
-
-
-# backwards-compatible name (pre-round-6 the path was pair-only)
-_dissolve_two_convex = _dissolve_polygons

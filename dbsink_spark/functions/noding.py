@@ -69,25 +69,6 @@ def _seg_nodes(p1, p2, p3, p4):
     return []
 
 
-def _seg_intersection(p1, p2, p3, p4):
-    """Single intersection point of segments p1p2 and p3p4, or None.
-    Collinear overlaps return None (use :func:`_seg_nodes` /
-    :func:`_segs_interact` for those)."""
-    (x1, y1), (x2, y2), (x3, y3), (x4, y4) = (
-        (_f(p[0]), _f(p[1])) for p in (p1, p2, p3, p4)
-    )
-    dx1, dy1 = x2 - x1, y2 - y1
-    dx2, dy2 = x4 - x3, y4 - y3
-    denom = dx1 * dy2 - dy1 * dx2
-    if denom == 0:
-        return None
-    t = ((x3 - x1) * dy2 - (y3 - y1) * dx2) / denom
-    u = ((x3 - x1) * dy1 - (y3 - y1) * dx1) / denom
-    if 0 <= t <= 1 and 0 <= u <= 1:
-        return (x1 + t * dx1, y1 + t * dy1)
-    return None
-
-
 def _segs_interact(s1, s2) -> bool:
     """True when noding the pair would change the piece set: a
     crossing/T-touch at a point that is not a shared endpoint, or a
@@ -167,22 +148,6 @@ def _ring_ccw(ring):
     if area2 == 0:
         raise ValueError("degenerate ring")
     return pts if area2 > 0 else pts[::-1]
-
-
-def _point_in_convex(pt, ring):
-    """-1 outside, 0 on boundary, 1 strictly inside (ring CCW)."""
-    on_edge = False
-    for i in range(len(ring)):
-        a, b = ring[i], ring[(i + 1) % len(ring)]
-        cross = (b[0] - a[0]) * (pt[1] - a[1]) - (b[1] - a[1]) * (pt[0] - a[0])
-        if cross < 0:
-            return -1
-        if cross == 0:
-            if min(a[0], b[0]) <= pt[0] <= max(a[0], b[0]) and min(
-                a[1], b[1]
-            ) <= pt[1] <= max(a[1], b[1]):
-                on_edge = True
-    return 0 if on_edge else 1
 
 
 def _point_in_ring(pt, ring):

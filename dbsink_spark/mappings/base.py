@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import drop_zip_importers
+
 
 class MessageFiltered(Exception):
     """Raised by convert() to drop a message on purpose (date filters)."""
@@ -169,13 +171,16 @@ class Mapping:
         mapping = self  # captured by the worker closure (pickled per task)
 
         def worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for key, raw in zip(pdf["key"], pdf["value"]):
-                    rows.append(mapping._convert_row(key, raw))
-                yield pd.DataFrame(
-                    rows if rows else None, columns=[f.name for f in fields]
-                )
+            try:
+                for pdf in batches:
+                    rows = []
+                    for key, raw in zip(pdf["key"], pdf["value"]):
+                        rows.append(mapping._convert_row(key, raw))
+                    yield pd.DataFrame(
+                        rows if rows else None, columns=[f.name for f in fields]
+                    )
+            finally:
+                drop_zip_importers()
 
         out = df.select("key", "value").mapInPandas(worker, out_schema)
         # date-filtered rows are intentional drops in every mode

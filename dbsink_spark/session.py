@@ -1,8 +1,9 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode defaults are sized for the test harness (local[32], single
-JVM); the same builder settings are what we would ship to a real
-cluster, minus the master/memory knobs which come from spark-submit.
+Local mode runs one JVM with one core per ``SPARK_GRAFT_CPUS`` (default:
+every CPU of the host); the same builder settings are what we would ship
+to a real cluster, minus the master/memory knobs which come from
+spark-submit.
 
 Scale posture (100 TB):
 * AQE on — runtime coalescing, skew-join splitting, dynamic join
@@ -20,6 +21,8 @@ Scale posture (100 TB):
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -44,15 +47,12 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # r12 (guide §7.3, driver-side plan cost): by default EVERY
-        # pyspark Column/DataFrame call captures its Python call site
-        # (inspect.stack) and ships it over THREE extra py4j round
-        # trips (PySparkCurrentOrigin set/get/clear) purely to enrich
-        # error messages. Measured here: ~7 ms per Column op with the
-        # capture vs ~1 ms without — tens of seconds per full bench
-        # pass spent labeling expressions that never fail. Scale-
-        # neutral (driver-side only, identical plans/results at any
-        # data size); flip back on when debugging a query's lineage.
+        # Off because it changes no plan and no result, only what an
+        # error message says: with it on, EVERY pyspark Column/DataFrame
+        # call captures its Python call site (inspect.stack) and ships
+        # it over three extra py4j round trips (PySparkCurrentOrigin
+        # set/get/clear), a driver-side cost on every expression built.
+        # Flip it back on when debugging a query's lineage.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("DBSINK_SPARK_DRIVER_MEM", "8g"))
@@ -62,3 +62,25 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def drop_zip_importers() -> None:
+    """Forget the zip importers this process has cached.
+
+    A Python worker that Spark reuses starts every task with
+    ``importlib.invalidate_caches()``, and on CPython 3.11 and 3.12 each
+    cached ``zipimporter`` then re-reads its archive's whole central
+    directory: ``pyspark.zip``, the py4j zip and the spark-core jar are
+    on every worker's path, so every task pays tens of milliseconds per
+    importer before any user code runs (3.13 only drops the cache). A
+    task body calls this when it finishes, so the next task finds nothing
+    to re-read; an import through a zip path afterwards rebuilds its
+    importer from ``zipimport._zip_directory_cache`` without opening the
+    archive. That rebuild assumes no archive on the worker's path is
+    rewritten in place while the worker lives, which holds for
+    ``pyspark.zip``, the py4j zip, the Spark jars and ``--py-files``.
+    """
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del cache[path]
